@@ -166,24 +166,39 @@ def midloop_probe_reasons(
     ([] = the trace acquits it).  Pure policy, unit-tested.
 
     * any probe's spark canary outside DRIFT_GATE_BAND of calibration
-      -> the window drifted out of the usable band mid-loop;
+      -> the window drifted out of the usable band mid-loop, even when
+      it is the only probe that produced a reading (the others having
+      errored, as they may under the very load being detected);
+    * a non-positive reading -> the instrument failed, which must not
+      pass for a calm window;
     * max/min spark-canary spread across probes > spread_gate -> the
       window moved materially DURING the loop even if every individual
       reading stayed in band (the r17 failure mode: per-query numbers
-      from different probes' neighborhoods are not comparable)."""
+      from different probes' neighborhoods are not comparable); this
+      needs two readings, so a single in-band probe acquits."""
     reasons: list[str] = []
-    secs = [p["spark_sec"] for p in probes if p.get("spark_sec")]
-    if len(secs) < 2:
-        return reasons
-    for p in probes:
-        sec = p.get("spark_sec")
-        if sec and not _canary_in_band(sec):
+    readings = [
+        (p.get("at"), p["spark_sec"])
+        for p in probes
+        if p.get("spark_sec") is not None
+    ]
+    for at, sec in readings:
+        if sec <= 0:
             reasons.append(
-                f"mid-loop spark canary at block {p.get('at')} read "
+                f"mid-loop spark canary at block {at} read {sec}s, a "
+                "non-positive time: the canary failed to measure"
+            )
+            break
+        if not _canary_in_band(sec):
+            reasons.append(
+                f"mid-loop spark canary at block {at} read "
                 f"{sec}s ({round(sec / SPARK_CANARY_REF_SEC, 2)}x its "
                 f"{SPARK_CANARY_REF_SEC}s calibration)"
             )
             break  # one representative reading; the trace has the rest
+    secs = [sec for _, sec in readings if sec > 0]
+    if len(secs) < 2:
+        return reasons
     spread = max(secs) / min(secs)
     if spread > spread_gate:
         reasons.append(
@@ -203,11 +218,13 @@ def window_class(
     """Three-way window classification for the artifact (ADVICE r17
     #3): 'clean' / 'drifted' / 'out_of_calibration' / 'unknown'.  Pure
     policy, unit-tested.  Uses every mid-loop probe plus the closing
-    canary so a mid-loop stall cannot hide behind a calm close."""
-    secs = [p["spark_sec"] for p in probes if p.get("spark_sec")]
-    if closing_canary:
+    canary so a mid-loop stall cannot hide behind a calm close.  A
+    missing (None) reading is skipped; a non-positive one is an
+    instrument failure and makes the window 'unknown'."""
+    secs = [p["spark_sec"] for p in probes if p.get("spark_sec") is not None]
+    if closing_canary is not None:
         secs.append(closing_canary)
-    if not secs:
+    if not secs or any(s <= 0 for s in secs):
         return "unknown"
     drifts = [SPARK_CANARY_REF_SEC / s for s in secs]
     if any(

@@ -421,7 +421,10 @@ def run_pipeline(
     # tophits, both pivot sinks) then analyzes a tiny RDD-scan lineage
     # instead of re-walking the wholetext-parse subtree per operator —
     # measured 6-7 s of driver-side analysis + codegen on the 48x20k
-    # fixture, the bulk of the cold-start gap vs the reference.
+    # fixture, the bulk of the cold-start gap vs the reference. (Codegen
+    # is a first-run cost only: the session's generated-code cache,
+    # session.CODEGEN_CACHE_ENTRIES, serves later runs' identical plans;
+    # analysis is still paid per run.)
     # (Checkpointing the later rrpm frame instead was measured SLOWER:
     # its control-side broadcast reads rpm_df too, so one job would
     # compute rpm+z twice. Local checkpoint blocks don't survive
@@ -442,39 +445,14 @@ def run_pipeline(
 
     top = tophits(rrpm_df, rows, n_tophits, taxa_df, samples)
 
-    # derived from rrpm_df (row-identical to sparse: the totals join is
-    # validated-total inner, the moments/control joins map every row) so
-    # every sink reads the ONE cached frame and the fact aggregate runs
-    # exactly once
+    # the long combined view for callers; the sinks pivot rrpm_df, which
+    # carries reads too. Derived from rrpm_df (row-identical to sparse:
+    # the totals join is validated-total inner, the moments/control joins
+    # map every row) so the fact aggregate runs exactly once
     combined_long = rrpm_df.select(
         "taxID", "taxName", "total_reads", "sample_id", "reads"
     )
     return KrakenResult(samples=samples, combined=combined_long, rrpm=rrpm_df, tophits=top)
-
-
-def _pivot_wide(
-    long_df: DataFrame, value_col: str, samples: list[str], fill
-) -> DataFrame:
-    """The presentation pivot as a DataFrame (sink-only; the long form
-    stays the engine's truth). Sparse long rows -> explicit-values pivot
-    -> zero-fill reconstitutes the reference's dense matrix (ref
-    bigbugdata.py:289-291) at the sink alone."""
-    return (
-        long_df.groupBy("taxID", "taxName", "total_reads")
-        .pivot("sample_id", samples)
-        .agg(F.first(value_col))
-        .na.fill({s: fill for s in samples})
-        .withColumnRenamed("total_reads", "Total # of Reads")
-        .orderBy("taxID")
-    )
-
-
-def _pivot_rows(
-    long_df: DataFrame, value_col: str, samples: list[str], fill
-) -> list[dict]:
-    """Collect the presentation pivot (fidelity sink; O(taxa x samples))."""
-    wide = _pivot_wide(long_df, value_col, samples, fill)
-    return [r.asDict() for r in wide.collect()]
 
 
 def _ordered_tophits(top: DataFrame, samples: list[str]) -> DataFrame:
@@ -500,11 +478,11 @@ TOP_FIELDS = [
 def _scale_matrix_frames(
     result: "KrakenResult", samples: list[str]
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(wide, combined_wide, rrpm_wide) for the scale-mode matrix sinks:
-    ONE pivot shuffle feeds both sinks — combined (reads) and rrpm share
-    the same (taxID x sample) grid, so both value columns pivot
-    together, the O(taxa x samples) wide frame is pinned, and each sink
-    projects from the cache.
+    """(wide, combined_wide, rrpm_wide) for the matrix sinks of both
+    modes: ONE pivot shuffle feeds both sinks — combined (reads) and
+    rrpm share the same (taxID x sample) grid, so both value columns
+    pivot together, the O(taxa x samples) wide frame is pinned, and
+    each sink projects from the cache.
 
     r17 restructure (guide §1.2 step 2 — per-task work): the 96-slot
     PivotFirst aggregate (two scalar slots per sample, the r13 shape)
@@ -517,8 +495,6 @@ def _scale_matrix_frames(
     the map entry). The r13 caveat (a struct-valued PivotFirst forces
     SortAggregate) does not apply: collect_list plans as
     ObjectHashAggregate, no sort."""
-    from bigbugdata_spark.caching import pin
-
     entry = F.struct(
         F.col("sample_id"),
         F.struct(F.col("reads").alias("r"), F.col("rrpm").alias("m")),
@@ -574,17 +550,18 @@ def write_outputs(
     """CSV sinks with the reference's exact headers and column order
     (ops 16-17, ref bigbugdata.py:312-366).
 
-    mode='fidelity': byte-exact reference CSVs via driver-side str()
-    formatting (bounded: the pivots are O(taxa x samples) presentation
-    tables). mode='scale': the same wide frames written by Spark's
-    distributed CSV writer (one ordered part file) — no collect; the
-    100 TB path (VERDICT r1 fix #2/#7)."""
+    Both modes build the two matrices from one pinned pivot
+    (_scale_matrix_frames). mode='fidelity': byte-exact reference CSVs
+    via driver-side str() formatting (bounded: the pivots are O(taxa x
+    samples) presentation tables). mode='scale': the same wide frames
+    written by Spark's distributed CSV writer (one ordered part file) —
+    no collect; the 100 TB path (VERDICT r1 fix #2/#7)."""
     combined_path, rrpm_path, tophits_path = output_paths(results_dir, rank)
     samples = result.samples
     base = ["taxID", "taxName", "Total # of Reads"]
+    _, combined_wide, rrpm_wide = _scale_matrix_frames(result, samples)
 
     if mode == "scale":
-        _, combined_wide, rrpm_wide = _scale_matrix_frames(result, samples)
         order_df = result.tophits.sparkSession.createDataFrame(
             [(s, i) for i, s in enumerate(samples)], "sampleName string, _ord int"
         )
@@ -600,9 +577,10 @@ def write_outputs(
         # thread and materializes the pinned pivot cache as a side
         # effect of its own evaluation; the rrpm write then reads the
         # hot cache. (A separate wide.count() materialization pass was
-        # one more distinct plan to analyze + codegen on the cold run —
-        # dropping it trims exactly the first-run overhead the
-        # reference's single-pass loop never pays, VERDICT r6 #5.)
+        # one more distinct plan to analyze on every run, and to codegen
+        # on the first — the session's code cache serves later runs —
+        # dropping it trims exactly the per-run overhead the reference's
+        # single-pass loop never pays, VERDICT r6 #5.)
 
         def _matrix_sinks():
             write_csv_scale(
@@ -630,12 +608,14 @@ def write_outputs(
                 f.result()
         return str(combined_path), str(rrpm_path), str(tophits_path)
 
-    write_csv_fidelity(
-        combined_path, _pivot_rows(result.combined, "reads", samples, 0), base + samples
-    )
-    write_csv_fidelity(
-        rrpm_path, _pivot_rows(result.rrpm, "rrpm", samples, 0.0), base + samples
-    )
+    # the rrpm collect reads the pinned pivot the combined collect
+    # materialized: one shuffle of the long fact feeds both matrices
+    for path, matrix in ((combined_path, combined_wide), (rrpm_path, rrpm_wide)):
+        write_csv_fidelity(
+            path,
+            [r.asDict() for r in matrix.orderBy("taxID").collect()],
+            base + samples,
+        )
     top_rows = [
         r.asDict() for r in _ordered_tophits(result.tophits, samples).collect()
     ]

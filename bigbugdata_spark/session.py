@@ -3,8 +3,11 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default all cores); the
 same config block is what we would ship as cluster defaults: AQE on (runtime
 re-planning, skew-join handling, partition coalescing), Arrow for any
-Python<->JVM exchange, and shuffle partitions sized to the parallelism at
-hand rather than the 200 default.
+Python<->JVM exchange, shuffle partitions sized to the parallelism at
+hand rather than the 200 default, and a generated-code cache large enough
+that one long-lived session compiles each plan shape once (a repeated
+kraken run or the many-query test session reuses its compiled classes
+instead of recompiling them on every run).
 """
 
 from __future__ import annotations
@@ -24,6 +27,16 @@ WAREHOUSE_DIR = os.path.join(
     tempfile.gettempdir(), f"bigbugdata-spark-warehouse-{_USER}"
 )
 DERBY_HOME = os.path.join(tempfile.gettempdir(), f"bigbugdata-derby-{_USER}")
+
+#: entries in Spark's generated-code cache (spark.sql.codegen.cache.maxEntries,
+#: a static conf: it only takes effect when the session is first built). One
+#: kraken unit (run_pipeline + write_outputs) generates 160-190 distinct
+#: classes (counted with CodegenMetrics on the 48- and 192-sample bench
+#: fixtures), so under the default of 100 the LRU evicts every class before
+#: the next run asks for it again: each warm run recompiled 155-185 of them
+#: and loaded ~300 new classes into the JVM. With several units' worth of
+#: entries a warm run compiles a handful.
+CODEGEN_CACHE_ENTRIES = 1000
 
 
 def get_spark(
@@ -50,6 +63,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # events.parquet's ts physical layout varies by generator round
         # (TIMESTAMP(NANOS) / timestamp[us] NTZ / timestamp[us] UTC);
         # nanosAsLong lets the NANOS layout load at all, and

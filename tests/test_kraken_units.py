@@ -1,15 +1,22 @@
 """Unit fixtures for kraken edge cases the goldens cannot carry (the
 reference crashes on some of them): reads==0 e_val, physical row order
-under the wholetext reader, and sample_id collision fail-fast."""
+under the wholetext reader, and sample_id collision fail-fast. Also the
+reference-free end-to-end gate (both sinks checked against the benchmark's
+plain-Python oracle) and the pin that a repeated run reuses its compiled
+code."""
 
 from __future__ import annotations
 
+import importlib.util
 import math
+import sys
+from pathlib import Path
 
 import pytest
 
-from bigbugdata_spark.operators.kraken import run_pipeline, side_stats
+from bigbugdata_spark.operators.kraken import run_pipeline, side_stats, write_outputs
 from bigbugdata_spark.sources.kraken_reports import read_reports
+from tests.kraken_fixtures import generate_reports
 
 HEADER = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName"
 
@@ -104,3 +111,63 @@ def test_zscore_all_equal_is_nan(spark, tmp_path):
     }
     assert all(math.isnan(z[(s, 1235)]) for s in ("A", "B"))
     assert not any(math.isnan(z[(s, 1236)]) for s in ("A", "B"))
+
+
+# --- end to end, against the benchmark's oracle -----------------------------
+
+GROUP_PATTERNS = [("CF_DNA_Negative$", "^CF_DNA"), ("CF_RNA_Negative$", "^CF_RNA")]
+TOP_K = 15
+
+
+def _load_oracle():
+    """perfbench/oracle.py, loaded by path: perfbench is a script
+    directory, not a package."""
+    path = Path(__file__).resolve().parent.parent / "perfbench" / "oracle.py"
+    spec = importlib.util.spec_from_file_location("perfbench_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    sys.modules[spec.name] = mod  # its dataclasses resolve through it
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@pytest.fixture(scope="module")
+def oracle_reports(tmp_path_factory):
+    return sorted(generate_reports(tmp_path_factory.mktemp("reports")))
+
+
+def _run_unit(spark, paths, out_dir, mode):
+    result = run_pipeline(
+        spark, paths, rank="species", n_tophits=TOP_K,
+        group_patterns=GROUP_PATTERNS,
+    )
+    write_outputs(result, str(out_dir), "species", mode=mode)
+
+
+@pytest.mark.parametrize("mode", ["fidelity", "scale"])
+def test_outputs_match_oracle(spark, oracle_reports, tmp_path, mode):
+    """Both sinks against an independent model of the reference: the
+    fidelity combined/rrpm CSVs byte for byte, every other cell exact
+    except z-scores (relative 1e-9). Needs no reference checkout."""
+    oracle = _load_oracle()
+    _run_unit(spark, oracle_reports, tmp_path, mode)
+    expected = oracle.expected_outputs(oracle_reports, TOP_K, GROUP_PATTERNS)
+    assert oracle.check_outputs(expected, tmp_path, mode) == []
+
+
+#: Janino compiles a warm kraken unit may run. A unit generates ~170
+#: distinct classes; with the session's code cache sized for that working
+#: set a repeat run on this fixture compiled 0-16, while under Spark's
+#: default of 100 entries it recompiled 171.
+MAX_WARM_COMPILES = 40
+
+
+def test_repeated_run_reuses_generated_code(spark, oracle_reports, tmp_path):
+    """The second identical run_pipeline + write_outputs in one session
+    must be served by the generated-code cache instead of recompiling
+    (session.CODEGEN_CACHE_ENTRIES)."""
+    compiles = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    _run_unit(spark, oracle_reports, tmp_path / "first", "fidelity")
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    _run_unit(spark, oracle_reports, tmp_path / "second", "fidelity")
+    n = compiles.METRIC_COMPILATION_TIME().getCount() - before
+    assert n <= MAX_WARM_COMPILES, f"warm run compiled {n} classes"

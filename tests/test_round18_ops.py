@@ -47,8 +47,24 @@ class TestMidloopProbeReasons:
         assert reasons and "swung" in reasons[0]
 
     def test_single_probe_cannot_convict(self):
-        # a trace that failed to accumulate is the boundary gate's job
+        # one in-band reading has no spread to judge; a trace that failed
+        # to accumulate is the boundary gate's job
         assert bench.midloop_probe_reasons([_p("loop_start", REF)]) == []
+
+    def test_single_out_of_band_probe_convicts(self):
+        # the other probes errored (plausible under the very load being
+        # detected): the one surviving reading still convicts
+        probes = [_p("loop_start", None), _p("after_q8", REF * 4.0),
+                  _p("loop_end", None)]
+        reasons = bench.midloop_probe_reasons(probes)
+        assert reasons and "after_q8" in reasons[0]
+
+    def test_zero_reading_convicts(self):
+        probes = [_p("loop_start", REF), _p("after_q8", 0.0),
+                  _p("loop_end", REF)]
+        reasons = bench.midloop_probe_reasons(probes)
+        assert reasons and "after_q8" in reasons[0]
+        assert "non-positive" in reasons[0]
 
     def test_failed_probes_are_skipped(self):
         probes = [_p("loop_start", None), _p("after_q8", REF),
@@ -79,6 +95,16 @@ class TestWindowClass:
 
     def test_unknown_when_no_readings(self):
         assert bench.window_class([], None) == "unknown"
+        assert bench.window_class([_p("loop_start", None)], None) == "unknown"
+
+    def test_none_closing_canary_is_skipped(self):
+        assert bench.window_class([_p("loop_start", REF)], None) == "clean"
+
+    def test_zero_reading_is_unknown(self):
+        # a 0.0 reading is an instrument failure, not an absent probe
+        assert bench.window_class([_p("loop_start", REF)], 0.0) == "unknown"
+        probes = [_p("loop_start", REF), _p("after_q8", 0.0)]
+        assert bench.window_class(probes, REF) == "unknown"
 
     def test_spread_demotes_clean_to_drifted(self):
         lo, hi = REF / 1.3, REF * 1.3  # both inside the clean band
