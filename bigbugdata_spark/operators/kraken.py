@@ -1,11 +1,22 @@
 """The kraken-report analytics pipeline — quirk-faithful Spark reimplementation
 of the reference's `run()` (ref bigbugdata.py:225-366).
 
-The engine's truth is ONE long/tidy fact DataFrame (sample_id, taxID, reads,
-...); pivoting to the taxon x sample presentation matrix happens only at the
-sink. Every documented numeric quirk of the reference is reproduced:
+The engine's truth is ONE long/tidy DataFrame with a row per present
+(sample_id, taxID) cell; pivoting to the taxon x sample presentation matrix
+happens only at the sink. `run_pipeline` builds it with one pass per
+grouping key and no joins:
 
-* duplicate taxID rows within a report ACCUMULATE into the fact table
+1. a per-sample totals collect — the fail-fast check, and the job that
+   materializes the pinned parse;
+2. one (sample_id, taxID) aggregate for the cell's reads, name and side
+   stats (`cell_stats`), with rpm read from a per-sample map literal;
+3. one window over taxID for the taxon's name, total, z moments and
+   control rpm (`taxon_window`), checkpointed;
+4. a per-sample top-k ranking of that frame (`tophits`).
+
+Every documented numeric quirk of the reference is reproduced:
+
+* duplicate taxID rows within a report ACCUMULATE into the cell's reads
   (+=, ref :301-302) but OVERWRITE the per-(sample,taxon) side stats
   (last row wins, ref :278-284);
 * rRPM truncates BOTH sides to int (ref :154-159) with the 0->1 control
@@ -54,6 +65,16 @@ from bigbugdata_spark.sources.kraken_reports import (
 # ---------------------------------------------------------------------------
 
 
+def _ident(s: str) -> str:
+    """A Spark SQL identifier for any column name."""
+    return "`" + s.replace("`", "``") + "`"
+
+
+def _slit(s: str) -> str:
+    """A Spark SQL string literal for any text."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def sample_totals(reports: DataFrame) -> DataFrame:
     """Per-sample total reads = SUM(reads) over taxID in {0,1} rows (op 3,
     ref bigbugdata.py:258-261)."""
@@ -69,40 +90,33 @@ def species_rows(reports: DataFrame, rank: str) -> DataFrame:
     return reports.filter(~F.col("taxID").isin(0, 1)).filter(F.col("rank") == rank)
 
 
-def fact_table(rows: DataFrame) -> DataFrame:
-    """(sample_id, taxID) -> accumulated reads (op 7, ref :286-302 '+=')."""
-    return rows.groupBy("sample_id", "taxID").agg(F.sum("reads").alias("reads"))
-
-
-def taxa(rows: DataFrame) -> DataFrame:
-    """Distinct taxa with trimmed names (op 6, ref :293-298) and the
-    cross-sample 'Total # of Reads' (ref :302)."""
-    return rows.groupBy("taxID").agg(
-        F.min(F.trim(F.col("taxName"))).alias("taxName"),
-        F.sum("reads").alias("total_reads"),
-    )
-
-
-def side_stats(rows: DataFrame) -> DataFrame:
-    """Per-(sample, taxID) stats, LAST row wins on duplicates (ref :278-284).
+def cell_stats(rows: DataFrame) -> DataFrame:
+    """One row per (sample_id, taxID) cell, from ONE aggregate (ops
+    6-7, ref :278-302): the accumulated reads (+=, ref :301-302), the
+    trimmed taxName (ref :293-298), and the per-cell side stats, where
+    the LAST row wins on duplicates (ref :278-284).
 
     Raw string copies of dup/cov (and str-equivalent reads/kmers) are kept
     so the tophits sink echoes input text exactly as the reference does
     (it stores the csv strings, ref :279-282).
 
-    last-wins = max_by(stats, row_order): a hash aggregate with map-side
-    partial combine — each scan partition reduces its duplicates before
-    the exchange, so the shuffle carries ~one row per (sample, taxID)
-    instead of every raw row sorted under a row_number window.
+    last-wins = max_by(stats, row_order): map-side partial combine reduces
+    each scan partition's duplicates before the exchange, so the shuffle
+    carries ~one row per cell instead of every raw row sorted under a
+    row_number window.
     """
-    picked = rows.groupBy("sample_id", "taxID").agg(
+    cells = rows.groupBy("sample_id", "taxID").agg(
+        F.sum("reads").alias("reads"),
+        F.min(F.trim(F.col("taxName"))).alias("taxName"),
         F.max_by(
             F.struct("kmers", "dup", "reads", "cov"), F.col("row_order")
-        ).alias("_s")
+        ).alias("_s"),
     )
-    return picked.select(
+    return cells.select(
         "sample_id",
         "taxID",
+        "reads",
+        "taxName",
         F.col("_s.kmers").alias("kmers"),
         F.col("_s.dup").alias("dup_raw"),
         F.col("_s.reads").alias("sample_reads"),
@@ -118,168 +132,127 @@ def side_stats(rows: DataFrame) -> DataFrame:
     )
 
 
-def _validate_totals(totals: DataFrame, samples: list[str]) -> None:
-    """Fail fast when a sample has no taxID-0/1 rows (the reference
-    silently drops it and later KeyErrors, ref bigbugdata.py:121)."""
-    have = {r[0] for r in totals.select("sample_id").collect()}
-    missing = sorted(set(samples) - have)
-    if missing:
-        raise ValueError(
-            f"samples with no taxID 0/1 rows (cannot compute RPM): {missing}"
-        )
+def _rpm_expr(n_reads: dict[str, int | None]) -> str:
+    """RPM = reads / (n_reads / 1e6) (op 11, ref :104-127) as one SQL
+    expression: the per-sample totals travel as a map literal, so no
+    join. try_divide: a sample whose taxID-0/1 rows hold zero reads would
+    throw under ANSI; the reference yields ZeroDivisionError — we emit
+    NULL rpm for that degenerate sample (documented divergence)."""
+    entries = ", ".join(
+        f"{_slit(s)}, {'NULL' if n is None else f'{n}L'}" for s, n in n_reads.items()
+    )
+    return f"try_divide(reads, map({entries})[sample_id] / 1000000.0D) as rpm"
 
 
-def rpm(
-    sparse: DataFrame,
-    totals: DataFrame,
-    samples: list[str],
-    validate: bool = True,
+def taxon_window(
+    cells: DataFrame, samples: list[str], mapping: list[tuple[str, str]]
 ) -> DataFrame:
-    """RPM normalization (op 11, ref :104-127) over SPARSE fact rows, with
-    fail-fast validation for samples missing taxID-0/1 rows (the reference
-    silently drops them and later KeyErrors, ref :121 — SURVEY §2 op 11).
+    """Every per-taxon quantity from ONE window over taxID (ops 6, 13, 15):
+    the taxon's name and 'Total # of Reads' (ref :293-302), its z-score
+    moments, and each control sample's rpm. Absent (sample, taxon) cells
+    are exact zeros in the reference's dense grid, so the sparse rows
+    carry everything a taxon needs.
 
-    The reference computes RPM on the dense taxon x sample grid; absent
-    cells have reads == 0, hence rpm == 0 exactly — so the engine keeps the
-    fact table sparse and reconstitutes zeros only where semantics need
-    them (z-score moments use the known sample count; the pivot sinks
-    zero-fill; tophits ranks against synthesized zero rows for sparse
-    samples). At real scale the grid is 10-30x the sparse rows (VERDICT r1
-    fix #4) — this restructure removes it from every shuffle.
-
-    validate=False defers the fail-fast collect to the caller
-    (run_pipeline validates AFTER its one materialization job so the
-    whole cold path runs a single parse — the standalone default keeps
-    the eager check).
-    """
-    if validate:
-        _validate_totals(totals, samples)
-    # try_divide: n_reads == 0 (taxID-0/1 rows present but all zero reads)
-    # would throw under ANSI; the reference yields ZeroDivisionError — we
-    # emit NULL rpm for that degenerate sample (documented divergence).
-    return sparse.join(F.broadcast(totals), "sample_id").withColumn(
-        "rpm", F.try_divide(F.col("reads"), F.col("n_reads") / F.lit(1_000_000.0))
-    )
-
-
-def zscores(rpm_df: DataFrame, n_samples: int) -> DataFrame:
-    """Population z-score of each taxon's DENSE RPM vector (op 15, ref
-    :322-331, scipy ddof=0) computed from SPARSE rows: absent cells are
-    exact zeros, so they contribute nothing to S or SS and the dense
-    moments are S/n and SS/n with n = the known sample count. One
-    hash-aggregate on taxID + a broadcast-size join back — no grid, no
-    window over densified rows (VERDICT r1 fix #10).
-
-    All-equal guard uses a RELATIVE epsilon (ADVICE r1): the explicit
+    z: population z-score of the DENSE rpm vector (op 15, ref :322-331,
+    scipy ddof=0). Absent cells add nothing to S or SS, so the dense
+    moments are S/n and SS/n with n = the known sample count. The
+    all-equal guard uses a RELATIVE epsilon (ADVICE r1): the explicit
     moments of an all-equal non-integer vector can come out as a tiny
-    positive/negative residual (~1e-32 * mean^2) instead of exactly 0; any
-    real cross-sample variance is >= ~1e-6 * mean^2, so var <= 1e-18*mean^2
-    classifies exactly and emits the reference's NaN. An all-equal dense
-    vector with a nonzero value requires full density (n_nonzero == n) —
-    sparse zeros + equal nonzeros have real variance, correctly nonzero.
+    residual (~1e-32 * mean^2) instead of exactly 0; any real
+    cross-sample variance is >= ~1e-6 * mean^2, so var <= 1e-18*mean^2
+    classifies exactly and emits the reference's NaN.
+
+    rRPM = int(rpm) / max(int(control_rpm), 1) (op 13, ref :130-163), both
+    sides int-truncated (rpm >= 0 so floor == int()). A sample in no group
+    gets control rpm 1 exactly (ref :154 row.get('', 1)). The control's
+    rpm is read IN-PARTITION, max(rpm of that control) over the taxon's
+    window — the shape relational.op13_floor_ratio_rrpm uses — and a
+    control absent from the taxon has rpm 0, guarded to 1.
     """
-    moments = rpm_df.groupBy("taxID").agg(
-        F.sum("rpm").alias("_s"),
-        F.sum(F.col("rpm") * F.col("rpm")).alias("_ss"),
+    # sample order inside the taxon fixes the summation order of the z
+    # moments, so the z-scores do not depend on how the cells were
+    # partitioned
+    w = (
+        Window.partitionBy("taxID")
+        .orderBy("sample_id")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    n = F.lit(float(n_samples))
+    members: dict[str, list[str]] = {}
+    for s, c in mapping:
+        if c:
+            members.setdefault(c, []).append(s)
+    ctrl_cols = [f"_c{i}" for i in range(len(members))]
+    moments = cells.select(
+        "sample_id",
+        "taxID",
+        F.min("taxName").over(w).alias("taxName"),
+        "reads",
+        F.sum("reads").over(w).alias("total_reads"),
+        "rpm",
+        "kmers",
+        "dup_raw",
+        "sample_reads",
+        "cov_raw",
+        "e_val",
+        F.sum("rpm").over(w).alias("_s"),
+        F.sum(F.col("rpm") * F.col("rpm")).over(w).alias("_ss"),
+        *[
+            F.max(F.when(F.col("sample_id") == c, F.col("rpm"))).over(w).alias(col)
+            for c, col in zip(members, ctrl_cols)
+        ],
+    )
+    n = F.lit(float(len(samples)))
     mean = F.col("_s") / n
     var = F.col("_ss") / n - mean * mean
     z = F.when(var <= F.lit(1e-18) * mean * mean, F.lit(float("nan"))).otherwise(
         (F.col("rpm") - mean) / F.sqrt(var)
     )
-    # moments is one row per taxon (bounded by taxonomy size, ~10^4-10^5,
-    # never by corpus size) — broadcast keeps the fact rows unshuffled
-    return (
-        rpm_df.join(F.broadcast(moments), "taxID")
-        .withColumn("z_score", z)
-        .drop("_s", "_ss")
-    )
+    one = F.lit(1).cast("long")
+    den = one
+    for (c, group), col in zip(members.items(), ctrl_cols):
+        den = F.when(
+            F.col("sample_id").isin(group),
+            F.greatest(F.floor(F.coalesce(F.col(col), F.lit(0.0))), one),
+        ).otherwise(den)
+    return moments.withColumns(
+        {"z_score": z, "rrpm": F.floor("rpm").cast("double") / den}
+    ).drop("_s", "_ss", *ctrl_cols)
 
 
-def rrpm(
-    rpm_df: DataFrame, mapping: list[tuple[str, str]]
-) -> DataFrame:
-    """rRPM = int(rpm) / max(int(control_rpm), 1) (op 13, ref :130-163).
-
-    Both sides int-truncated; rpm >= 0 so floor == int(). A sample in no
-    group gets control rpm 1 exactly (ref :154 row.get('', 1)). The control
-    mapping is tiny -> broadcast; the control-side rpm comes from a self
-    join on (taxID, control sample), dense so always present.
-    """
-    spark = rpm_df.sparkSession
-    map_df = spark.createDataFrame(mapping, "sample_id string, control_id string")
-    # the control side is bounded by (taxa x #control-samples): controls
-    # are the few per-group negatives, so pre-filtering to them turns the
-    # self-join into a broadcast — the fact rows never shuffle for it
-    control_ids = sorted({c for _, c in mapping if c})
-    ctrl = (
-        rpm_df.filter(F.col("sample_id").isin(control_ids))
-        .select(
-            F.col("taxID").alias("c_taxID"),
-            F.col("sample_id").alias("c_sample_id"),
-            F.col("rpm").alias("ctrl_rpm"),
-        )
-    )
-    joined = (
-        rpm_df.join(F.broadcast(map_df), "sample_id")
-        .join(
-            F.broadcast(ctrl),
-            (F.col("taxID") == F.col("c_taxID"))
-            & (F.col("control_id") == F.col("c_sample_id")),
-            "left",
-        )
-    )
-    den = F.when(F.col("control_id") == "", F.lit(1).cast("long")).otherwise(
-        F.greatest(F.floor(F.coalesce(F.col("ctrl_rpm"), F.lit(0.0))), F.lit(1).cast("long"))
-    )
-    return joined.withColumn(
-        "rrpm", F.floor("rpm").cast("double") / den
-    ).select(rpm_df["*"], F.col("rrpm"))
-
-
-def tophits(
-    rrpm_df: DataFrame,
-    rows: DataFrame,
-    k: int,
-    taxa_df: DataFrame,
-    samples: list[str],
-) -> DataFrame:
+def tophits(taxon_cells: DataFrame, k: int, samples: list[str]) -> DataFrame:
     """Top-k per sample by rRPM with stable tie-break and rank gaps (op 14,
     ref :166-205): rank over the full DENSE candidate list (ties -> taxID
-    ascending, the reference's stable-sort order), THEN the presence inner
-    join — absent (sample, taxon) pairs drop out leaving rank gaps.
+    ascending, the reference's stable-sort order), THEN drop the absent
+    (sample, taxon) pairs, leaving rank gaps.
 
     Dense ranking from sparse rows: absent cells have rrpm == 0 exactly
     and can only occupy ranks after every positive row — they matter only
     for samples with fewer than k POSITIVE rrpm rows. Zero-candidates
     (full taxa list, anti-joined against that sample's sparse rows) are
-    synthesized for those needy samples alone; at production density
-    (every sample >= k positive species) zero rows are never generated,
-    so the grid cost is gone from the common case.
+    synthesized for those needy samples alone, flagged not present; at
+    production density (every sample >= k positive species) zero rows are
+    never generated, so the grid cost is gone from the common case.
 
-    z_score rides along from rrpm_df (it is already attached there), so
-    the side-stats join happens AFTER the top-k filter — k rows per
-    sample against the side table, a broadcast-size probe, instead of a
-    full (sample, taxID)-grid equi-join before any pruning. Synthesized
-    zero rows carry NULL z; the presence inner join drops them (the
-    reference's rank-gap quirk) before it could matter.
+    The side stats and z_score ride along on every cell of the input, so
+    the top-k rows come out complete — no join after the ranking. The
+    presence flag drops the synthesized rows after the rank is assigned
+    (the reference's rank-gap quirk).
 
-    Neediness is decided from the top-k itself (round 11): positives
-    outrank zeros under the (rrpm DESC, taxID) order, so a sample has
-    >= k positive rows iff its top-k SPARSE rows are all positive —
-    the old separate n_pos aggregate was a second full pass over the
-    fact frame that, at production density, only ever confirmed "no
-    needy samples".  The check now reads the <= k*|samples| pinned
-    ranking (driver-sized, like the sample-ID collects), and the
-    zero-candidate synthesis subtree is built only for the samples
-    that actually need it."""
-    spark = rrpm_df.sparkSession
-    base = rrpm_df.select("sample_id", "taxID", "taxName", "rrpm", "z_score")
+    Neediness is decided from the top-k itself: positives outrank zeros
+    under the (rrpm DESC, taxID) order, so a sample has >= k positive rows
+    iff its top-k SPARSE rows are all positive. The check reads the
+    <= k*|samples| pinned ranking (driver-sized, like the sample-ID
+    collects), and the zero-candidate synthesis subtree is built only for
+    the samples that actually need it."""
+    spark = taxon_cells.sparkSession
+    base = taxon_cells.select(
+        "sample_id", "taxID", "taxName", "rrpm", "kmers", "dup_raw",
+        "sample_reads", "cov_raw", "e_val", "z_score",
+        F.lit(True).alias("_present"),
+    )
     w = Window.partitionBy("sample_id").orderBy(F.desc("rrpm"), F.asc("taxID"))
-    # pin: ranked (<= k rows per sample) feeds the needy check and two
-    # broadcasts below — the semi-join prune and the final probe;
-    # caching it runs the ranking window once
+    # pin: the needy check and the sink both read the ranking; caching it
+    # runs the ranking window once
     ranked = pin(
         base.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
     )
@@ -296,58 +269,40 @@ def tophits(
         needy = spark.createDataFrame(
             [(s,) for s in needy_samples], "sample_id string"
         )
-        needy_base = base.join(F.broadcast(needy), "sample_id")
         zero_rows = (
-            needy.crossJoin(taxa_df.select("taxID", "taxName"))
+            needy.crossJoin(base.select("taxID", "taxName").distinct())
             .join(
-                base.select("sample_id", "taxID"),
-                ["sample_id", "taxID"],
-                "left_anti",
+                base.select("sample_id", "taxID"), ["sample_id", "taxID"], "left_anti"
             )
             .select(
                 "sample_id",
                 "taxID",
                 "taxName",
                 F.lit(0.0).alias("rrpm"),
-                F.lit(None).cast("double").alias("z_score"),
+                F.lit(False).alias("_present"),
             )
         )
         ranked_needy = (
-            needy_base.unionByName(zero_rows)
+            base.join(F.broadcast(needy), "sample_id")
+            .unionByName(zero_rows, allowMissingColumns=True)
             .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
         )
-        ranked = pin(
-            ranked.join(F.broadcast(needy), "sample_id", "left_anti").unionByName(
-                ranked_needy
-            )
+        ranked = ranked.join(F.broadcast(needy), "sample_id", "left_anti").unionByName(
+            ranked_needy
         )
-    # side stats are needed for <= k rows per sample only: semi-join the
-    # raw rows against the broadcast top-k list BEFORE the last-wins
-    # aggregate, so the agg shuffles k-per-sample survivors instead of
-    # every (sample, taxID) pair in the corpus
-    pruned = rows.join(
-        F.broadcast(ranked.select("sample_id", "taxID")),
-        ["sample_id", "taxID"],
-        "left_semi",
-    )
-    side = side_stats(pruned)
-    # ranked is <= k rows per sample — broadcast it into the side probe
-    return (
-        F.broadcast(ranked).join(side, ["sample_id", "taxID"])
-        .select(
-            F.col("sample_id").alias("sampleName"),
-            "taxID",
-            "taxName",
-            "rank",
-            F.col("rrpm").alias("rRPM"),
-            "kmers",
-            F.col("dup_raw").alias("dup"),
-            F.col("sample_reads").alias("reads"),
-            F.col("cov_raw").alias("cov"),
-            "e_val",
-            "z_score",
-        )
+    return ranked.filter("_present").select(
+        F.col("sample_id").alias("sampleName"),
+        "taxID",
+        "taxName",
+        "rank",
+        F.col("rrpm").alias("rRPM"),
+        "kmers",
+        F.col("dup_raw").alias("dup"),
+        F.col("sample_reads").alias("reads"),
+        F.col("cov_raw").alias("cov"),
+        "e_val",
+        "z_score",
     )
 
 
@@ -360,7 +315,7 @@ def tophits(
 class KrakenResult:
     samples: list[str]
     combined: DataFrame  # long: taxID, taxName, total_reads, sample_id, reads
-    rrpm: DataFrame  # long: + rpm, z_score, rrpm
+    rrpm: DataFrame  # long: + rpm, z_score, rrpm and the tophits side stats
     tophits: DataFrame
 
 
@@ -371,7 +326,9 @@ def run_pipeline(
     n_tophits: int = 15,
     group_patterns: list[tuple[str, str]] | None = None,
 ) -> KrakenResult:
-    """The reference's run() (ref bigbugdata.py:225-366) as a lazy plan-set."""
+    """The reference's run() (ref bigbugdata.py:225-366): validates the
+    inputs, materializes the per-cell frame and ranks the top-k; every
+    returned frame reads that checkpoint."""
     # Fail fast when two input files resolve to one sample_id: the reference
     # dict silently keeps only the last file (ref bigbugdata.py:35-42) while
     # a multi-file scan would union their rows — an undocumented divergence
@@ -389,15 +346,15 @@ def run_pipeline(
         )
     samples = ordered_sample_ids(sorted(by_sample))
 
-    # pin the parsed scan: it feeds six consumers (totals, collision-free
-    # fact/taxa/side aggregates, both pivot sinks, tophits) and the
-    # ordered fidelity parse (wholetext+posexplode) is the single most
-    # expensive subtree in the pipeline — one parse, read from cache ever
-    # after. Project to the columns the pipeline consumes before pinning
-    # (pct/taxReads/path are dead downstream — pruning them shrinks the
-    # cached blocks). Callers that materialize the result release the
-    # blocks via bigbugdata_spark.caching.release_pinned (the CLI does
-    # after its sinks complete).
+    # pin the parsed scan: the totals collect materializes it, and the
+    # cell aggregate reads it back. The ordered fidelity parse
+    # (wholetext+posexplode) is the single most expensive subtree in the
+    # pipeline — one parse, read from cache ever after. Project to the
+    # columns the pipeline consumes before pinning (pct/taxReads/path are
+    # dead downstream — pruning them shrinks the cached blocks). Callers
+    # that materialize the result release the blocks via
+    # bigbugdata_spark.caching.release_pinned (the CLI does after its
+    # sinks complete).
     reports = pin(
         read_reports(spark, report_paths, with_row_order=True).select(
             "sample_id", "taxID", "reads", "kmers", "dup", "cov",
@@ -405,50 +362,40 @@ def run_pipeline(
         )
     )
 
-    totals = sample_totals(reports)
-    rows = species_rows(reports, rank)
-    fact = fact_table(rows)
-    taxa_df = taxa(rows)
+    # The first job: one row per sample, and the fail-fast check. A
+    # sample with no taxID-0/1 rows makes the reference silently drop it
+    # and later KeyError (ref bigbugdata.py:121); we raise before any
+    # other job runs.
+    n_reads = {r["sample_id"]: r["n_reads"] for r in sample_totals(reports).collect()}
+    missing = sorted(set(samples) - set(n_reads))
+    if missing:
+        raise ValueError(
+            f"samples with no taxID 0/1 rows (cannot compute RPM): {missing}"
+        )
+    mapping = control_lookup(samples, negative_control_groups(samples, group_patterns))
 
-    # sparse long fact + per-taxon attributes; zeros are reconstituted
-    # only at the sinks / tophits ranking (VERDICT r1 fixes #4/#10).
-    # taxa_df is one row per taxon — broadcast.
-    sparse = fact.join(F.broadcast(taxa_df), "taxID")
-    # rpm_df feeds four consumers (z moments, the rrpm self-join's two
-    # sides, the tophits ranking base). Materialize it NOW with an eager
-    # localCheckpoint instead of a lazy pin: ONE job runs parse -> pinned
-    # reports cache -> rpm -> z, and every downstream plan (rrpm,
-    # tophits, both pivot sinks) then analyzes a tiny RDD-scan lineage
-    # instead of re-walking the wholetext-parse subtree per operator —
-    # measured 6-7 s of driver-side analysis + codegen on the 48x20k
-    # fixture, the bulk of the cold-start gap vs the reference. (Codegen
-    # is a first-run cost only: the session's generated-code cache,
-    # session.CODEGEN_CACHE_ENTRIES, serves later runs' identical plans;
-    # analysis is still paid per run.)
-    # (Checkpointing the later rrpm frame instead was measured SLOWER:
-    # its control-side broadcast reads rpm_df too, so one job would
-    # compute rpm+z twice. Local checkpoint blocks don't survive
-    # executor loss; on a real cluster the cache-only pin() form
-    # degrades gracefully instead — this pipeline's result is consumed
-    # immediately by its sinks.)
-    rpm_df = zscores(
-        rpm(sparse, totals, samples, validate=False), len(samples)
-    ).localCheckpoint()
-    # fail-fast check AFTER the materialization job: totals now reads the
-    # hot reports cache, so the collect costs one in-memory agg, not a
-    # second parse — and run_pipeline still raises before returning.
-    _validate_totals(totals, samples)
+    # One pass per grouping key, no joins: the (sample, taxID) aggregate
+    # builds every cell with its side stats, rpm reads the totals from a
+    # map literal, and one window over taxID adds the taxon's name, total,
+    # z moments and control rpm. Zeros stay implicit: they are
+    # reconstituted only at the pivot sinks and the tophits ranking
+    # (VERDICT r1 fixes #4/#10).
+    cells = cell_stats(species_rows(reports, rank)).selectExpr(
+        "*", _rpm_expr(n_reads)
+    )
+    # The frame feeds the tophits ranking and both pivot sinks.
+    # Materialize it NOW with an eager localCheckpoint instead of a lazy
+    # pin: every downstream plan then analyzes a tiny RDD-scan lineage
+    # instead of re-walking the parse, aggregate and window per operator.
+    # (Local checkpoint blocks don't survive executor loss; on a real
+    # cluster the cache-only pin() form degrades gracefully instead —
+    # this pipeline's result is consumed immediately by its sinks.)
+    rrpm_df = taxon_window(cells, samples, mapping).localCheckpoint()
 
-    groups = negative_control_groups(samples, group_patterns)
-    mapping = control_lookup(samples, groups)
-    rrpm_df = rrpm(rpm_df, mapping)
-
-    top = tophits(rrpm_df, rows, n_tophits, taxa_df, samples)
+    top = tophits(rrpm_df, n_tophits, samples)
 
     # the long combined view for callers; the sinks pivot rrpm_df, which
-    # carries reads too. Derived from rrpm_df (row-identical to sparse:
-    # the totals join is validated-total inner, the moments/control joins
-    # map every row) so the fact aggregate runs exactly once
+    # carries reads too
     combined_long = rrpm_df.select(
         "taxID", "taxName", "total_reads", "sample_id", "reads"
     )
@@ -508,12 +455,6 @@ def _scale_matrix_frames(
     # PER PIPELINE RUN on the 48-sample fixture; the same projections as
     # SQL strings parse in one call each (~0.1 s, measured; frames
     # verified symdiff 0 and dtype-identical).
-    def _ident(s: str) -> str:
-        return "`" + s.replace("`", "``") + "`"
-
-    def _slit(s: str) -> str:
-        return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
     wide = pin(
         by_taxon.selectExpr(
             "taxID",

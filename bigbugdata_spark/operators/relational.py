@@ -487,9 +487,10 @@ def op13_floor_ratio_rrpm(
     sits inside its own group partition (MIN(s_suppkey) per nation), the
     control's rpm is available IN-PARTITION: one window over
     (l_partkey, s_nationkey) replaces the self-join — rpm is computed
-    once, and the query needs exactly one shuffle. The generic self-join
-    fallback (controls not members of their group) lives in
-    operators/kraken.py::rrpm with an explicit persist instead.
+    once, and the query needs exactly one shuffle. The kraken pipeline
+    (operators/kraken.py::taxon_window) uses the same in-partition lookup
+    with a window over the taxon alone, so a control need not belong to
+    its group there.
 
     `part_keyed` (default True, the registered shape) selects between
     the r17 pre-keyed form (raw projected rows through ONE l_partkey

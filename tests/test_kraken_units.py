@@ -1,9 +1,9 @@
 """Unit fixtures for kraken edge cases the goldens cannot carry (the
 reference crashes on some of them): reads==0 e_val, physical row order
-under the wholetext reader, and sample_id collision fail-fast. Also the
-reference-free end-to-end gate (both sinks checked against the benchmark's
-plain-Python oracle) and the pin that a repeated run reuses its compiled
-code."""
+under the wholetext reader, and the sample_id collision and missing-total
+fail-fasts. Also the reference-free end-to-end gate (both sinks checked
+against the benchmark's plain-Python oracle) and the pins that a repeated
+run reuses its compiled code and stays within its Spark job budget."""
 
 from __future__ import annotations
 
@@ -14,7 +14,7 @@ from pathlib import Path
 
 import pytest
 
-from bigbugdata_spark.operators.kraken import run_pipeline, side_stats, write_outputs
+from bigbugdata_spark.operators.kraken import cell_stats, run_pipeline, write_outputs
 from bigbugdata_spark.sources.kraken_reports import read_reports
 from tests.kraken_fixtures import generate_reports
 
@@ -40,7 +40,7 @@ def test_e_val_null_on_zero_reads(spark, tmp_path):
         ],
     )
     rows = read_reports(spark, [str(p)], with_row_order=True)
-    out = {r["taxID"]: r for r in side_stats(rows).collect()}
+    out = {r["taxID"]: r for r in cell_stats(rows).collect()}
     assert out[1234]["e_val"] is None
     assert out[1235]["e_val"] == pytest.approx((5 / 10) * 0.5)
 
@@ -64,7 +64,7 @@ def test_row_order_is_physical_line_order(spark, tmp_path):
     # line index: comment+comment+header occupy 0-2 in the raw file; the
     # posexplode index counts raw lines, so data rows start at 3
     assert got == {(0, 3), (1, 4), (1234, 5), (1234, 6)}
-    side = {r["taxID"]: r for r in side_stats(rows).collect()}
+    side = {r["taxID"]: r for r in cell_stats(rows).collect()}
     assert side[1234]["kmers"] == 222  # the physically-last duplicate
     assert side[1234]["sample_reads"] == 9
 
@@ -83,6 +83,25 @@ def test_sample_id_collision_fails_fast(spark, tmp_path):
     _write_report(p2, rows)
     with pytest.raises(ValueError, match="same sample_id"):
         run_pipeline(spark, [str(p1), str(p2)])
+
+
+def test_missing_totals_fail_fast(spark, tmp_path):
+    """A sample with no taxID 0/1 rows has no RPM denominator: the
+    reference silently drops it and later KeyErrors (ref
+    bigbugdata.py:121); run_pipeline must raise instead."""
+    ok = tmp_path / "A_report.txt"
+    _write_report(
+        ok,
+        [
+            "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
+            "50.0\t100\t0\t10\t1.0\t0.5\t1\troot\t  root",
+            "1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp.",
+        ],
+    )
+    bad = tmp_path / "B_report.txt"
+    _write_report(bad, ["1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp."])
+    with pytest.raises(ValueError, match=r"cannot compute RPM\): \['B'\]"):
+        run_pipeline(spark, [str(ok), str(bad)])
 
 
 def test_zscore_all_equal_is_nan(spark, tmp_path):
@@ -113,6 +132,29 @@ def test_zscore_all_equal_is_nan(spark, tmp_path):
     assert not any(math.isnan(z[(s, 1236)]) for s in ("A", "B"))
 
 
+def test_zscores_independent_of_partitioning(spark, tmp_path):
+    """The z moments sum each taxon's rpm in sample order, so the z-scores
+    come out bit-identical whatever the shuffle partitioning."""
+    paths = sorted(generate_reports(tmp_path, n_samples=8, n_taxa=40))
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.enabled",
+    )
+    saved = [spark.conf.get(k) for k in keys]
+    got = []
+    try:
+        spark.conf.set(keys[1], "false")
+        for parts in ("3", "16"):
+            spark.conf.set(keys[0], parts)
+            result = run_pipeline(spark, paths)
+            rows = result.rrpm.select("sample_id", "taxID", "z_score").collect()
+            got.append({(r["sample_id"], r["taxID"]): repr(r["z_score"]) for r in rows})
+    finally:
+        for k, v in zip(keys, saved):
+            spark.conf.set(k, v)
+    assert got[0] == got[1]
+
+
 # --- end to end, against the benchmark's oracle -----------------------------
 
 GROUP_PATTERNS = [("CF_DNA_Negative$", "^CF_DNA"), ("CF_RNA_Negative$", "^CF_RNA")]
@@ -135,6 +177,17 @@ def oracle_reports(tmp_path_factory):
     return sorted(generate_reports(tmp_path_factory.mktemp("reports")))
 
 
+@pytest.fixture(scope="module")
+def needy_reports(tmp_path_factory):
+    """Every sample has fewer than TOP_K positive taxa, so every tophits
+    ranking needs synthesized zero rows and keeps rank gaps."""
+    return sorted(
+        generate_reports(
+            tmp_path_factory.mktemp("needy"), n_samples=8, n_taxa=12, p_present=0.6
+        )
+    )
+
+
 def _run_unit(spark, paths, out_dir, mode):
     result = run_pipeline(
         spark, paths, rank="species", n_tophits=TOP_K,
@@ -143,14 +196,23 @@ def _run_unit(spark, paths, out_dir, mode):
     write_outputs(result, str(out_dir), "species", mode=mode)
 
 
-@pytest.mark.parametrize("mode", ["fidelity", "scale"])
-def test_outputs_match_oracle(spark, oracle_reports, tmp_path, mode):
+@pytest.mark.parametrize(
+    "reports, mode",
+    [
+        pytest.param("oracle_reports", "fidelity", id="fidelity"),
+        pytest.param("oracle_reports", "scale", id="scale"),
+        pytest.param("needy_reports", "fidelity", id="needy-fidelity"),
+        pytest.param("needy_reports", "scale", id="needy-scale"),
+    ],
+)
+def test_outputs_match_oracle(spark, request, tmp_path, reports, mode):
     """Both sinks against an independent model of the reference: the
     fidelity combined/rrpm CSVs byte for byte, every other cell exact
     except z-scores (relative 1e-9). Needs no reference checkout."""
     oracle = _load_oracle()
-    _run_unit(spark, oracle_reports, tmp_path, mode)
-    expected = oracle.expected_outputs(oracle_reports, TOP_K, GROUP_PATTERNS)
+    paths = request.getfixturevalue(reports)
+    _run_unit(spark, paths, tmp_path, mode)
+    expected = oracle.expected_outputs(paths, TOP_K, GROUP_PATTERNS)
     assert oracle.check_outputs(expected, tmp_path, mode) == []
 
 
@@ -171,3 +233,28 @@ def test_repeated_run_reuses_generated_code(spark, oracle_reports, tmp_path):
     _run_unit(spark, oracle_reports, tmp_path / "second", "fidelity")
     n = compiles.METRIC_COMPILATION_TIME().getCount() - before
     assert n <= MAX_WARM_COMPILES, f"warm run compiled {n} classes"
+
+
+#: Spark jobs a warm fidelity unit may submit on this fixture. The
+#: join-free pipeline (one cell aggregate, one taxon window) submitted 25;
+#: the broadcast-join shape before it submitted 48.
+MAX_WARM_JOBS = 36
+
+
+def _last_job_id(spark) -> int:
+    """The newest job id in the status store. Ids are sequential, so a
+    difference of two readings counts the jobs submitted in between even
+    when the store has evicted old jobs (spark.ui.retainedJobs)."""
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
+
+
+def test_repeated_run_job_budget(spark, oracle_reports, tmp_path):
+    """A warm run_pipeline + write_outputs stays within its job budget:
+    every extra plan is driver time (analysis, AQE stages, JIT warm-up)
+    that the data work at these sizes does not need."""
+    _run_unit(spark, oracle_reports, tmp_path / "first", "fidelity")
+    before = _last_job_id(spark)
+    _run_unit(spark, oracle_reports, tmp_path / "second", "fidelity")
+    n = _last_job_id(spark) - before
+    assert n <= MAX_WARM_JOBS, f"warm run submitted {n} jobs"
