@@ -12,7 +12,13 @@ grouping key and no joins:
    stats (`cell_stats`), with rpm read from a per-sample map literal;
 3. one window over taxID for the taxon's name, total, z moments and
    control rpm (`taxon_window`), checkpointed;
-4. a per-sample top-k ranking of that frame (`tophits`).
+4. one collect of the sparse per-sample top-k of that frame, re-ranked
+   to the reference's dense ranking on the driver (`tophits`).
+
+Everything after the checkpoint is driver-sized, one Spark action per
+artefact: the top-k rows are a list, and the fidelity sink formats both
+matrices from one collect of a per-taxon aggregate. Only the scale sink
+writes through Spark's distributed CSV writer.
 
 Every documented numeric quirk of the reference is reproduced:
 
@@ -31,6 +37,9 @@ Divergences (each fail-fast or documented):
   from RPM and later KeyError (ref :121); we raise ValueError at once;
 * reads == 0 makes the reference crash with ZeroDivisionError (ref :275);
   we emit NULL e_val (via try_divide — ANSI mode would otherwise throw);
+* a sample whose taxID-0/1 rows sum to 0 (or NULL) reads makes the
+  reference crash with ZeroDivisionError in RPM (ref :104-127); we raise
+  ValueError at once;
 * two report files resolving to one sample_id make the reference silently
   keep only the last file (dict overwrite, ref :35-42); we raise ValueError;
 * taxName for a taxID is the first-seen name in the reference (ref :295);
@@ -39,11 +48,12 @@ Divergences (each fail-fast or documented):
 
 from __future__ import annotations
 
+from bisect import bisect_left
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.caching import pin
@@ -132,16 +142,14 @@ def cell_stats(rows: DataFrame) -> DataFrame:
     )
 
 
-def _rpm_expr(n_reads: dict[str, int | None]) -> str:
+def _rpm_expr(n_reads: dict[str, int]) -> str:
     """RPM = reads / (n_reads / 1e6) (op 11, ref :104-127) as one SQL
     expression: the per-sample totals travel as a map literal, so no
-    join. try_divide: a sample whose taxID-0/1 rows hold zero reads would
-    throw under ANSI; the reference yields ZeroDivisionError — we emit
-    NULL rpm for that degenerate sample (documented divergence)."""
-    entries = ", ".join(
-        f"{_slit(s)}, {'NULL' if n is None else f'{n}L'}" for s, n in n_reads.items()
-    )
-    return f"try_divide(reads, map({entries})[sample_id] / 1000000.0D) as rpm"
+    join. run_pipeline has already rejected a zero or NULL total (the
+    reference's ZeroDivisionError), so rpm, and with it rRPM, is never
+    NULL."""
+    entries = ", ".join(f"{_slit(s)}, {n}L" for s, n in n_reads.items())
+    return f"reads / (map({entries})[sample_id] / 1000000.0D) as rpm"
 
 
 def taxon_window(
@@ -219,91 +227,85 @@ def taxon_window(
     ).drop("_s", "_ss", *ctrl_cols)
 
 
-def tophits(taxon_cells: DataFrame, k: int, samples: list[str]) -> DataFrame:
+#: the tophits columns in output order, with their types
+TOP_SCHEMA = (
+    "sampleName string, taxID long, taxName string, rank int, rRPM double, "
+    "kmers long, dup string, reads long, cov string, e_val double, z_score double"
+)
+TOP_FIELDS = [c.split()[0] for c in TOP_SCHEMA.split(", ")]
+
+
+def repair_dense_ranks(
+    sparse: list[Row], k: int, samples: list[str], first_k: list[int]
+) -> list[Row]:
+    """The dense top-k (op 14, ref :166-205) from the SPARSE one, in output
+    order: samples in column order, then rank ascending.
+
+    `sparse` holds each sample's present rows ranked by (rRPM desc, taxID
+    asc) with rank <= k; `first_k` is the k smallest taxIDs of the dense
+    taxon list (only read when some sparse row has rRPM 0). The dense
+    list adds a zero for every absent (sample, taxon) cell, and zeros rank
+    after every positive row, so a sample with >= k positive rows keeps
+    its sparse ranks. A sample with npos < k positive rows has all of them
+    in `sparse`; its dense ranks after npos go to the non-positive taxa in
+    taxID order, and the first k - npos of those lie among `first_k`. A
+    present zero row t therefore has dense rank npos + 1 + |{u in first_k:
+    u < t, u not positive}| — exact when t is among `first_k`, and > k
+    otherwise. Rows ranked past k are dropped; absent cells are never
+    emitted, so the rank gaps stay (ref :183-188). A zero row in the dense
+    top-k is in the sparse one too: its sparse rank is <= its dense rank."""
+    by_sample: dict[str, list[Row]] = {}
+    for r in sparse:
+        by_sample.setdefault(r["sampleName"], []).append(r)
+    out = []
+    for s in samples:
+        rows = sorted(by_sample.get(s, ()), key=lambda r: r["rank"])
+        positive = {r["taxID"] for r in rows if r["rRPM"] > 0}
+        zero_taxa = [u for u in first_k if u not in positive]
+        for r in rows:
+            if r["rRPM"] > 0:
+                out.append(r)
+                continue
+            rank = len(positive) + 1 + bisect_left(zero_taxa, r["taxID"])
+            if rank <= k:
+                out.append(Row(**{**r.asDict(), "rank": rank}))
+    return out
+
+
+def tophits(taxon_cells: DataFrame, k: int, samples: list[str]) -> list[Row]:
     """Top-k per sample by rRPM with stable tie-break and rank gaps (op 14,
-    ref :166-205): rank over the full DENSE candidate list (ties -> taxID
-    ascending, the reference's stable-sort order), THEN drop the absent
-    (sample, taxon) pairs, leaving rank gaps.
+    ref :166-205), as TOP_FIELDS rows in output order.
 
-    Dense ranking from sparse rows: absent cells have rrpm == 0 exactly
-    and can only occupy ranks after every positive row — they matter only
-    for samples with fewer than k POSITIVE rrpm rows. Zero-candidates
-    (full taxa list, anti-joined against that sample's sparse rows) are
-    synthesized for those needy samples alone, flagged not present; at
-    production density (every sample >= k positive species) zero rows are
-    never generated, so the grid cost is gone from the common case.
-
-    The side stats and z_score ride along on every cell of the input, so
-    the top-k rows come out complete — no join after the ranking. The
-    presence flag drops the synthesized rows after the rank is assigned
-    (the reference's rank-gap quirk).
-
-    Neediness is decided from the top-k itself: positives outrank zeros
-    under the (rrpm DESC, taxID) order, so a sample has >= k positive rows
-    iff its top-k SPARSE rows are all positive. The check reads the
-    <= k*|samples| pinned ranking (driver-sized, like the sample-ID
-    collects), and the zero-candidate synthesis subtree is built only for
-    the samples that actually need it."""
-    spark = taxon_cells.sparkSession
-    base = taxon_cells.select(
-        "sample_id", "taxID", "taxName", "rrpm", "kmers", "dup_raw",
-        "sample_reads", "cov_raw", "e_val", "z_score",
-        F.lit(True).alias("_present"),
-    )
+    The reference ranks the full DENSE taxon list (ties -> taxID
+    ascending, its stable-sort order), THEN drops the absent (sample,
+    taxon) pairs. Here one window ranks the sparse rows and ONE collect
+    brings the <= k*|samples| top rows to the driver, with the side stats
+    and z_score riding along. Samples short of k positive rows get their
+    dense ranks there (repair_dense_ranks); that needs the k smallest
+    taxIDs, collected only when some top row has rRPM 0."""
     w = Window.partitionBy("sample_id").orderBy(F.desc("rrpm"), F.asc("taxID"))
-    # pin: the needy check and the sink both read the ranking; caching it
-    # runs the ranking window once
-    ranked = pin(
-        base.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
-    )
-    pos_in_topk = {
-        r["sample_id"]: r["npos"]
-        for r in ranked.groupBy("sample_id")
-        .agg(F.sum(F.when(F.col("rrpm") > 0, 1).otherwise(0)).alias("npos"))
+    sparse = (
+        taxon_cells.select(
+            F.col("sample_id").alias("sampleName"),
+            "taxID",
+            "taxName",
+            F.row_number().over(w).alias("rank"),
+            F.col("rrpm").alias("rRPM"),
+            "kmers",
+            F.col("dup_raw").alias("dup"),
+            F.col("sample_reads").alias("reads"),
+            F.col("cov_raw").alias("cov"),
+            "e_val",
+            "z_score",
+        )
+        .filter(F.col("rank") <= k)
         .collect()
-    }
-    needy_samples = [s for s in samples if pos_in_topk.get(s, 0) < k]
-    if needy_samples:
-        # the dense-ranking repair path: re-rank (sparse ∪ absent-cell
-        # zeros) for the needy samples alone and splice them in
-        needy = spark.createDataFrame(
-            [(s,) for s in needy_samples], "sample_id string"
-        )
-        zero_rows = (
-            needy.crossJoin(base.select("taxID", "taxName").distinct())
-            .join(
-                base.select("sample_id", "taxID"), ["sample_id", "taxID"], "left_anti"
-            )
-            .select(
-                "sample_id",
-                "taxID",
-                "taxName",
-                F.lit(0.0).alias("rrpm"),
-                F.lit(False).alias("_present"),
-            )
-        )
-        ranked_needy = (
-            base.join(F.broadcast(needy), "sample_id")
-            .unionByName(zero_rows, allowMissingColumns=True)
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-        )
-        ranked = ranked.join(F.broadcast(needy), "sample_id", "left_anti").unionByName(
-            ranked_needy
-        )
-    return ranked.filter("_present").select(
-        F.col("sample_id").alias("sampleName"),
-        "taxID",
-        "taxName",
-        "rank",
-        F.col("rrpm").alias("rRPM"),
-        "kmers",
-        F.col("dup_raw").alias("dup"),
-        F.col("sample_reads").alias("reads"),
-        F.col("cov_raw").alias("cov"),
-        "e_val",
-        "z_score",
     )
+    first_k = []
+    if any(r["rRPM"] == 0 for r in sparse):
+        taxa = taxon_cells.select("taxID").distinct().orderBy("taxID").limit(k)
+        first_k = [r["taxID"] for r in taxa.collect()]
+    return repair_dense_ranks(sparse, k, samples, first_k)
 
 
 # ---------------------------------------------------------------------------
@@ -316,7 +318,7 @@ class KrakenResult:
     samples: list[str]
     combined: DataFrame  # long: taxID, taxName, total_reads, sample_id, reads
     rrpm: DataFrame  # long: + rpm, z_score, rrpm and the tophits side stats
-    tophits: DataFrame
+    tophits: list[Row]  # TOP_FIELDS rows in output order
 
 
 def run_pipeline(
@@ -364,13 +366,15 @@ def run_pipeline(
 
     # The first job: one row per sample, and the fail-fast check. A
     # sample with no taxID-0/1 rows makes the reference silently drop it
-    # and later KeyError (ref bigbugdata.py:121); we raise before any
-    # other job runs.
+    # and later KeyError (ref bigbugdata.py:121); one whose taxID-0/1
+    # rows hold 0 (or no parsable) reads makes it raise
+    # ZeroDivisionError. We raise before any other job runs, so every
+    # rpm and rRPM below is a number.
     n_reads = {r["sample_id"]: r["n_reads"] for r in sample_totals(reports).collect()}
-    missing = sorted(set(samples) - set(n_reads))
+    missing = [s for s in samples if not n_reads.get(s)]
     if missing:
         raise ValueError(
-            f"samples with no taxID 0/1 rows (cannot compute RPM): {missing}"
+            f"samples with no taxID 0/1 reads (cannot compute RPM): {missing}"
         )
     mapping = control_lookup(samples, negative_control_groups(samples, group_patterns))
 
@@ -402,59 +406,37 @@ def run_pipeline(
     return KrakenResult(samples=samples, combined=combined_long, rrpm=rrpm_df, tophits=top)
 
 
-def _ordered_tophits(top: DataFrame, samples: list[str]) -> DataFrame:
-    """Reference emission order: samples in column order, rank ascending
-    (ref bigbugdata.py:350-366)."""
-    spark = top.sparkSession
-    order_df = spark.createDataFrame(
-        [(s, i) for i, s in enumerate(samples)], "sampleName string, _ord int"
-    )
-    return (
-        top.join(F.broadcast(order_df), "sampleName")
-        .orderBy("_ord", "rank")
-        .drop("_ord")
-    )
+def _taxon_entries(rrpm: DataFrame) -> DataFrame:
+    """One row per taxon for the matrix sinks of both modes: taxID,
+    taxName, total_reads and `_m`, a map sample_id -> (r: reads, m: rrpm)
+    of its present cells. Combined (reads) and rrpm share the same (taxID
+    x sample) grid, so one shuffle feeds both matrices; absent cells are
+    the zeros the sinks fill in.
 
-
-TOP_FIELDS = [
-    "sampleName", "taxID", "taxName", "rank", "rRPM",
-    "kmers", "dup", "reads", "cov", "e_val", "z_score",
-]
-
-
-def _scale_matrix_frames(
-    result: "KrakenResult", samples: list[str]
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(wide, combined_wide, rrpm_wide) for the matrix sinks of both
-    modes: ONE pivot shuffle feeds both sinks — combined (reads) and
-    rrpm share the same (taxID x sample) grid, so both value columns
-    pivot together, the O(taxa x samples) wide frame is pinned, and
-    each sink projects from the cache.
-
-    r17 restructure (guide §1.2 step 2 — per-task work): the 96-slot
-    PivotFirst aggregate (two scalar slots per sample, the r13 shape)
-    updated 96 interpreted slots per input row. One collect_list of
-    (sample_id -> (reads, rrpm)) entries per taxon appends a single
-    element per row instead, and the 96 wide columns come from map
-    lookups over the 20k result rows — measured 0.68 -> 0.41 s for the
-    pivot materialization on the 48x20k fixture, output identical
-    column-for-column ((taxID, sample) rows are unique, so first ==
-    the map entry). The r13 caveat (a struct-valued PivotFirst forces
-    SortAggregate) does not apply: collect_list plans as
-    ObjectHashAggregate, no sort."""
+    One collect_list of (sample_id -> (reads, rrpm)) entries per taxon
+    appends a single element per row (r17); a PivotFirst aggregate
+    updated two interpreted slots per sample for every input row.
+    collect_list plans as ObjectHashAggregate, no sort."""
     entry = F.struct(
         F.col("sample_id"),
         F.struct(F.col("reads").alias("r"), F.col("rrpm").alias("m")),
     )
-    by_taxon = result.rrpm.groupBy("taxID", "taxName", "total_reads").agg(
+    return rrpm.groupBy("taxID", "taxName", "total_reads").agg(
         F.map_from_entries(F.collect_list(entry)).alias("_m")
     )
-    # selectExpr, not Column-object loops (r17, guide §1.2 step 2 — but
-    # on the DRIVER): building 96 getItem/getField/alias Column objects
-    # plus 2x48 coalesce projections cost 1.2-1.8 s of py4j round-trips
-    # PER PIPELINE RUN on the 48-sample fixture; the same projections as
-    # SQL strings parse in one call each (~0.1 s, measured; frames
-    # verified symdiff 0 and dtype-identical).
+
+
+def _scale_matrix_frames(
+    by_taxon: DataFrame, samples: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """(combined_wide, rrpm_wide) for the scale sink: the per-taxon
+    entries of _taxon_entries spread into one column per sample, pinned
+    once, and each matrix projects from the cache with its zero fill.
+
+    selectExpr, not Column-object loops (r17): building 96
+    getItem/getField/alias Column objects plus 2x48 coalesce projections
+    cost 1.2-1.8 s of py4j round-trips per run on the 48-sample fixture;
+    the same projections as SQL strings parse in one call each."""
     wide = pin(
         by_taxon.selectExpr(
             "taxID",
@@ -479,7 +461,7 @@ def _scale_matrix_frames(
         *base_cols,
         *[f"coalesce({_ident(s + '_m')}, 0.0d) as {_ident(s)}" for s in samples],
     )
-    return wide, combined_wide, rrpm_wide
+    return combined_wide, rrpm_wide
 
 
 def write_outputs(
@@ -491,25 +473,22 @@ def write_outputs(
     """CSV sinks with the reference's exact headers and column order
     (ops 16-17, ref bigbugdata.py:312-366).
 
-    Both modes build the two matrices from one pinned pivot
-    (_scale_matrix_frames). mode='fidelity': byte-exact reference CSVs
-    via driver-side str() formatting (bounded: the pivots are O(taxa x
-    samples) presentation tables). mode='scale': the same wide frames
-    written by Spark's distributed CSV writer (one ordered part file) —
-    no collect; the 100 TB path (VERDICT r1 fix #2/#7)."""
+    mode='fidelity': byte-exact reference CSVs via driver-side str()
+    formatting. ONE collect of the per-taxon entries (_taxon_entries,
+    O(taxa x samples) presentation data) feeds both matrices, sorted by
+    taxID and zero-filled on the driver; the tophits rows are written as
+    run_pipeline returned them. mode='scale': the matrices go through
+    Spark's distributed CSV writer (one ordered part file each) from one
+    pinned wide frame — no collect; the 100 TB path (VERDICT r1 fix
+    #2/#7) — and the driver-sized tophits rows through the same writer."""
     combined_path, rrpm_path, tophits_path = output_paths(results_dir, rank)
     samples = result.samples
     base = ["taxID", "taxName", "Total # of Reads"]
-    _, combined_wide, rrpm_wide = _scale_matrix_frames(result, samples)
+    by_taxon = _taxon_entries(result.rrpm)
 
     if mode == "scale":
-        order_df = result.tophits.sparkSession.createDataFrame(
-            [(s, i) for i, s in enumerate(samples)], "sampleName string, _ord int"
-        )
-        top_df = (
-            result.tophits.join(F.broadcast(order_df), "sampleName")
-            .select(*TOP_FIELDS, "_ord")
-        )
+        combined_wide, rrpm_wide = _scale_matrix_frames(by_taxon, samples)
+        top_df = result.rrpm.sparkSession.createDataFrame(result.tophits, TOP_SCHEMA)
         # run_pipeline already materialized the shared base (checkpointed
         # rrpm frame + pinned reports cache), so the sink chains start
         # concurrently with no barrier job (standard multi-threaded job
@@ -534,14 +513,7 @@ def write_outputs(
             )
 
         def _tophits_sink():
-            # ordered by (_ord, rank): sort before dropping the helper
-            write_csv_scale(
-                top_df.coalesce(1)
-                .sortWithinPartitions("_ord", "rank")
-                .drop("_ord"),
-                str(tophits_path),
-                single_file=True,
-            )
+            write_csv_scale(top_df, str(tophits_path), single_file=True)
 
         with ThreadPoolExecutor(max_workers=4) as ex:
             futs = [ex.submit(_matrix_sinks), ex.submit(_tophits_sink)]
@@ -549,16 +521,13 @@ def write_outputs(
                 f.result()
         return str(combined_path), str(rrpm_path), str(tophits_path)
 
-    # the rrpm collect reads the pinned pivot the combined collect
-    # materialized: one shuffle of the long fact feeds both matrices
-    for path, matrix in ((combined_path, combined_wide), (rrpm_path, rrpm_wide)):
-        write_csv_fidelity(
-            path,
-            [r.asDict() for r in matrix.orderBy("taxID").collect()],
-            base + samples,
-        )
-    top_rows = [
-        r.asDict() for r in _ordered_tophits(result.tophits, samples).collect()
-    ]
-    write_csv_fidelity(tophits_path, top_rows, TOP_FIELDS)
+    combined_rows, rrpm_rows = [], []
+    for t in sorted(by_taxon.collect(), key=lambda t: t["taxID"]):
+        head = dict(zip(base, (t["taxID"], t["taxName"], t["total_reads"])))
+        cells = t["_m"]
+        combined_rows.append(head | {s: cells[s].r if s in cells else 0 for s in samples})
+        rrpm_rows.append(head | {s: cells[s].m if s in cells else 0.0 for s in samples})
+    write_csv_fidelity(combined_path, combined_rows, base + samples)
+    write_csv_fidelity(rrpm_path, rrpm_rows, base + samples)
+    write_csv_fidelity(tophits_path, [r.asDict() for r in result.tophits], TOP_FIELDS)
     return str(combined_path), str(rrpm_path), str(tophits_path)

@@ -1,9 +1,10 @@
 """Unit fixtures for kraken edge cases the goldens cannot carry (the
 reference crashes on some of them): reads==0 e_val, physical row order
-under the wholetext reader, and the sample_id collision and missing-total
-fail-fasts. Also the reference-free end-to-end gate (both sinks checked
-against the benchmark's plain-Python oracle) and the pins that a repeated
-run reuses its compiled code and stays within its Spark job budget."""
+under the wholetext reader, and the sample_id collision, missing-total
+and zero-total fail-fasts. Also the reference-free end-to-end gate (both
+sinks checked against the benchmark's plain-Python oracle) and the pins
+that a repeated run reuses its compiled code and stays within its Spark
+job budget."""
 
 from __future__ import annotations
 
@@ -104,6 +105,32 @@ def test_missing_totals_fail_fast(spark, tmp_path):
         run_pipeline(spark, [str(ok), str(bad)])
 
 
+def test_zero_totals_fail_fast(spark, tmp_path):
+    """A sample whose taxID 0/1 rows sum to 0 reads has no RPM: the
+    reference raises ZeroDivisionError (ref bigbugdata.py:104-127);
+    run_pipeline must raise ValueError instead of emitting NULL rRPM."""
+    ok = tmp_path / "A_report.txt"
+    _write_report(
+        ok,
+        [
+            "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
+            "50.0\t100\t0\t10\t1.0\t0.5\t1\troot\t  root",
+            "1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp.",
+        ],
+    )
+    bad = tmp_path / "B_report.txt"
+    _write_report(
+        bad,
+        [
+            "50.0\t0\t0\t0\t0\t0\t0\tunclassified\tunclassified",
+            "50.0\t0\t0\t10\t1.0\t0.5\t1\troot\t  root",
+            "1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp.",
+        ],
+    )
+    with pytest.raises(ValueError, match=r"cannot compute RPM\): \['B'\]"):
+        run_pipeline(spark, [str(ok), str(bad)])
+
+
 def test_zscore_all_equal_is_nan(spark, tmp_path):
     """All-equal dense RPM vector -> NaN z (scipy ddof=0 semantics), via
     the relative-epsilon variance guard (ADVICE r1)."""
@@ -180,7 +207,7 @@ def oracle_reports(tmp_path_factory):
 @pytest.fixture(scope="module")
 def needy_reports(tmp_path_factory):
     """Every sample has fewer than TOP_K positive taxa, so every tophits
-    ranking needs synthesized zero rows and keeps rank gaps."""
+    ranking needs the dense-rank repair and keeps rank gaps."""
     return sorted(
         generate_reports(
             tmp_path_factory.mktemp("needy"), n_samples=8, n_taxa=12, p_present=0.6
@@ -235,10 +262,11 @@ def test_repeated_run_reuses_generated_code(spark, oracle_reports, tmp_path):
     assert n <= MAX_WARM_COMPILES, f"warm run compiled {n} classes"
 
 
-#: Spark jobs a warm fidelity unit may submit on this fixture. The
-#: join-free pipeline (one cell aggregate, one taxon window) submitted 25;
-#: the broadcast-join shape before it submitted 48.
-MAX_WARM_JOBS = 36
+#: Spark jobs a warm unit may submit on this fixture, per sink mode. With
+#: the top-k repaired on the driver and the fidelity matrices from one
+#: collect, a unit submitted 11 (fidelity) and 14 (scale); the shape
+#: before, with the repair as a Spark subtree, submitted 25 and 19.
+MAX_WARM_JOBS = {"fidelity": 15, "scale": 17}
 
 
 def _last_job_id(spark) -> int:
@@ -249,12 +277,13 @@ def _last_job_id(spark) -> int:
     return max((jobs.apply(i).jobId() for i in range(jobs.size())), default=-1)
 
 
-def test_repeated_run_job_budget(spark, oracle_reports, tmp_path):
+@pytest.mark.parametrize("mode", ["fidelity", "scale"])
+def test_repeated_run_job_budget(spark, oracle_reports, tmp_path, mode):
     """A warm run_pipeline + write_outputs stays within its job budget:
     every extra plan is driver time (analysis, AQE stages, JIT warm-up)
     that the data work at these sizes does not need."""
-    _run_unit(spark, oracle_reports, tmp_path / "first", "fidelity")
+    _run_unit(spark, oracle_reports, tmp_path / "first", mode)
     before = _last_job_id(spark)
-    _run_unit(spark, oracle_reports, tmp_path / "second", "fidelity")
+    _run_unit(spark, oracle_reports, tmp_path / "second", mode)
     n = _last_job_id(spark) - before
-    assert n <= MAX_WARM_JOBS, f"warm run submitted {n} jobs"
+    assert n <= MAX_WARM_JOBS[mode], f"warm {mode} run submitted {n} jobs"

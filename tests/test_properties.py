@@ -7,10 +7,15 @@ from __future__ import annotations
 import math
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
+from pyspark.sql import Row
 
-from bigbugdata_spark.operators.kraken import run_pipeline
+from bigbugdata_spark.operators.kraken import (
+    TOP_FIELDS,
+    repair_dense_ranks,
+    run_pipeline,
+)
 from bigbugdata_spark.operators.relational import (
     negative_control_groups,
     ordered_sample_ids,
@@ -46,6 +51,51 @@ def test_ordered_sample_ids_lexicographic_fallback(ids):
     assert sorted(out) == sorted(ids)
     if any(not s.isdigit() for s in ids):
         assert out == sorted(ids)
+
+
+def _ranked(sample, cells, k):
+    """TOP_FIELDS rows of `cells` ({taxID: rRPM}) ranked by (rRPM desc,
+    taxID asc), rank <= k."""
+    order = sorted(cells, key=lambda t: (-cells[t], t))[:k]
+    return [
+        Row(**{
+            **dict.fromkeys(TOP_FIELDS),
+            "sampleName": sample, "taxID": t, "rank": rank, "rRPM": cells[t],
+        })
+        for rank, t in enumerate(order, start=1)
+    ]
+
+
+@example(samples=[{5: 0.0}, {1: 0.0, 2: 0.0, 3: 3.0}], k=2)  # zero beyond first k
+@example(samples=[{1: 0.0}, {}, {2: 1.0}], k=5)  # k > |taxa|, an empty sample
+@example(samples=[{4: 0.0, 2: 0.0}, {1: 0.0, 3: 0.0}], k=3)  # all ties at 0
+@given(
+    samples=st.lists(
+        st.dictionaries(
+            st.integers(min_value=1, max_value=30),
+            st.sampled_from([0.0, 0.0, 0.5, 1.0, 2.0, 7.0]),
+            max_size=10,
+        ),
+        min_size=1,
+        max_size=5,
+    ),
+    k=st.integers(min_value=1, max_value=8),
+)
+def test_repair_dense_ranks_matches_dense_ranking(samples, k):
+    """The driver-side repair equals ranking the DENSE taxon list (absent
+    cells are rRPM 0) and then dropping the absent cells — the rule of
+    perfbench/oracle.py — for any present cells, ties and k."""
+    names = [f"S{i}" for i in range(len(samples))]
+    taxa = sorted(set().union(*samples))
+    want = []
+    for s, cells in zip(names, samples):
+        dense = {t: cells.get(t, 0.0) for t in taxa}
+        want += [(r.sampleName, r.taxID, r.rank)
+                 for r in _ranked(s, dense, k) if r.taxID in cells]
+    sparse = [r for s, cells in zip(names, samples) for r in _ranked(s, cells, k)]
+    got = repair_dense_ranks(sparse[::-1], k, names, taxa[:k])
+    assert [(r.sampleName, r.taxID, r.rank) for r in got] == want
+    assert all(list(r.asDict()) == TOP_FIELDS for r in got)
 
 
 def test_control_group_errors():
@@ -117,7 +167,7 @@ def test_pipeline_invariants(spark, tmp_path_factory, corpus):
         assert r["rrpm"] == float(math.floor(r["rpm"]))
 
     # tophits: at most k rows per sample, ranks within 1..k, no duplicates
-    top = result.tophits.collect()
+    top = result.tophits
     by_sample: dict[str, list[int]] = {}
     for t in top:
         by_sample.setdefault(t["sampleName"], []).append(t["rank"])

@@ -294,16 +294,13 @@ def test_funnel_kernel_slicing_invariance():
 
 
 def test_kraken_scale_pivot_is_hash_aggregate(spark, tmp_path):
-    """The scale-mode matrix pivot must HashAggregate: the r12
+    """The matrix sinks' per-taxon aggregate must HashAggregate: the r12
     struct-valued PivotFirst silently fell to SortAggregate (two full
     sorts of the long fact — measured 0.5-1.1 s on the bench fixture);
     the r13 dual-scalar form keeps primitive slot buffers.  Pinned
     here so a future 'tidy it into one struct agg' change is a red X,
     not a silent regression."""
-    from bigbugdata_spark.operators.kraken import (
-        _scale_matrix_frames,
-        run_pipeline,
-    )
+    from bigbugdata_spark.operators.kraken import _taxon_entries, run_pipeline
 
     rows = [
         "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
@@ -318,8 +315,8 @@ def test_kraken_scale_pivot_is_hash_aggregate(spark, tmp_path):
         _write_report(p, rows)
         paths.append(str(p))
     result = run_pipeline(spark, paths)
-    wide, _, _ = _scale_matrix_frames(result, result.samples)
-    plan = wide._jdf.queryExecution().executedPlan().toString()
+    by_taxon = _taxon_entries(result.rrpm)
+    plan = by_taxon._jdf.queryExecution().executedPlan().toString()
     assert "SortAggregate" not in plan
     assert "HashAggregate" in plan
 
