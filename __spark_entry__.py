@@ -3,6 +3,8 @@
 Thin wiring over bigbugdata_spark.registry: every operator from
 SURVEY.md §2 (and the extension operators) registers a named
 (spark, sf_dir) -> DataFrame callable, most with a DuckDB oracle twin.
+queries() and oracle_sql() list registry.GATE_ORDER first — the 50
+queries the driver's correctness gate checks — then the rest, sorted.
 """
 
 from __future__ import annotations

@@ -536,30 +536,6 @@ def _reset_graph_spine_downstream(sf_dir: str) -> None:
         del G._MEMO[key]
 
 
-#: shape variants measured ALONGSIDE registered probe queries (r18,
-#: VERDICT r17 #5): op13/op15's r17 pre-keying trades shuffle COUNT
-#: (2 exchanges -> 1) for shuffle BYTES (raw projected rows instead of
-#: map-side partial sums through the one exchange).  The local sf0.1
-#: win is measured; at 100 TB the byte term can dominate, so the x10
-#: probe runs BOTH shapes and the artifact records them side by side —
-#: the registered default stays/flips on the measured x10 numbers, not
-#: on the argument (decision recorded in OPTIMIZATION_r18.md).  Each
-#: entry: probe-row name -> (spec name whose fn takes the kwarg,
-#: kwargs).  Variant rows never replace the registered row.
-SCALE_PROBE_VARIANTS: dict[str, tuple[str, dict]] = {
-    "op13_floor_ratio_rrpm@twophase": (
-        "op13_floor_ratio_rrpm", {"part_keyed": False}
-    ),
-    "op15_zscore_window@twophase": (
-        "op15_zscore_window", {"part_keyed": False}
-    ),
-    # op15's registered shape is not otherwise in the probe list — add
-    # the pre-keyed arm explicitly so both shapes carry x10 entries
-    "op15_zscore_window@prekeyed": (
-        "op15_zscore_window", {"part_keyed": True}
-    ),
-}
-
 #: per-query pre-iteration hooks for probes whose steady state is a
 #: shared materialization — the probe measures the build.
 #: sim_ivf_incremental_assign is deliberately NOT here: its registered
@@ -713,19 +689,7 @@ def bench_scale_probe(spark, specs) -> dict:
         "iterations": SCALE_ITERATIONS,
         "queries": {},
     }
-    probe_fns: list[tuple[str, object]] = [
-        (n, specs[n].fn) for n in SCALE_PROBE_QUERIES if n in specs
-    ]
-    for row_name, (base, kwargs) in SCALE_PROBE_VARIANTS.items():
-        if base in specs:
-            probe_fns.append(
-                (
-                    row_name,
-                    (lambda b, kw: lambda sp, sf: specs[b].fn(sp, sf, **kw))(
-                        base, kwargs
-                    ),
-                )
-            )
+    probe_fns = [(n, specs[n].fn) for n in SCALE_PROBE_QUERIES if n in specs]
     for name, fn in probe_fns:
         entry: dict = {}
 

@@ -1,13 +1,6 @@
 """Shared constants and DuckDB-oracle SQL fragments used by more than one
-operator module.
-
-This module exists for a registration-order reason, not just hygiene: the
-driver's correctness gate checks queries in REGISTRATION order with a cap
-(see registry._QUERY_MODULES), so `operators.pipeline` must be importable
-WITHOUT transitively importing (and therefore registering) the whole
-dedup/text families first.  Everything here is pure — no `register()`
-calls, no Spark session use — so importing it never perturbs the
-registry.
+operator module.  Everything here is pure — no `register()` calls, no
+Spark session use.
 """
 
 from __future__ import annotations
@@ -44,14 +37,12 @@ JACCARD_PAIRS_SQL = f"""
 """
 
 # Shared by the exact and LSH cluster-keep registrations (operators/dedup.py)
-# AND the cluster-size histogram's early-slot twin (operators/dedup_incr.py):
+# AND the cluster-size histogram (operators/dedup_incr.py):
 # connected components over the verified near-dup pair graph, as a DuckDB
 # recursive CTE (transitive closure -> min reachable id). Both Spark variants
 # produce the identical pair set on this corpus (banding miss probability
 # <= 4e-8 at its J >= 0.9 level; tests assert set equality), so one
-# ground-truth oracle serves all of them. Lives here (not dedup.py) so the
-# driver-cap split module can build its oracle without importing — and
-# thereby registering — the whole dedup family first.
+# ground-truth oracle serves all of them.
 #: the keep decision's CTE chain and final keep expression, exported
 #: separately (r13 review) so composing oracles (corpus_survivor_quality)
 #: derive the identical decision instead of copying it; CLUSTER_KEEP_SQL
@@ -97,9 +88,7 @@ def sql_list(words: tuple[str, ...]) -> str:
 # operators/text.py (text_quality_score), operators/corpus_version.py
 # (corpus_quality_weighted_sample's acceptance threshold) and
 # operators/pipeline.py. One expression tree on both engines so the
-# sampler's threshold can never drift from the registered score; lives
-# here so the driver-cap split modules can build their oracles without
-# importing (and registering) the whole text family first.
+# sampler's threshold can never drift from the registered score.
 #: the quality base CTE (per-doc integer counts) and the integer
 #: DECIPOINT rule sum, exported separately (r12) so the threshold curve
 #: derives the identical score definition instead of copying it;

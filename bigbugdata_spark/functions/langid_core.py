@@ -1,9 +1,6 @@
-"""Marker-word language-ID fragments — the shared, NON-REGISTERING core
-behind text_lang_id (operators/text.py) and the round-10 evaluation
-card text_lang_confusion (operators/text_langconf.py), split out per
-the scd_core discipline so an in-cap module can build the predictor
-without dragging operators/text.py's registrations into the driver cap
-(registry.py's import-time-drag rule).
+"""Marker-word language-ID fragments — the shared core behind
+text_lang_id (operators/text.py) and the round-10 evaluation card
+text_lang_confusion (operators/text_langconf.py).
 
 The heuristic: count each language's five marker stopwords in the
 whitespace token list; predict the max-score language with the fixed

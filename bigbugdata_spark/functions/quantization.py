@@ -3,10 +3,7 @@
 oracle re-derives the same quantized vectors in SQL). The hash-exact
 oracle contract of every consumer rests on the Spark and SQL forms
 staying semantically identical, so both live here in one place (same
-lockstep discipline as functions/hashing.py). Lives in functions/ — not
-in an operator module — so consumers can import it without triggering
-query registration (registry cap order stays a property of
-_QUERY_MODULES alone).
+lockstep discipline as functions/hashing.py).
 
 Per vector: scale = 127 / max|x|, q_j = round(x_j * scale) in
 [-127, 127]. All arithmetic is float->double exact promotion, one

@@ -56,14 +56,12 @@ from bigbugdata_spark.functions.fragments import (
     cents_col,
     sql_cos,
 )
+from bigbugdata_spark.operators.dedup import dedup_emb_cosine, dedup_emb_lsh
+from bigbugdata_spark.operators.events_ext import evt_value_quantiles_approx
+from bigbugdata_spark.operators.similarity import sim_cosine_topk, sim_ivf_topk
+from bigbugdata_spark.operators.similarity_ext import sim_cosine_topk_np
+from bigbugdata_spark.operators.text_ext import text_vocab_approx
 from bigbugdata_spark.registry import register
-
-# NOTE: the twin operator modules (dedup, similarity, similarity_ext,
-# events_ext, text_ext) are imported INSIDE the query bodies, never at
-# module level: importing them registers their queries, and this module
-# must be placeable anywhere in registry._QUERY_MODULES without dragging
-# five other families' registrations ahead of it (the driver's
-# correctness report caps at the first ~50 registered queries).
 
 
 # --------------------------------------------------------------------------
@@ -131,8 +129,6 @@ def audit_emb_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     both lineages (Spark has no cross-consumer subtree reuse here). The
     exact side exists only at audit scale; at 100 TB the LSH path runs
     alone and this audit runs on a sampled slice."""
-    from bigbugdata_spark.operators.dedup import dedup_emb_cosine, dedup_emb_lsh
-
     exact = dedup_emb_cosine(spark, sf_dir).select(
         "v1", "v2", F.lit(1).alias("e")
     )
@@ -213,7 +209,7 @@ def ivf_stages_sql(
     candidate-generation stages as SQL, parameterized on the query-side
     CTE name, probe width, codebook-size rule, and probe routing —
     shared by this module's audit, similarity_pq.py's audit, and the
-    all-nodes kNN-graph oracle (similarity_knn_core.py, which probes
+    all-nodes kNN-graph oracle (similarity_knn.py, which probes
     fewer cells, uses every corpus vector as a query, sizes cells to a
     constant row target, and routes its probes).  n_probe None mirrors
     the Spark default (fragments.sql_scaled_n_probe); k_sql None
@@ -349,8 +345,6 @@ def audit_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query_id, neighbor_id) key and a per-query count — negligible next
     to the index queries themselves (whose plans are the scale story,
     see similarity.py)."""
-    from bigbugdata_spark.operators.similarity import sim_cosine_topk, sim_ivf_topk
-
     exact = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     approx = (
         sim_ivf_topk(spark, sf_dir)
@@ -394,9 +388,6 @@ def audit_np_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: both sides are one-corpus-scan top-k plans (see
     similarity_ext.py); the audit adds a broadcast-size join of two
     |Q| x k frames."""
-    from bigbugdata_spark.operators.similarity import sim_cosine_topk
-    from bigbugdata_spark.operators.similarity_ext import sim_cosine_topk_np
-
     exact = sim_cosine_topk(spark, sf_dir).select("query_id", "neighbor_id")
     np_res = (
         sim_cosine_topk_np(spark, sf_dir)
@@ -455,8 +446,6 @@ def audit_quantiles_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     window; this is exactly the audit you can afford at 100 TB, unlike
     the exact-quantile twin whose per-group sort is the thing the sketch
     replaces."""
-    from bigbugdata_spark.operators.events_ext import evt_value_quantiles_approx
-
     approx = evt_value_quantiles_approx(spark, sf_dir).select(
         "event_type", *[col for _, col in _QUANTILE_PS]
     )
@@ -528,8 +517,6 @@ def audit_vocab_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the exact COUNT(DISTINCT) side exists at audit scale only; at
     100 TB you audit a sampled partition slice. The join is |languages|
     rows on both sides."""
-    from bigbugdata_spark.operators.text_ext import text_vocab_approx
-
     toks = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.explode(H.tokens(F.col("text"))).alias("term")
     )

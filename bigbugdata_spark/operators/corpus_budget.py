@@ -44,8 +44,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
 from bigbugdata_spark.functions.fragments import QUALITY_SQL as _QUALITY_SQL
+from bigbugdata_spark.operators.text import text_quality_score
 from bigbugdata_spark.registry import register
 
 TOKEN_BUDGET = 20_000  # tokens to admit (sf0.01 corpus holds ~27k)
@@ -123,10 +125,6 @@ def corpus_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped), and the admitted doc/token counts — the partial band
     filled by the exact greedy in (draw, doc_id) priority order, so
     total admitted tokens can never exceed the budget."""
-    # deferred import keeps registration order exact under load_all
-    from bigbugdata_spark.catalog import table
-    from bigbugdata_spark.operators.text import text_quality_score
-
     q = text_quality_score(spark, sf_dir)
     docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
     banded = q.join(docs, "doc_id").select(

@@ -28,14 +28,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.functions.fragments import QUALITY_SQL as _QUALITY_SQL
+from bigbugdata_spark.operators.text import text_quality_score
 from bigbugdata_spark.registry import register
 
-# shared with pipe_release_manifest via the non-registering core module
-# (r18 rotation — see corpus_shard_core); re-exported for back-compat
-from bigbugdata_spark.operators.corpus_shard_core import (  # noqa: F401
-    CLEAN_Q,
-    SHORT_TOKENS,
-)
+CLEAN_Q = 1.0  # full rule-sum score counts as clean
+SHORT_TOKENS = 56  # clean docs at or under this length go first
 
 
 @register(
@@ -71,9 +68,6 @@ def corpus_curriculum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per curriculum stage: document/token volume and the exact token
     offset at which the stage begins in the training stream
     (cumulative tokens of all earlier stages)."""
-    # deferred import keeps registration order exact under load_all
-    from bigbugdata_spark.operators.text import text_quality_score
-
     q = text_quality_score(spark, sf_dir)
     stage = (
         F.when(

@@ -34,16 +34,22 @@ from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
 from bigbugdata_spark.registry import register
 
-# shared with pipe_release_manifest via the non-registering core module
-# (r18 rotation: pipeline_release sits in the driver cap and must not
-# drag this module's registration in); re-exported here for back-compat
-from bigbugdata_spark.operators.corpus_shard_core import (  # noqa: F401
-    N_SHARDS,
-    SHARD_A,
-    SHARD_B,
-    shard_col,
-    sql_shard,
-)
+N_SHARDS = 16
+# affine shard hash — coefficients deliberately distinct from
+# fragments.SPLIT_A/B so shard % split strata stay independent
+SHARD_A, SHARD_B = 40_503_551, 1_299_721
+
+
+def shard_col(doc_id):
+    """Column: shard id (0..N_SHARDS-1) of a BIGINT doc_id Column."""
+    return ((F.lit(SHARD_A) * doc_id + F.lit(SHARD_B)) % F.lit(H.P)) % F.lit(
+        N_SHARDS
+    )
+
+
+def sql_shard(doc_id: str = "doc_id") -> str:
+    """DuckDB twin of shard_col (identical affine hash + reduction)."""
+    return f"(({SHARD_A} * {doc_id} + {SHARD_B}) % {H.P}) % {N_SHARDS}"
 
 
 @register(

@@ -1,11 +1,5 @@
-"""Versioned-corpus accounting + quality-weighted sampling — split out
-of operators/corpus.py in round 8 so the two round-7 queries hold their
-own early slots in the registry's driver-cap ordering without dragging
-corpus's five multi-round-green queries back into the cap (the scd.py
-treatment, VERDICT r7 #1). Implementations and oracles are unchanged;
-the shared quality definition comes from the non-registering
-functions/fragments.py (QUALITY_SQL), so importing this module early
-cannot perturb the registration order.
+"""Versioned-corpus accounting + quality-weighted sampling.  The shared
+quality definition comes from functions/fragments.py (QUALITY_SQL).
 
 No analog in the reference (SURVEY §2.1); corpus-governance extension
 surface.
@@ -18,6 +12,7 @@ from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions.fragments import QUALITY_SQL as _QUALITY_SQL
+from bigbugdata_spark.operators.text import text_quality_score
 from bigbugdata_spark.registry import register
 
 
@@ -121,9 +116,6 @@ def corpus_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFram
     fp quality sums like 0.4+0.3 round identically because the
     expression tree is identical. Plan: per-row expressions only, no
     shuffle; the filter composes with the scan's column pruning."""
-    # deferred import keeps registration order exact under load_all
-    from bigbugdata_spark.operators.text import text_quality_score
-
     q = text_quality_score(spark, sf_dir)
     draw = (F.col("doc_id") * _QW_A + _QW_B) % _QW_P % 1000
     thresh = F.round(F.col("quality") * 1000)

@@ -141,16 +141,6 @@ def _bucket_pairs(
     )
 
 
-# The connected-components oracle (CLUSTER_KEEP_SQL) moved to
-# functions/fragments.py in round 8 so the driver-cap split module
-# operators/dedup_incr.py can build its histogram oracle without
-# importing (and registering) this family first.
-
-
-# Registered FIRST in this module on purpose: the driver's correctness
-# report caps at the first ~50 registered queries (registry.py), and this
-# is the one dedup entry that has never held a driver row — the other
-# seven are multi-round green and rotate behind the cap.
 @register(
     "dedup_cluster_keep_lsh",
     oracle=_CLUSTER_KEEP_SQL,
@@ -598,10 +588,9 @@ def _hyperplane_bits(emb) -> "F.Column":
     return F.transform(planes, lambda p: (H.dot(emb, p) > 0).cast("int"))
 
 
-# Registered past the driver cap in operators/no_oracle_shims.py: this
-# query is rows-only by design (bucket composition is engine-specific),
-# so its cap slot belongs to the hash-green audit_emb_lsh_recall twin
-# (VERDICT r12 #2: no-oracle specs never enter the cap).
+# Rows-only by design (bucket composition is engine-specific): verified
+# through its oracle'd twin audit_emb_lsh_recall.
+@register("dedup_emb_lsh", tags=("dedup", "join"))
 def dedup_emb_lsh(
     spark: SparkSession, sf_dir: str, max_bucket_width: int | None = None
 ) -> DataFrame:
@@ -655,8 +644,3 @@ def dedup_emb_lsh(
         .filter(F.col("cos_sim") >= COSINE_T)
     )
 
-
-# dedup_incremental and dedup_cluster_sizes moved to
-# operators/dedup_incr.py in round 8 — the registry's driver-cap
-# rotation needed them to hold their own early slots without dragging
-# this module's eight multi-round-green queries back into the cap.

@@ -1,17 +1,8 @@
-"""Incremental ingest dedup + cluster-size histogram — split out of
-operators/dedup.py in round 8 so the two round-7 queries hold their own
-early slots in the registry's driver-cap ordering without dragging
-dedup's eight multi-round-green queries back into the cap (the scd.py
-treatment, VERDICT r7 #1). Implementations and oracles are unchanged;
-shared oracle fragments (JACCARD_T, CLUSTER_KEEP_SQL) come from the
-non-registering functions/fragments.py, and the Spark-side sub-plans
-are deferred imports from dedup.py resolved after load_all completes.
-
-Round 10: the index plumbing shared with the LSH twin (root, buckets,
-fingerprints, attach, sweeps, the batch predicate) lives in the
-non-registering operators/dedup_incr_core.py so dedup_incr_lsh can
-hold an in-cap slot without dragging this module's registrations;
-the symbols are re-exported here for existing imports.
+"""Incremental ingest dedup + cluster-size histogram, built on dedup.py's
+shingling and cluster-keep sub-plans.  The index plumbing shared with
+the LSH twin (root, buckets, fingerprints, attach, sweeps, the batch
+predicate) lives in operators/dedup_incr_core.py; its names are
+re-exported here.
 
 No analog in the reference (SURVEY §2.1); LLM-pipeline extension
 surface.
@@ -25,6 +16,7 @@ from pyspark.sql import functions as F
 from bigbugdata_spark.caching import pin
 from bigbugdata_spark.functions import hashing as H
 from bigbugdata_spark.functions.fragments import CLUSTER_KEEP_SQL, JACCARD_T
+from bigbugdata_spark.operators.dedup import _doc_shingles, dedup_cluster_keep
 from bigbugdata_spark.operators.dedup_incr_core import (  # noqa: F401
     _INC_A,
     _INC_B,
@@ -82,7 +74,6 @@ def gram_index(
     fp = _corpus_fingerprint(sf_dir)
     idx_name, sz_name, df_name = _index_names(fp)
     if not spark.catalog.tableExists(idx_name):
-        from bigbugdata_spark.operators.dedup import _doc_shingles
         from bigbugdata_spark.sources.bucketed import write_bucketed
 
         ensure_index_root()
@@ -254,8 +245,6 @@ def incremental_pairs(
     ingest cycle shingles only the batch and probes the index, never
     re-shingling the corpus (this registered read query materializes
     storage on first run, the corpus_version_diff precedent)."""
-    from bigbugdata_spark.operators.dedup import _doc_shingles
-
     idx, sizes, gdf = gram_index(spark, sf_dir)
     grams = idx
     # batch-side shingles: computed from the documents scan with the
@@ -377,8 +366,6 @@ def dedup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster_size — both map-side-combinable aggregates over the
     label frame; output is histogram-sized. The oracle re-derives the
     fixpoint via the recursive CTE and the same double rollup."""
-    from bigbugdata_spark.operators.dedup import dedup_cluster_keep
-
     labels = dedup_cluster_keep(spark, sf_dir)
     per_cluster = labels.groupBy("cluster_rep").agg(
         F.count(F.lit(1)).alias("cluster_size")

@@ -1,9 +1,7 @@
-"""Shared, NON-REGISTERING core of the two persisted incremental-dedup
-index paths (operators/dedup_incr.py's gram index and
-operators/dedup_incr_lsh.py's LSH band index) — split out in round 10
-so dedup_incr_lsh can sit inside the driver's ~50-entry correctness cap
-without dragging dedup_incr's two freshly-green queries back in (the
-scd_core.py treatment; see registry.py's rotation comment).
+"""Shared core of the two persisted incremental-dedup index paths
+(operators/dedup_incr.py's gram index and operators/dedup_incr_lsh.py's
+LSH band index), also used by the kNN graph spine and the incremental
+IVF index.
 
 Also hardens the index root per the round-9 advisory: the root is
 per-user (not the world-shared /tmp/bigbugdata-warehouse), created

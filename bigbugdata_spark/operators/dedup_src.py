@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from bigbugdata_spark.caching import pin
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions.fragments import JACCARD_PAIRS_SQL
+from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
 from bigbugdata_spark.registry import register
 
 
@@ -52,10 +53,6 @@ def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERNAL duplication — the key equality already says so, no
     separate subtotal needed). Source pair keys are (LEAST, GREATEST)-
     normalized so direction never splits a pair across rows."""
-    # lazy import: keeps operators.dedup's registrations out of this
-    # module's import-time footprint (registry rotation order)
-    from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
-
     pairs = dedup_minhash_lsh(spark, sf_dir)
     src = table(spark, sf_dir, "documents").select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("d1"), F.col("source").alias("sa"))
@@ -104,8 +101,6 @@ def dedup_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified near-dup pair (either side), and the implicated share in
     permille. Sources with zero duplicates still get a row (left join
     from the corpus side)."""
-    from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
-
     pairs = pin(dedup_minhash_lsh(spark, sf_dir))
     duped = (
         pairs.select(F.col("d1").alias("doc_id"))

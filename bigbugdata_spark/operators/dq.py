@@ -31,6 +31,12 @@ from pyspark.sql import functions as F
 
 from bigbugdata_spark.caching import pin
 from bigbugdata_spark.catalog import table
+from bigbugdata_spark.functions.fragments import (
+    JACCARD_PAIRS_SQL as _JACCARD_PAIRS_SQL,
+    split_col as _split_col,
+    sql_split_case as _sql_split_case,
+)
+from bigbugdata_spark.operators.dedup import dedup_minhash_lsh, dedup_ngram_jaccard
 from bigbugdata_spark.registry import register
 
 # (relation label, child table, fk col, parent table, pk col)
@@ -228,15 +234,6 @@ def dq_constraint_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- split leakage ---------------------------------------------------------
 
-from bigbugdata_spark.functions.fragments import (  # noqa: E402
-    JACCARD_PAIRS_SQL as _JACCARD_PAIRS_SQL,
-)
-from bigbugdata_spark.functions.fragments import (  # noqa: E402
-    split_col as _split_col,
-    sql_split_case as _sql_split_case,
-)
-
-
 _LEAKAGE_SQL = f"""
     WITH pairs AS ({_JACCARD_PAIRS_SQL}),
     splits AS (
@@ -306,10 +303,6 @@ def dq_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pair source here is the exact inverted-index join (the correctness
     anchor); dq_split_leakage_lsh below is the registered 100 TB twin
     off dedup_minhash_lsh's bucketed pairs."""
-    # deferred import: dedup registers later in the module order;
-    # importing inside the body keeps registry order exact
-    from bigbugdata_spark.operators.dedup import dedup_ngram_jaccard
-
     return _leakage_from_pairs(
         spark, sf_dir, dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
     )
@@ -336,8 +329,6 @@ def dq_split_leakage_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     leakage rollup over those pairs is oracle-identical too. The
     exact-vs-LSH agreement is additionally asserted as a frame-level
     invariant in tests/test_extensions.py."""
-    from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
-
     return _leakage_from_pairs(
         spark, sf_dir, dedup_minhash_lsh(spark, sf_dir).select("d1", "d2")
     )

@@ -19,6 +19,9 @@ format through the repo's pinned TS_FMT.
 Scale posture: one MAX aggregate per feed — at 100 TB over the
 date-partitioned lake this is partition-metadata-sized work (the max
 lives in the newest partition), and the output is feeds-sized.
+
+The feed table, the per-feed SQL fragment and the finish tail are shared
+with the live monitor, streaming/freshness.py.
 """
 
 from __future__ import annotations
@@ -27,18 +30,49 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
-from bigbugdata_spark.operators.dq_fresh_core import (  # noqa: F401
-    FRESHNESS_FEEDS,
-    US_PER_HOUR,
-    feed_sql,
-    finish_freshness,
-)
+from bigbugdata_spark.functions.fragments import TS_FMT, TS_FMT_DUCK
 from bigbugdata_spark.registry import register
 
-# feed constants, the per-feed SQL fragment, and finish_freshness moved
-# to the non-registering operators/dq_fresh_core.py in round 10 (shared
-# with streaming/freshness.py without import-time registration drag);
-# re-exported above for existing imports.
+US_PER_HOUR = 3_600_000_000
+
+# (feed, ts column, anchor "now", staleness SLA in hours)
+FRESHNESS_FEEDS = (
+    ("events", "ts", "2024-01-31 00:00:00", 24),
+    ("orders", "o_orderdate", "2001-09-01 00:00:00", 168),
+)
+
+
+def feed_sql(tbl: str, col: str, anchor: str, sla: int) -> str:
+    """One feed's freshness row as DuckDB SQL (shared between the batch
+    audit's oracle and the live monitor's)."""
+    return f"""
+    SELECT '{tbl}' AS feed,
+           strftime(MAX({col}), '{TS_FMT_DUCK}') AS max_ts,
+           (epoch_us(TIMESTAMP '{anchor}') - epoch_us(MAX({col})))
+               // {US_PER_HOUR} AS lag_hours,
+           CAST((epoch_us(TIMESTAMP '{anchor}') - epoch_us(MAX({col})))
+               // {US_PER_HOUR} > {sla} AS INT) AS is_stale
+    FROM {tbl}
+    """
+
+
+def finish_freshness(
+    agg: "DataFrame", tbl: str, anchor: str, sla: int
+) -> "DataFrame":
+    """Freshness card row from a one-row MAX aggregate (column
+    max_ts_raw) — the shared tail of the batch audit and the live
+    streaming monitor, so the two cannot drift."""
+    lag_hours = F.expr(
+        f"(unix_micros(TIMESTAMP '{anchor}') - unix_micros(max_ts_raw))"
+        f" div {US_PER_HOUR}"
+    )
+    return agg.select(
+        F.lit(tbl).alias("feed"),
+        F.date_format("max_ts_raw", TS_FMT).alias("max_ts"),
+        lag_hours.alias("lag_hours"),
+        (lag_hours > sla).cast("int").alias("is_stale"),
+    )
+
 
 _FRESH_SQL = "\nUNION ALL\n".join(
     feed_sql(tbl, col, anchor, sla)

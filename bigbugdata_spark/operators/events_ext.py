@@ -1,7 +1,6 @@
 """Events round-3 additions — the SKETCH-BASED scale paths whose exact
-twins live in operators/events.py.  Registered after every other family
-(see registry._QUERY_MODULES): sketch outputs are engine-specific, so
-these are rows-only queries verified by error-bound tests against their
+twins live in operators/events.py.  Sketch outputs are engine-specific,
+so these are rows-only queries verified by error-bound tests against their
 exact baselines instead of a DuckDB hash compare."""
 
 from __future__ import annotations
@@ -16,11 +15,9 @@ from bigbugdata_spark.registry import register
 APPROX_ACC = 10_000  # GK sketch accuracy: rank error <= n / APPROX_ACC
 
 
-# Registered past the driver cap in operators/no_oracle_shims.py: this
-# query is rows-only by design (GK sketch outputs are engine-specific),
-# so its cap slot belongs to the hash-green audit_quantiles_rank twin
-# (VERDICT r12 #2: no-oracle specs never enter the cap — r12 burned a
-# cap slot on this query's guaranteed `err: no_oracle`).
+# Rows-only by design (GK sketch outputs are engine-specific): verified
+# through its oracle'd twin audit_quantiles_rank.
+@register("evt_value_quantiles_approx", tags=("events", "agg"))
 def evt_value_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate p50/p90/p99 of the event value per type via
     percentile_approx (Greenwald-Khanna sketch) — the 100 TB twin of
@@ -259,10 +256,3 @@ def evt_cohort_fullouter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("presence"),
     )
 
-
-
-# evt_user_state_history (SCD2) moved to operators/scd.py in round 7,
-# and the as-of/CDC consumers (evt_state_asof, evt_state_cdc) moved to
-# operators/events_state.py in round 8 — each needed its own slot in
-# the registry's driver-cap ordering without dragging this module's
-# five multi-round-green queries back into the cap.

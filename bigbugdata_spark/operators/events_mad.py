@@ -30,25 +30,136 @@ and the final roll-up is a |event_type|-row aggregate.  At 100x a
 type's billions of events still compress to its distinct cents before
 any ordered pass; the old plan's per-type single-partition sort of
 raw events (the r9 weak finding, 10x probe ratio 3.43) is gone.
+
+The histogram builder, the rank-selection tail and the oracle are shared
+with the live monitor, streaming/mad.py.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import functions as F
 
+from bigbugdata_spark.caching import pin
 from bigbugdata_spark.catalog import table
-from bigbugdata_spark.functions.fragments import cents_col
+from bigbugdata_spark.functions.fragments import CENTS_SQL, cents_col
 from bigbugdata_spark.registry import register
 
-# Shared machinery lives in the non-registering events_mad_core.py
-# (round-11 split) so streaming/mad.py can compose it without pulling
-# this module's registration into the driver cap.
-from bigbugdata_spark.operators.events_mad_core import (  # noqa: F401
-    K_MAD,
-    MAD_ORACLE_SQL,
-    finish_mad,
-    mad_histogram,
-)
+K_MAD = 5  # flag events with |cents - median| > K_MAD * mad
+
+
+def mad_histogram(ev: DataFrame) -> DataFrame:
+    """(event_type, cents) -> cnt — THE compression, and the ONLY pass
+    over raw events: a map-side-combinable grouped aggregate that is
+    also streaming-safe (complete-mode state for the live monitor in
+    streaming/mad.py — one BIGINT per distinct (type, cents) cell).
+    Everything downstream is histogram-sized."""
+    return ev.groupBy("event_type", "cents").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+
+
+def finish_mad(hist: DataFrame) -> DataFrame:
+    """The MAD card from a (event_type, cents, cnt) histogram — the
+    shared tail of the batch audit and the live streaming monitor, so
+    the two cannot disagree about what "outlier" means."""
+
+    def rank_select(h: DataFrame, val: str) -> DataFrame:
+        """Smallest `val` whose per-type running count reaches
+        ceil(n/2) — the value at rank ceil(n/2), selected over the
+        histogram instead of the raw rows.  Windows are per-type over
+        histogram rows (distinct-value cardinality), explicitly
+        ROWS-framed; cum is tie-free because `val` is distinct within
+        a type after the groupBy."""
+        wcum = (
+            Window.partitionBy("event_type")
+            .orderBy(val)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        wn = Window.partitionBy("event_type")
+        return (
+            h.withColumn("cum", F.sum("cnt").over(wcum))
+            .withColumn("n", F.sum("cnt").over(wn))
+            .filter(
+                F.col("cum") >= F.ceil(F.lit(0.5) * F.col("n")).cast("long")
+            )
+            .groupBy("event_type")
+            .agg(F.min(val).alias(f"median_{val}"))
+        )
+
+    med = rank_select(hist, "cents")
+    # deviation HISTOGRAM: re-key the value histogram by |cents - med|
+    # and re-aggregate (distinct cents can collapse onto one adev)
+    devh = (
+        hist.join(med, "event_type")
+        .withColumn("adev", F.abs(F.col("cents") - F.col("median_cents")))
+        .groupBy("event_type", "median_cents", "adev")
+        .agg(F.sum("cnt").alias("cnt"))
+    )
+    mad = rank_select(
+        devh.select("event_type", "adev", "cnt"), "adev"
+    ).withColumnRenamed("median_adev", "mad_cents")
+    return (
+        devh.join(mad, "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.max("median_cents").cast("long").alias("median_cents"),
+            F.max("mad_cents").cast("long").alias("mad_cents"),
+            F.sum("cnt").cast("long").alias("n_events"),
+            F.sum(
+                F.when(
+                    F.col("adev") > F.lit(K_MAD) * F.col("mad_cents"),
+                    F.col("cnt"),
+                ).otherwise(0)
+            )
+            .cast("long")
+            .alias("n_outliers"),
+        )
+    )
+
+
+MAD_ORACLE_SQL = f"""
+        WITH ranked AS (
+            SELECT event_type, {CENTS_SQL} AS cents, event_id,
+                   ROW_NUMBER() OVER (PARTITION BY event_type
+                                      ORDER BY {CENTS_SQL}, event_id) AS rn,
+                   COUNT(*) OVER (PARTITION BY event_type) AS n
+            FROM events
+        ),
+        med AS (
+            SELECT event_type,
+                   MAX(CASE WHEN rn = CAST(CEIL(0.5 * n) AS BIGINT)
+                            THEN cents END) AS median_cents
+            FROM ranked GROUP BY event_type
+        ),
+        dev AS (
+            SELECT r.event_type, r.cents,
+                   ABS(r.cents - m.median_cents) AS adev,
+                   ROW_NUMBER() OVER (
+                       PARTITION BY r.event_type
+                       ORDER BY ABS(r.cents - m.median_cents), r.event_id
+                   ) AS rn,
+                   COUNT(*) OVER (PARTITION BY r.event_type) AS n,
+                   m.median_cents
+            FROM ranked r JOIN med m ON r.event_type = m.event_type
+        ),
+        mad AS (
+            SELECT event_type,
+                   MAX(median_cents) AS median_cents,
+                   MAX(CASE WHEN rn = CAST(CEIL(0.5 * n) AS BIGINT)
+                            THEN adev END) AS mad_cents,
+                   CAST(MAX(n) AS BIGINT) AS n_events
+            FROM dev GROUP BY event_type
+        )
+        SELECT d.event_type,
+               CAST(MAX(m.median_cents) AS BIGINT) AS median_cents,
+               CAST(MAX(m.mad_cents) AS BIGINT) AS mad_cents,
+               CAST(MAX(m.n_events) AS BIGINT) AS n_events,
+               CAST(SUM(CASE WHEN d.adev > {K_MAD} * m.mad_cents
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+        FROM dev d JOIN mad m ON d.event_type = m.event_type
+        GROUP BY d.event_type
+    """
 
 
 @register(
@@ -74,6 +185,4 @@ def evt_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select(
         "event_type", cents_col().alias("cents")
     )
-    from bigbugdata_spark.caching import pin
-
     return finish_mad(pin(mad_histogram(ev)))

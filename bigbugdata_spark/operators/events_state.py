@@ -1,11 +1,5 @@
-"""As-of / CDC consumers of the SCD2 state model — split out of
-operators/events_ext.py in round 8 so the two round-7 queries hold their
-own early slots in the registry's driver-cap ordering without dragging
-events_ext's five multi-round-green queries back into the cap (the
-scd.py treatment, VERDICT r7 #1). Implementations and oracles are
-unchanged; the run derivation comes from the non-registering
-operators/scd_core.py so importing this module early cannot perturb the
-registration order.
+"""As-of / CDC consumers of the SCD2 state model.  The run derivation
+comes from operators/scd_core.py.
 
 No analog in the reference (SURVEY §2.1 — no window functions, no state
 modeling); warehouse-governance extension surface.

@@ -1,8 +1,4 @@
-"""Perceptual-hash near-duplicate detection — split out of
-operators/multimodal.py in round 8 so the round-7 query holds its own
-early slot in the registry's driver-cap ordering without dragging
-multimodal's five multi-round-green queries back into the cap (the
-scd.py treatment, VERDICT r7 #1). Implementation and oracle unchanged.
+"""Perceptual-hash near-duplicate detection.
 
 Image dedup, the multimodal face of the dedup family: decode -> 8x8
 "luminance" grid -> average-hash (bit_j = cell_j > grid mean, the
@@ -27,7 +23,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigbugdata_spark.caching import pin
 from bigbugdata_spark.catalog import table
+from bigbugdata_spark.operators.dedup import _bucket_pairs
 from bigbugdata_spark.registry import register
 
 PHASH_GRID = 64  # 8x8 cells
@@ -123,11 +121,6 @@ def mm_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     by _bucket_pairs' mega-bucket guard when a degenerate corpus needs
     it. At 100 TB this is exactly the simhash text plan with the
     signature swapped for a decoded-media hash."""
-    # deferred import: dedup registers later in _QUERY_MODULES; importing
-    # at module top would reorder the registry the driver cap depends on
-    from bigbugdata_spark.caching import pin
-    from bigbugdata_spark.operators.dedup import _bucket_pairs
-
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )

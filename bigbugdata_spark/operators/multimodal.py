@@ -258,8 +258,3 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return docs.mapInPandas(_decode_batches, _DECODE_SCHEMA)
 
-
-# mm_phash_near_dup (and its fake-aHash kernel + all-pairs oracle)
-# moved to operators/mm_phash.py in round 8 — the registry's driver-cap
-# rotation needed it to hold its own early slot without dragging this
-# module's five multi-round-green queries back into the cap.

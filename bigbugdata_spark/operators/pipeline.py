@@ -21,19 +21,16 @@ from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
-
-# Only pure fragments at module level: importing operators.dedup /
-# operators.text here would register their whole families ahead of this
-# one, pushing pipe_training_corpus past the driver's correctness-report
-# cap (see registry._QUERY_MODULES).  The stage functions themselves are
-# imported lazily inside the query body.
 from bigbugdata_spark.functions.fragments import (
     CHUNK_SIZE,
     CHUNK_STRIDE,
     JACCARD_PAIRS_SQL as _JACCARD_PAIRS_SQL,
     STOPWORDS as _STOPWORDS,
+    quality_base_frame,
+    quality_deci_col,
     sql_list as _sql_list,
 )
+from bigbugdata_spark.operators.dedup import cc_node_labels, dedup_ngram_jaccard
 from bigbugdata_spark.registry import register
 
 _QUALITY_T = 0.7
@@ -109,12 +106,6 @@ def pipe_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     SortMergeJoin that shuffled every surviving document. kept-set
     equality: keep==1 <=> NOT IN drops, since every document appears in
     dedup_cluster_keep's output exactly once with keep in {0,1}."""
-    from bigbugdata_spark.functions.fragments import (
-        quality_base_frame,
-        quality_deci_col,
-    )
-    from bigbugdata_spark.operators.dedup import cc_node_labels, dedup_ngram_jaccard
-
     quality = quality_deci_col().cast("double") / F.lit(10.0)
     gated = (
         quality_base_frame(spark, sf_dir, with_text=True)

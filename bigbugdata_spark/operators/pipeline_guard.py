@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
-from bigbugdata_spark.operators.similarity_knn_core import KNN_SQL as _KNN_SQL
+from bigbugdata_spark.operators.similarity_knn import KNN_SQL as _KNN_SQL
 from bigbugdata_spark.registry import register
 
 #: minimum component label purity for keep decisions to apply

@@ -34,16 +34,8 @@ from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions.fragments import QUALITY_SQL as _QUALITY_SQL
-# the non-registering core (r18 rotation): importing the registering
-# corpus_curriculum/corpus_shard modules here would drag their cap
-# slots to this module's position now that pipe_release_manifest sits
-# inside the driver's 50-slot oracle cap
-from bigbugdata_spark.operators.corpus_shard_core import (
-    CLEAN_Q,
-    SHORT_TOKENS,
-    shard_col,
-    sql_shard,
-)
+from bigbugdata_spark.operators.corpus_curriculum import CLEAN_Q, SHORT_TOKENS
+from bigbugdata_spark.operators.corpus_shard import shard_col, sql_shard
 from bigbugdata_spark.registry import register
 
 MIN_QUALITY = 0.7  # release gate: drop docs below this score

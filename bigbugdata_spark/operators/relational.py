@@ -152,12 +152,7 @@ _SUPPLIER_TOTALS_SQL = """
 """
 
 
-def _rpm(
-    spark: SparkSession,
-    sf_dir: str,
-    share_fact: bool = False,
-    part_keyed: bool = False,
-) -> DataFrame:
+def _rpm(spark: SparkSession, sf_dir: str, share_fact: bool = False) -> DataFrame:
     """RPM normalization (op 11, ref bigbugdata.py:104-127): reads per
     million of the supplier's total. Totals side is tiny -> broadcast; the
     fact side never shuffles for this join.
@@ -173,10 +168,10 @@ def _rpm(
         fact = pin(_fact_reads(spark, sf_dir))
         totals = _supplier_totals(spark, sf_dir, fact=fact)
     else:
-        # part_keyed pre-partitions the fact by l_partkey so a consumer
-        # window over (l_partkey, ...) reuses the exchange (op13: 2 data
-        # Exchanges -> 1, 0.74 -> 0.54 s min at sf0.1, symdiff 0)
-        fact = _fact_reads(spark, sf_dir, part_keyed=part_keyed)
+        # the fact pre-partitioned by l_partkey so a consumer window over
+        # (l_partkey, ...) reuses the exchange (op13: 2 data Exchanges ->
+        # 1, 0.74 -> 0.54 s min at sf0.1, symdiff 0)
+        fact = _fact_reads(spark, sf_dir, part_keyed=True)
         totals = _supplier_totals(spark, sf_dir)
     return fact.join(F.broadcast(totals), "l_suppkey").withColumn(
         "rpm", F.col("reads") / (F.col("n_reads") / F.lit(1_000_000.0))
@@ -473,9 +468,7 @@ def op12_regex_control_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "join"),
 )
-def op13_floor_ratio_rrpm(
-    spark: SparkSession, sf_dir: str, part_keyed: bool = True
-) -> DataFrame:
+def op13_floor_ratio_rrpm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rRPM — the signature floor-truncated ratio (op 13, ref
     bigbugdata.py:130-163): rrpm = int(rpm) / max(int(control_rpm), 1),
     both sides truncated, missing control measurement -> 0 -> guarded to 1.
@@ -492,15 +485,12 @@ def op13_floor_ratio_rrpm(
     with a window over the taxon alone, so a control need not belong to
     its group there.
 
-    `part_keyed` (default True, the registered shape) selects between
-    the r17 pre-keyed form (raw projected rows through ONE l_partkey
-    exchange; the window reuses it) and the two-phase form (map-side
+    The fact is pre-keyed: raw projected rows go through ONE l_partkey
+    exchange and the window reuses it.  The two-phase form (map-side
     partial sums through the agg exchange + a second exchange for the
-    window).  VERDICT r17 #5: count-vs-bytes is scale-dependent — the
-    x10 probe measures BOTH shapes (bench.SCALE_PROBE_VARIANTS) so the
-    registered default is a measured decision, not an argument.
+    window) lost by 39% at x10 (OPTIMIZATION_r18.md).
     """
-    rpm = _rpm(spark, sf_dir, part_keyed=part_keyed)
+    rpm = _rpm(spark, sf_dir)
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     ctrl = sup.groupBy("s_nationkey").agg(F.min("s_suppkey").alias("control_suppkey"))
     mapping = sup.join(F.broadcast(ctrl), "s_nationkey").select(
@@ -616,9 +606,7 @@ def op14_topk_with_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("relational", "window"),
 )
-def op15_zscore_window(
-    spark: SparkSession, sf_dir: str, part_keyed: bool = True
-) -> DataFrame:
+def op15_zscore_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-sample population z-score (op 15, ref bigbugdata.py:322-331,
     scipy ddof=0). Computed from explicit SUM/SUM(x^2)/COUNT over the
     partition window — exact in fp64 for integer-valued reads, so the
@@ -628,12 +616,11 @@ def op15_zscore_window(
     deterministic stand-in, asserted in the kraken fidelity tests).
     """
     w = Window.partitionBy("l_partkey")
-    # part_keyed default True: one exchange established once — the
-    # window reuses the aggregate's l_partkey partitioning (2 Exchanges
-    # -> 1; measured 0.77 -> 0.44 s min at sf0.1, result symdiff 0).
-    # The False arm (two-phase partial-sum agg) exists for the x10
-    # probe's count-vs-bytes comparison (VERDICT r17 #5; see op13).
-    fact = _fact_reads(spark, sf_dir, part_keyed=part_keyed)
+    # pre-keyed: one exchange established once — the window reuses the
+    # aggregate's l_partkey partitioning (2 Exchanges -> 1; measured
+    # 0.77 -> 0.44 s min at sf0.1, result symdiff 0). The two-phase
+    # partial-sum agg lost by 43% at x10 (OPTIMIZATION_r18.md).
+    fact = _fact_reads(spark, sf_dir, part_keyed=True)
     stats = (
         fact.withColumn("s", F.sum("reads").over(w))
         .withColumn("ss", F.sum(F.col("reads") * F.col("reads")).over(w))

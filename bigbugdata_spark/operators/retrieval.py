@@ -36,6 +36,7 @@ from bigbugdata_spark.functions.fragments import (
     N_QUERIES,
     TOP_K,
 )
+from bigbugdata_spark.operators.similarity import sim_cosine_topk
 from bigbugdata_spark.registry import register
 
 RRF_K = 60  # the standard reciprocal-rank-fusion damping constant
@@ -143,12 +144,6 @@ def rag_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rl") <= TOP_K)
         .select("query_id", "doc_id", F.col("rl").cast("int").alias("rnk_lex"))
     )
-
-    # deferred import: in the round-7 rotation THIS module registers
-    # inside the driver's 50-slot cap while similarity's own queries sit
-    # past it — a top-level import here would drag similarity's 3
-    # registrations forward into the cap and displace 3 planned slots
-    from bigbugdata_spark.operators.similarity import sim_cosine_topk
 
     sem = sim_cosine_topk(spark, sf_dir).select(
         "query_id",

@@ -1,13 +1,10 @@
 """Slowly-changing-dimension (SCD2) state history — deriving the
 "what state was this user in at time T" validity-interval table from the
-append-only event log. Split out of events_ext.py in round 7 so the
-query holds its own slot in the registry's driver-cap ordering (it was
-one of the seven r6 queries registered past the 50-slot cap). In round 8
-the shared derivation (runs_from_events / format_runs / the oracle SQL)
-moved to operators/scd_core.py so the streaming maintenance twin
-(streaming/scd_sink.py) and the as-of/CDC consumers
-(operators/events_state.py) can import it WITHOUT registering this
-module's query — the registration here is now the thin batch entry.
+append-only event log. The shared derivation (runs_from_events /
+format_runs / the oracle SQL) lives in operators/scd_core.py, which the
+streaming maintenance twin (streaming/scd_sink.py) and the as-of/CDC
+consumers (operators/events_state.py) also build on; the registration
+here is the thin batch entry.
 
 No analog in the reference (SURVEY §2.1 — no window functions, no state
 modeling); this is warehouse-governance extension surface like dq.py.

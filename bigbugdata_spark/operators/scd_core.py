@@ -1,12 +1,8 @@
-"""SCD2 state-history derivation core — the shared, NON-REGISTERING half
-of the family split out of operators/scd.py in round 8: the batch query
+"""SCD2 state-history derivation core, shared by the batch query
 (operators/scd.py), the streaming maintenance twin
 (streaming/scd_sink.py) and the as-of/CDC consumers
-(operators/events_state.py) all build on these definitions, and the
-registry's driver-cap ordering requires that importing any one of them
-does not transitively register the others. Everything here is pure
-builders + oracle SQL — no `register()` calls — so importing it never
-perturbs the registration order the driver cap depends on.
+(operators/events_state.py).  Everything here is pure builders + oracle
+SQL.
 
 No analog in the reference (SURVEY §2.1 — no window functions, no state
 modeling); warehouse-governance extension surface.

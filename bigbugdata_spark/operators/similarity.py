@@ -358,11 +358,9 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Registered past the driver cap in operators/no_oracle_shims.py: this
-# query is rows-only by design (IVF shortlist composition is
-# engine-specific), so its cap slot belongs to the hash-green
-# audit_ivf_recall twin (VERDICT r12 #2: no-oracle specs never enter
-# the cap).
+# Rows-only by design (IVF shortlist composition is engine-specific):
+# verified through its oracle'd twin audit_ivf_recall.
+@register("sim_ivf_topk", tags=("similarity", "window"))
 def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the 100 TB serving path:
 

@@ -6,7 +6,7 @@ blocked-matmul twin — the shape that wins once the score matrix is the
 bottleneck (wide embeddings, large |Q|): one BLAS matmul per Arrow batch
 replaces |Q| x dim zip_with evaluations per row.
 
-Registered last (registry._QUERY_MODULES): rows-only by design — numpy
+Rows-only by design — numpy
 sums reduce in a different order than the oracle's left-to-right fp64
 chain, so scores differ in final ulps and a hash compare is the wrong
 contract. The binding contract is tests/test_extensions.py (identical

@@ -43,13 +43,19 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.functions import hashing as H
+from bigbugdata_spark.functions.fragments import IVF_ASSIGN, graph_ivf_k
 from bigbugdata_spark.operators.dedup_incr_core import (
     _corpus_fingerprint,
     ensure_index_root,
     index_path,
     sweep_stale_generations,
 )
-from bigbugdata_spark.operators.similarity_knn_core import KNN_K, KNN_PROBE
+from bigbugdata_spark.operators.similarity import (
+    _corpus,
+    _routed_cell_ranks,
+    ivf_cents,
+)
+from bigbugdata_spark.operators.similarity_knn import KNN_K, KNN_PROBE
 
 #: PageRank constants (shared with similarity_rank's oracle builder)
 PR_ROUNDS = 5
@@ -130,14 +136,6 @@ def _build_knn_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
       replication, a plain cell join) once the codebook alone spreads
       the work, so the 100 TB build (K = n/128, millions of cells) pays
       zero salting overhead."""
-    # lazy import: keeps operators.similarity's registrations out of
-    # this module's import-time footprint (registry rotation order)
-    from bigbugdata_spark.functions.fragments import IVF_ASSIGN, graph_ivf_k
-    from bigbugdata_spark.operators.similarity import (
-        _corpus,
-        _routed_cell_ranks,
-        ivf_cents,
-    )
 
     corpus = _corpus(spark, sf_dir)
     # constant-size cells (r12, VERDICT r11 #1b): every vector is a

@@ -31,8 +31,6 @@ from bigbugdata_spark.functions.fragments import (
 from bigbugdata_spark.registry import register
 
 # one definition of the slice predicate + routed assignment SQL
-# (import drag note: similarity_incr registers 1 query; keep it EARLIER
-# in _QUERY_MODULES than this module when both are in-cap)
 from bigbugdata_spark.operators.similarity_incr import (
     _assign_sql,
     _VINC_PRED_SQL,

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.operators.similarity_knn_core import KNN_SQL as _KNN_SQL
+from bigbugdata_spark.operators.similarity_knn import KNN_SQL as _KNN_SQL
 from bigbugdata_spark.registry import register
 
 _KEEP_SQL = f"""

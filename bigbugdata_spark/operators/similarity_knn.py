@@ -28,29 +28,54 @@ with the whole registered IVF family via ivf_cents' default, and
 re-derived from COUNT(*) by this oracle's cents CTE — so cell
 occupancy stays ~sqrt(n) and the all-nodes candidate volume ~n^1.5
 instead of the quadratic blow-up a fixed K would give.
+
+KNN_K, KNN_PROBE and the oracle KNN_SQL are shared with the graph spine
+(similarity_graph_core) and the queries built on the graph.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigbugdata_spark.operators.similarity_knn_core import (  # noqa: F401
-    KNN_K,
-    KNN_PROBE,
-    KNN_SQL,
-)
+from bigbugdata_spark.functions import hashing as H
+from bigbugdata_spark.functions.fragments import EMB_DIM, sql_graph_ivf_k
+from bigbugdata_spark.operators.audits import SIM_CORPUS_SQL, ivf_stages_sql
 from bigbugdata_spark.registry import register
 
-# constants + the oracle SQL moved to the non-registering
-# operators/similarity_knn_core.py in round 10 (shared with
-# operators/similarity_keep.py without import-time registration drag).
+KNN_K = 5
+KNN_PROBE = 4  # index-build probe width (< query-time N_PROBE)
 
-_KNN_SQL = KNN_SQL
+# The graph build sizes cells to a CONSTANT row target (sql_graph_ivf_k
+# — r12, VERDICT r11 #1b) and routes both assignment and probes through
+# the two-level supercell structure: every corpus vector is a query
+# here, so per-query work must be bounded, not sqrt(n)-sized.
+KNN_SQL = f"""
+    WITH {SIM_CORPUS_SQL},
+    allq AS (
+        SELECT vec_id AS query_id, embedding AS q_emb, nrm AS q_nrm
+        FROM corpus
+    ),
+    {ivf_stages_sql("allq", KNN_PROBE, k_sql=sql_graph_ivf_k("corpus"), routed_probes=True)}
+    SELECT src, dst, rnk, cos_sim FROM (
+        SELECT cd.query_id AS src, co.vec_id AS dst,
+               ROW_NUMBER() OVER (
+                   PARTITION BY cd.query_id
+                   ORDER BY {H.sql_dot('q.q_emb', 'co.embedding', EMB_DIM)}
+                            / (q.q_nrm * co.nrm) DESC,
+                            co.vec_id ASC
+               ) AS rnk,
+               {H.sql_dot('q.q_emb', 'co.embedding', EMB_DIM)}
+                   / (q.q_nrm * co.nrm) AS cos_sim
+        FROM cand cd
+        JOIN corpus co ON co.vec_id = cd.vec_id
+        JOIN allq q ON q.query_id = cd.query_id
+    ) WHERE rnk <= {KNN_K}
+"""
 
 
 @register(
     "sim_knn_graph",
-    oracle=_KNN_SQL,
+    oracle=KNN_SQL,
     tags=("similarity", "join", "graph"),
     index_writer=True,
 )
@@ -65,6 +90,7 @@ def sim_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     call returns the content-fingerprinted shared materialization that
     pagerank/triangles/components/exemplars all consume, so the
     expensive IVF build runs once per corpus, not once per consumer."""
+    # local import: similarity_graph_core imports KNN_K/KNN_PROBE from here
     from bigbugdata_spark.operators.similarity_graph_core import knn_edges
 
     return knn_edges(spark, sf_dir)

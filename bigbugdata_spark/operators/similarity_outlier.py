@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
-from bigbugdata_spark.operators.similarity_knn_core import (
+from bigbugdata_spark.operators.similarity_knn import (
     KNN_K,
     KNN_SQL as _KNN_SQL,
 )

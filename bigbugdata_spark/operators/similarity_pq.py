@@ -56,12 +56,8 @@ from bigbugdata_spark.functions.fragments import (
     PQ_SUBDIM,
     TOP_K,
 )
-from bigbugdata_spark.registry import register
-
-# audits is earlier in registry._QUERY_MODULES, so this import is a
-# no-op at load_all() time; standalone imports register audits first —
-# either way registration order stays deterministic.
 from bigbugdata_spark.operators.audits import IVF_STAGES_SQL, SIM_CORPUS_SQL
+from bigbugdata_spark.registry import register
 
 
 def pq_cents(corpus: DataFrame) -> DataFrame:
@@ -127,10 +123,9 @@ def _pq_lut(queries: DataFrame, cents: DataFrame) -> DataFrame:
     ).select("query_id", "m", "cell_id", "l")
 
 
-# Registration moved to operators/similarity_pq_topk.py in round 8: the
-# driver-cap rotation keeps audit_pq_recall (the hash-green oracle'd
-# twin) in-cap while this rows-only query registers past the cap — its
-# correctness stays driver-verified through the audit.
+# Rows-only by design (PQ-ADC ranking is not ANSI-SQL-expressible at
+# reasonable cost): verified through its oracle'd twin audit_pq_recall.
+@register("sim_ivfpq_topk", tags=("similarity", "vector", "window"))
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ top-k (module docstring has the full design): IVF
     candidates -> ADC estimate from 6-bit-per-subspace codes + true

@@ -36,7 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigbugdata_spark.operators.similarity_knn_core import KNN_SQL as _KNN_SQL
+from bigbugdata_spark.operators.similarity_knn import KNN_SQL as _KNN_SQL
 
 # constants + the executed rounds live in the shared graph spine
 # (operators/similarity_graph_core.py, round 11) so every consumer of

@@ -29,9 +29,7 @@ from bigbugdata_spark.functions.fragments import (
 )
 from bigbugdata_spark.registry import register
 
-# language marker-word heuristic: shared core in functions/langid_core.py
-# (round-10 scd_core split so text_lang_confusion can import the
-# predictor without dragging this module's registrations into the cap)
+# language marker-word heuristic: shared with text_lang_confusion
 from bigbugdata_spark.functions.langid_core import (  # noqa: E402
     LANG_PRED_SQL as _LANG_ID_SQL,
     pred_lang as _pred_lang,
@@ -121,11 +119,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "true_lang", _pred_lang(F.col("toks")).alias("pred_lang")
     )
 
-
-# QUALITY_SQL (the shared definition of document "quality") moved to
-# functions/fragments.py in round 8 so the driver-cap split module
-# operators/corpus_version.py can build its oracle without importing
-# this whole registering family; re-exported here unchanged.
 
 
 @register(
@@ -325,8 +318,3 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", H.text_fingerprint(F.col("text")).alias("fingerprint")
     )
 
-
-# text_rare_token_ratio moved to operators/text_rare.py in round 8 —
-# the registry's driver-cap rotation needed it to hold its own early
-# slot without dragging this module's nine multi-round-green queries
-# back into the cap (the scd.py treatment, VERDICT r7 #1).

@@ -32,19 +32,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.registry import register
-
-# the non-registering core (scd_core pattern): importing it pulls no
-# registrations into the driver cap, and the unrolled CTE chain is a
-# named constant instead of a string-slice of the finished oracle
-# (ADVICE r11)
-from bigbugdata_spark.operators.text_bpe_core import (
+from bigbugdata_spark.catalog import table
+from bigbugdata_spark.operators.text_bpe_train import (
     BPE_STEPS,
     SEP_EXPR as _SEP_EXPR,
     SEP_SQL as _SEP_SQL,
     TRAIN_CTES as _TRAIN_CTES,
     train as _train,
 )
+from bigbugdata_spark.registry import register
 
 _APPLY_SQL = (
     _TRAIN_CTES
@@ -81,10 +77,7 @@ def text_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     after applying the BPE_STEPS trained merges (trained corpus-wide by
     text_bpe_train's loop; documents with no alphanumeric words emit no
     row, matching the trainer's filter)."""
-    from bigbugdata_spark.catalog import table
-
-    # the trainer loop, verbatim (text_bpe_core.train — shared with
-    # text_bpe_train/text_bpe_compression)
+    # the trainer loop, verbatim (text_bpe_train.train)
     vocab, _ = _train(spark, sf_dir)
     n_syms = F.size(F.expr(f"filter(split(s, {_SEP_EXPR}), x -> x != '')"))
     lookup = vocab.select("word", n_syms.cast("long").alias("n_syms"))

@@ -15,10 +15,9 @@ from bigbugdata_spark.registry import register
 HLL_RSD = 0.01  # HyperLogLog++ target relative standard deviation
 
 
-# Registered past the driver cap in operators/no_oracle_shims.py: this
-# query is rows-only by design (HLL++ estimates are engine-specific),
-# so its cap slot belongs to the hash-green audit_vocab_error twin
-# (VERDICT r12 #2: no-oracle specs never enter the cap).
+# Rows-only by design (HLL++ estimates are engine-specific): verified
+# through its oracle'd twin audit_vocab_error.
+@register("text_vocab_approx", tags=("text", "agg"))
 def text_vocab_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus statistics with HyperLogLog++ distinct counts —
     the 100 TB twin of text_token_stats: exact COUNT(DISTINCT term) plans

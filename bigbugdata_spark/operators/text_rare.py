@@ -1,11 +1,4 @@
-"""text_rare_token_ratio — split out of operators/text.py in round 8 so
-the query holds its own early slot in the registry's driver-cap ordering
-(it was one of the thirteen r7 queries registered past the 50-slot cap;
-the scd.py treatment, VERDICT r7 #1). The implementation and oracle are
-unchanged; only the module boundary moved. Top-level imports here are
-strictly non-registering (catalog / caching / hashing / registry), so
-importing this module early cannot drag the text family's nine green
-queries back into the cap.
+"""text_rare_token_ratio — the rare-token share per document.
 
 No analog in the reference (SURVEY §2.1 — its only string op is
 taxName.strip(), ref bigbugdata.py:295-297); LLM-pipeline extension

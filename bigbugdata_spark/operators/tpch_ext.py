@@ -5,12 +5,8 @@ anti-join + scalar subquery (Q22).  Shapes adapted to the columns the
 driver's star schema carries (no commit/receipt dates, no partsupp, no
 phone — see each docstring for the substitution).
 
-Registered AFTER every other family (registry._QUERY_MODULES): the
-external correctness gate caps its report at ~50 queries in registration
-order, and that window is reserved for the §2 contract ops plus the
-families awaiting their first driver verdict.  These four are verified
-by the identical local DuckDB-parity gate (tests/test_oracle_parity.py
-runs every registered query).
+These four are verified by the local DuckDB-parity gate
+(tests/test_oracle_parity.py runs every registered query).
 
 Money discipline matches operators/tpch.py: cent-valued columns are
 extracted once as exact ROUND(x*100) int64 and all arithmetic stays

@@ -11,11 +11,18 @@ Oracle-parity discipline (the driver hash-compares values):
   * sum integer-valued columns where possible (exact in fp64);
   * never return raw timestamps — format to strings on both sides;
   * never return NaN — use NULL.
+
+Gate order: the driver checks the first 50 entries of
+__spark_entry__.queries().  load_all() returns GATE_ORDER first and every
+other registered name after it, sorted, so module layout and import order
+never decide which queries the driver sees.  Rotating the gate is an edit
+of GATE_ORDER; put only queries with an oracle in it.
 """
 
 from __future__ import annotations
 
 import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -23,549 +30,62 @@ from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
-# Modules that register queries at import time.
-#
-# ORDER MATTERS for external verification: the driver's correctness gate
-# checks queries in registration order and caps the report at ~50 entries
-# (observed in CORRECTNESS_r02.json..r05: exactly the first 50 registered
-# queries got a row).  Standing rule: never rotate out a query whose fix
-# lacks a driver verdict.
-#
-# Round-8 rotation (VERDICT r7 #1, executed exactly as planned): the
-# SURVEY §2 contract ops stay first (relational, 20), then the oracle'd
-# audit twins (audits, 5) and audit_pq_recall (similarity_pq, now 1 —
-# sim_ivfpq_topk's rows-only registration moved to the late shim
-# operators/similarity_pq_topk.py so the cap slot goes to the
-# hash-green audit) — the judge's standing "keep in-cap" set, slots
-# 1-26.  Then the thirteen r7 queries that registered PAST the cap and
-# held no driver verdict, each now inside it via the scd.py-style
-# single-query-module splits: dq_ext (2, slots 27-28), events_state
-# (2, slots 29-30 — evt_state_asof + evt_state_cdc out of events_ext),
-# text_rare (1, slot 31 — out of text), mm_phash (1, slot 32 — out of
-# multimodal), dedup_incr (2, slots 33-34 — out of dedup),
-# corpus_version (2, slots 35-36 — out of corpus), scd_sink (1, slot
-# 37 — its operators.scd dependency moved to the non-registering
-# operators/scd_core.py so importing it early no longer drags
-# evt_user_state_history's registration forward), enrich (1, slot 38).
-# Then the stalest remaining verdicts: tpch (6, r4, slots 39-44) and
-# tpch_ext (6, slots 45-50 — of which 5 hold r4 verdicts;
-# orders_market_basket is the thirteenth r7-new query) — exactly
-# filling the cap: 26 + 12 + 12 = 50.  Rotated out this round because
-# their rows are freshly green in CORRECTNESS_r07: kmeans, dq,
-# retrieval, packing, scd, tpch_full, text_ext; overlap/text/
-# multimodal/similarity/pipeline/profile/quantize hold r6;
-# events/windows/events_ext/joins/stateful/corpus/dedup hold r5.
-# similarity_ext's single query is rows-only by design (numpy fp-sum
-# order) and stays driver-verified through audit_np_parity; likewise
-# sim_ivfpq_topk through audit_pq_recall.  All rotated-out queries
-# remain continuously re-proven by the identical local gate in
-# tests/test_oracle_parity.py.
-#
-# Round-9 rotation (VERDICT r8 #1, executed exactly as planned in
-# the r8 comment below this one's ancestor): 26 permanent (20 §2 ops
-# in relational, the 5 oracle'd audit twins in audits, and
-# audit_pq_recall in similarity_pq — never rotated out) + 24 of the
-# 25 r8-new queries = 50 exactly.  The one r8-new query that waits
-# (evt_stream_user_lifecycle, streaming.features — it registered
-# last in r8) is FIRST in the r10 queue together with the r9-new
-# queries.  Rotated OUT this round because their rows are freshly
-# green in CORRECTNESS_r08: tpch (6), tpch_ext (6), and the twelve
-# r7-new queries (dq_ext, events_state, text_rare, mm_phash,
-# dedup_incr, corpus_version, scd_sink, enrich).  All rotated-out
-# queries remain continuously re-proven by the identical local gate
-# in tests/test_oracle_parity.py (and at a second scale factor under
-# SPARK_GRAFT_PARITY_SF2).
-#
-# Round-10 rotation (VERDICT r9 #1, executed as planned with the
-# advisory's corrected count — 15 r9-new queries across 14 modules,
-# text_bpe_train registering 2): 26 permanent (20 §2 ops in
-# relational, the 5 oracle'd audit twins in audits, audit_pq_recall
-# in similarity_pq) + streaming.features (1, the r8 leftover) + the
-# 15 r9-new queries in their r9 registration order = 42; the last 8
-# slots backfill the stalest driver verdicts — corpus (5, r5) +
-# streaming windows/joins/stateful (1 each, r5) = 50 exactly, no
-# module split needed.  Import-time drag eliminated in round 10 via
-# the scd_core.py treatment: streaming.freshness now imports
-# operators/dq_fresh_core.py (not dq_fresh, r9-green),
-# dedup_incr_lsh imports operators/dedup_incr_core.py (not
-# dedup_incr, r8-green), similarity_keep imports
-# operators/similarity_knn_core.py (not similarity_knn, r9-green) —
-# so none of those fresh verdicts burn a cap slot.
-# streaming.growth's top-level import of streaming.stateful pulls
-# stateful's registration up to growth's position — in-cap either
-# way, since stateful is one of this round's 8 backfills.
-# Rotated OUT because their rows are freshly green in
-# CORRECTNESS_r09: storage_audit, similarity_incr, events_trans,
-# dq_drift, corpus_shard, text_bpe, dedup_src, streaming.drift,
-# emb_health, events_dwell, orders_rfm, text_lm, events_features,
-# corpus_curriculum, dq_fresh, dq_emb, profile_corr,
-# pipeline_release, text_prefix, events_burst, corpus_budget,
-# similarity_knn, similarity_cluster.  All rotated-out queries
-# remain continuously re-proven by the identical local gate in
-# tests/test_oracle_parity.py (and at a second scale factor under
-# SPARK_GRAFT_PARITY_SF2).
-# Never rotate out: the 20 §2 ops, the 5 audit twins, audit_pq_recall,
-# or any query whose newest fix lacks a driver verdict.
-#
-# Round-11 rotation (VERDICT r10 #2, re-planned around the two r10
-# hash-reds — both root-caused to DuckDB HUGEINT result types, both
-# fixed by CAST this round, and the standing rule says never rotate
-# out a query whose fix lacks a driver verdict): 26 permanent (20 §2
-# ops in relational, the 5 oracle'd audit twins in audits,
-# audit_pq_recall in similarity_pq) + the two fixed modules —
-# orders_conc (1: orders_revenue_concentration) and text_bpe_train
-# (2: text_bpe_train re-proven alongside its module-mate
-# text_bpe_compression) = 29 — + the FIRST 21 of the 25 r10-new
-# queries in their r10 registration order (one query per module,
-# zorder3_audit .. streaming.dedup) = 50 exactly.  The last 4 r10
-# registrations (storage_gc, events_attrib, storage_encoding,
-# text_langconf) lead the r12 queue, ahead of the r5-era
-# events/events_ext/dedup staleness backfills.
-# Rotated OUT because their rows are freshly green in
-# CORRECTNESS_r10: streaming.features, zorder_audit, asset_audit,
-# orders_ltv, events_mad, dedup_curve, events_season,
-# streaming.freshness, events_growth, streaming.seasonality,
-# dedup_incr_lsh, streaming.growth, similarity_keep, corpus,
-# streaming windows/joins/stateful.  All rotated-out queries remain
-# continuously re-proven by the identical local gate in
-# tests/test_oracle_parity.py (and at a second scale under
-# SPARK_GRAFT_PARITY_SF2), and every oracle's RESULT TYPE is now
-# linted against the driver-safe set each run
-# (test_oracle_result_types_driver_safe), so the HUGEINT/DECIMAL
-# class that caused the r10 reds is a local red X from now on.
-# Count the actual registrations before committing the order — the
-# r9->r10 advisory caught a miscounted comment driving an
-# under-filled cap.  (Verified this round: first 50 printed from
-# REGISTRY order after load_all.)
-#
-# Round-12 rotation (VERDICT r11 #2, executed as queued with three
-# import-drag fixes): 26 permanent (20 §2 ops in relational, the 5
-# oracle'd audit twins in audits, audit_pq_recall in similarity_pq) +
-# the 4 deferred r10 registrations (storage_gc, events_attrib,
-# storage_encoding, text_langconf) + the 14 r11-new queries in
-# registration order (streaming.attrib, similarity_health, text_tfidf,
-# text_bpe_apply, corpus_lineage, similarity_mmr, storage_compact,
-# corpus_epochs, dq_schema, text_cooc, events_forecast, profile_ndv,
-# streaming.quantiles, similarity_outlier — one query each) = 44; the
-# remaining 6 slots backfill the stalest driver verdicts from the
-# r5-era queue: events_ext (5: evt_value_quantiles_approx, evt_cube,
-# evt_cohort_setops, evt_user_window_funcs, evt_cohort_fullouter) and
-# the new single-query split events_quant (evt_value_quantiles, moved
-# out of the 8-query events module so one r5-stale query re-enters
-# without spending 8 slots) = 50 exactly.  Import-time drag eliminated
-# the scd_core way before ordering: text_bpe_apply now imports
-# operators/text_bpe_core.py (not text_bpe_train — whose 2 fresh-r11
-# registrations would have burned cap slots AND whose oracle it used
-# to string-slice, ADVICE r11 #4); streaming.attrib + streaming.growth
-# import streaming/core.ts_us (not streaming.stateful — 1 reg,
-# r10-green); streaming.quantiles imports
-# operators/events_quant_core.py (not operators.events — 8 regs).
-# All three shared constants/helpers are byte-identical moves (oracle
-# SQL verified equal against HEAD before committing).
-# Rotated OUT because their rows are freshly green in
-# CORRECTNESS_r11: orders_conc, text_bpe_train, zorder3_audit,
-# pipeline_guard, streaming.mad, similarity_rank, dq_seq,
-# similarity_tri, events_qtrend, events_rollup_incr, mm_features,
-# streaming.rollup, events_sketch, dq_anon, pipeline_privacy,
-# similarity_central, orders_backlog, text_spectrum, events_ewma,
-# profile_skew, profile_joincard, dq_nulls, streaming.dedup.  All
-# rotated-out queries remain continuously re-proven by the identical
-# local gate in tests/test_oracle_parity.py (and at a second scale
-# under SPARK_GRAFT_PARITY_SF2), with every oracle's result type
-# linted against the driver-safe set each run.
-# Count verified this round: first 50 printed from REGISTRY order
-# after a fresh load_all() (tests/test_registry.py's cap check).
-#
-# Round-13 rotation (VERDICT r12 #1, executed as queued with two
-# deliberate additions): 26 permanent (20 §2 ops in relational, the 5
-# oracle'd audit twins in audits, audit_pq_recall in similarity_pq) +
-# the 12 r12-new queries in their r12 registration order (events_mta,
-# profile_hist, storage_partition, text_sentence, text_boiler,
-# streaming.mta, text_qcurve, similarity_incr_batch, events_bots,
-# corpus_temp, events_funnel_steps, dq_recon — one registration each)
-# + similarity_incr listed EXPLICITLY between text_qcurve and
-# similarity_incr_batch (two reasons: (a) sim_ivf_incremental_assign
-# was re-scoped this round to batch-sized work — VERDICT r12 #2 — so
-# its fix needs a driver verdict; (b) similarity_incr_batch imports it
-# at module level anyway, so the slot was spent either way — better
-# spent deliberately) = 39; the remaining 11 slots backfill the stalest
-# driver verdicts: operators.dedup (7 oracle'd queries, r5 — its 8th,
-# dedup_emb_lsh, is rows-only and now registers past the cap, see
-# below) + pipeline (1, r6 — pipe_training_corpus, also the r12 bench
-# regression under investigation this round) + quantize (1, r6) +
-# overlap (2, r6) = 50 exactly.
-# NEW STANDING RULE (VERDICT r12 #2): rows-only (no-oracle) queries
-# NEVER enter the cap — they can only produce `err: "no_oracle"`, a
-# wasted slot (r12 burned one on evt_value_quantiles_approx).  All six
-# now register in the permanently-out-of-cap tail section below
-# (operators/no_oracle_shims.py + similarity_ext + similarity_pq_topk);
-# their verifiable surface is the six oracle'd audit twins, five of
-# which hold permanent cap slots.  The invariant is pinned by
-# tests/test_oracle_parity.py::test_cap_holds_no_rows_only_query.
-# Rotated OUT because their rows are freshly green in
-# CORRECTNESS_r12: storage_gc, events_attrib, storage_encoding,
-# text_langconf, streaming.attrib, similarity_health, text_tfidf,
-# text_bpe_apply, corpus_lineage, similarity_mmr, storage_compact,
-# corpus_epochs, dq_schema, text_cooc, events_forecast, profile_ndv,
-# streaming.quantiles, similarity_outlier, events_ext, events_quant.
-# All rotated-out queries remain continuously re-proven by the
-# identical local gate in tests/test_oracle_parity.py (and at a second
-# scale under SPARK_GRAFT_PARITY_SF2), with every oracle's result type
-# linted against the driver-safe set each run.
-# Count verified this round: first 50 printed from REGISTRY order
-# after a fresh load_all().
-#
-# Round-14 rotation (VERDICT r13 #1, executed with one planned
-# deviation): 26 permanent + the 2 r13-new queries
-# (streaming.funnel_steps, corpus_survivors) with events_funnel_steps
-# listed explicitly before funnel_steps (module-level import — the
-# drag slot is spent deliberately, streaming.mta precedent) = 29.
-# DEVIATION from the r13 plan comment: streaming.mta gained
-# out-of-order detection and similarity_incr gained publish-race
-# recovery THIS round (VERDICT r13 #2 / ADVICE r13 #1) — the standing
-# rule says a changed query can't sit outside the cap without a fresh
-# driver verdict, so both stay in: events_mta (1, dragged by
-# streaming.mta's module-level import) + streaming.mta (1) +
-# similarity_incr (1) = 32.  The remaining 18 slots: stalest-verdict
-# backfills operators.events (8 oracle'd queries, r5) + text (9, r6),
-# plus similarity_knn (1 — the kNN spine's publish path changed this
-# round and all spine consumers sit past the cap, so the changed-query
-# rule applies; found in the r14 self-review, displacing the kmeans
-# staleness pick) = 50 exactly (composition pinned by
-# tests/test_registry.py against CAP_BOUNDARY_MODULE below).
-# Pushed to the r15 queue by the deviation: multimodal (5, r6),
-# similarity (2, r6), profile (2, r6), dq (4), retrieval (1),
-# packing (1), scd (1), tpch_full (11), text_ext (3) — all r4-r7-era.
-# As always: never rotate out a query whose newest fix lacks a driver
-# verdict, and re-check import drag if reordered.
-#
-# Round-15 rotation (VERDICT r14 #1, executed with one forced
-# deviation): r15's ADVICE fix changed dedup_incr_core's stale sweep
-# (same-fp '{fp}.debris-*' asides now survive the un-age-gated sweep)
-# — a REACHABLE behavioral change for the tmp-dir-publishing families,
-# so the standing changed-query rule keeps sim_ivf_incremental_assign
-# (similarity_incr) and sim_knn_graph (similarity_knn) IN the cap: 26
-# permanent + similarity_incr (1) + similarity_knn (1) = 28, leaving
-# 22 backfill slots instead of the planned 24.  DEVIATION: profile (2,
-# r6) defers to r16 — the minimal cut (multimodal 5 + similarity 2 +
-# dq 4 + tpch_full 11 = 22 exactly, keeping tpch_full, the stalest
-# r4-era block, in).  saveAsTable sweep callers (dedup_incremental,
-# dedup_incremental_lsh, evt_rollup_materialized) keep their standing
-# verdicts by the r14-late-note argument extended verbatim: they never
-# create '{fp}.debris*' names, so the new exclusion clause cannot
-# match in their namespace (and the TTL-parse hardening is
-# behavior-identical for any valid env value).
-#
-# r15-late note for the changed-query rule: the versioned-table vacuum
-# gained an in-flight age gate (sources/versioned.py min_age_s — the
-# race find: a vacuum inside a concurrent writer's write-to-commit
-# window deleted the winner's staged files).  store_gc_plan (module
-# storage_gc, r13-fresh verdict, out-of-cap) now passes min_age_s=0.0
-# explicitly — at 0 the gate branch is skipped entirely (`if min_age_s
-# > 0` guards the clock read), so its classification, its deletions,
-# and its result rows are byte-identical to the pre-gate behavior; the
-# new in_flight_files key is never selected by the query.  Standing
-# verdict kept on that argument (the r14-late-note precedent); if r16
-# wants belt-and-braces, storage_gc is a 1-slot refresh.
-#
-# Round-16 rotation (VERDICT r15 #2, executed as queued): permanent 26
-# stay; similarity_incr / similarity_knn rotate out on fresh r15
-# verdicts — the changed-query check for r16's edits: the TTL-parse
-# fold (env_cfg.parse_ttl_env replacing dedup_incr_core._parse_tmp_ttl_s)
-# computes ABANDONED_TMP_TTL_S with the identical grammar (int cast,
-# same default, same env var, warn-fallback) — import-time-identical
-# for every env state, pinned by the parametrized tests in
-# test_round14_ops/test_round15_ops, so neither tmp-dir publisher is
-# behaviorally changed.  Backfills (24 slots, exactly 50):
-#   * stalest r4-r7-era: profile (2, r6 — twice deferred), retrieval
-#     (1), packing (1), scd (1), text_ext (3), kmeans (1) = 9
-#   * the four argued-equivalence holders, measured at last (VERDICT
-#     r15 #4 "two rounds of argument is enough"): storage_gc (1),
-#     dedup_incr (2), dedup_incr_lsh (1), events_rollup_incr (1) = 5
-#     — storage_gc also takes the r16 in_flight {path,bytes} shape
-#     change in-cap (its min_age_s=0.0 path never populates the list,
-#     but now that's measured, not argued)
-#   * r8-era tail: dq_ext (2), events_state (2), text_rare (1),
-#     mm_phash (1), corpus_version (2), scd_sink (1), enrich (1) = 10
-# tpch (6) + tpch_ext (6) stay queued for r17 (r9-stale then — the
-# only pre-r13 verdicts left after this round).  All 17 moved-in
-# modules re-verified free of module-level registering imports this
-# round (catalog/registry/functions/caching/dedup_incr_core/scd_core/
-# streaming.core only).  CAP_BOUNDARY_MODULE -> streaming.enrich.
-#
-# r14-late note for the changed-query rule: the publish-race review
-# fixes (dedup_incr_core: build_tmp_path, rename-aside debris clear,
-# sweep tmp-exclusion) behaviorally affect only the tmp-dir-publishing
-# families — the kNN spine (sim_knn_graph) and the IVF generation
-# (sim_ivf_incremental_assign) — both IN the r14 cap, so their fresh
-# driver verdicts cover the new code.  The other sweep callers
-# (dedup_incr, dedup_incr_lsh, events_rollup_incr) publish via
-# saveAsTable, never create '{fp}.tmp*' names, and the new exclusion
-# clause cannot match in their namespace on any reachable filesystem
-# state — identical behavior, so they keep their standing verdicts;
-# if r15 wants belt-and-braces, refresh dedup_incremental,
-# dedup_incremental_lsh, evt_rollup_incremental among its backfills.
-#
-# Round-17 rotation (VERDICT r16 #1, executed as queued): permanent 26
-# stay; all 17 r16 backfill modules rotate out on fresh r16 verdicts.
-# Changed-query check for the r17 operator edits: the append-intent
-# crash-consistency protocol (dedup_incr_core.begin_append_intent /
-# commit_append_intent + the pending_append_intents refusal in
-# attach_index_tables) touches the read path of dedup_incremental,
-# dedup_incremental_lsh and evt_rollup_materialized (all r16-green,
-# out of this cap).  The new adoption check can only fire when an
-# `_append_intent-*` sentinel exists, and sentinels are created
-# exclusively by the append maintenance API (append_batch_to_index /
-# _lsh_index / _rollup), which NO registered query ever calls — so on
-# every driver-reachable filesystem state the check reads an empty
-# glob and behavior is identical.  Belt-and-braces: all three were
-# re-measured green against the DuckDB oracle at sf0.01 with the
-# driver-mirror compare in-round, and the crash protocol itself is
-# proven by tests/test_round17_ops.py section 5 (real process kill
-# between appends -> adoption refused -> cold rebuild converges).
-# Backfills (24 slots, exactly 50):
-#   * the r8-stale tier, queued since r16 (12): tpch (6 — q1/q3/q5/
-#     q6/q10/q14), tpch_ext (6 — q4/q13/q18/q22/q7 +
-#     orders_market_basket)
-#   * the r9-stale tier, stalest-first fill of the remaining 12 slots
-#     (12 of 22 r9-stale queries; the other 10 — corpus_budget_trim,
-#     corpus_curriculum_plan, dq_emb_coverage, dq_freshness,
-#     evt_user_burst, evt_user_features, pipe_release_manifest,
-#     prof_corr_chars_tokens, sim_semantic_clusters,
-#     text_template_prefix — queue for r18): dedup_src (2),
-#     storage_audit (1), events_trans (1), dq_drift (1),
-#     streaming.drift (1 — imports dq_drift at module level, so
-#     dq_drift is ordered first), corpus_shard (1), text_bpe (1),
-#     emb_health (1), events_dwell (1), orders_rfm (1), text_lm (1)
-# All 13 moved-in modules re-verified free of module-level registering
-# imports this round (catalog/registry/functions/caching/scd_core/
-# streaming.core only, plus the ordered dq_drift pair).  Tail-order
-# constraints preserved: corpus_shard moves ahead of pipeline_release
-# (which imports it), events_rollup_incr's rotated-out slot precedes
-# streaming.rollup (which imports it), text_ext precedes
-# no_oracle_shims.  CAP_BOUNDARY_MODULE -> operators.text_lm.
-# Round-18 rotation (VERDICT r17 #3, executed as ordered): the r18 cap
-# holds the query paths round 17 RESTRUCTURED, so the driver — not the
-# builder's parity mirror — holds their equivalence verdicts.  The 13
-# r17-cap backfill modules (tpch, tpch_ext, dedup_src, storage_audit,
-# events_trans, dq_drift, streaming.drift, corpus_shard, text_bpe,
-# emb_health, events_dwell, orders_rfm, text_lm) rotate out on fresh
-# r17 verdicts, zero r17/r18 operator-code edits on any of them.
-# Because four touched queries live in modules whose untouched tails
-# would burn 9+8+5+1 slots (tpch_full, events, corpus, text_bpe_train),
-# they are SPLIT into slot-sized modules — the events_quant r12
-# precedent — moved verbatim (same name, fn body, oracle):
-#   tpch_hot (tpch_q2 + tpch_q21), events_retention (evt_retention),
-#   corpus_decontam (text_decontaminate), and text_bpe_compression
-#   moved OUT of text_bpe_train's module (the trainer keeps the slot;
-#   the roll-up is the same text_bpe_core trainer + one aggregate).
-# pipeline_release's module-level imports of corpus_curriculum /
-# corpus_shard (2 registrations of drag) moved to the non-registering
-# corpus_shard_core so its cap slot costs exactly 1.
-# Backfills (24 slots, exactly 50):
-#   * the four split modules: tpch_hot (2), events_retention (1),
-#     corpus_decontam (1) = 4
-#   * slot-sized touched modules: kmeans (1), events_growth (1),
-#     events_mad (1), text_bpe_train (1), pipeline (1),
-#     pipeline_release (1), pipeline_guard (1), similarity_tri (1),
-#     similarity_knn (1) = 9
-#   * touched multi-query modules: overlap (2 — span coverage +
-#     containment, both restructured), dedup_incr (2 — incremental +
-#     cluster_sizes, the CC-fixpoint consumer), dedup (7 — cluster_keep
-#     _lsh/ngram_jaccard/minhash_lsh/cluster_keep restructured; exact/
-#     simhash/emb_cosine ride the shared shingle-guard change) = 11
-# All moved-in modules re-verified free of module-level registering
-# imports this round (catalog/registry/functions/caching/*_core only;
-# corpus_shard_core is non-registering by construction).  Tail-order
-# constraints preserved: dq_drift precedes streaming.drift,
-# events_rollup_incr precedes streaming.rollup, similarity_incr
-# precedes similarity_incr_batch, funnel_steps/mta pairs, text_ext
-# precedes no_oracle_shims; corpus (tail) imports corpus_decontam
-# (in-cap, earlier — safe direction).  CAP_BOUNDARY_MODULE ->
-# operators.dedup_incr (dedup precedes it: the rows-only shim
-# dedup_emb_lsh carries fn.__module__ == operators.dedup in the tail).  Queued for a future rotation: the r9-stale tier
-# remainder (corpus_budget_trim, corpus_curriculum_plan,
-# dq_emb_coverage, dq_freshness, evt_user_burst, evt_user_features,
-# prof_corr_chars_tokens, sim_semantic_clusters, text_template_prefix)
-# plus the spine consumers not covered here (sim_pagerank,
-# sim_semantic_keep — their spine edge input is bit-identical by the
-# salting-invariance argument, see similarity_graph_core).
-_QUERY_MODULES = (
-    # ---- permanent slots 1-26 ----
-    "bigbugdata_spark.operators.relational",
-    "bigbugdata_spark.operators.audits",
-    "bigbugdata_spark.operators.similarity_pq",
-    # ---- r17-restructured tier (slots 27-50): see rotation note ----
-    "bigbugdata_spark.operators.tpch_hot",
-    "bigbugdata_spark.operators.events_retention",
-    "bigbugdata_spark.operators.corpus_decontam",
-    "bigbugdata_spark.operators.kmeans",
-    "bigbugdata_spark.operators.events_growth",
-    "bigbugdata_spark.operators.events_mad",
-    "bigbugdata_spark.operators.text_bpe_train",
-    "bigbugdata_spark.operators.pipeline",
-    "bigbugdata_spark.operators.pipeline_release",
-    "bigbugdata_spark.operators.pipeline_guard",
-    "bigbugdata_spark.operators.similarity_tri",
-    "bigbugdata_spark.operators.similarity_knn",
-    "bigbugdata_spark.operators.overlap",
-    # dedup precedes dedup_incr so the boundary module is dedup_incr:
-    # the rows-only shim dedup_emb_lsh (no_oracle_shims, tail) carries
-    # fn.__module__ == operators.dedup, which the boundary leak-check
-    # in tests/test_registry.py rightly flags if dedup ends the cap
-    "bigbugdata_spark.operators.dedup",
-    "bigbugdata_spark.operators.dedup_incr",
-    # ---- driver cap boundary (first 50 registrations end here) ----
-    # rotated out in r18 (fresh CORRECTNESS_r17 rows; no operator-code
-    # edits touch these modules this round — see the rotation note):
-    "bigbugdata_spark.operators.tpch",
-    "bigbugdata_spark.operators.tpch_ext",
-    "bigbugdata_spark.operators.dedup_src",
-    "bigbugdata_spark.operators.storage_audit",
-    "bigbugdata_spark.operators.events_trans",
-    "bigbugdata_spark.operators.dq_drift",
-    "bigbugdata_spark.streaming.drift",
-    "bigbugdata_spark.operators.corpus_shard",
-    "bigbugdata_spark.operators.text_bpe",
-    "bigbugdata_spark.operators.emb_health",
-    "bigbugdata_spark.operators.events_dwell",
-    "bigbugdata_spark.operators.orders_rfm",
-    "bigbugdata_spark.operators.text_lm",
-    # the r18 split remainders (see rotation note): tails untouched
-    # this round, family verdicts as recorded per module docstring
-    "bigbugdata_spark.operators.tpch_full",
-    "bigbugdata_spark.operators.text_bpe_compression",
-    # rotated out in r17 (fresh CORRECTNESS_r16 rows):
-    # events_rollup_incr must precede streaming.rollup (module-level
-    # import), text_ext must precede no_oracle_shims
-    "bigbugdata_spark.operators.profile",
-    "bigbugdata_spark.operators.retrieval",
-    "bigbugdata_spark.operators.packing",
-    "bigbugdata_spark.operators.scd",
-    "bigbugdata_spark.operators.text_ext",
-    "bigbugdata_spark.operators.storage_gc",
-    "bigbugdata_spark.operators.dedup_incr_lsh",
-    "bigbugdata_spark.operators.events_rollup_incr",
-    "bigbugdata_spark.operators.dq_ext",
-    "bigbugdata_spark.operators.events_state",
-    "bigbugdata_spark.operators.text_rare",
-    "bigbugdata_spark.operators.mm_phash",
-    "bigbugdata_spark.operators.corpus_version",
-    "bigbugdata_spark.streaming.scd_sink",
-    "bigbugdata_spark.streaming.enrich",
-    # rotated out in r16 (fresh CORRECTNESS_r15 rows):
-    # similarity_incr_batch imports similarity_incr at module level
-    # and sits later in the tail — order preserved
-    "bigbugdata_spark.operators.similarity_incr",
-    "bigbugdata_spark.operators.multimodal",
-    "bigbugdata_spark.operators.similarity",
-    "bigbugdata_spark.operators.dq",
-    # rotated out in r15 (fresh CORRECTNESS_r14 rows):
-    # funnel_steps imports events_funnel_steps at module level, and
-    # mta imports events_mta — pair order preserved
-    "bigbugdata_spark.operators.events_funnel_steps",
-    "bigbugdata_spark.streaming.funnel_steps",
-    "bigbugdata_spark.operators.corpus_survivors",
-    "bigbugdata_spark.operators.events_mta",
-    "bigbugdata_spark.streaming.mta",
-    "bigbugdata_spark.operators.events",
-    "bigbugdata_spark.operators.text",
-    # rotated out in r14 (fresh CORRECTNESS_r13 rows):
-    "bigbugdata_spark.operators.profile_hist",
-    "bigbugdata_spark.operators.storage_partition",
-    "bigbugdata_spark.operators.text_sentence",
-    "bigbugdata_spark.operators.text_boiler",
-    "bigbugdata_spark.operators.text_qcurve",
-    # similarity_incr_batch imports similarity_incr (earlier in tail)
-    "bigbugdata_spark.operators.similarity_incr_batch",
-    "bigbugdata_spark.operators.events_bots",
-    "bigbugdata_spark.operators.corpus_temp",
-    "bigbugdata_spark.operators.dq_recon",
-    "bigbugdata_spark.operators.quantize",
-    # rotated out in r13 (fresh CORRECTNESS_r12 rows):
-    "bigbugdata_spark.operators.events_attrib",
-    "bigbugdata_spark.operators.storage_encoding",
-    "bigbugdata_spark.operators.text_langconf",
-    "bigbugdata_spark.streaming.attrib",
-    "bigbugdata_spark.operators.similarity_health",
-    "bigbugdata_spark.operators.text_tfidf",
-    "bigbugdata_spark.operators.text_bpe_apply",
-    "bigbugdata_spark.operators.corpus_lineage",
-    "bigbugdata_spark.operators.similarity_mmr",
-    "bigbugdata_spark.operators.storage_compact",
-    "bigbugdata_spark.operators.corpus_epochs",
-    "bigbugdata_spark.operators.dq_schema",
-    "bigbugdata_spark.operators.text_cooc",
-    "bigbugdata_spark.operators.events_forecast",
-    "bigbugdata_spark.operators.profile_ndv",
-    "bigbugdata_spark.streaming.quantiles",
-    "bigbugdata_spark.operators.similarity_outlier",
-    "bigbugdata_spark.operators.events_ext",
-    "bigbugdata_spark.operators.events_quant",
-    # rotated out (fresh CORRECTNESS_r11 rows):
-    "bigbugdata_spark.operators.orders_conc",
-    "bigbugdata_spark.operators.zorder3_audit",
-    "bigbugdata_spark.streaming.mad",
-    "bigbugdata_spark.operators.similarity_rank",
-    "bigbugdata_spark.operators.dq_seq",
-    "bigbugdata_spark.operators.events_qtrend",
-    "bigbugdata_spark.operators.mm_features",
-    "bigbugdata_spark.streaming.rollup",
-    "bigbugdata_spark.operators.events_sketch",
-    "bigbugdata_spark.operators.dq_anon",
-    "bigbugdata_spark.operators.pipeline_privacy",
-    "bigbugdata_spark.operators.similarity_central",
-    "bigbugdata_spark.operators.orders_backlog",
-    "bigbugdata_spark.operators.text_spectrum",
-    "bigbugdata_spark.operators.events_ewma",
-    "bigbugdata_spark.operators.profile_skew",
-    "bigbugdata_spark.operators.profile_joincard",
-    "bigbugdata_spark.operators.dq_nulls",
-    "bigbugdata_spark.streaming.dedup",
-    # rotated out in r11 (fresh CORRECTNESS_r10 rows then):
-    "bigbugdata_spark.streaming.features",
-    "bigbugdata_spark.operators.zorder_audit",
-    "bigbugdata_spark.operators.asset_audit",
-    "bigbugdata_spark.operators.orders_ltv",
-    "bigbugdata_spark.operators.dedup_curve",
-    "bigbugdata_spark.operators.events_season",
-    "bigbugdata_spark.streaming.freshness",
-    "bigbugdata_spark.streaming.seasonality",
-    "bigbugdata_spark.streaming.growth",
-    "bigbugdata_spark.operators.similarity_keep",
-    "bigbugdata_spark.operators.corpus",
-    "bigbugdata_spark.streaming.windows",
-    "bigbugdata_spark.streaming.joins",
-    "bigbugdata_spark.streaming.stateful",
-    # rotated out in r10 (fresh CORRECTNESS_r09 rows then; the 12
-    # stalest of these moved INTO the r17 cap — see slots 39-50):
-    "bigbugdata_spark.operators.events_features",
-    "bigbugdata_spark.operators.corpus_curriculum",
-    "bigbugdata_spark.operators.dq_fresh",
-    "bigbugdata_spark.operators.dq_emb",
-    "bigbugdata_spark.operators.profile_corr",
-    "bigbugdata_spark.operators.text_prefix",
-    "bigbugdata_spark.operators.events_burst",
-    "bigbugdata_spark.operators.corpus_budget",
-    "bigbugdata_spark.operators.similarity_cluster",
-    # (tpch/tpch_ext moved into the r17 cap — slots 27-38)
-    # ---- permanently out-of-cap: rows-only (no-oracle) registrations
-    # (VERDICT r12 #2).  Verified via their oracle'd audit twins; see
-    # operators/no_oracle_shims.py.  Order-safe: every defining module
-    # precedes this section.
-    "bigbugdata_spark.operators.similarity_ext",
-    "bigbugdata_spark.operators.similarity_pq_topk",
-    "bigbugdata_spark.operators.no_oracle_shims",
-)
+#: the packages whose modules register queries at import time
+_QUERY_PACKAGES = ("bigbugdata_spark.operators", "bigbugdata_spark.streaming")
 
-#: the module whose registrations END the driver's 50-slot cap — the
-#: "driver cap boundary" comment above, made machine-checkable (r14
-#: self-review: the boundary was comment-only; a drag/miscount that
-#: pushed an intended query out of the cap would have passed CI).
-#: tests/test_registry.py asserts the 50th registration comes from this
-#: module and the 51st from a later one.
-CAP_BOUNDARY_MODULE = "bigbugdata_spark.operators.dedup_incr"
-DRIVER_CAP = 50
+#: the queries the driver's correctness gate checks, in gate order
+GATE_ORDER = (
+    "op01_scan_filter_project",
+    "op02_id_from_name",
+    "op03_conditional_totals",
+    "op04_rank_filter",
+    "op05_scalar_eval",
+    "op06_trim_clean",
+    "op07_hash_agg",
+    "op08_pivot_dense",
+    "op09_numeric_aware_sort",
+    "op10_ordered_output",
+    "op11_rpm_normalize",
+    "op12_regex_control_groups",
+    "op13_floor_ratio_rrpm",
+    "op14_topk_with_gaps",
+    "op15_zscore_window",
+    "op18_semi_join",
+    "op19_union_semi",
+    "op20_lastwins_merge",
+    "op21_filtered_sum_complement",
+    "op22_union_literals",
+    "audit_emb_lsh_recall",
+    "audit_ivf_recall",
+    "audit_np_parity",
+    "audit_quantiles_rank",
+    "audit_vocab_error",
+    "audit_pq_recall",
+    "tpch_q2_min_cost_supplier",
+    "tpch_q21_waiting_suppliers",
+    "evt_retention",
+    "text_decontaminate",
+    "emb_kmeans_assign",
+    "evt_growth_accounting",
+    "evt_anomaly_mad",
+    "text_bpe_train",
+    "pipe_training_corpus",
+    "pipe_release_manifest",
+    "pipe_semantic_guard",
+    "sim_triangle_stats",
+    "sim_knn_graph",
+    "text_dup_span_coverage",
+    "dedup_containment",
+    "dedup_cluster_keep_lsh",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_minhash_lsh",
+    "dedup_simhash",
+    "dedup_emb_cosine",
+    "dedup_cluster_keep",
+    "dedup_incremental",
+    "dedup_cluster_sizes",
+)
 
 
 @dataclass
@@ -619,6 +139,10 @@ def register(
 
 
 def load_all() -> dict[str, QuerySpec]:
-    for mod in _QUERY_MODULES:
-        importlib.import_module(mod)
-    return REGISTRY
+    """Import every query module; return the specs in gate order."""
+    for pkg_name in _QUERY_PACKAGES:
+        pkg = importlib.import_module(pkg_name)
+        for mod in pkgutil.iter_modules(pkg.__path__, f"{pkg_name}."):
+            importlib.import_module(mod.name)
+    rest = sorted(REGISTRY.keys() - set(GATE_ORDER))
+    return {name: REGISTRY[name] for name in (*GATE_ORDER, *rest)}

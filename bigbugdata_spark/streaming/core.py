@@ -1,11 +1,8 @@
 """Shared Structured-Streaming plumbing: the events file-source stream
 and the drive-to-memory-sink test harness.
 
-Split out of streaming/windows.py for a registration-order reason (the
-same one behind functions/fragments.py): windows.py registers a query at
-import time, but sink.py / dedup.py / stateful.py / joins.py only need
-these helpers — importing them must not perturb the registry order the
-driver's capped correctness report depends on (registry._QUERY_MODULES).
+Every streaming query module builds on these helpers; this module
+registers no query.
 """
 
 from __future__ import annotations
@@ -55,10 +52,7 @@ def ts_us(s: pd.Series) -> pd.Series:
     datetime64 resolution Arrow delivered (ns under pandas' classic
     conversion, us under pandas>=2 preserved-resolution paths). A raw
     ``astype("int64")`` would silently change scale with the resolution —
-    the exact bug class behind VERDICT r4 "What's wrong" #1.
-
-    Lives here (not stateful.py) so attrib.py/growth.py can import it
-    without dragging stateful's registration into the driver cap."""
+    the exact bug class behind VERDICT r4 "What's wrong" #1."""
     return s.astype("datetime64[us]").astype("int64")
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.operators.dq_fresh_core import (
+from bigbugdata_spark.operators.dq_fresh import (
     FRESHNESS_FEEDS,
     feed_sql,
     finish_freshness,

@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bigbugdata_spark.functions.fragments import cents_col
-# the non-registering core split (round 11): importing the shared
-# machinery must not drag evt_anomaly_mad's registration into the cap
-from bigbugdata_spark.operators.events_mad_core import (
+from bigbugdata_spark.operators.events_mad import (
     MAD_ORACLE_SQL,
     finish_mad,
     mad_histogram,

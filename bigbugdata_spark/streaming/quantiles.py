@@ -6,7 +6,7 @@ freshness, seasonality, MAD).  The ONLY pass over raw events is the
 grouped aggregate — and the rank selection reads the final histogram
 post-sink: the value at rank ceil(q*n) under (cents) order is
 determined by the cents multiset alone, so it can be read off
-cumulative counts (the events_mad_core argument, generalized to any
+cumulative counts (the events_mad argument, generalized to any
 quantile).  Gated by the BATCH query's oracle verbatim
 (evt_value_quantiles — stream == batch is the claim).
 
@@ -22,15 +22,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.functions.fragments import cents_col
-from bigbugdata_spark.registry import register
-from bigbugdata_spark.streaming.core import _run_to_memory, stream_events
-
-#: the batch twin's oracle, verbatim — imported from the
-#: non-registering core module so this import can never drag another
-#: module's registrations into the driver cap (scd_core pattern, r12)
-from bigbugdata_spark.operators.events_quant_core import (
+#: the batch twin's oracle, verbatim
+from bigbugdata_spark.operators.events import (
     QUANTILES_ORACLE_SQL as _QUANTILES_ORACLE,
 )
+from bigbugdata_spark.registry import register
+from bigbugdata_spark.streaming.core import _run_to_memory, stream_events
 
 
 def _pick(q: float):

@@ -67,10 +67,6 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
-# scd_core is the non-registering half of the SCD2 family (round-8
-# split): importing it cannot perturb the driver's cap order, which
-# matters now that this module registers EARLY (in-cap) while
-# operators/scd.py's batch query rotates behind the cap
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.operators.scd_core import (
     SCD2_ORACLE_SQL,

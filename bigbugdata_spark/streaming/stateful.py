@@ -27,9 +27,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from bigbugdata_spark.functions.fragments import TS_FMT, TS_FMT_DUCK
 from bigbugdata_spark.registry import register
 from bigbugdata_spark.streaming.core import _run_to_memory, stream_events
-from bigbugdata_spark.streaming.core import ts_us as _ts_us  # noqa: F401
-# _ts_us moved to core.py (r12): attrib.py/growth.py import it there so
-# they no longer drag this module's registration into the driver cap.
+from bigbugdata_spark.streaming.core import ts_us as _ts_us
 
 
 _OUTPUT_SCHEMA = T.StructType(

@@ -55,23 +55,6 @@ def test_oracle_result_types_driver_safe(con, name):
     )
 
 
-# Cap lint (VERDICT r12 #2): the driver's correctness gate caps at the
-# first ~50 registered queries, and a rows-only query there can only
-# produce `err: "no_oracle"` — a wasted slot (r12 burned one on
-# evt_value_quantiles_approx).  All six rows-only queries register in
-# the permanently-out-of-cap tail (operators/no_oracle_shims.py and
-# friends); their verifiable surface is their oracle'd audit twins.
-def test_cap_holds_no_rows_only_query():
-    order = list(SPECS)
-    offenders = [
-        (i + 1, n) for i, n in enumerate(order[:50]) if SPECS[n].oracle is None
-    ]
-    assert not offenders, (
-        f"rows-only queries occupy driver-cap slots {offenders} — move their "
-        f"registration past the cap (operators/no_oracle_shims.py pattern)"
-    )
-
-
 @pytest.mark.parametrize("name", ROWS_ONLY)
 def test_rows_only(spark, sf_oracle, name):
     spec = SPECS[name]

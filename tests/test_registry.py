@@ -1,19 +1,9 @@
-"""Registry composition lints (r14 self-review).
+"""Gate-order checks.
 
-The driver's correctness gate caps at the first 50 registered queries;
-through r13 the cap boundary lived only in a comment ("driver cap
-boundary" in registry._QUERY_MODULES) plus a rows-only lint — a
-registration drag or module miscount that silently pushed an intended
-query out of the cap would have passed CI.  These tests make the
-boundary machine-checked against registry.CAP_BOUNDARY_MODULE.
-
-The order is computed in a FRESH SUBPROCESS, not this interpreter: any
-registering module imported before load_all() (e.g. a roundN test
-module's top-level import collected first, or pytest-xdist/-randomly
-orderings) perturbs in-process REGISTRY insertion order, while the
-driver always sees a fresh interpreter — the subprocess reproduces
-exactly that (second r14 self-review pass; the in-process form failed
-spuriously under `pytest tests/test_round11_ops.py tests/test_registry.py`).
+The driver's correctness gate checks the first 50 entries of
+__spark_entry__.queries().  registry.GATE_ORDER alone decides them:
+load_all() returns those names first and every other name sorted after
+them, whatever order the query modules were imported in.
 """
 
 from __future__ import annotations
@@ -23,85 +13,41 @@ import pathlib
 import subprocess
 import sys
 
-import pytest
+import __spark_entry__
+from bigbugdata_spark.registry import GATE_ORDER
 
-from bigbugdata_spark.registry import (
-    CAP_BOUNDARY_MODULE,
-    DRIVER_CAP,
-    _QUERY_MODULES,
-)
+N_QUERIES = 221
+N_ORACLES = 215
 
-_SNIPPET = """
+
+def test_gate_order_leads_and_every_gated_query_has_an_oracle():
+    names = list(__spark_entry__.queries())
+    oracles = __spark_entry__.oracle_sql()
+    assert names[: len(GATE_ORDER)] == list(GATE_ORDER)
+    assert len(GATE_ORDER) == 50
+    missing = [n for n in GATE_ORDER if n not in oracles]
+    assert not missing, f"gated queries without an oracle: {missing}"
+    assert len(names) == N_QUERIES
+    assert len(oracles) == N_ORACLES
+
+
+# A query module imported before load_all() registers its queries first;
+# the gate order must not depend on that.
+_EARLY_IMPORT = """
 import json
-from bigbugdata_spark.registry import REGISTRY, load_all
-load_all()
-print(json.dumps([
-    {"name": n, "module": s.fn.__module__, "rows_only": s.oracle is None}
-    for n, s in REGISTRY.items()
-]))
+import bigbugdata_spark.operators.tpch
+import __spark_entry__
+print(json.dumps(list(__spark_entry__.queries())[:50]))
 """
 
 
-@pytest.fixture(scope="module")
-def fresh_order():
+def test_gate_order_survives_an_early_module_import():
     out = subprocess.run(
-        [sys.executable, "-c", _SNIPPET],
+        [sys.executable, "-c", _EARLY_IMPORT],
         capture_output=True,
         text=True,
-        # the repo root this test file lives in — a hardcoded path
-        # would silently probe a DIFFERENT checkout if one existed
-        # there (r14 review)
         cwd=str(pathlib.Path(__file__).resolve().parents[1]),
         check=True,
         timeout=300,
     )
-    return json.loads(out.stdout.strip().splitlines()[-1])
-
-
-def test_cap_boundary_lands_exactly_on_declared_module(fresh_order):
-    """The 50th registration must come from CAP_BOUNDARY_MODULE and the
-    51st from a different module — the boundary sits on a module edge,
-    exactly where the rotation comment says it does."""
-    assert len(fresh_order) > DRIVER_CAP
-    assert fresh_order[DRIVER_CAP - 1]["module"] == CAP_BOUNDARY_MODULE
-    assert fresh_order[DRIVER_CAP]["module"] != CAP_BOUNDARY_MODULE
-    # and nothing from the boundary module leaks past the cap
-    after = {e["module"] for e in fresh_order[DRIVER_CAP:]}
-    assert CAP_BOUNDARY_MODULE not in after
-
-
-def test_cap_modules_equal_declared_prefix(fresh_order):
-    """The set of modules defining the first 50 registrations equals
-    the _QUERY_MODULES prefix up to and including the boundary — a
-    module-level import that DRAGS another registering module into the
-    cap (the scd_core failure class) shows up here as an unexpected
-    module name."""
-    prefix = []
-    for m in _QUERY_MODULES:
-        prefix.append(m)
-        if m == CAP_BOUNDARY_MODULE:
-            break
-    else:
-        raise AssertionError(
-            f"{CAP_BOUNDARY_MODULE} not in _QUERY_MODULES — update "
-            f"CAP_BOUNDARY_MODULE alongside the rotation"
-        )
-    got = {e["module"] for e in fresh_order[:DRIVER_CAP]}
-    assert got == set(prefix), (
-        f"cap composition drifted from the declared prefix: "
-        f"unexpected={sorted(got - set(prefix))}, "
-        f"missing={sorted(set(prefix) - got)}"
-    )
-
-
-def test_rows_only_registrations_sit_past_the_cap(fresh_order):
-    """The rows-only queries (no_oracle_shims + the two tail modules)
-    must all sit past the cap (VERDICT r12 #2); the shim's own
-    import-time guard raises under a gross reordering, this pins the
-    exact slot positions in driver order."""
-    positions = {
-        e["name"]: i for i, e in enumerate(fresh_order) if e["rows_only"]
-    }
-    assert positions and all(
-        p >= DRIVER_CAP for p in positions.values()
-    ), positions
+    assert json.loads(out.stdout.strip().splitlines()[-1]) == list(GATE_ORDER)

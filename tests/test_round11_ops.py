@@ -251,7 +251,7 @@ def test_knn_health_card_shape_and_bounds(spark, sf_oracle):
     """K rows, ranks 1..KNN_K, edge counts non-increasing by rank (a
     node emitting rank r also emitted 1..r-1), reciprocal <= edges, and
     mean cosine within [-1e6, 1e6] ppm."""
-    from bigbugdata_spark.operators.similarity_knn_core import KNN_K
+    from bigbugdata_spark.operators.similarity_knn import KNN_K
 
     rows = {
         r["rnk"]: r

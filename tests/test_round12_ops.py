@@ -129,7 +129,7 @@ def test_sup_count_twin_and_router_reach():
         sql_sup_count,
         sup_count,
     )
-    from bigbugdata_spark.operators.similarity_knn_core import KNN_PROBE
+    from bigbugdata_spark.operators.similarity_knn import KNN_PROBE
 
     con = duckdb.connect()
     for k in (IVF_K, 22, 44, 156, 1000, 31623):

@@ -1,8 +1,7 @@
 """Round-13 invariants.
 
 The round's charter is consolidation (VERDICT r12 #8): no new query
-families — the tests here pin the two scale-posture fixes and the
-rotation rule instead.
+families — the tests here pin the two scale-posture fixes instead.
 
 1. The re-scoped sim_ivf_incremental_assign (VERDICT r12 #2): the
    persisted IVF index generation (frozen codebook + per-cell counts)
@@ -14,9 +13,6 @@ rotation rule instead.
 2. The bounded streaming MTA path buffer (VERDICT r12 #3): under-cap
    paths still equal the batch query exactly; an over-cap user
    degrades to last-MTA_PATH_CAP-touch credit, deterministically.
-
-(The rotation rule — no rows-only query in the driver cap — is pinned
-in tests/test_oracle_parity.py::test_cap_holds_no_rows_only_query.)
 """
 
 from __future__ import annotations
