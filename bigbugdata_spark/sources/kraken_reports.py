@@ -16,6 +16,7 @@ values via Spark's distributed CSV writer.
 from __future__ import annotations
 
 import csv
+from collections.abc import Iterable
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -40,19 +41,11 @@ REPORT_SCHEMA = T.StructType(
 )
 
 
-def sample_id_expr(col):
-    """basename(path).rpartition('_')[0] (ref bigbugdata.py:35-42): greedy
-    prefix before the LAST underscore; '' when no underscore — matching
-    str.rpartition."""
-    basename = F.element_at(F.split(col, "/"), -1)
-    return F.regexp_extract(basename, r"^(.*)_", 1)
-
-
-def sample_name_expr(col):
-    """basename(path).split('_')[0] (ref scripts/filter_reports_by_taxid.py:29
-    — note: a DIFFERENT rule than sample_id_expr, preserved as such)."""
-    basename = F.element_at(F.split(col, "/"), -1)
-    return F.split(basename, "_").getItem(0)
+def sample_id_sql(col: str) -> str:
+    """basename(path).rpartition('_')[0] (ref bigbugdata.py:35-42) of the
+    path column `col`, as SQL: greedy prefix before the LAST underscore;
+    '' when no underscore — matching str.rpartition."""
+    return f"regexp_extract(element_at(split({col}, '/'), -1), '^(.*)_', 1)"
 
 
 def read_reports(
@@ -82,7 +75,7 @@ def read_reports(
         .schema(REPORT_SCHEMA)
         .csv(paths)
         .withColumn("path", F.input_file_name())
-        .withColumn("sample_id", sample_id_expr(F.col("path")))
+        .withColumn("sample_id", F.expr(sample_id_sql("path")))
     )
 
 
@@ -147,15 +140,16 @@ def _read_reports_ordered(spark: SparkSession, paths: list[str] | str) -> DataFr
         )
         .withColumn("_f", F.split(F.col("_line"), "\t"))
     )
-    cols = [
-        F.col("_f").getItem(i).cast(field.dataType).alias(field.name)
-        for i, field in enumerate(REPORT_SCHEMA.fields)
-    ]
-    return body.select(
-        *cols,
-        F.col("_path").alias("path"),
-        sample_id_expr(F.col("_path")).alias("sample_id"),
-        F.col("row_order"),
+    # one selectExpr: as getItem/cast/alias Column objects the same
+    # columns cost four py4j round-trips each
+    return body.selectExpr(
+        *[
+            f"CAST(_f[{i}] AS {field.dataType.simpleString()}) AS {field.name}"
+            for i, field in enumerate(REPORT_SCHEMA.fields)
+        ],
+        "_path AS path",
+        f"{sample_id_sql('_path')} AS sample_id",
+        "row_order",
     )
 
 
@@ -170,17 +164,17 @@ def output_paths(results_dir: str, rank: str) -> tuple[Path, Path, Path]:
     )
 
 
-def write_csv_fidelity(
-    file_path: Path, rows: list[dict], fieldnames: list[str]
-) -> None:
-    """Reference-exact CSV sink (op 16, ref bigbugdata.py:208-222): header
-    row, every value str()-ified, fixed column order. Driver-side by design:
-    inputs are the collected presentation pivots, never the fact table."""
+def write_csv_fidelity(file_path: Path, header: list[str], rows: Iterable[list]) -> None:
+    """Reference-exact CSV sink (op 16, ref bigbugdata.py:208-222): the
+    header row, then each row's values in header order, every value
+    written as its str() (None as 'None', floats as Python's repr). The
+    csv module's default dialect quotes minimally, as the reference's
+    csv.DictWriter does. Driver-side by design: inputs are the
+    presentation tables, never the fact table."""
     with open(file_path, "w") as fh:
-        writer = csv.DictWriter(fh, fieldnames=fieldnames)
-        writer.writeheader()
-        for row in rows:
-            writer.writerow({k: str(v) for k, v in row.items()})
+        writer = csv.writer(fh)
+        writer.writerow(header)
+        writer.writerows(map(str, row) for row in rows)
 
 
 def write_csv_scale(

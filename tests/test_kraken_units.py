@@ -2,20 +2,30 @@
 reference crashes on some of them): reads==0 e_val, physical row order
 under the wholetext reader, and the sample_id collision, missing-total
 and zero-total fail-fasts. Also the reference-free end-to-end gate (both
-sinks checked against the benchmark's plain-Python oracle) and the pins
+sinks checked against the benchmark's plain-Python oracle), the fidelity
+sink's CSV quoting, the scale tophits frame's local plan, and the pins
 that a repeated run reuses its compiled code and stays within its Spark
 job budget."""
 
 from __future__ import annotations
 
+import csv
 import importlib.util
+import io
 import math
 import sys
 from pathlib import Path
 
 import pytest
+from pyspark.sql import Row
 
-from bigbugdata_spark.operators.kraken import cell_stats, run_pipeline, write_outputs
+from bigbugdata_spark.operators.kraken import (
+    TOP_FIELDS,
+    _tophits_frame,
+    cell_stats,
+    run_pipeline,
+    write_outputs,
+)
 from bigbugdata_spark.sources.kraken_reports import read_reports
 from tests.kraken_fixtures import generate_reports
 
@@ -182,6 +192,55 @@ def test_zscores_independent_of_partitioning(spark, tmp_path):
     assert got[0] == got[1]
 
 
+def test_fidelity_sink_quotes_like_dictwriter(spark, tmp_path):
+    """A taxName holding a comma and a double quote is quoted in the
+    fidelity matrices exactly as the reference's csv.DictWriter quotes
+    it over str() of the same values. The generated oracle fixtures hold
+    no such name."""
+    name = 'Odd, "quoted" sp.'
+    paths = []
+    for s in ("A", "B"):
+        p = tmp_path / f"{s}_report.txt"
+        rows = [
+            "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
+            "50.0\t100\t0\t10\t1.0\t0.5\t1\troot\t  root",
+            f"1.0\t7\t0\t5\t1.5\t0.5\t1235\tspecies\t  {name}",
+        ]
+        if s == "A":  # B's cell of this taxon is an absent zero
+            rows.append("1.0\t10\t0\t5\t1.5\t0.5\t1234\tspecies\t  Plain sp.")
+        _write_report(p, rows)
+        paths.append(str(p))
+    result = run_pipeline(spark, paths)
+    combined, rrpm, _ = write_outputs(result, str(tmp_path / "out"), "species")
+
+    cells = result.rrpm.collect()
+    fields = ["taxID", "taxName", "Total # of Reads", *result.samples]
+    for path, value, zero in ((combined, "reads", 0), (rrpm, "rrpm", 0.0)):
+        rows = {}
+        for c in cells:
+            head = {"taxID": c["taxID"], "taxName": c["taxName"],
+                    "Total # of Reads": c["total_reads"]}
+            row = rows.setdefault(c["taxID"], head | dict.fromkeys(result.samples, zero))
+            row[c["sample_id"]] = c[value]
+        buf = io.StringIO()
+        writer = csv.DictWriter(buf, fieldnames=fields)
+        writer.writeheader()
+        for t in sorted(rows):
+            writer.writerow({k: str(v) for k, v in rows[t].items()})
+        assert f'"Odd, ""quoted"" sp."' in buf.getvalue()
+        assert Path(path).read_bytes() == buf.getvalue().encode()
+
+
+def test_scale_tophits_frame_is_local_relation(spark):
+    """The scale sink's tophits frame plans as local data: a Python-RDD
+    scan would fork pyspark.daemon and its workers to evaluate it."""
+    row = Row(**dict(zip(TOP_FIELDS, ("A", 1, "x", 1, 1.0, 2, "1.0", 3, "0.5", None, 0.5))))
+    df = _tophits_frame(spark, [row])
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert df.collect() == [row]
+
+
 # --- end to end, against the benchmark's oracle -----------------------------
 
 GROUP_PATTERNS = [("CF_DNA_Negative$", "^CF_DNA"), ("CF_RNA_Negative$", "^CF_RNA")]
@@ -264,9 +323,11 @@ def test_repeated_run_reuses_generated_code(spark, oracle_reports, tmp_path):
 
 #: Spark jobs a warm unit may submit on this fixture, per sink mode. With
 #: the top-k repaired on the driver and the fidelity matrices from one
-#: collect, a unit submitted 11 (fidelity) and 14 (scale); the shape
-#: before, with the repair as a Spark subtree, submitted 25 and 19.
-MAX_WARM_JOBS = {"fidelity": 15, "scale": 17}
+#: Arrow collect of the long frame, a unit submitted 10 (fidelity) and 14
+#: (scale). Collecting a per-taxon aggregate instead cost the fidelity
+#: sink a second job (11); with the repair as a Spark subtree the units
+#: submitted 25 and 19.
+MAX_WARM_JOBS = {"fidelity": 12, "scale": 17}
 
 
 def _last_job_id(spark) -> int:

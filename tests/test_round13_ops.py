@@ -290,7 +290,7 @@ def test_funnel_kernel_slicing_invariance():
 
 
 def test_kraken_scale_pivot_is_hash_aggregate(spark, tmp_path):
-    """The matrix sinks' per-taxon aggregate must HashAggregate: the r12
+    """The scale sink's per-taxon aggregate must HashAggregate: the r12
     struct-valued PivotFirst silently fell to SortAggregate (two full
     sorts of the long fact — measured 0.5-1.1 s on the bench fixture);
     the r13 dual-scalar form keeps primitive slot buffers.  Pinned
