@@ -363,7 +363,7 @@ SCALE_PROBE_QUERIES = (
     "dq_null_profile",
     # round-11 additions (VERDICT r10 #6): the two heaviest plans the
     # engine runs, measured instead of argued. Both are served from the
-    # shared graph spine (similarity_graph_core), so the probe RESETS
+    # shared graph spine (operators/similarity_graph.py), so the probe RESETS
     # the memo + persisted generation before every iteration — it
     # measures the BUILD, the scale-sensitive artifact, not a memo hit.
     # Expected shape: the IVF kNN build is O(n^1.5) BY DESIGN (corpus-
@@ -466,7 +466,7 @@ X10_RATIO_BUDGET = {
 #: collision-bound — linear in corpus growth at constant near-dup
 #: density (band keys are 4 concatenated 64-bit minhashes, so random
 #: cross-pair collisions are ~2^-256-vanishing at any realistic n; see
-#: dedup_incr_lsh's scaling-rule docstring) — and two points make that
+#: the LSH index path's scaling-rule docstring) — and two points make that
 #: slope measurable instead of argued.
 SCALE_SECOND_POINT = {"dedup_incremental_lsh"}
 SCALE_SECOND_REPLICATION = 3
@@ -508,7 +508,7 @@ def _reset_graph_spine(sf_dir: str) -> None:
     full build (the scale-sensitive cost) instead of a memo hit."""
     import shutil
 
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     fp = G.generation_fp(sf_dir)
     # scoped to THIS corpus: clearing the other scale's memo here would
@@ -529,7 +529,7 @@ def _reset_graph_spine_downstream(sf_dir: str) -> None:
     scale's final build memoized — its reset is fingerprint-scoped so
     the base memo survives the x10 iterations; if a knn memo is absent,
     pagerank rebuilds it too — correct either way, just slower.)"""
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     fp = G.generation_fp(sf_dir)
     for key in [k for k in G._MEMO if k[1] == fp and k[2] != "knn"]:
@@ -572,8 +572,8 @@ def _reset_ivf_generation(sf_dir: str) -> None:
     fingerprint-scoped via the shared ivf_generation_fp definition."""
     import shutil
 
-    from bigbugdata_spark.operators import similarity_incr as SI
-    from bigbugdata_spark.operators.dedup_incr_core import index_path
+    from bigbugdata_spark.operators import similarity as SI
+    from bigbugdata_spark.operators.dedup_incr import index_path
 
     fp = SI.ivf_generation_fp(sf_dir)
     shutil.rmtree(index_path(f"{SI._IVF_CB_PREFIX}{fp}"), ignore_errors=True)
@@ -1404,9 +1404,7 @@ def main() -> None:
     # generation adoption.
     ivfgen_build_sec: float | None = None
     try:
-        from bigbugdata_spark.operators.similarity_incr import (
-            ivf_index_generation,
-        )
+        from bigbugdata_spark.operators.similarity import ivf_index_generation
 
         _reset_ivf_generation(SF_DIR)
         t0 = time.perf_counter()

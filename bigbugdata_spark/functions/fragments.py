@@ -85,7 +85,7 @@ def sql_list(words: tuple[str, ...]) -> str:
 
 # THE definition of document "quality" (length band, punctuation ratio,
 # stopword presence — the C4/Gopher-style rule family), shared by
-# operators/text.py (text_quality_score), operators/corpus_version.py
+# operators/text.py (text_quality_score), operators/corpus.py
 # (corpus_quality_weighted_sample's acceptance threshold) and
 # operators/pipeline.py. One expression tree on both engines so the
 # sampler's threshold can never drift from the registered score.
@@ -351,7 +351,7 @@ IVF_HASH_A, IVF_HASH_B = 179_424_673, 32_452_843
 IVF_CODEBOOK_HASH_SQL = f"((vec_id % {H.P}) * {IVF_HASH_A} + {IVF_HASH_B}) % {H.P}"
 
 
-# Product-quantization knobs (operators/similarity_pq.py): M subspaces
+# Product-quantization knobs (operators/similarity.py): M subspaces
 # of SUBDIM dims each; PQ_K hash-sampled codebook vectors per subspace
 # (6-bit codes x 16 subspaces = a 96-bit / 12-byte PQ code, ~21x smaller
 # than the 256-byte float vector; the first IVF_K of the sample double

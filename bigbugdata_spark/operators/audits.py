@@ -1,67 +1,74 @@
-"""Oracle'd AUDIT TWINS for the five queries whose primary outputs the
-driver can only rows-only-check (sketches and approximate indexes whose
-raw outputs are engine-specific): dedup_emb_lsh, sim_ivf_topk,
-sim_cosine_topk_np, evt_value_quantiles_approx, text_vocab_approx.
+"""Oracle'd audit twins: queries whose primary output the driver can only
+rows-only-check, re-derived so their accuracy passes the hash gate.
 
-Each audit runs the REAL approximate query and reduces it against its
-exact twin to small EXACT INTEGERS — recall counts, set-overlap counts,
-within-error-bound flags — that a DuckDB oracle can reproduce (or, for
-sketch error flags, assert). That converts "the driver only ever sees a
-row count" into hash-verified green rows: if the approximate path's
-recall/error ever degrades, the integers change and the driver's value
-hash goes red.
-
-Two audit shapes:
-  * re-derivable (audit_emb_lsh_recall, audit_ivf_recall,
-    audit_np_parity): the approximate pipeline itself is deterministic
-    and engine-portable (seeded hyperplanes, affine codebook hash — see
-    functions/fragments.py), so the oracle REBUILDS the whole pipeline in
-    SQL and computes the same counts independently. Strongest form: both
-    engines derive the numerator and denominator from scratch.
-  * bound-asserting (audit_quantiles_rank, audit_vocab_error): the
-    sketch state is engine-internal (Spark GK percentile, HLL++
-    registers), so no SQL can re-derive the approximate values; instead
-    Spark computes exact error-bound flags against the exact answer and
-    the oracle asserts the bound holds (flag columns) while re-deriving
-    every exact column from data. Weaker than re-derivation but still a
-    value-hash check on real data-dependent integers.
-
-No analog in the reference (its only approximations are none — a
-706-line exact CSV tool); this is verification infrastructure for the
-extension families, per the round-5 VERDICT's top next-round item.
+Sketch and approximate-index audits (LSH, IVF, numpy parity, quantiles,
+vocabulary), landed-asset accounting, and the two- and N-column Z-order
+lake accounting.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
 from bigbugdata_spark.functions.fragments import (
+    CENTS_SQL,
     COSINE_T,
     EMB_DIM,
     EMB_LSH_BITS,
     EMB_LSH_PLANES,
-    IVF_ASSIGN,
-    IVF_CODEBOOK_HASH_SQL,
-    SUP_ASSIGN,
-    SUP_PROBE,
-    sql_scaled_ivf_k,
-    sql_scaled_n_probe,
-    sql_sup_count,
-    N_PROBE,
-    N_QUERIES,
     TOP_K,
     cents_col,
     sql_cos,
 )
 from bigbugdata_spark.operators.dedup import dedup_emb_cosine, dedup_emb_lsh
-from bigbugdata_spark.operators.events_ext import evt_value_quantiles_approx
-from bigbugdata_spark.operators.similarity import sim_cosine_topk, sim_ivf_topk
-from bigbugdata_spark.operators.similarity_ext import sim_cosine_topk_np
-from bigbugdata_spark.operators.text_ext import text_vocab_approx
+from bigbugdata_spark.operators.events import evt_value_quantiles_approx
+from bigbugdata_spark.operators.similarity import (
+    IVF_STAGES_SQL,
+    SIM_CORPUS_SQL,
+    sim_cosine_topk,
+    sim_cosine_topk_np,
+    sim_ivf_topk,
+)
+from bigbugdata_spark.operators.text import text_vocab_approx
 from bigbugdata_spark.registry import register
+from bigbugdata_spark.sources.zorder import MORTON_BITS, with_morton
+
+
+# ---------------------------------------------------------------------------
+# Oracle'd AUDIT TWINS for the five queries whose primary outputs the
+# driver can only rows-only-check (sketches and approximate indexes whose
+# raw outputs are engine-specific): dedup_emb_lsh, sim_ivf_topk,
+# sim_cosine_topk_np, evt_value_quantiles_approx, text_vocab_approx.
+#
+# Each audit runs the REAL approximate query and reduces it against its
+# exact twin to small EXACT INTEGERS — recall counts, set-overlap counts,
+# within-error-bound flags — that a DuckDB oracle can reproduce (or, for
+# sketch error flags, assert). That converts "the driver only ever sees a
+# row count" into hash-verified green rows: if the approximate path's
+# recall/error ever degrades, the integers change and the driver's value
+# hash goes red.
+#
+# Two audit shapes:
+#   * re-derivable (audit_emb_lsh_recall, audit_ivf_recall,
+#     audit_np_parity): the approximate pipeline itself is deterministic
+#     and engine-portable (seeded hyperplanes, affine codebook hash — see
+#     functions/fragments.py), so the oracle REBUILDS the whole pipeline in
+#     SQL and computes the same counts independently. Strongest form: both
+#     engines derive the numerator and denominator from scratch.
+#   * bound-asserting (audit_quantiles_rank, audit_vocab_error): the
+#     sketch state is engine-internal (Spark GK percentile, HLL++
+#     registers), so no SQL can re-derive the approximate values; instead
+#     Spark computes exact error-bound flags against the exact answer and
+#     the oracle asserts the bound holds (flag columns) while re-deriving
+#     every exact column from data. Weaker than re-derivation but still a
+#     value-hash check on real data-dependent integers.
+#
+# No analog in the reference (its only approximations are none — a
+# 706-line exact CSV tool); this is verification infrastructure for the
+# extension families, per the round-5 VERDICT's top next-round item.
+# ---------------------------------------------------------------------------
 
 
 # --------------------------------------------------------------------------
@@ -148,166 +155,9 @@ def audit_emb_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2. sim_ivf_topk vs sim_cosine_topk — per-query overlap, fully re-derived
 # --------------------------------------------------------------------------
 
-# Shared CTE prefix: corpus with norms, the affine-hash codebook (the
-# reason similarity.py uses a portable hash instead of xxhash64), and the
-# query set. Reused by both the IVF and the np-parity audit oracles.
-_SIM_CORPUS_SQL = f"""
-    corpus AS (
-        SELECT vec_id, embedding, {H.sql_norm('embedding', EMB_DIM)} AS nrm
-        FROM embeddings
-    ),
-    queries AS (
-        SELECT vec_id AS query_id, embedding AS q_emb, nrm AS q_nrm
-        FROM corpus WHERE vec_id < {N_QUERIES}
-    ),
-    exact AS (
-        SELECT query_id, neighbor_id FROM (
-            SELECT q.query_id, co.vec_id AS neighbor_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {H.sql_dot('q.q_emb', 'co.embedding', EMB_DIM)}
-                                / (q.q_nrm * co.nrm) DESC,
-                                co.vec_id ASC
-                   ) AS rnk
-            FROM queries q JOIN corpus co ON co.vec_id != q.query_id
-        ) WHERE rnk <= {TOP_K}
-    )
-"""
-
-SIM_CORPUS_SQL = _SIM_CORPUS_SQL  # shared with operators/similarity_pq.py
-
-
-def _routed_pairs_sql(
-    src: str, src_id: str, src_emb: str, src_nrm: str
-) -> str:
-    """The two-level router as a SQL fragment: DISTINCT ({src_id},
-    cell_id) pairs reachable from `src` through its SUP_PROBE best
-    supercells.  Mirrors similarity._routed_cells steps 1-2."""
-    return f"""(
-            SELECT DISTINCT vs.{src_id}, cs.cell_id FROM (
-                SELECT {src_id}, sup_id FROM (
-                    SELECT v.{src_id}, s.sup_id,
-                           ROW_NUMBER() OVER (
-                               PARTITION BY v.{src_id}
-                               ORDER BY {H.sql_dot(f'v.{src_emb}', 's.s_emb', EMB_DIM)}
-                                        / (v.{src_nrm} * s.s_nrm) DESC,
-                                        s.sup_id ASC
-                           ) AS vrn
-                    FROM {src} v CROSS JOIN supers s
-                ) WHERE vrn <= {SUP_PROBE}
-            ) vs JOIN cell_sup cs ON vs.sup_id = cs.sup_id
-        )"""
-
-
-def ivf_stages_sql(
-    q: str = "queries",
-    n_probe: int | None = None,
-    k_sql: str | None = None,
-    routed_probes: bool = False,
-) -> str:
-    """cents/supers/cell_sup/assign/probes/cand: the IVF
-    candidate-generation stages as SQL, parameterized on the query-side
-    CTE name, probe width, codebook-size rule, and probe routing —
-    shared by this module's audit, similarity_pq.py's audit, and the
-    all-nodes kNN-graph oracle (similarity_knn.py, which probes
-    fewer cells, uses every corpus vector as a query, sizes cells to a
-    constant row target, and routes its probes).  n_probe None mirrors
-    the Spark default (fragments.sql_scaled_n_probe); k_sql None
-    mirrors scaled_ivf_k, so both engines derive K AND the probe width
-    from the same COUNT(*).
-
-    Assignment is TWO-LEVEL routed (r12, VERDICT r11 #1a), mirroring
-    similarity._routed_cells exactly: supercells are the first
-    ceil(sqrt(K)) cells of the sampling order, each cell registers
-    under its SUP_ASSIGN nearest supercells, and a vector ranks only
-    the cells reachable through its SUP_PROBE best supercells."""
-    probe_expr = (
-        sql_scaled_n_probe("corpus") if n_probe is None else str(n_probe)
-    )
-    k_expr = sql_scaled_ivf_k("corpus") if k_sql is None else k_sql
-    if routed_probes:
-        probes_sql = f"""
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT r.query_id, r.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY r.query_id
-                       ORDER BY {H.sql_dot('q2.q_emb', 'ct.c_emb', EMB_DIM)}
-                                / (q2.q_nrm * ct.c_nrm) DESC,
-                                r.cell_id ASC
-                   ) AS prn
-            FROM {_routed_pairs_sql(q, 'query_id', 'q_emb', 'q_nrm')} r
-            JOIN {q} q2 ON q2.query_id = r.query_id
-            JOIN cents ct ON ct.cell_id = r.cell_id
-        ) WHERE prn <= {probe_expr}
-    )"""
-    else:
-        probes_sql = f"""
-    probes AS (
-        SELECT query_id, cell_id FROM (
-            SELECT q.query_id, ct.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY q.query_id
-                       ORDER BY {H.sql_dot('q.q_emb', 'ct.c_emb', EMB_DIM)}
-                                / (q.q_nrm * ct.c_nrm) DESC,
-                                ct.cell_id ASC
-                   ) AS prn
-            FROM {q} q CROSS JOIN cents ct
-        ) WHERE prn <= {probe_expr}
-    )"""
-    return f"""
-    cents AS MATERIALIZED (
-        SELECT vec_id AS cell_id, embedding AS c_emb, nrm AS c_nrm,
-               ROW_NUMBER() OVER (
-                   ORDER BY {IVF_CODEBOOK_HASH_SQL}, vec_id
-               ) AS cpos
-        FROM corpus ORDER BY {IVF_CODEBOOK_HASH_SQL}, vec_id
-        LIMIT {k_expr}
-    ),
-    supers AS MATERIALIZED (
-        SELECT cell_id AS sup_id, c_emb AS s_emb, c_nrm AS s_nrm
-        FROM cents WHERE cpos <= {sql_sup_count(k_expr)}
-    ),
-    cell_sup AS MATERIALIZED (
-        SELECT cell_id, sup_id FROM (
-            SELECT c.cell_id, s.sup_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY c.cell_id
-                       ORDER BY {H.sql_dot('c.c_emb', 's.s_emb', EMB_DIM)}
-                                / (c.c_nrm * s.s_nrm) DESC,
-                                s.sup_id ASC
-                   ) AS srn
-            FROM cents c CROSS JOIN supers s
-        ) WHERE srn <= {SUP_ASSIGN}
-    ),
-    assign AS (
-        SELECT vec_id, cell_id FROM (
-            SELECT r.vec_id, r.cell_id,
-                   ROW_NUMBER() OVER (
-                       PARTITION BY r.vec_id
-                       ORDER BY {H.sql_dot('c.embedding', 'ct.c_emb', EMB_DIM)}
-                                / (c.nrm * ct.c_nrm) DESC,
-                                r.cell_id ASC
-                   ) AS arn
-            FROM {_routed_pairs_sql('corpus', 'vec_id', 'embedding', 'nrm')} r
-            JOIN corpus c ON c.vec_id = r.vec_id
-            JOIN cents ct ON ct.cell_id = r.cell_id
-        ) WHERE arn <= {IVF_ASSIGN}
-    ),{probes_sql},
-    cand AS (
-        SELECT DISTINCT p.query_id, a.vec_id
-        FROM probes p JOIN assign a ON p.cell_id = a.cell_id
-        WHERE a.vec_id != p.query_id
-    )
-"""
-
-
-# The default-shaped stages (8-query CTE, corpus-scaled probe width),
-# kept as the constant its existing consumers import.
-IVF_STAGES_SQL = ivf_stages_sql()
 
 _IVF_AUDIT_SQL = f"""
-    WITH {_SIM_CORPUS_SQL},
+    WITH {SIM_CORPUS_SQL},
     {IVF_STAGES_SQL},
     approx AS (
         SELECT query_id, neighbor_id FROM (
@@ -366,7 +216,7 @@ def audit_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _NP_PARITY_SQL = f"""
-    WITH {_SIM_CORPUS_SQL}
+    WITH {SIM_CORPUS_SQL}
     SELECT query_id,
            CAST(COUNT(*) AS BIGINT) AS n_exact,
            CAST(COUNT(*) AS BIGINT) AS n_np,
@@ -551,3 +401,444 @@ def audit_vocab_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             flags.alias("n_in_bounds"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# Landed-asset-table accounting under the driver's hash gate (round 9,
+# VERDICT r8 #5) — the binaryFile ingest + parquet landing
+# (sources/binary_files.py) was proven only by unit tests; this registers
+# a query that SYNTHESIZES a deterministic asset directory from a bounded
+# documents slice, runs the real ingest path (binaryFile scan ->
+# asset_id/modality derivation -> hash-repartitioned parquet landing),
+# and reports per-modality accounting read back from the LANDED table,
+# with a DuckDB twin over the documents table.  md5 digests ride along
+# (Spark md5(payload bytes) == DuckDB md5(text) == md5 of the UTF-8
+# encoding), so a payload corrupted anywhere in scan->land->read fails
+# the value-hash compare, not just a length check.
+#
+# The fixture-synthesis collect is BOUNDED (the 1-in-10 doc_id slice at
+# test scale) and exists only to manufacture files for the gate — a real
+# ingest reads an existing directory; what this query measures is the
+# Spark plumbing from listing to landed scan.  In-query assertion: the
+# landing step must compact to exactly its target partition count (the
+# small-file story binaryFile landing exists for); violation raises ->
+# errored driver row.
+#
+# No analog in the reference (SURVEY §2.1); multimodal/storage extension
+# surface.  O(write) verification query, excluded from the bench
+# headline set like corpus_version_diff.
+# ---------------------------------------------------------------------------
+
+
+_SLICE_MOD, _SLICE_REM = 10, 7
+_LAND_PARTITIONS = 2
+#: hard ceiling on the fixture-synthesis collect (VERDICT r9 watch #3):
+#: the 1-in-_SLICE_MOD slice is ~200 docs at the sf0.01 gate and ~2k at
+#: bench SF; if a future SF pushes the slice past this, fail loudly
+#: instead of silently materializing an unbounded driver-side fixture —
+#: a real ingest reads an existing directory and never runs this step.
+_FIXTURE_CAP = 5_000
+
+ASSET_ORACLE_SQL = f"""
+    WITH sliced AS (
+        SELECT doc_id, text, lang,
+               CASE WHEN (doc_id // {_SLICE_MOD}) % 2 = 0
+                    THEN 'image' ELSE 'blob' END AS modality
+        FROM documents
+        WHERE doc_id % {_SLICE_MOD} = {_SLICE_REM}
+    )
+    SELECT modality,
+           CAST(COUNT(*) AS BIGINT) AS n_assets,
+           CAST(SUM(octet_length(CAST(text AS BLOB))) AS BIGINT)
+               AS total_bytes,
+           CAST(COUNT(DISTINCT md5(text)) AS BIGINT) AS n_distinct_payloads,
+           MIN(lang || '/d' || lpad(CAST(doc_id AS VARCHAR), 8, '0'))
+               AS first_asset,
+           MAX(lang || '/d' || lpad(CAST(doc_id AS VARCHAR), 8, '0'))
+               AS last_asset,
+           MIN(md5(text)) AS min_digest
+    FROM sliced GROUP BY modality
+"""
+
+
+@register(
+    "mm_asset_lake_accounting",
+    oracle=ASSET_ORACLE_SQL,
+    tags=("multimodal", "storage", "agg"),
+    side_effects=True,
+)
+def mm_asset_lake_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per landed modality: asset count, payload byte total, distinct-
+    payload count, first/last root-relative asset_id, and the minimum
+    payload md5 — computed from the LANDED parquet table after the full
+    binaryFile ingest path, so the gate covers listing, root-relative
+    id derivation (lang subdirectories exercise the dir part),
+    extension->modality classification (.png vs .bin by quotient
+    parity),
+    payload byte fidelity, and the compaction write."""
+    import shutil
+    import tempfile
+    from pathlib import Path
+
+    from bigbugdata_spark.sources.binary_files import land_assets, read_assets
+
+    base = tempfile.mkdtemp(prefix="bigbugdata-assets-")
+    try:
+        src = Path(base) / "raw"
+        # bounded fixture synthesis (1-in-_SLICE_MOD docs at test SF):
+        # files named <lang>/d<doc_id padded to 8>.<png|bin>, payload =
+        # the UTF-8 text bytes
+        sliced = (
+            table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % _SLICE_MOD == _SLICE_REM)
+            .select("doc_id", "text", "lang")
+        )
+        n_slice = sliced.count()
+        if n_slice > _FIXTURE_CAP:
+            raise RuntimeError(
+                f"asset fixture slice is {n_slice} docs (> {_FIXTURE_CAP}): "
+                "this gate's driver-side synthesis is test-scale-only — "
+                "raise _SLICE_MOD or point a real ingest at an existing "
+                "directory instead"
+            )
+        rows = sliced.collect()
+        for r in rows:
+            # the slice fixes doc_id mod _SLICE_MOD, so parity must come
+            # from the quotient or one modality would never occur
+            ext = "png" if (r["doc_id"] // _SLICE_MOD) % 2 == 0 else "bin"
+            p = src / r["lang"] / f"d{r['doc_id']:08d}.{ext}"
+            p.parent.mkdir(parents=True, exist_ok=True)
+            p.write_bytes(r["text"].encode("utf-8"))
+        landed_dir = f"{base}/landed"
+        land_assets(
+            read_assets(spark, str(src)),
+            landed_dir,
+            n_partitions=_LAND_PARTITIONS,
+        )
+        n_files = sum(
+            1 for f in Path(landed_dir).iterdir() if f.suffix == ".parquet"
+        )
+        if n_files != _LAND_PARTITIONS:
+            raise RuntimeError(
+                f"landing compaction regressed: {n_files} parquet files "
+                f"(target {_LAND_PARTITIONS})"
+            )
+        landed = spark.read.parquet(landed_dir)
+        out = landed.groupBy("modality").agg(
+            F.count(F.lit(1)).alias("n_assets"),
+            F.sum("n_bytes").alias("total_bytes"),
+            F.countDistinct(F.md5("payload")).alias("n_distinct_payloads"),
+            F.min("asset_id").alias("first_asset"),
+            F.max("asset_id").alias("last_asset"),
+            F.min(F.md5("payload")).alias("min_digest"),
+        )
+        return out.localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# Z-ordered lake accounting under the driver's hash gate (round 9,
+# VERDICT r8 #5) — the Z-order clustering (sources/zorder.py) was proven
+# only by row-group-statistics layout tests; this registers a query that
+# WRITES the events table Z-ORDERED BY (user_id, cents) and reads the
+# accounting back THROUGH the layout, grouped by fixed-width Morton-key
+# ranges, with a DuckDB twin that re-derives the identical bit-interleave
+# in SQL over the original table.  The hash compare therefore gates BOTH
+# halves: the write+read round trip must preserve every row, and the
+# Morton arithmetic (range normalization in fp64, 16-bit interleave)
+# must agree bit-for-bit across engines.
+#
+# The non-SQL half of the layout contract — each output file owns a
+# contiguous, pairwise-disjoint z-range (what repartitionByRange buys
+# over round-robin) — is asserted IN the query over the input_file_name
+# read-back (n_files rows, bounded collect), so a regression becomes an
+# errored driver row; per-row-group min/max narrowing stays quantified in
+# tests/test_zorder.py.
+#
+# No analog in the reference (SURVEY §2.1); storage extension surface.
+# Like corpus_version_diff / evt_partitioned_lake_accounting this is an
+# O(write) verification query, excluded from the bench headline set.
+# ---------------------------------------------------------------------------
+
+
+_N_FILES = 4
+#: top bits of the 2*MORTON_BITS-wide key -> 64 fixed-width z ranges
+_BUCKET_SHIFT = 2 * MORTON_BITS - 6
+
+
+def _sql_norm(col: str, lo: str, hi: str) -> str:
+    """DuckDB twin of zorder._normalize — same fp64 order of ops."""
+    top = (1 << MORTON_BITS) - 1
+    return (
+        f"LEAST(GREATEST(CAST(FLOOR(((CAST({col} AS DOUBLE) - {lo}) * {top})"
+        f" / GREATEST({hi} - {lo}, 1.0)) AS BIGINT), 0), {top})"
+    )
+
+
+def _sql_morton(nx: str, ny: str) -> str:
+    """DuckDB twin of zorder.morton_key: bit i of nx -> 2i, ny -> 2i+1."""
+    terms = []
+    for i in range(MORTON_BITS):
+        terms.append(f"((({nx} >> {i}) & 1) << {2 * i})")
+        terms.append(f"((({ny} >> {i}) & 1) << {2 * i + 1})")
+    return " | ".join(terms)
+
+
+ZORDER_ORACLE_SQL = f"""
+    WITH src AS (
+        SELECT user_id, {CENTS_SQL} AS cents FROM events
+    ),
+    bounds AS (
+        SELECT CAST(MIN(user_id) AS DOUBLE) AS xlo,
+               CAST(MAX(user_id) AS DOUBLE) AS xhi,
+               CAST(MIN(cents) AS DOUBLE) AS ylo,
+               CAST(MAX(cents) AS DOUBLE) AS yhi
+        FROM src
+    ),
+    keyed AS (
+        SELECT user_id, cents,
+               ({_sql_morton(_sql_norm('user_id', 'xlo', 'xhi'),
+                             _sql_norm('cents', 'ylo', 'yhi'))}) AS z
+        FROM src, bounds
+    )
+    SELECT z >> {_BUCKET_SHIFT} AS z_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(MIN(user_id) AS BIGINT) AS min_user,
+           CAST(MAX(user_id) AS BIGINT) AS max_user,
+           CAST(MIN(cents) AS BIGINT) AS min_cents,
+           CAST(MAX(cents) AS BIGINT) AS max_cents,
+           CAST(SUM(cents) AS BIGINT) AS sum_cents
+    FROM keyed GROUP BY z_bucket
+"""
+
+
+@register(
+    "evt_zorder_lake_accounting",
+    oracle=ZORDER_ORACLE_SQL,
+    tags=("events", "storage", "agg"),
+    side_effects=True,
+)
+def evt_zorder_lake_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Write events Z-ORDERED BY (user_id, cents) and report per
+    fixed-width z-range: row count, both columns' min/max, and the cents
+    total — READ BACK through the layout, so a row lost or corrupted by
+    the z-write fails the value-hash compare, and any engine divergence
+    in the Morton arithmetic shifts rows across buckets and fails it
+    too.  In-query assertion: the landed files' z-ranges are pairwise
+    disjoint (the file-level-pruning property range partitioning pays
+    for); violation raises -> errored driver row."""
+    import shutil
+    import tempfile
+
+    from bigbugdata_spark.sources.zorder import write_zordered
+
+    base = tempfile.mkdtemp(prefix="bigbugdata-zlake-")
+    try:
+        src = table(spark, sf_dir, "events").select(
+            "user_id", cents_col().alias("cents")
+        )
+        lake = f"{base}/events_z"
+        write_zordered(src, lake, "user_id", "cents", n_files=_N_FILES)
+        # input_file_name must bind BEFORE with_morton's bounds
+        # cross-join makes the plan multi-source
+        back = with_morton(
+            spark.read.parquet(lake).withColumn("_f", F.input_file_name()),
+            "user_id",
+            "cents",
+        )
+        # bounded collect: one row per landed file
+        spans = (
+            back.groupBy("_f")
+            .agg(F.min("_z").alias("zlo"), F.max("_z").alias("zhi"))
+            .collect()
+        )
+        iv = sorted((r["zlo"], r["zhi"]) for r in spans)
+        for (_, prev_hi), (lo, _) in zip(iv, iv[1:]):
+            if lo <= prev_hi:
+                raise RuntimeError(
+                    f"z-ranges overlap across files: {iv} — "
+                    "range partitioning regressed to interleaved layout"
+                )
+        out = (
+            back.groupBy(
+                F.shiftright("_z", _BUCKET_SHIFT).alias("z_bucket")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("user_id").alias("min_user"),
+                F.max("user_id").alias("max_user"),
+                F.min("cents").alias("min_cents"),
+                F.max("cents").alias("max_cents"),
+                F.sum("cents").alias("sum_cents"),
+            )
+        )
+        return out.localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+# ---------------------------------------------------------------------------
+# N-column Z-order under the driver's hash gate (round 10, VERDICT r9
+# #5) — evt_zorder_lake_accounting proves the TWO-column Morton path
+# end-to-end; this registers its three-axis sibling over the N-column
+# generalization (sources/zorder.py morton_key_n / write_zordered_n,
+# previously layout-tested only): WRITE events Z-ORDERED BY (user_id,
+# cents, hour) and read the accounting back THROUGH the layout, grouped
+# by fixed-width z-ranges, with a DuckDB twin that re-derives the
+# round-robin 3-way bit interleave in SQL over the original table.  The
+# hash compare gates the write+read round trip AND the N-column Morton
+# arithmetic (fp64 range normalization at the n-adjusted bit budget,
+# bit i of column j -> i*3+j) bit-for-bit across engines.
+#
+# The third axis is the event's whole hour (unix_micros // 3.6e9 —
+# integer microsecond arithmetic, the dq_fresh-proven engine-exact
+# time derivation), so the key covers the who/how-much/when triple a
+# real event-lake scan actually filters on.
+#
+# The non-SQL half of the layout contract — each landed file owns a
+# contiguous, pairwise-disjoint z-range — is asserted IN the query over
+# the input_file_name read-back (n_files rows, bounded collect);
+# three-axis row-group narrowing stays quantified in tests/test_zorder.py.
+#
+# No analog in the reference (SURVEY §2.1); storage extension surface.
+# O(write) verification query, excluded from the bench headline set.
+# ---------------------------------------------------------------------------
+
+
+_COLS = ("user_id", "cents", "hour")
+_N = len(_COLS)
+#: sources/zorder.with_morton_n's bit budget for n=3
+_BITS = min(MORTON_BITS, 62 // _N)
+_Z3_N_FILES = 4
+#: top bits of the N*_BITS-wide key -> 64 fixed-width z ranges
+_Z3_BUCKET_SHIFT = _N * _BITS - 6
+
+_US_PER_HOUR = 3_600_000_000
+
+
+def _z3_sql_norm(col: str, lo: str, hi: str) -> str:
+    """DuckDB twin of with_morton_n's normalization — same fp64 order
+    of ops at the n-adjusted bit budget."""
+    top = (1 << _BITS) - 1
+    return (
+        f"LEAST(GREATEST(CAST(FLOOR(((CAST({col} AS DOUBLE) - {lo}) * {top}.0)"
+        f" / GREATEST({hi} - {lo}, 1.0)) AS BIGINT), 0), {top})"
+    )
+
+
+def _sql_morton_n(normed: tuple[str, ...]) -> str:
+    """DuckDB twin of zorder.morton_key_n: bit i of column j lands at
+    i*n + j."""
+    n = len(normed)
+    terms = []
+    for i in range(_BITS):
+        for j, c in enumerate(normed):
+            terms.append(f"((({c} >> {i}) & 1) << {i * n + j})")
+    return " | ".join(terms)
+
+
+ZORDER3_ORACLE_SQL = f"""
+    WITH src AS (
+        SELECT user_id, {CENTS_SQL} AS cents,
+               epoch_us(ts) // {_US_PER_HOUR} AS hour
+        FROM events
+    ),
+    bounds AS (
+        SELECT CAST(MIN(user_id) AS DOUBLE) AS xlo,
+               CAST(MAX(user_id) AS DOUBLE) AS xhi,
+               CAST(MIN(cents) AS DOUBLE) AS ylo,
+               CAST(MAX(cents) AS DOUBLE) AS yhi,
+               CAST(MIN(hour) AS DOUBLE) AS tlo,
+               CAST(MAX(hour) AS DOUBLE) AS thi
+        FROM src
+    ),
+    keyed AS (
+        SELECT user_id, cents, hour,
+               ({_sql_morton_n((_z3_sql_norm('user_id', 'xlo', 'xhi'),
+                                _z3_sql_norm('cents', 'ylo', 'yhi'),
+                                _z3_sql_norm('hour', 'tlo', 'thi')))}) AS z
+        FROM src, bounds
+    )
+    SELECT z >> {_Z3_BUCKET_SHIFT} AS z_bucket,
+           CAST(COUNT(*) AS BIGINT) AS n_rows,
+           CAST(MIN(user_id) AS BIGINT) AS min_user,
+           CAST(MAX(user_id) AS BIGINT) AS max_user,
+           CAST(MIN(cents) AS BIGINT) AS min_cents,
+           CAST(MAX(cents) AS BIGINT) AS max_cents,
+           CAST(MIN(hour) AS BIGINT) AS min_hour,
+           CAST(MAX(hour) AS BIGINT) AS max_hour,
+           CAST(SUM(cents) AS BIGINT) AS sum_cents
+    FROM keyed GROUP BY z_bucket
+"""
+
+
+@register(
+    "evt_zorder3_lake_accounting",
+    oracle=ZORDER3_ORACLE_SQL,
+    tags=("events", "storage", "agg"),
+    side_effects=True,
+)
+def evt_zorder3_lake_accounting(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Write events Z-ORDERED BY (user_id, cents, hour) through the
+    N-column generalization and report per fixed-width z-range: row
+    count, all three axes' min/max, and the cents total — read back
+    through the layout, so a row lost by the z-write or any engine
+    divergence in the 3-way interleave fails the value-hash compare.
+    In-query assertion: landed files' z-ranges are pairwise disjoint."""
+    import shutil
+    import tempfile
+
+    from bigbugdata_spark.sources.zorder import with_morton_n, write_zordered_n
+
+    base = tempfile.mkdtemp(prefix="bigbugdata-zlake3-")
+    try:
+        src = table(spark, sf_dir, "events").select(
+            "user_id",
+            cents_col().alias("cents"),
+            # SQL `div` = exact integer division (dq_fresh's proven
+            # twin of DuckDB //) — no fp64 quotient anywhere
+            F.expr(
+                f"unix_micros(CAST(ts AS TIMESTAMP)) div {_US_PER_HOUR}"
+            ).alias("hour"),
+        )
+        lake = f"{base}/events_z3"
+        write_zordered_n(src, lake, list(_COLS), n_files=_Z3_N_FILES)
+        # input_file_name must bind BEFORE with_morton_n's bounds
+        # cross-join makes the plan multi-source
+        back = with_morton_n(
+            spark.read.parquet(lake).withColumn("_f", F.input_file_name()),
+            list(_COLS),
+        )
+        spans = (
+            back.groupBy("_f")
+            .agg(F.min("_z").alias("zlo"), F.max("_z").alias("zhi"))
+            .collect()
+        )
+        iv = sorted((r["zlo"], r["zhi"]) for r in spans)
+        for (_, prev_hi), (lo, _) in zip(iv, iv[1:]):
+            if lo <= prev_hi:
+                raise RuntimeError(
+                    f"z-ranges overlap across files: {iv} — "
+                    "range partitioning regressed to interleaved layout"
+                )
+        out = (
+            back.groupBy(
+                F.shiftright("_z", _Z3_BUCKET_SHIFT).alias("z_bucket")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.min("user_id").alias("min_user"),
+                F.max("user_id").alias("max_user"),
+                F.min("cents").alias("min_cents"),
+                F.max("cents").alias("max_cents"),
+                F.min("hour").alias("min_hour"),
+                F.max("hour").alias("max_hour"),
+                F.sum("cents").alias("sum_cents"),
+            )
+        )
+        return out.localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)

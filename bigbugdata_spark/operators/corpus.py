@@ -1,31 +1,52 @@
-"""Corpus-governance operators (round 5): the two training-data pipeline
-stages the engine did not yet cover as first-class registered queries —
-benchmark decontamination and deterministic dataset splitting. No analog
-in the reference (strictly a batch CSV tool, SURVEY §2.1); both are
-LLM-pipeline extension surface per the north star, over the driver's
-``documents`` table with exact DuckDB oracle twins built from the same
-cross-engine hash primitives as the dedup/text families
-(functions/hashing.py — bit-identical by construction).
+"""Corpus governance: the training-data planning stages over `documents`.
+
+Benchmark decontamination and splits, token-budget selection, curriculum
+stages, epoch/repetition plans, dedup lineage, shard planning, dedup
+survivorship quality, temperature mixing, and corpus versioning.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
+from bigbugdata_spark.functions.fragments import (
+    CLUSTER_KEEP_BODY_SQL,
+    CLUSTER_KEEP_CTES_SQL,
+    COSINE_T,
+    JACCARD_PAIRS_SQL,
+    QUALITY_BASE_SQL,
+    QUALITY_DECI_SQL,
+    QUALITY_SQL,
+    split_col,
+    sql_cos,
+    sql_split_case,
+)
+from bigbugdata_spark.operators.dedup import (
+    dedup_cluster_keep,
+    dedup_emb_cosine,
+    dedup_ngram_jaccard,
+)
+from bigbugdata_spark.operators.text import text_quality_score
+from bigbugdata_spark.registry import register
+
+
+# ---------------------------------------------------------------------------
+# Corpus-governance operators (round 5): the two training-data pipeline
+# stages the engine did not yet cover as first-class registered queries —
+# benchmark decontamination and deterministic dataset splitting. No analog
+# in the reference (strictly a batch CSV tool, SURVEY §2.1); both are
+# LLM-pipeline extension surface per the north star, over the driver's
+# ``documents`` table with exact DuckDB oracle twins built from the same
+# cross-engine hash primitives as the dedup/text families
+# (functions/hashing.py — bit-identical by construction).
+# ---------------------------------------------------------------------------
+
+
 # The stratified-split builders are shared (corpus accounting, the
 # governed pipeline and dq_split_leakage must all classify documents
 # identically); the cosine threshold is shared with dedup.
-from bigbugdata_spark.functions.fragments import (
-    COSINE_T as _XL_COSINE_T,
-    split_col as _split_col,
-    sql_cos as _sql_cos,
-    sql_split_case as _sql_split_case,
-)
-from bigbugdata_spark.operators.dedup import dedup_emb_cosine
-from bigbugdata_spark.registry import register
 
 # The held-out "benchmark" slice: a deterministic doc_id residue class
 # stands in for an eval set (at a real site this is the actual benchmark
@@ -179,7 +200,7 @@ text_decontaminate.__doc__ = text_decontaminate.__doc__.format(n=_DECON_N)
     "corpus_split_stratified",
     oracle=f"""
         SELECT lang,
-               {_sql_split_case("doc_id")} AS split,
+               {sql_split_case("doc_id")} AS split,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(len(text)) AS BIGINT) AS total_chars
         FROM documents
@@ -208,7 +229,7 @@ def corpus_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         table(spark, sf_dir, "documents")
         .select(
             "lang",
-            _split_col(F.col("doc_id")).alias("split"),
+            split_col(F.col("doc_id")).alias("split"),
             F.length("text").alias("_len"),
         )
         .groupBy("lang", "split")
@@ -275,7 +296,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_XL_COS_SQL = _sql_cos("a.embedding", "b.embedding")
+_XL_COS_SQL = sql_cos("a.embedding", "b.embedding")
 
 
 @register(
@@ -284,7 +305,7 @@ _XL_COS_SQL = _sql_cos("a.embedding", "b.embedding")
         WITH pairs AS (
             SELECT a.vec_id AS v1, b.vec_id AS v2
             FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-            WHERE {_XL_COS_SQL} >= {_XL_COSINE_T}
+            WHERE {_XL_COS_SQL} >= {COSINE_T}
         )
         SELECT LEAST(d1.lang, d2.lang) AS lang_a,
                GREATEST(d1.lang, d2.lang) AS lang_b,
@@ -362,7 +383,7 @@ def emb_crosslingual_dupes(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE c.doc_id % {_BENCH_MOD} <> 0 AND b.doc_id % {_BENCH_MOD} = 0
         )
         SELECT lang,
-               {_sql_split_case("doc_id")} AS split,
+               {sql_split_case("doc_id")} AS split,
                CAST(COUNT(*) AS BIGINT) AS n_docs,
                CAST(SUM(len(text)) AS BIGINT) AS total_chars
         FROM documents
@@ -430,7 +451,7 @@ def pipe_governed_corpus(
         .select("doc_id")
         .distinct()
     )
-    split = _split_col(F.col("doc_id"))
+    split = split_col(F.col("doc_id"))
     clean = (
         survivors
         .join(rep_bad, "doc_id", "left_anti")
@@ -445,3 +466,927 @@ def pipe_governed_corpus(
         )
     )
 
+
+# ---------------------------------------------------------------------------
+# Budget-constrained corpus selection (round 8) — "give me the best
+# TOKEN_BUDGET tokens": bands of documents (quality milli-score x
+# language, best quality first) are admitted whole while the budget
+# lasts; the marginal band is filled by an exact GREEDY in hash-priority
+# order — documents enter by (affine draw, doc_id) until the next one
+# would cross the remaining budget; later bands are dropped. The
+# compute-budget planning step every pretraining run does before it
+# touches a trainer — and the non-uniform, budget-aware cousin of
+# corpus_mix_sample (fixed per-language quotas) and
+# corpus_quality_weighted_sample (score-proportional retention).
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface.
+#
+# HARD GUARANTEE (tested): admitted tokens never exceed TOKEN_BUDGET —
+# the marginal band's running token sum is compared exactly against the
+# remaining budget, unlike a fraction-sized draw which only bounds the
+# admitted volume in expectation and can overshoot on a skewed band.
+# Admission is PREFIX-greedy (the maximal priority-order prefix that
+# fits — the distributed-friendly form; skip-and-continue would be
+# inherently sequential), so the shortfall is strictly less than the
+# first rejected document's size.
+#
+# Determinism discipline: band totals, cumulative sums and the marginal
+# running sum are exact BIGINTs; admission order is (affine-hash draw,
+# doc_id) — the repo's standard deterministic pseudo-random priority
+# (fresh constants, independent of the split/mix/sample draws). No RNG,
+# no fp anywhere near a selection decision: re-running the pipeline
+# admits exactly the same documents.
+#
+# Scale posture: one scan -> per-band aggregate (map-side combinable,
+# |bands| rows out) -> window math on the tiny band frame -> one
+# broadcast join back onto the per-document frame for the marginal
+# band's ordered prefix sum. That prefix sum is the one ordered window,
+# and it runs over a SINGLE band (1/|bands| of the corpus); at 100 TB
+# it parallelizes the same way corpus_pack_accounting's prefix sums do
+# — bucket the band by draw range, per-bucket local sums plus a
+# bucket-offset broadcast. Nothing driver-side; the admitted-set filter
+# is the same expression a writer would partition on.
+# ---------------------------------------------------------------------------
+
+
+TOKEN_BUDGET = 20_000  # tokens to admit (sf0.01 corpus holds ~27k)
+TRIM_A, TRIM_B = 48_271, 9_973  # fresh affine draw constants
+
+
+@register(
+    "corpus_budget_trim",
+    oracle=f"""
+        WITH q AS ({QUALITY_SQL}),
+        banded AS (
+            SELECT q.doc_id, q.n_tokens,
+                   CAST(ROUND(q.quality * 1000) AS BIGINT) AS q_milli,
+                   d.lang,
+                   ({TRIM_A} * q.doc_id + {TRIM_B}) % {H.P} % 1000 AS draw
+            FROM q JOIN documents d ON q.doc_id = d.doc_id
+        ),
+        bands AS (
+            SELECT q_milli, lang,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+            FROM banded GROUP BY q_milli, lang
+        ),
+        cum AS (
+            SELECT q_milli, lang, n_docs, n_tokens,
+                   CAST(SUM(n_tokens) OVER (
+                        ORDER BY q_milli DESC, lang) AS BIGINT) AS cum_tokens
+            FROM bands
+        ),
+        status AS (
+            SELECT *,
+                   CASE WHEN cum_tokens <= {TOKEN_BUDGET} THEN 'full'
+                        WHEN cum_tokens - n_tokens < {TOKEN_BUDGET}
+                             THEN 'partial'
+                        ELSE 'dropped' END AS status,
+                   {TOKEN_BUDGET} - (cum_tokens - n_tokens) AS remaining
+            FROM cum
+        ),
+        marginal AS (
+            SELECT b.q_milli, b.lang, b.n_tokens, s.remaining,
+                   SUM(b.n_tokens) OVER (
+                       PARTITION BY b.q_milli, b.lang
+                       ORDER BY b.draw, b.doc_id
+                       ROWS UNBOUNDED PRECEDING) AS running
+            FROM banded b
+            JOIN status s ON s.q_milli = b.q_milli AND s.lang = b.lang
+            WHERE s.status = 'partial'
+        ),
+        sel AS (
+            SELECT q_milli, lang,
+                   CAST(COUNT(*) AS BIGINT) AS sel_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS sel_tokens
+            FROM marginal WHERE running <= remaining
+            GROUP BY q_milli, lang
+        )
+        SELECT s.q_milli, s.lang, s.n_docs, s.n_tokens, s.status,
+               CASE s.status
+                    WHEN 'full' THEN s.n_docs
+                    WHEN 'dropped' THEN 0
+                    ELSE COALESCE(sel.sel_docs, 0)
+               END AS n_docs_sel,
+               CASE s.status
+                    WHEN 'full' THEN s.n_tokens
+                    WHEN 'dropped' THEN 0
+                    ELSE COALESCE(sel.sel_tokens, 0)
+               END AS n_tokens_sel
+        FROM status s
+        LEFT JOIN sel ON sel.q_milli = s.q_milli AND sel.lang = s.lang
+    """,
+    tags=("corpus", "agg"),
+)
+def corpus_budget_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per (quality-milli, lang) band in admission order: volume, the
+    band's admission status under TOKEN_BUDGET (full / partial /
+    dropped), and the admitted doc/token counts — the partial band
+    filled by the exact greedy in (draw, doc_id) priority order, so
+    total admitted tokens can never exceed the budget."""
+    q = text_quality_score(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents").select("doc_id", "lang")
+    banded = q.join(docs, "doc_id").select(
+        "doc_id",
+        "n_tokens",
+        F.round(F.col("quality") * 1000).cast("long").alias("q_milli"),
+        "lang",
+        ((F.lit(TRIM_A) * F.col("doc_id") + F.lit(TRIM_B)) % F.lit(H.P) % 1000)
+        .alias("draw"),
+    )
+    return budget_trim(banded)
+
+
+def budget_trim(banded: DataFrame, budget: int = TOKEN_BUDGET) -> DataFrame:
+    """The trim plan over any (doc_id, n_tokens, q_milli, lang, draw)
+    frame — split out so the hard budget guarantee is testable on a
+    skewed synthetic band (one outsized document in the marginal band
+    must be skipped, not admitted)."""
+    bands = banded.groupBy("q_milli", "lang").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+    )
+    w = Window.orderBy(F.desc("q_milli"), F.asc("lang"))  # |bands|-row frame
+    cum = bands.select(
+        "q_milli",
+        "lang",
+        "n_docs",
+        "n_tokens",
+        F.sum("n_tokens").over(w).alias("cum_tokens"),
+    )
+    status = cum.select(
+        "*",
+        F.when(F.col("cum_tokens") <= budget, "full")
+        .when(F.col("cum_tokens") - F.col("n_tokens") < budget, "partial")
+        .otherwise("dropped")
+        .alias("status"),
+        (F.lit(budget) - (F.col("cum_tokens") - F.col("n_tokens"))).alias(
+            "remaining"
+        ),
+    )
+    # exact greedy over the (single) partial band: running token sum in
+    # (draw, doc_id) priority order, admit while it fits the remaining
+    # budget. The band/status frame is |bands|-sized, so it broadcasts.
+    wrun = (
+        Window.partitionBy("q_milli", "lang")
+        .orderBy("draw", "doc_id")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    part = (
+        banded.join(
+            F.broadcast(
+                status.where(F.col("status") == "partial").select(
+                    "q_milli", "lang", "remaining"
+                )
+            ),
+            ["q_milli", "lang"],
+        )
+        .withColumn("running", F.sum("n_tokens").over(wrun))
+        .where(F.col("running") <= F.col("remaining"))
+        .groupBy("q_milli", "lang")
+        .agg(
+            F.count(F.lit(1)).alias("sel_docs"),
+            F.sum("n_tokens").alias("sel_tokens"),
+        )
+    )
+    out = status.join(part, ["q_milli", "lang"], "left")
+    n_docs_sel = (
+        F.when(F.col("status") == "full", F.col("n_docs"))
+        .when(F.col("status") == "dropped", F.lit(0))
+        .otherwise(F.coalesce(F.col("sel_docs"), F.lit(0)))
+    )
+    n_tokens_sel = (
+        F.when(F.col("status") == "full", F.col("n_tokens"))
+        .when(F.col("status") == "dropped", F.lit(0))
+        .otherwise(F.coalesce(F.col("sel_tokens"), F.lit(0)))
+    )
+    return out.select(
+        "q_milli",
+        "lang",
+        "n_docs",
+        "n_tokens",
+        "status",
+        n_docs_sel.cast("long").alias("n_docs_sel"),
+        n_tokens_sel.cast("long").alias("n_tokens_sel"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Curriculum schedule accounting (round 8) — the training-ORDER plan
+# over the governed corpus: documents grouped into curriculum stages
+# (clean-short first, clean-long next, the rest last — the standard
+# easy-to-hard schedule) with per-stage volume and the cumulative token
+# position at which each stage begins. The trainer consumes exactly this
+# table to know where stage boundaries fall in the token stream.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface next to corpus_shard_assignment (WHERE each doc lives) and
+# corpus_pack_accounting (HOW docs pack) — this says WHEN they are seen.
+#
+# Stage assignment is per-row (shared quality expression + a token-count
+# band), so no global sort is needed anywhere: the schedule orders
+# STAGES, not documents, and within a stage the shard/pack layout
+# already fixes a deterministic order. The cumulative sum runs over the
+# stage-count-sized frame.
+#
+# Determinism discipline: the quality threshold reuses the SHARED
+# quality expression (fragments.QUALITY_SQL / text_quality_score), so
+# the curriculum can never disagree with the registered score; all
+# volumes are exact BIGINTs and the cumulative positions are sums of
+# those.
+# ---------------------------------------------------------------------------
+
+
+CLEAN_Q = 1.0  # full rule-sum score counts as clean
+SHORT_TOKENS = 56  # clean docs at or under this length go first
+
+
+@register(
+    "corpus_curriculum_plan",
+    oracle=f"""
+        WITH q AS ({QUALITY_SQL}),
+        staged AS (
+            SELECT CASE WHEN quality >= {CLEAN_Q}
+                             AND n_tokens <= {SHORT_TOKENS} THEN 1
+                        WHEN quality >= {CLEAN_Q} THEN 2
+                        ELSE 3 END AS stage,
+                   n_tokens
+            FROM q
+        ),
+        per AS (
+            SELECT stage,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS n_tokens
+            FROM staged GROUP BY stage
+        )
+        SELECT stage,
+               CASE stage WHEN 1 THEN 'clean_short'
+                          WHEN 2 THEN 'clean_long'
+                          ELSE 'rest' END AS stage_name,
+               n_docs, n_tokens,
+               CAST(SUM(n_tokens) OVER (ORDER BY stage)
+                    - n_tokens AS BIGINT) AS start_token
+        FROM per
+    """,
+    tags=("corpus", "agg"),
+)
+def corpus_curriculum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per curriculum stage: document/token volume and the exact token
+    offset at which the stage begins in the training stream
+    (cumulative tokens of all earlier stages)."""
+    q = text_quality_score(spark, sf_dir)
+    stage = (
+        F.when(
+            (F.col("quality") >= CLEAN_Q) & (F.col("n_tokens") <= SHORT_TOKENS),
+            1,
+        )
+        .when(F.col("quality") >= CLEAN_Q, 2)
+        .otherwise(3)
+    )
+    per = (
+        q.select(stage.alias("stage"), "n_tokens")
+        .groupBy("stage")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_tokens").alias("n_tokens"),
+        )
+    )
+    w = Window.orderBy("stage")  # stage-count-sized frame
+    return per.select(
+        "stage",
+        F.when(F.col("stage") == 1, "clean_short")
+        .when(F.col("stage") == 2, "clean_long")
+        .otherwise("rest")
+        .alias("stage_name"),
+        "n_docs",
+        "n_tokens",
+        (F.sum("n_tokens").over(w) - F.col("n_tokens"))
+        .cast("long")
+        .alias("start_token"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Epoch / repetition planning for a target language mix (round 11) —
+# the data-constrained-scaling card a pretraining run computes before
+# touching a GPU: given the corpus' available tokens per language and a
+# target mix over a total token budget, how many EPOCHS of each
+# language's data does the run consume (in exact milli-epochs), and
+# which languages are oversampled past one pass (the repetition that
+# data-constrained scaling-law work shows degrades past ~4 epochs).
+# corpus_mix_sample draws a mix-shaped SAMPLE; corpus_budget_trim cuts
+# to a budget; this is the planning view ABOVE both — the table that
+# decides whether the mix is even feasible before any sampling runs.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface.
+#
+# Arithmetic is exact BIGINT end-to-end: the budget is BUDGET_X times
+# the corpus' total whitespace-token count, each language's token need
+# is budget * target_pm // 1000, and epochs_milli is
+# need * 1000 // available — truncating division on non-negative values,
+# identical in Spark `div` and DuckDB `//`.  Languages missing from the
+# target table get target_pm = 0 (they are excluded from the plan's mix
+# but still reported).
+#
+# Scale posture: one documents scan -> per-language token aggregate
+# (map-side combinable, |langs| rows) -> every downstream step is
+# constant-size arithmetic on that panel plus one single-row total
+# (a window over the |langs|-row frame, not the corpus).
+# ---------------------------------------------------------------------------
+
+
+#: total training budget, as a multiple of the corpus' total tokens —
+#: >1 forces oversampling somewhere, which is the interesting case
+BUDGET_X = 2
+
+#: target mix in permille (sums to 1000); the en-heavy shape a
+#: multilingual pretraining mix typically pins
+TARGET_PM = {"en": 500, "de": 150, "es": 130, "fr": 120, "zh": 100}
+
+_TARGET_VALUES = ", ".join(f"('{k}', {v})" for k, v in sorted(TARGET_PM.items()))
+
+_EPOCH_SQL = f"""
+    WITH avail AS (
+        SELECT lang,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(len({H.sql_tokens('text')})) AS BIGINT) AS n_tokens
+        FROM documents GROUP BY lang
+    ),
+    tot AS (SELECT CAST(SUM(n_tokens) AS BIGINT) AS total FROM avail),
+    tgt (lang, target_pm) AS (VALUES {_TARGET_VALUES})
+    SELECT a.lang, a.n_docs, a.n_tokens,
+           CAST(COALESCE(t.target_pm, 0) AS BIGINT) AS target_pm,
+           CAST(CAST({BUDGET_X} AS BIGINT) * tot.total
+                * COALESCE(t.target_pm, 0) // 1000 AS BIGINT) AS need_tokens,
+           CAST(CAST({BUDGET_X} AS BIGINT) * tot.total
+                * COALESCE(t.target_pm, 0) // 1000 * 1000
+                // a.n_tokens AS BIGINT) AS epochs_milli,
+           CAST(CAST({BUDGET_X} AS BIGINT) * tot.total
+                * COALESCE(t.target_pm, 0) // 1000 * 1000
+                // a.n_tokens > 1000 AS INT) AS oversampled
+    FROM avail a LEFT JOIN tgt t ON a.lang = t.lang
+    CROSS JOIN tot
+"""
+
+
+@register(
+    "corpus_epoch_mix_plan",
+    oracle=_EPOCH_SQL,
+    tags=("corpus", "agg"),
+)
+def corpus_epoch_mix_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, n_docs, n_tokens, target_pm, need_tokens, epochs_milli,
+    oversampled): per language, the available volume, the mix target,
+    the budgeted token need (BUDGET_X x corpus total x target share),
+    and the exact milli-epoch repetition that need implies — >1000
+    flags oversampling past one full pass."""
+    avail = (
+        table(spark, sf_dir, "documents")
+        .select("lang", F.size(H.tokens(F.col("text"))).cast("long").alias("t"))
+        .groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("t").alias("n_tokens"),
+        )
+    )
+    tgt = spark.createDataFrame(
+        sorted(TARGET_PM.items()), "lang string, target_pm long"
+    )
+    w = Window.partitionBy()  # |langs|-row panel, not the corpus
+    planned = (
+        avail.join(F.broadcast(tgt), "lang", "left")
+        .withColumn("target_pm", F.coalesce("target_pm", F.lit(0)))
+        .withColumn("total", F.sum("n_tokens").over(w))
+        .withColumn(
+            "need_tokens",
+            F.expr(f"{BUDGET_X}L * total * target_pm div 1000"),
+        )
+        .withColumn(
+            "epochs_milli", F.expr("need_tokens * 1000 div n_tokens")
+        )
+    )
+    return planned.select(
+        "lang",
+        "n_docs",
+        "n_tokens",
+        "target_pm",
+        "need_tokens",
+        "epochs_milli",
+        (F.col("epochs_milli") > 1000).cast("int").alias("oversampled"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dedup lineage / removal attribution (round 11) — the provenance
+# table a governed corpus release actually ships next to its manifest:
+# for EVERY document, which stage of the dedup ladder removed it
+# ('exact' content dedup, then 'near' n-gram-Jaccard clustering over the
+# exact survivors, else 'kept'), and the ultimate surviving document its
+# content is represented by.  dedup_exact / dedup_cluster_keep each
+# answer their own stage; a data-removal request, a contamination
+# traceback, or a "why did my document disappear" audit needs the
+# COMPOSED attribution with precedence — exact removal wins (near-dup
+# clustering never saw the document), and an exact survivor whose
+# cluster rep is elsewhere chains to THAT rep's survivor.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface composing the dedup ladder.
+#
+# Stage semantics (identical in both engines): stage-1 groups documents
+# by full text (at 100 TB, group by sha256(text) — same partition of the
+# corpus, cheaper shuffle key) and keeps the minimum doc_id per content
+# group; stage-2 builds the exact word-3-gram Jaccard >= JACCARD_T pair
+# graph RESTRICTED to stage-1 survivors, takes connected components,
+# and keeps the minimum doc_id per component.  survivor_id chains:
+# removed-at-exact documents map to their content rep's COMPONENT rep,
+# so every row points at a document with stage = 'kept'.
+#
+# Scale posture: stage 1 is one content-keyed hash agg (map-side
+# combinable); stage 2 is dedup_ngram_jaccard's inverted-index join
+# (stop-gram cap available) + the O(log n) star-contraction components,
+# restricted by broadcast-able survivor semi-joins; the final assembly
+# is two broadcast lookups against component-sized frames.
+# ---------------------------------------------------------------------------
+
+
+_LINEAGE_SQL = f"""
+    WITH RECURSIVE ex AS (
+        SELECT doc_id,
+               MIN(doc_id) OVER (PARTITION BY text) AS ex_rep
+        FROM documents
+    ),
+    r1 AS (SELECT doc_id FROM ex WHERE doc_id = ex_rep),
+    pairs0 AS ({JACCARD_PAIRS_SQL}),
+    pairs AS (
+        SELECT p.d1, p.d2 FROM pairs0 p
+        JOIN r1 a ON p.d1 = a.doc_id
+        JOIN r1 b ON p.d2 = b.doc_id
+    ),
+    edges AS (
+        SELECT d1 AS a, d2 AS b FROM pairs
+        UNION SELECT d2 AS a, d1 AS b FROM pairs
+    ),
+    reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
+    ),
+    comp AS (
+        SELECT r1.doc_id,
+               CAST(LEAST(r1.doc_id, COALESCE(MIN(r.b), r1.doc_id))
+                    AS BIGINT) AS component
+        FROM r1 LEFT JOIN reach r ON r1.doc_id = r.a
+        GROUP BY r1.doc_id
+    )
+    SELECT e.doc_id,
+           CASE WHEN e.doc_id != e.ex_rep THEN 'exact'
+                WHEN e.doc_id != c.component THEN 'near'
+                ELSE 'kept' END AS stage,
+           CAST(c.component AS BIGINT) AS survivor_id
+    FROM ex e JOIN comp c ON e.ex_rep = c.doc_id
+"""
+
+
+@register(
+    "corpus_dedup_lineage",
+    oracle=_LINEAGE_SQL,
+    tags=("corpus", "dedup", "pipeline", "iterative"),
+)
+def corpus_dedup_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, stage, survivor_id): per document, the dedup-ladder
+    stage that removed it ('exact' | 'near' | 'kept') and the ultimate
+    kept document representing its content (survivor_id chains through
+    both stages; every survivor_id row has stage = 'kept')."""
+    from bigbugdata_spark.functions.graph import connected_components
+
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    ex = docs.groupBy("text").agg(F.min("doc_id").alias("ex_rep"))
+    doc_rep = docs.join(ex, "text").select("doc_id", "ex_rep")
+    r1 = doc_rep.filter(F.col("doc_id") == F.col("ex_rep")).select("doc_id")
+
+    pairs = (
+        dedup_ngram_jaccard(spark, sf_dir)
+        .join(F.broadcast(r1.withColumnRenamed("doc_id", "d1")), "d1", "left_semi")
+        .join(F.broadcast(r1.withColumnRenamed("doc_id", "d2")), "d2", "left_semi")
+        .select(F.col("d1").alias("a"), F.col("d2").alias("b"))
+    )
+    comp = connected_components(r1, pairs, id_col="doc_id").select(
+        F.col("id").alias("ex_rep"), "component"
+    )
+    return doc_rep.join(comp, "ex_rep").select(
+        "doc_id",
+        F.when(F.col("doc_id") != F.col("ex_rep"), F.lit("exact"))
+        .when(F.col("doc_id") != F.col("component"), F.lit("near"))
+        .otherwise(F.lit("kept"))
+        .alias("stage"),
+        F.col("component").alias("survivor_id"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Training-corpus shard planner (round 8) — deterministic hash
+# sharding of the document corpus into N_SHARDS output shards with
+# per-shard volume accounting. This is the step between "governed corpus"
+# (operators/pipeline.py) and "tensors on a trainer": data loaders want a
+# fixed number of roughly-equal shards whose membership is a pure
+# function of the doc id, so re-running the pipeline (or appending and
+# re-sharding) never silently moves a document between shards.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface alongside corpus_pack_accounting (which packs into fixed token
+# windows; this plans the FILE layout).
+#
+# Determinism discipline: shard id is the repo's standard affine hash mod
+# P (functions/hashing.P) reduced mod N_SHARDS — same family as the
+# train/val/test split (fragments.split_col) but with distinct
+# coefficients, so shard and split assignments are independent. All
+# accounting columns are exact BIGINT sums; the imbalance diagnostic
+# (each shard's doc share in permille of a perfectly even share) is fp64
+# over exact integers.
+#
+# Scale posture: one scan, one map-side-combinable aggregate on a
+# N_SHARDS-key space; at 100 TB the same expression is the
+# `.repartition(N_SHARDS, shard)` / partitionBy("shard") write key, so
+# the plan IS the layout. Token counts reuse the repo-wide whitespace
+# tokenizer so shard budgets agree with every other token accounting.
+# ---------------------------------------------------------------------------
+
+
+N_SHARDS = 16
+# affine shard hash — coefficients deliberately distinct from
+# fragments.SPLIT_A/B so shard % split strata stay independent
+SHARD_A, SHARD_B = 40_503_551, 1_299_721
+
+
+def shard_col(doc_id):
+    """Column: shard id (0..N_SHARDS-1) of a BIGINT doc_id Column."""
+    return ((F.lit(SHARD_A) * doc_id + F.lit(SHARD_B)) % F.lit(H.P)) % F.lit(
+        N_SHARDS
+    )
+
+
+def sql_shard(doc_id: str = "doc_id") -> str:
+    """DuckDB twin of shard_col (identical affine hash + reduction)."""
+    return f"(({SHARD_A} * {doc_id} + {SHARD_B}) % {H.P}) % {N_SHARDS}"
+
+
+@register(
+    "corpus_shard_assignment",
+    oracle=f"""
+        WITH assigned AS (
+            SELECT CAST({sql_shard('doc_id')} AS BIGINT) AS shard,
+                   CAST(len({H.sql_tokens('text')}) AS BIGINT) AS n_tokens,
+                   CAST(length(text) AS BIGINT) AS n_chars
+            FROM documents
+        ),
+        per AS (
+            SELECT shard,
+                   CAST(COUNT(*) AS BIGINT) AS n_docs,
+                   CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+                   CAST(SUM(n_chars) AS BIGINT) AS n_chars
+            FROM assigned GROUP BY shard
+        )
+        SELECT shard, n_docs, n_tokens, n_chars,
+               CAST(n_docs * {N_SHARDS} * 1000 AS DOUBLE)
+                   / SUM(n_docs) OVER () AS share_pm
+        FROM per
+    """,
+    tags=("corpus", "agg", "layout"),
+)
+def corpus_shard_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per shard: document / token / char volume plus the shard's doc
+    share in permille of a perfectly balanced shard (1000 = exactly
+    even). The assignment expression is the write-partition key for the
+    sharded lake, so this accounting is also the layout plan."""
+    docs = table(spark, sf_dir, "documents")
+    assigned = docs.select(
+        shard_col(F.col("doc_id")).cast("long").alias("shard"),
+        F.size(H.tokens(F.col("text"))).cast("long").alias("n_tokens"),
+        F.length("text").cast("long").alias("n_chars"),
+    )
+    per = assigned.groupBy("shard").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_tokens").alias("n_tokens"),
+        F.sum("n_chars").alias("n_chars"),
+    )
+    w = Window.partitionBy()  # N_SHARDS-row frame
+    return per.select(
+        "shard",
+        "n_docs",
+        "n_tokens",
+        "n_chars",
+        (
+            (F.col("n_docs") * F.lit(N_SHARDS) * F.lit(1000)).cast("double")
+            / F.sum("n_docs").over(w)
+        ).alias("share_pm"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Dedup survivorship-quality accounting (round 13) — the governance
+# card that answers "is dedup throwing away good documents?": the corpus
+# split into the cluster-keep decision's two cohorts (kept
+# representatives vs removed near-dup members), each with exact doc,
+# token, and quality-decipoint totals.  A dedup stage that
+# systematically removes higher-quality docs than it keeps (a bad
+# tie-break, a skewed shingle space) shows up here as deci_avg_centi
+# inversion, before the corpus ships.
+#
+# Composition: dedup_cluster_keep's decision (min-label connected
+# components over verified near-dup pairs — the exact dedup stage the
+# release pipelines apply) x the shared quality decipoint rule
+# (fragments.quality_base_frame / quality_deci_col — the ONE definition
+# every quality consumer builds from).  All integers: counts, token
+# sums, decipoint sums, and a truncating centi-average, so the oracle
+# hash-compares exactly.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface.
+#
+# Scale posture: the near-dup pair graph rides the bucketed inverted-
+# index join (never all-pairs); the quality side is one scan of
+# documents with pure column expressions; the final aggregate is
+# two-row. At 100 TB the keep frame is the persisted dedup decision a
+# release pipeline already materializes — this card is one join + one
+# aggregate over it.
+# ---------------------------------------------------------------------------
+
+
+# keeps = the shared keep-decision fragments verbatim (r13 review: a
+# copied CTE chain would fork from dedup_cluster_keep's oracle the day
+# the shared rule changes)
+_SURVIVOR_ORACLE_SQL = f"""
+    WITH RECURSIVE {CLUSTER_KEEP_CTES_SQL},
+    keeps AS ({CLUSTER_KEEP_BODY_SQL}),
+    {QUALITY_BASE_SQL},
+    scored AS (
+        SELECT doc_id, n_tokens, {QUALITY_DECI_SQL} AS deci FROM base
+    )
+    SELECT CASE WHEN k.keep = 1 THEN 'kept' ELSE 'removed' END AS cohort,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(s.n_tokens) AS BIGINT) AS total_tokens,
+           CAST(SUM(s.deci) AS BIGINT) AS deci_sum,
+           CAST(SUM(s.deci) * 100 // COUNT(*) AS BIGINT) AS deci_avg_centi
+    FROM keeps k JOIN scored s ON k.doc_id = s.doc_id
+    GROUP BY 1
+"""
+
+
+@register(
+    "corpus_survivor_quality",
+    oracle=_SURVIVOR_ORACLE_SQL,
+    tags=("corpus", "dedup", "agg"),
+)
+def corpus_survivor_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(cohort, n_docs, total_tokens, deci_sum, deci_avg_centi) for
+    cohort in {kept, removed} under the exact cluster-keep decision:
+    integer quality-decipoint totals plus a truncating centi-average,
+    so a quality-biased dedup stage is a visible inversion, not a
+    vibe."""
+    from bigbugdata_spark.functions.fragments import (
+        quality_base_frame,
+        quality_deci_col,
+    )
+
+    keep = dedup_cluster_keep(spark, sf_dir).select("doc_id", "keep")
+    scored = quality_base_frame(spark, sf_dir).select(
+        "doc_id", "n_tokens", quality_deci_col().alias("deci")
+    )
+    return (
+        scored.join(keep, "doc_id")
+        .groupBy(
+            F.when(F.col("keep") == 1, F.lit("kept"))
+            .otherwise(F.lit("removed"))
+            .alias("cohort")
+        )
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum("n_tokens").cast("long").alias("total_tokens"),
+            F.sum("deci").cast("long").alias("deci_sum"),
+        )
+        .select(
+            "cohort",
+            "n_docs",
+            "total_tokens",
+            "deci_sum",
+            F.expr("deci_sum * 100 div n_docs")
+            .cast("long")
+            .alias("deci_avg_centi"),
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Temperature-based source mixing (round 12) — the availability-
+# derived counterpart of corpus_epoch_mix_plan's explicit target mix:
+# when no hand-set mix exists, multilingual/multi-source pretraining
+# upsamples small sources by flattening the natural distribution,
+# weight ∝ n_tokens^T with temperature T < 1 (the mBERT/XLM-R exponent
+# recipe).  T = 1/2 here, computed EXACTLY: weight = floor(sqrt(n))
+# via the engines' correctly-rounded IEEE sqrt on BIGINT-exact inputs
+# (the scaled_ivf_k precedent — bit-identical in Spark and DuckDB for
+# n < 2^53), and every downstream share/allocation/epoch figure is
+# truncating BIGINT arithmetic.  The budget is one corpus-worth of
+# tokens, so the plan is a pure REDISTRIBUTION: epochs_milli > 1000
+# means the source is oversampled (epochs beyond one pass), < 1000
+# subsampled — the number the data-constrained-scaling review reads.
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface.
+#
+# Scale posture: one documents scan -> per-source token aggregate
+# (map-side combinable, |sources| rows); everything after is integer
+# arithmetic on that panel with one panel-sized window for the weight
+# total — never a corpus-sized second pass.
+# ---------------------------------------------------------------------------
+
+
+_TEMP_ORACLE_SQL = f"""
+    WITH per_source AS (
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(len({H.sql_tokens('text')})) AS BIGINT) AS n_tokens
+        FROM documents GROUP BY source
+    ),
+    weighted AS (
+        SELECT *,
+               CAST(FLOOR(SQRT(n_tokens)) AS BIGINT) AS weight,
+               SUM(CAST(FLOOR(SQRT(n_tokens)) AS BIGINT)) OVER () AS w_total,
+               SUM(n_tokens) OVER () AS t_total
+        FROM per_source
+    )
+    SELECT source, n_docs, n_tokens,
+           weight,
+           CAST(weight * 1000 // w_total AS BIGINT) AS target_share_pm,
+           CAST(t_total * weight // w_total AS BIGINT) AS alloc_tokens,
+           CAST((t_total * weight // w_total) * 1000 // n_tokens AS BIGINT)
+               AS epochs_milli
+    FROM weighted
+"""
+
+
+@register(
+    "corpus_temperature_mix",
+    oracle=_TEMP_ORACLE_SQL,
+    tags=("corpus", "agg"),
+)
+def corpus_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(source, n_docs, n_tokens, weight, target_share_pm,
+    alloc_tokens, epochs_milli): the T=1/2 temperature mix over one
+    corpus-worth of tokens — small sources oversample past 1000
+    milli-epochs, large ones subsample (unit test pins the flattening
+    direction and token conservation within truncation)."""
+    per_source = (
+        table(spark, sf_dir, "documents")
+        .select("source", F.size(H.tokens(F.col("text"))).alias("toks"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("toks").cast("long").alias("n_tokens"),
+        )
+    )
+    w_all = Window.partitionBy()
+    weighted = per_source.withColumn(
+        "weight", F.floor(F.sqrt(F.col("n_tokens"))).cast("long")
+    ).withColumn("w_total", F.sum("weight").over(w_all)).withColumn(
+        "t_total", F.sum("n_tokens").over(w_all)
+    )
+    return weighted.select(
+        "source",
+        "n_docs",
+        "n_tokens",
+        "weight",
+        F.expr("weight * 1000 div w_total").cast("long").alias(
+            "target_share_pm"
+        ),
+        F.expr("t_total * weight div w_total").cast("long").alias(
+            "alloc_tokens"
+        ),
+        F.expr("(t_total * weight div w_total) * 1000 div n_tokens")
+        .cast("long")
+        .alias("epochs_milli"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Versioned-corpus accounting + quality-weighted sampling.  The shared
+# quality definition comes from functions/fragments.py (QUALITY_SQL).
+#
+# No analog in the reference (SURVEY §2.1); corpus-governance extension
+# surface.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "corpus_version_diff",
+    oracle="""
+        SELECT CAST(0 AS INT) AS version, lang,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(n_chars) AS BIGINT) AS total_chars
+        FROM documents WHERE lang = 'en' GROUP BY lang
+        UNION ALL
+        SELECT CAST(1 AS INT), lang,
+               CAST(COUNT(*) AS BIGINT),
+               CAST(SUM(n_chars) AS BIGINT)
+        FROM documents GROUP BY lang
+    """,
+    tags=("corpus", "storage", "agg"),
+    side_effects=True,
+)
+def corpus_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Corpus-version accounting through the MANIFEST-VERSIONED table
+    (round 7 — puts sources/versioned.py under the driver's hash gate,
+    not just layout tests): commit v0 = the English slice, commit v1
+    appending every other language, then TIME-TRAVEL READ both versions
+    and report per-(version, lang) document/char totals — the dataset
+    card a governed pipeline publishes per corpus release ("v1 added
+    2.1M German docs"). Both reads go through read_versioned's pinned
+    file lists, so a wrong manifest (lost commit, leaked file, torn
+    read) shifts the counts and fails the hash compare.
+
+    Scale: commits are file-count-sized manifest writes; the accounting
+    is one map-side-combinable aggregate per version read. Scratch tree
+    is deleted after an eager checkpoint, as in the SCD2 twin. (Design
+    note, VERDICT r7: this registered query is deliberately
+    O(corpus-write) — it exists to put the storage layer under the hash
+    gate; production reads hit an existing lake and pay only the
+    aggregate.)"""
+    import shutil
+    import tempfile
+
+    from bigbugdata_spark.sources.versioned import (
+        read_versioned,
+        write_versioned,
+    )
+
+    base = tempfile.mkdtemp(prefix="bigbugdata-vdiff-")
+    try:
+        path = f"{base}/corpus"
+        docs = table(spark, sf_dir, "documents")
+        v0 = write_versioned(docs.filter(F.col("lang") == "en"), path)
+        v1 = write_versioned(docs.filter(F.col("lang") != "en"), path)
+        snap = read_versioned(spark, path, v0).select(
+            F.lit(0).cast("int").alias("version"), "lang", "n_chars"
+        ).unionByName(
+            read_versioned(spark, path, v1).select(
+                F.lit(1).cast("int").alias("version"), "lang", "n_chars"
+            )
+        )
+        out = snap.groupBy("version", "lang").agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("total_chars"),
+        )
+        return out.localCheckpoint()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+
+
+# quality-weighted sampling draw (fresh affine constants — must not
+# correlate with the split/mix/seed/incremental-batch hashes)
+_QW_A, _QW_B, _QW_P = 76_543, 911, 1_000_000_007
+_QW_DRAW_SQL = f"((doc_id * {_QW_A} + {_QW_B}) % {_QW_P}) % 1000"
+
+
+@register(
+    "corpus_quality_weighted_sample",
+    oracle=f"""
+        WITH q AS ({QUALITY_SQL})
+        SELECT doc_id,
+               CAST(ROUND(quality * 1000) AS BIGINT) AS q_milli,
+               CAST({_QW_DRAW_SQL} AS BIGINT) AS draw
+        FROM q
+        WHERE {_QW_DRAW_SQL} < ROUND(quality * 1000)
+    """,
+    tags=("corpus", "text", "filter"),
+)
+def corpus_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality-weighted downsampling — the non-uniform cousin of
+    corpus_mix_sample: each document's acceptance PROBABILITY is its
+    quality score (text_quality_score's 0..1 rule sum), realized by a
+    deterministic affine-hash draw in [0, 1000) against the score in
+    milli-units. High-quality docs survive at ~their score rate,
+    zero-quality docs never — the standard quality-proportional
+    retention a pretraining mix applies, but ingest-stable and
+    reproducible (re-running the pipeline keeps exactly the same
+    documents; no RNG, no sampling drift between runs).
+
+    Determinism discipline: the draw is pure integer arithmetic on
+    doc_id; the threshold ROUND(quality*1000) is computed from the
+    SHARED quality expression (fragments.QUALITY_SQL /
+    text_quality_score), so both engines compare identical integers —
+    fp quality sums like 0.4+0.3 round identically because the
+    expression tree is identical. Plan: per-row expressions only, no
+    shuffle; the filter composes with the scan's column pruning."""
+    q = text_quality_score(spark, sf_dir)
+    draw = (F.col("doc_id") * _QW_A + _QW_B) % _QW_P % 1000
+    thresh = F.round(F.col("quality") * 1000)
+    return (
+        q.select(
+            "doc_id",
+            thresh.cast("long").alias("q_milli"),
+            draw.cast("long").alias("draw"),
+        )
+        .filter(F.col("draw") < F.col("q_milli"))
+    )

@@ -1,62 +1,69 @@
-"""Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard,
-and embedding-cosine near-dup over `documents` / `embeddings` (the
-LLM-pipeline dedup family, SURVEY.md §7 phase 3; the reference's only
-dedup is the dict last-wins merge mapped as op 20).
-
-Scale design (the 100 TB contract):
-* NOTHING here is an all-pairs crossJoin over the corpus. Near-dup
-  candidate generation is always a BUCKETED equi-join — LSH band keys
-  (MinHash), 4-bit blocks (SimHash), shared shingles (inverted index),
-  hyperplane buckets (embeddings) — i.e. a shuffle on a key, which is the
-  join Spark scales horizontally.
-* The only quadratic step is per-bucket pair expansion; bucket width is
-  the tuning knob (bands x rows, block bits, gram document frequency) and
-  skewed buckets are the known hazard. Both skew valves are implemented:
-  `dedup_ngram_jaccard(max_gram_df=...)` drops ultra-frequent shingles
-  before the inverted-index join (the stop-gram cap), and every
-  LSH-bucketed query takes `max_bucket_width=...` to drop degenerate
-  mega-buckets before pair expansion. Defaults are None so the
-  registered oracle-checked queries stay exact.
-* `dedup_emb_cosine` alone is the documented brute-force BASELINE
-  (correctness anchor per the north star: "brute-force cosine as the
-  baseline; LSH-bucketed variant as the scale path" — the scale path is
-  `dedup_emb_lsh`).
-* Measured scaling (r3, local[32], sf0.1 documents replicated 10x to
-  50k docs with ~250k true near-dup pairs): `dedup_minhash_lsh` 4.9s ->
-  3.8s (sublinear — the extra data amortizes fixed costs across cores)
-  while `dedup_ngram_jaccard` 2.6s -> 44.9s (the exact inverted-index
-  join grows with gram-DF^2 when duplicates multiply document
-  frequency). That is the quantitative case for MinHash as the 100 TB
-  path with the exact join as the per-bucket/verification-scale tool.
-
-Correctness: MinHash/SimHash signatures use functions/hashing.py, which
-computes bit-identical values in DuckDB — so even the probabilistic
-operators get EXACT oracle twins. For `dedup_minhash_lsh` the oracle is
-the ground-truth all-pairs Jaccard: with 16 bands x 4 rows, a pair at the
-J=0.9 level of this corpus is missed with probability (1-0.9^4)^16 ~ 4e-8,
-and the comparison is deterministic (fixed seeds, fixed data), so
-oracle equality holds identically across runs.
+"""Deduplication over `documents` / `embeddings`: exact, MinHash+LSH,
+SimHash, n-gram Jaccard, embedding-cosine near-dup and cluster keep,
+plus the near-dup threshold curve and cross-source duplication roll-up.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bigbugdata_spark.caching import pin
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.functions import hashing as H
 from bigbugdata_spark.functions.fragments import (
-    CLUSTER_KEEP_SQL as _CLUSTER_KEEP_SQL,
+    CLUSTER_KEEP_SQL,
     COSINE_T,
-    EMB_DIM as _EMB_DIM,
-    EMB_LSH_BITS as _BITS_PER_TABLE,
-    EMB_LSH_PLANES as _PLANES,
-    EMB_LSH_TABLES as _N_TABLES,
-    JACCARD_PAIRS_SQL as _JACCARD_PAIRS_SQL,
+    EMB_DIM,
+    EMB_LSH_BITS,
+    EMB_LSH_PLANES,
+    EMB_LSH_TABLES,
+    JACCARD_PAIRS_SQL,
     JACCARD_T,
 )
 from bigbugdata_spark.registry import register
+
+
+# ---------------------------------------------------------------------------
+# Deduplication operators — exact, MinHash+LSH, SimHash, n-gram Jaccard,
+# and embedding-cosine near-dup over `documents` / `embeddings` (the
+# LLM-pipeline dedup family, SURVEY.md §7 phase 3; the reference's only
+# dedup is the dict last-wins merge mapped as op 20).
+#
+# Scale design (the 100 TB contract):
+# * NOTHING here is an all-pairs crossJoin over the corpus. Near-dup
+#   candidate generation is always a BUCKETED equi-join — LSH band keys
+#   (MinHash), 4-bit blocks (SimHash), shared shingles (inverted index),
+#   hyperplane buckets (embeddings) — i.e. a shuffle on a key, which is the
+#   join Spark scales horizontally.
+# * The only quadratic step is per-bucket pair expansion; bucket width is
+#   the tuning knob (bands x rows, block bits, gram document frequency) and
+#   skewed buckets are the known hazard. Both skew valves are implemented:
+#   `dedup_ngram_jaccard(max_gram_df=...)` drops ultra-frequent shingles
+#   before the inverted-index join (the stop-gram cap), and every
+#   LSH-bucketed query takes `max_bucket_width=...` to drop degenerate
+#   mega-buckets before pair expansion. Defaults are None so the
+#   registered oracle-checked queries stay exact.
+# * `dedup_emb_cosine` alone is the documented brute-force BASELINE
+#   (correctness anchor per the north star: "brute-force cosine as the
+#   baseline; LSH-bucketed variant as the scale path" — the scale path is
+#   `dedup_emb_lsh`).
+# * Measured scaling (r3, local[32], sf0.1 documents replicated 10x to
+#   50k docs with ~250k true near-dup pairs): `dedup_minhash_lsh` 4.9s ->
+#   3.8s (sublinear — the extra data amortizes fixed costs across cores)
+#   while `dedup_ngram_jaccard` 2.6s -> 44.9s (the exact inverted-index
+#   join grows with gram-DF^2 when duplicates multiply document
+#   frequency). That is the quantitative case for MinHash as the 100 TB
+#   path with the exact join as the per-bucket/verification-scale tool.
+#
+# Correctness: MinHash/SimHash signatures use functions/hashing.py, which
+# computes bit-identical values in DuckDB — so even the probabilistic
+# operators get EXACT oracle twins. For `dedup_minhash_lsh` the oracle is
+# the ground-truth all-pairs Jaccard: with 16 bands x 4 rows, a pair at the
+# J=0.9 level of this corpus is missed with probability (1-0.9^4)^16 ~ 4e-8,
+# and the comparison is deterministic (fixed seeds, fixed data), so
+# oracle equality holds identically across runs.
+# ---------------------------------------------------------------------------
+
 
 SIMHASH_D = 3  # max hamming distance; 8 x 4-bit blocks are exact for d <= 7
 LSH_BANDS, LSH_ROWS = 16, 4  # 64 minhash components
@@ -143,7 +150,7 @@ def _bucket_pairs(
 
 @register(
     "dedup_cluster_keep_lsh",
-    oracle=_CLUSTER_KEEP_SQL,
+    oracle=CLUSTER_KEEP_SQL,
     tags=("dedup", "iterative", "headline"),
 )
 def dedup_cluster_keep_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,7 +208,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_ngram_jaccard",
-    oracle=_JACCARD_PAIRS_SQL,
+    oracle=JACCARD_PAIRS_SQL,
     tags=("dedup", "join", "headline"),
 )
 def dedup_ngram_jaccard(
@@ -277,7 +284,7 @@ def dedup_ngram_jaccard(
 
 @register(
     "dedup_minhash_lsh",
-    oracle=_JACCARD_PAIRS_SQL,
+    oracle=JACCARD_PAIRS_SQL,
     tags=("dedup", "join", "headline"),
 )
 def dedup_minhash_lsh(
@@ -408,8 +415,8 @@ def dedup_simhash(
 # ---------------------------------------------------------------------------
 
 _COS_SQL = (
-    f"{H.sql_dot('a.embedding', 'b.embedding', _EMB_DIM)}"
-    f" / ({H.sql_norm('a.embedding', _EMB_DIM)} * {H.sql_norm('b.embedding', _EMB_DIM)})"
+    f"{H.sql_dot('a.embedding', 'b.embedding', EMB_DIM)}"
+    f" / ({H.sql_norm('a.embedding', EMB_DIM)} * {H.sql_norm('b.embedding', EMB_DIM)})"
 )
 
 
@@ -450,7 +457,7 @@ def dedup_emb_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_cluster_keep",
-    oracle=_CLUSTER_KEEP_SQL,
+    oracle=CLUSTER_KEEP_SQL,
     tags=("dedup", "iterative"),
 )
 def dedup_cluster_keep(
@@ -584,7 +591,7 @@ def _hyperplane_bits(emb) -> "F.Column":
     place this behind an exchange (repartition) so CollapseProject cannot
     inline the 64-dot expression into each of the 16 table-key
     expressions (a 16x recompute + codegen blowup otherwise)."""
-    planes = F.array(*[F.array(*[F.lit(v) for v in p]) for p in _PLANES])
+    planes = F.array(*[F.array(*[F.lit(v) for v in p]) for p in EMB_LSH_PLANES])
     return F.transform(planes, lambda p: (H.dot(emb, p) > 0).cast("int"))
 
 
@@ -619,13 +626,13 @@ def dedup_emb_lsh(
             F.concat_ws(
                 ",",
                 *[
-                    F.element_at(F.col("bits"), t * _BITS_PER_TABLE + r + 1).cast(
+                    F.element_at(F.col("bits"), t * EMB_LSH_BITS + r + 1).cast(
                         "string"
                     )
-                    for r in range(_BITS_PER_TABLE)
+                    for r in range(EMB_LSH_BITS)
                 ],
             )
-            for t in range(_N_TABLES)
+            for t in range(EMB_LSH_TABLES)
         ]
     )
     keyed = bits_df.select("vec_id", F.posexplode(table_keys).alias("tbl", "key"))
@@ -644,3 +651,189 @@ def dedup_emb_lsh(
         .filter(F.col("cos_sim") >= COSINE_T)
     )
 
+
+# ---------------------------------------------------------------------------
+# Near-dup threshold sensitivity curve (round 9) — the dataset-card
+# companion to the dedup family: how many verified near-dup pairs (and
+# implicated documents) exist per Jaccard band above the operating
+# threshold.  The table behind choosing JACCARD_T: a cliff between bands
+# means the threshold is load-bearing; a flat curve means the corpus'
+# duplication is insensitive to it.
+#
+# No analog in the reference (SURVEY §2.1); dedup governance extension
+# surface over the same verified pair machinery as dedup_minhash_lsh.
+#
+# Scale posture: rides the banded-LSH pipeline verbatim (bucketed
+# candidates + bounded exact verify, never all-pairs; equality to ground
+# truth at this corpus' J >= 0.9 level, see dedup.py); the banding is
+# tuned for the BASE threshold, and every band reported here sits ABOVE
+# it, where banding recall only improves.  The curve aggregate runs on
+# the pair frame (tiny relative to corpus) over a fixed band key space;
+# bands are floor(j*10) integers so the bucketing is fp-safe (one
+# multiply + floor of an exact ratio, identical in both engines).
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "dedup_threshold_curve",
+    oracle=f"""
+        WITH pairs AS ({JACCARD_PAIRS_SQL}),
+        banded AS (
+            SELECT CAST(FLOOR(jaccard * 10) AS BIGINT) AS band, d1, d2
+            FROM pairs
+        )
+        SELECT band,
+               CAST(band AS DOUBLE) / 10 AS j_lo,
+               CAST(COUNT(*) AS BIGINT) AS n_pairs,
+               CAST(COUNT(DISTINCT d1) + COUNT(DISTINCT d2)
+                    AS BIGINT) AS n_sides
+        FROM banded GROUP BY band
+    """,
+    tags=("dedup", "agg"),
+)
+def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per Jaccard band [band/10, band/10 + 0.1): verified pair count
+    and the distinct-document count per pair side (d1/d2 are
+    min/max-ordered by the pair pipeline, so the two sides are distinct
+    populations and their sum is the honest implicated-slot count)."""
+    pairs = dedup_minhash_lsh(spark, sf_dir)
+    banded = pairs.select(
+        F.floor(F.col("jaccard") * 10).cast("long").alias("band"),
+        "d1",
+        "d2",
+    )
+    return (
+        banded.groupBy("band")
+        .agg(
+            F.count(F.lit(1)).alias("n_pairs"),
+            (F.countDistinct("d1") + F.countDistinct("d2"))
+            .cast("long")
+            .alias("n_sides"),
+        )
+        .select(
+            "band",
+            (F.col("band").cast("double") / 10).alias("j_lo"),
+            "n_pairs",
+            "n_sides",
+        )
+    )
+
+
+# ---------------------------------------------------------------------------
+# Cross-source duplication governance (round 8) — who is duplicating
+# whom? Near-dup dedup answers "which documents"; corpus governance needs
+# the roll-up: which SOURCE pairs share near-duplicate content (mirror
+# sites, scraped re-posts, licensing overlap) and what fraction of each
+# source's documents is implicated. The dataset-card table behind "drop
+# src X, it is 40% a mirror of src Y".
+#
+# No analog in the reference (SURVEY §2.1); dedup/corpus-governance
+# extension surface over operators/dedup.py's verified pair machinery.
+#
+# Scale posture: pair generation is dedup_minhash_lsh's banded-LSH
+# pipeline verbatim (bucketed candidates + bounded exact verify — never
+# all-pairs), with equality to ground truth at this corpus' J >= 0.9
+# level (miss probability <= 4e-8, see dedup.py). The source roll-up
+# joins the pair frame (|near-dup pairs|, tiny relative to corpus)
+# against a two-column doc->source projection twice, then aggregates on a
+# |sources|^2-bounded key space; the ORACLE side recomputes ground truth
+# all-pairs, which only the test scale can afford — exactly the
+# audit-twin asymmetry the repo uses everywhere.
+# ---------------------------------------------------------------------------
+
+
+@register(
+    "dedup_cross_source",
+    oracle=f"""
+        WITH pairs AS ({JACCARD_PAIRS_SQL}),
+        tagged AS (
+            SELECT LEAST(sa.source, sb.source) AS src_a,
+                   GREATEST(sa.source, sb.source) AS src_b
+            FROM pairs
+            JOIN documents sa ON pairs.d1 = sa.doc_id
+            JOIN documents sb ON pairs.d2 = sb.doc_id
+        )
+        SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_pairs
+        FROM tagged GROUP BY src_a, src_b
+    """,
+    tags=("dedup", "corpus", "join"),
+)
+def dedup_cross_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per unordered source pair: the number of verified near-dup
+    document pairs between them (a src_a = src_b row is the source's
+    INTERNAL duplication — the key equality already says so, no
+    separate subtotal needed). Source pair keys are (LEAST, GREATEST)-
+    normalized so direction never splits a pair across rows."""
+    pairs = dedup_minhash_lsh(spark, sf_dir)
+    src = table(spark, sf_dir, "documents").select("doc_id", "source")
+    sa = src.select(F.col("doc_id").alias("d1"), F.col("source").alias("sa"))
+    sb = src.select(F.col("doc_id").alias("d2"), F.col("source").alias("sb"))
+    # The doc->source projection is one row per document, i.e.
+    # corpus-sized — NOT broadcastable at the repo's 100 TB posture.
+    # No hint: both joins key on doc ids, so AQE/the id-bucketed layout
+    # picks shuffle-hash (or broadcast only when stats say the side is
+    # genuinely small at the running scale).
+    tagged = pairs.join(sa, "d1").join(sb, "d2")
+    return (
+        tagged.select(
+            F.least("sa", "sb").alias("src_a"),
+            F.greatest("sa", "sb").alias("src_b"),
+        )
+        .groupBy("src_a", "src_b")
+        .agg(F.count(F.lit(1)).alias("n_pairs"))
+    )
+
+
+@register(
+    "dedup_source_dup_rate",
+    oracle=f"""
+        WITH pairs AS ({JACCARD_PAIRS_SQL}),
+        duped AS (
+            SELECT DISTINCT doc_id FROM (
+                SELECT d1 AS doc_id FROM pairs
+                UNION ALL
+                SELECT d2 AS doc_id FROM pairs
+            )
+        )
+        SELECT source,
+               CAST(COUNT(*) AS BIGINT) AS n_docs,
+               CAST(SUM(CASE WHEN duped.doc_id IS NOT NULL
+                             THEN 1 ELSE 0 END) AS BIGINT) AS n_duped,
+               CAST(SUM(CASE WHEN duped.doc_id IS NOT NULL
+                             THEN 1 ELSE 0 END) * 1000 AS DOUBLE)
+                   / COUNT(*) AS duped_pm
+        FROM documents LEFT JOIN duped USING (doc_id)
+        GROUP BY source
+    """,
+    tags=("dedup", "corpus", "agg"),
+)
+def dedup_source_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per source: total documents, documents implicated in at least one
+    verified near-dup pair (either side), and the implicated share in
+    permille. Sources with zero duplicates still get a row (left join
+    from the corpus side)."""
+    pairs = pin(dedup_minhash_lsh(spark, sf_dir))
+    duped = (
+        pairs.select(F.col("d1").alias("doc_id"))
+        .unionAll(pairs.select(F.col("d2").alias("doc_id")))
+        .distinct()
+        .withColumn("is_dup", F.lit(1))
+    )
+    docs = table(spark, sf_dir, "documents").select("doc_id", "source")
+    # The implicated-doc set is pair-bounded but NOT corpus-bounded: in
+    # precisely the scenario this query exists for (a source that is 40%
+    # a mirror) it approaches a large fraction of the corpus.  No
+    # broadcast hint — the left join keys on doc_id and co-locates on
+    # the id-bucketed layout; AQE downgrades to broadcast only when the
+    # measured size allows.
+    flagged = docs.join(duped, "doc_id", "left")
+    return flagged.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum(F.coalesce("is_dup", F.lit(0))).cast("long").alias("n_duped"),
+        (
+            (F.sum(F.coalesce("is_dup", F.lit(0))) * F.lit(1000)).cast(
+                "double"
+            )
+            / F.count(F.lit(1))
+        ).alias("duped_pm"),
+    )

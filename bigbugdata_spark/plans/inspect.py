@@ -127,12 +127,6 @@ def shuffle_count(df: DataFrame) -> int:
     )
 
 
-def codegen_span_count(df: DataFrame) -> int:
-    """WholeStageCodegen regions — wider spans mean more of the plan runs
-    fused JVM code rather than interpreted operators."""
-    return len(re.findall(r"WholeStageCodegen", plan_string(df, "simple")))
-
-
 _LIMIT_EXECS = (
     "TakeOrderedAndProjectExec",
     "GlobalLimitExec",

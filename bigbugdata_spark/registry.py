@@ -3,6 +3,9 @@
 Every operator from SURVEY.md §2 (and every extension operator) registers
 itself here as a (spark, sf_dir) -> DataFrame callable, optionally paired
 with an ANSI-SQL oracle string that DuckDB runs on the same parquet tables.
+The registering modules are the domain modules under operators/ and
+streaming/ (one per domain: tpch, dedup, similarity, text, events, ...);
+load_all() imports every one of them.
 
 Oracle-parity discipline (the driver hash-compares values):
   * alias every computed column identically on both sides;

@@ -1,15 +1,20 @@
 #!/usr/bin/env python
-"""Anti-pattern sweep over EVERY registered query's physical plan — the
-r18 extension of plans/r17/audit_registry.py (VERDICT r17 #8).
+"""Anti-pattern sweep over EVERY registered query's physical plan.
 
-New this round: the SMJ ORDER-CONSUMPTION flag.  Round 17 found (by
-eyeball, in 2 of 24 SMJ sites) the "discarded sort order" class — a
-SortMergeJoin whose output feeds a regroup or unordered sink, so its
-two sorts are pure overhead and a shuffled-hash join strictly wins
-(commits 6d75f5d, 737b3d6).  The audit now parses the numbered plan
-tree and, for each SortMergeJoin, walks the ancestor chain through
-order-neutral nodes (Project/Filter/...) to the first order-SENSITIVE
-or order-DISCARDING consumer:
+Usage: python plans/audit_registry.py <out.jsonl> [name ...]
+
+For each query without side effects: build the DataFrame, capture
+explain("formatted"), and count the optimization-guide markers
+(CartesianProduct / BroadcastNestedLoopJoin, SortMergeJoin, Expand,
+Python-eval nodes, Exchanges, repeated scans of the same input).  Writes
+one JSON line per query to <out.jsonl> and prints a flagged summary.
+Side-effect queries (streaming sinks, lake accounting) are listed but
+skipped: their fn() runs a pipeline whose plan is a memory-sink scan.
+
+SMJ order consumption: the audit parses the numbered plan tree and, for
+each SortMergeJoin, walks the ancestor chain through order-neutral nodes
+(Project/Filter/...) to the first order-SENSITIVE or order-DISCARDING
+consumer:
 
   * discarders: HashAggregate / ObjectHashAggregate / Exchange
     hashpartitioning / Expand / another join's build side — the SMJ's
@@ -19,10 +24,9 @@ or order-DISCARDING consumer:
     flagged separately as smj_resorted); Window / SortAggregate /
     SortMergeJoin / TakeOrderedAndProject consume order -> no flag.
 
-Every flag is a CANDIDATE for a shuffle_hash hint, to be fixed or
-given a one-line keep-reason in OPTIMIZATION_r18.md — bounded build
-sides only (guide §3.1: shuffled-hash risks OOM when a build partition
-cannot fit; corpus-x-corpus joins keep SMJ's spill safety).
+Every flag is a CANDIDATE for a shuffle_hash hint — bounded build sides
+only (shuffled-hash risks OOM when a build partition cannot fit;
+corpus-x-corpus joins keep SMJ's spill safety).
 """
 
 from __future__ import annotations
@@ -32,7 +36,7 @@ import os
 import re
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bigbugdata_spark.plans.inspect import plan_string  # noqa: E402
@@ -40,7 +44,6 @@ from bigbugdata_spark.registry import load_all  # noqa: E402
 from bigbugdata_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "registry_audit.jsonl")
 
 SCAN_RE = re.compile(r"Scan parquet\b[^\n]*")
 LOCATION_RE = re.compile(r"Location: \S+\[([^\]]*)\]")
@@ -172,11 +175,13 @@ def analyze(text: str) -> dict:
 
 
 def main() -> None:
-    names = sys.argv[1:] or None
+    if len(sys.argv) < 2:
+        sys.exit(__doc__)
+    out, names = sys.argv[1], sys.argv[2:] or None
     specs = load_all()
     spark = get_spark(app_name="registry-audit")
     rows = []
-    with open(OUT, "w") as fh:
+    with open(out, "w") as fh:
         for name in sorted(specs):
             if names and name not in names:
                 continue

@@ -1,10 +1,10 @@
 #!/usr/bin/env python
-"""Capture .explain("formatted") for a set of queries into plans/r18/.
+"""Capture .explain("formatted") for a set of queries.
 
-Usage: python plans/r18/capture.py <suffix> [name ...]
+Usage: python plans/capture.py <out_dir> <suffix> [name ...]
 With no names: the full bench surface (relational + ext headline + modern).
-Writes plans/r18/<query>_<suffix>.txt — the before/after evidence the
-optimization round commits alongside the code.
+Writes <out_dir>/<query>_<suffix>.txt — the before/after plan evidence an
+optimization commits alongside the code.
 """
 
 from __future__ import annotations
@@ -12,7 +12,7 @@ from __future__ import annotations
 import os
 import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from bigbugdata_spark.plans.inspect import plan_string  # noqa: E402
@@ -20,7 +20,6 @@ from bigbugdata_spark.registry import load_all  # noqa: E402
 from bigbugdata_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-OUT = os.path.dirname(os.path.abspath(__file__))
 
 RELATIONAL_HEADLINE = (
     "op07_hash_agg",
@@ -41,10 +40,12 @@ MODERN_HEADLINE = (
 
 
 def main() -> None:
-    suffix = sys.argv[1]
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    out_dir, suffix = sys.argv[1], sys.argv[2]
     specs = load_all()
-    if len(sys.argv) > 2:
-        names = sys.argv[2:]
+    if len(sys.argv) > 3:
+        names = sys.argv[3:]
     else:
         ext = sorted(
             n
@@ -59,7 +60,7 @@ def main() -> None:
             text = plan_string(df, "formatted")
         except Exception as exc:  # noqa: BLE001 — capture what we can
             text = f"CAPTURE ERROR: {type(exc).__name__}: {exc}\n"
-        path = os.path.join(OUT, f"{name}_{suffix}.txt")
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(text)
         print(f"wrote {path} ({len(text)} bytes)")

@@ -68,7 +68,7 @@ def test_chunker_covers_every_token(spark, sf_oracle):
     must begin at 0 — i.e. no token is ever skipped."""
     from bigbugdata_spark.catalog import table
     from bigbugdata_spark.functions.hashing import tokens
-    from bigbugdata_spark.operators.text import CHUNK_SIZE, CHUNK_STRIDE
+    from bigbugdata_spark.functions.fragments import CHUNK_SIZE, CHUNK_STRIDE
 
     from pyspark.sql import functions as F
 
@@ -257,7 +257,7 @@ def test_approx_quantiles_within_rank_error(spark, sf_oracle):
     with accuracy 10000 guarantees rank error <= n/10000)."""
     import bisect
 
-    from bigbugdata_spark.operators.events import _cents_col
+    from bigbugdata_spark.functions.fragments import cents_col as _cents_col
     from bigbugdata_spark.catalog import table
 
     approx = {
@@ -344,8 +344,10 @@ def test_sim_cosine_topk_np_matches_exact_baseline(spark, sf_oracle):
     (query, neighbor, rank) result as the oracle-checked JVM baseline —
     fp sums differ only in final ulps, far below this corpus' score
     separations."""
-    from bigbugdata_spark.operators.similarity import sim_cosine_topk
-    from bigbugdata_spark.operators.similarity_ext import sim_cosine_topk_np
+    from bigbugdata_spark.operators.similarity import (
+        sim_cosine_topk,
+        sim_cosine_topk_np,
+    )
 
     want = {
         (r.query_id, r.neighbor_id, r.rnk)
@@ -524,7 +526,7 @@ def test_containment_catches_doc_inside_doc(tmp_path, spark):
     and assert the Jaccard query stays silent while containment flags
     the pair with full-overlap integers."""
     from bigbugdata_spark.operators.dedup import dedup_ngram_jaccard
-    from bigbugdata_spark.operators.overlap import dedup_containment
+    from bigbugdata_spark.operators.text import dedup_containment
 
     short = " ".join(f"core{i}" for i in range(12))
     long_doc = (
@@ -578,7 +580,7 @@ def test_kmeans_objective_monotone(spark, sf_oracle):
     (each step — reassign, recenter — is individually non-increasing).
     Recomputes both objectives from the module's own building blocks."""
     from pyspark.sql import Window
-    from bigbugdata_spark.operators import kmeans as km
+    from bigbugdata_spark.operators import similarity as km
 
     q = km._quantized(spark, sf_oracle)
     h = (F.lit(km._KM_A) * F.col("vec_id") + F.lit(km._KM_B)) % F.lit(km._KM_P)
@@ -752,7 +754,7 @@ def test_hybrid_retrieval_fuses_both_signals(tmp_path, spark):
     verbatim copy of query doc 0 AND shares its embedding direction;
     doc 10 is lexical-only (same text, orthogonal vector); doc 11 is
     semantic-only (same vector, unrelated text)."""
-    from bigbugdata_spark.operators.retrieval import rag_hybrid_retrieval
+    from bigbugdata_spark.operators.similarity import rag_hybrid_retrieval
 
     def vec(i, scale=1.0):
         v = [0.0] * 64
@@ -813,7 +815,7 @@ def test_pack_accounting_conserves_tokens(spark, sf_oracle):
     by the interval arithmetic)."""
     from bigbugdata_spark.catalog import table
     from bigbugdata_spark.functions.hashing import tokens
-    from bigbugdata_spark.operators.packing import PACK_BUDGET
+    from bigbugdata_spark.operators.text import PACK_BUDGET
 
     rows = SPECS["corpus_pack_accounting"].fn(spark, sf_oracle).collect()
     by_bucket: dict[int, list] = {}
@@ -843,7 +845,7 @@ def test_volume_anomaly_fires_on_planted_outage(tmp_path, spark):
     steady days plus one collapsed day must flag exactly the outage."""
     import datetime as dt
 
-    from bigbugdata_spark.operators.dq_ext import dq_volume_anomaly
+    from bigbugdata_spark.operators.dq import dq_volume_anomaly
 
     rows = []
     eid = 0
@@ -871,7 +873,7 @@ def test_state_asof_agrees_with_history_intervals(spark, sf_oracle):
     SCD2 table: for every probe, each user's reported state is exactly
     the history row whose [valid_from, valid_to) contains the probe, and
     users absent from the as-of result have no interval containing it."""
-    from bigbugdata_spark.operators.events_state import ASOF_PROBES
+    from bigbugdata_spark.operators.events import ASOF_PROBES
 
     hist: dict[int, list] = {}
     for r in SPECS["evt_user_state_history"].fn(spark, sf_oracle).collect():
@@ -905,7 +907,7 @@ def test_phash_near_dup_finds_planted_twin(tmp_path, spark):
     (different content — the hash sees decoded structure, here the
     deterministic fake of it) must pair at hamming 0; a doc of wildly
     different length pairs with neither."""
-    from bigbugdata_spark.operators.mm_phash import mm_phash_near_dup
+    from bigbugdata_spark.operators.multimodal import mm_phash_near_dup
 
     rows = [
         (1, "a" * 40, "en", "s", 0),
@@ -927,7 +929,13 @@ def test_incremental_dedup_equals_restricted_full_relation(spark, sf_oracle):
     """dedup_incremental must equal the full near-dup relation restricted
     to batch-side documents, reported from the new doc's perspective —
     no pair invented, none lost by the asymmetric join."""
-    from bigbugdata_spark.operators.dedup_incr import _INC_A, _INC_B, _INC_MOD, _INC_P, _INC_REM
+    from bigbugdata_spark.operators.dedup_incr import (
+        _INC_A,
+        _INC_B,
+        _INC_MOD,
+        _INC_P,
+        _INC_REM,
+    )
 
     def incoming(d):
         return ((d * _INC_A + _INC_B) % _INC_P) % _INC_MOD == _INC_REM
@@ -1060,8 +1068,8 @@ def test_ivf_incremental_batch_vectors_retrievable(spark, sf_oracle):
         ivf_cents,
         ivf_probes,
         ivf_queries,
+        incoming_vec_col,
     )
-    from bigbugdata_spark.operators.similarity_incr import incoming_vec_col
 
     corpus = _corpus(spark, sf_oracle)
     existing = corpus.filter(~incoming_vec_col())

@@ -210,7 +210,7 @@ def test_ewma_dyadic_exactness(spark, tmp_path_factory, series):
     from fractions import Fraction
 
     from bigbugdata_spark.caching import release_pinned
-    from bigbugdata_spark.operators.events_ewma import EWMA_WINDOW
+    from bigbugdata_spark.operators.events import EWMA_WINDOW
     from bigbugdata_spark.registry import load_all
 
     d = tmp_path_factory.mktemp("ewma_prop")

@@ -119,7 +119,7 @@ def _gram_probe(spark, fp, batch_grams):
 def _lsh_probe(spark, fp, batch_sh):
     """dedup_incremental_lsh's probe join against an appended band-index
     generation, with an explicit batch shingle frame."""
-    from bigbugdata_spark.operators.dedup_incr_lsh import _band_frame
+    from bigbugdata_spark.operators.dedup_incr import _band_frame
 
     bands = spark.table(f"lsh_band_{fp}")
     sets = spark.table(f"lsh_set_{fp}")
@@ -165,8 +165,6 @@ def test_incremental_index_multicycle_lifecycle(tmp_path, spark):
         _corpus_fingerprint,
         append_batch_to_index,
         gram_index,
-    )
-    from bigbugdata_spark.operators.dedup_incr_lsh import (
         append_batch_to_lsh_index,
         lsh_index,
     )
@@ -295,9 +293,9 @@ def test_pagerank_planted_structure(tmp_path, spark):
     oracle re-derives the identical integer rounds."""
     from tests.parity import compare
 
-    from bigbugdata_spark.operators.similarity_rank import (
-        _DAMP_DEN,
-        _TELEPORT_NUM,
+    from bigbugdata_spark.operators.similarity_graph import (
+        DAMP_DEN as _DAMP_DEN,
+        TELEPORT_NUM as _TELEPORT_NUM,
         PR_SCALE,
     )
 
@@ -429,11 +427,8 @@ def test_rollup_store_multicycle_append_equals_recompute(tmp_path, spark):
     cycle; a warm serve must scan ONLY the partial store."""
     from pyspark.sql import functions as F
 
-    from bigbugdata_spark.operators.dedup_incr_core import _corpus_fingerprint
-    from bigbugdata_spark.operators.events_rollup_incr import (
-        append_batch_to_rollup,
-        rollup_store,
-    )
+    from bigbugdata_spark.operators.dedup_incr import _corpus_fingerprint
+    from bigbugdata_spark.operators.events import append_batch_to_rollup, rollup_store
     from bigbugdata_spark.plans import inspect as I
 
     def ev_rows(lo, hi):
@@ -506,10 +501,7 @@ def test_stream_rollup_replay_idempotent(tmp_path, spark):
     — and distinct batches must accumulate."""
     from pyspark.sql import functions as F
 
-    from bigbugdata_spark.streaming.rollup import (
-        merged_rollup,
-        write_rollup_batch,
-    )
+    from bigbugdata_spark.operators.events import merged_rollup, write_rollup_batch
 
     def ev(lo, hi):
         return spark.createDataFrame(
@@ -543,7 +535,7 @@ def test_privacy_release_guarantee_live(spark, sf_oracle):
     are live (every type releases AND suppresses something here), the
     released+suppressed split conserves dq_k_anonymity's row totals,
     and every released minimum carries the k guarantee."""
-    from bigbugdata_spark.operators.dq_anon import K_ANON
+    from bigbugdata_spark.operators.dq import K_ANON
 
     audit = {
         r["event_type"]: r
@@ -568,9 +560,9 @@ def test_central_exemplars_planted_cliques(tmp_path, spark):
     clique's PageRank is symmetric, so the argmax tie-break keeps the
     minimum id; the isolated vector is its own exemplar at the teleport
     floor; n_members match the planted structure."""
-    from bigbugdata_spark.operators.similarity_rank import (
-        _DAMP_DEN,
-        _TELEPORT_NUM,
+    from bigbugdata_spark.operators.similarity_graph import (
+        DAMP_DEN as _DAMP_DEN,
+        TELEPORT_NUM as _TELEPORT_NUM,
         PR_SCALE,
     )
 
@@ -776,7 +768,7 @@ def test_ewma_exactness_bound_at_gate_sfs():
     parity."""
     import duckdb
 
-    from bigbugdata_spark.operators.events_ewma import EWMA_WINDOW
+    from bigbugdata_spark.operators.events import EWMA_WINDOW
 
     for sf in ("sf0.1", "sf0.01", "sf0.001"):
         worst = duckdb.sql(

@@ -19,10 +19,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.registry import load_all
-from bigbugdata_spark.streaming.attrib import (
+from bigbugdata_spark.streaming.events import (
     _attribute,
-    _OUTPUT_SCHEMA,
-    _STATE_SCHEMA,
+    _ATTRIB_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
+    _ATTRIB_STATE_SCHEMA as _STATE_SCHEMA,
 )
 
 SPECS = load_all()
@@ -251,7 +251,7 @@ def test_knn_health_card_shape_and_bounds(spark, sf_oracle):
     """K rows, ranks 1..KNN_K, edge counts non-increasing by rank (a
     node emitting rank r also emitted 1..r-1), reciprocal <= edges, and
     mean cosine within [-1e6, 1e6] ppm."""
-    from bigbugdata_spark.operators.similarity_knn import KNN_K
+    from bigbugdata_spark.operators.similarity_graph import KNN_K
 
     rows = {
         r["rnk"]: r
@@ -270,7 +270,7 @@ def test_tfidf_topk_scores_and_ranks(spark, sf_oracle):
     exactly tf * 1e6 div df; rank order matches (score DESC, term)."""
     from collections import defaultdict
 
-    from bigbugdata_spark.operators.text_tfidf import TOP_TERMS
+    from bigbugdata_spark.operators.text import TOP_TERMS
 
     rows = SPECS["text_tfidf_topk"].fn(spark, sf_oracle).collect()
     assert rows
@@ -358,8 +358,7 @@ def test_mmr_picks_are_distinct_and_start_at_max_relevance(spark, sf_oracle):
 
     from bigbugdata_spark.functions import hashing as H
     from bigbugdata_spark.functions.fragments import N_QUERIES
-    from bigbugdata_spark.operators.similarity import _corpus
-    from bigbugdata_spark.operators.similarity_mmr import MMR_K
+    from bigbugdata_spark.operators.similarity import _corpus, MMR_K
 
     rows = sorted(
         SPECS["sim_mmr_topk"].fn(spark, sf_oracle).collect(),
@@ -408,7 +407,7 @@ def test_epoch_mix_plan_arithmetic(spark, sf_oracle):
     """Exact integer identities: need = BUDGET_X * total * pm div 1000,
     epochs = need*1000 div avail; target shares sum to 1000; oversample
     flag consistent."""
-    from bigbugdata_spark.operators.corpus_epochs import BUDGET_X, TARGET_PM
+    from bigbugdata_spark.operators.corpus import BUDGET_X, TARGET_PM
 
     rows = SPECS["corpus_epoch_mix_plan"].fn(spark, sf_oracle).collect()
     total = sum(r["n_tokens"] for r in rows)
@@ -425,7 +424,7 @@ def test_graph_spine_adopts_persisted_generation(spark, sf_oracle, monkeypatch):
     """A session whose memo is cold must ADOPT the persisted edge
     generation instead of rebuilding: with the builder monkeypatched to
     explode, knn_edges still serves the edges from disk."""
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     # ensure a generation exists, then forget the session memo
     n = G.knn_edges(spark, sf_oracle).count()
@@ -448,7 +447,7 @@ def test_graph_spine_rebuilds_on_content_change(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     src = "/root/testdata/sf0.001/embeddings.parquet"
     dst = tmp_path / "embeddings.parquet"
@@ -483,7 +482,7 @@ def test_graph_spine_rebuilds_on_content_change(spark, tmp_path):
 def test_schema_contract_all_green_and_complete(spark, sf_oracle):
     """Every contract column present with ok=1 on the healthy fixture;
     exactly the contract's row count (no undeclared columns)."""
-    from bigbugdata_spark.operators.dq_schema import CONTRACT
+    from bigbugdata_spark.operators.dq import CONTRACT
 
     rows = SPECS["dq_schema_contract"].fn(spark, sf_oracle).collect()
     assert len(rows) == len(CONTRACT)
@@ -535,7 +534,7 @@ def test_cooc_pairs_match_python_reference(spark, sf_small):
     from collections import Counter
 
     from bigbugdata_spark.catalog import table as _table
-    from bigbugdata_spark.operators.text_cooc import COOC_TOPK, COOC_WINDOW
+    from bigbugdata_spark.operators.text import COOC_TOPK, COOC_WINDOW
 
     texts = [
         r["text"] for r in _table(spark, sf_small, "documents").collect()
@@ -569,7 +568,7 @@ def test_forecast_backtest_matches_python_reference(spark, sf_small):
 
     from bigbugdata_spark.catalog import table as _table
     from bigbugdata_spark.functions.fragments import cents_col
-    from bigbugdata_spark.operators.events_forecast import LAG_DAYS
+    from bigbugdata_spark.operators.events import LAG_DAYS
 
     panel_rows = (
         _table(spark, sf_small, "events")
@@ -610,7 +609,7 @@ def test_ndv_quality_flags_and_exacts(spark, sf_oracle):
     from pyspark.sql import functions as F
 
     from bigbugdata_spark.catalog import table as _table
-    from bigbugdata_spark.operators.profile_ndv import _COLS
+    from bigbugdata_spark.operators.profile import _COLS
 
     rows = {r["col_name"]: r for r in SPECS["prof_ndv_quality"].fn(spark, sf_oracle).collect()}
     assert set(rows) == set(_COLS)
@@ -639,8 +638,8 @@ def test_knn_outliers_consistent_with_spine(spark, sf_oracle):
     branches live on the fixture; underfilled-K implies isolated."""
     from pyspark.sql import functions as F
 
-    from bigbugdata_spark.operators.similarity_graph_core import knn_edges
-    from bigbugdata_spark.operators.similarity_outlier import (
+    from bigbugdata_spark.operators.similarity_graph import (
+        knn_edges,
         ISOLATION_T_PPM,
         KNN_K,
     )

@@ -52,8 +52,7 @@ def _candidate_count(spark, sf_dir: str) -> int:
     batch slice — the stage BEFORE exact-Jaccard verification, i.e. the
     quantity the collision-bound claim is about."""
     from bigbugdata_spark.operators.dedup import _doc_shingles
-    from bigbugdata_spark.operators.dedup_incr_core import _incoming_col
-    from bigbugdata_spark.operators.dedup_incr_lsh import _band_frame
+    from bigbugdata_spark.operators.dedup_incr import _incoming_col, _band_frame
 
     sh = _doc_shingles(spark, sf_dir)
     bands = _band_frame(sh)
@@ -129,7 +128,7 @@ def test_sup_count_twin_and_router_reach():
         sql_sup_count,
         sup_count,
     )
-    from bigbugdata_spark.operators.similarity_knn import KNN_PROBE
+    from bigbugdata_spark.operators.similarity_graph import KNN_PROBE
 
     con = duckdb.connect()
     for k in (IVF_K, 22, 44, 156, 1000, 31623):
@@ -147,7 +146,7 @@ def test_knn_edges_atomic_write_leaves_no_tmp(spark, sf_oracle):
     crashed EARLIER run's young leftover (spared by the age-gated
     collector for TTL) reads as pre-existing, not as this write
     leaking."""
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     fp = G.generation_fp(sf_oracle)
     loc = Path(G.index_path(f"{G._EDGES_PREFIX}{fp}"))
@@ -169,7 +168,7 @@ def test_knn_edges_atomic_write_leaves_no_tmp(spark, sf_oracle):
 def test_graph_memo_evicts_other_corpora(spark, sf_oracle, tmp_path):
     """ADVICE r11: touching a second corpus evicts the first corpus's
     memo entries (bounded checkpoint blocks in long-lived sessions)."""
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     src = Path(sf_oracle) / "embeddings.parquet"
     dst = tmp_path / "embeddings.parquet"
@@ -216,7 +215,7 @@ def test_multi_touch_credit_conserves_cents(spark, sf_oracle):
 def test_numeric_histogram_conserves_and_bounds(spark, sf_oracle):
     """Bucket counts conserve to the table sizes; bucket ids stay in
     [0, HIST_BUCKETS); bucket_lo is monotone in bucket id per column."""
-    from bigbugdata_spark.operators.profile_hist import HIST_BUCKETS
+    from bigbugdata_spark.operators.profile import HIST_BUCKETS
 
     rows = SPECS["prof_numeric_histogram"].fn(spark, sf_oracle).collect()
     n_orders = spark.read.parquet(f"{sf_oracle}/orders.parquet").count()
@@ -290,7 +289,7 @@ def test_stream_mta_kernel_path_and_reset():
     touch and resets the path, an empty path credits organic."""
     import pandas as pd
 
-    from bigbugdata_spark.streaming.mta import _credit_path
+    from bigbugdata_spark.streaming.events import _credit_path
 
     class _S:
         def __init__(self):
@@ -420,7 +419,7 @@ def test_bot_regularity_planted_fixture(spark, tmp_path):
     a user below MIN_EVENTS emits no row."""
     import datetime as dt
 
-    from bigbugdata_spark.operators.events_bots import MIN_EVENTS
+    from bigbugdata_spark.operators.events import MIN_EVENTS
 
     base = dt.datetime(2024, 1, 1)
     rows = []

@@ -30,8 +30,8 @@ SPECS = load_all()
 
 
 def _gen_paths(sf_dir: str) -> tuple[Path, Path]:
-    from bigbugdata_spark.operators.dedup_incr_core import index_path
-    from bigbugdata_spark.operators.similarity_incr import (
+    from bigbugdata_spark.operators.dedup_incr import index_path
+    from bigbugdata_spark.operators.similarity import (
         _IVF_CB_PREFIX,
         _IVF_CNT_PREFIX,
         ivf_generation_fp,
@@ -53,8 +53,9 @@ def test_ivf_generation_adoption_equals_rebuild(spark, sf_oracle):
     assignment (the artifact IS the inverted file's sizes, not a
     cached approximation)."""
     from bigbugdata_spark.functions.fragments import scaled_ivf_k
-    from bigbugdata_spark.operators.similarity import ivf_assign, ivf_cents
-    from bigbugdata_spark.operators.similarity_incr import (
+    from bigbugdata_spark.operators.similarity import (
+        ivf_assign,
+        ivf_cents,
         _existing_corpus,
         ivf_index_generation,
     )
@@ -87,7 +88,7 @@ def test_ivf_generation_partial_write_rebuilds(spark, sf_oracle):
     """Adoption is gated on BOTH _SUCCESS markers: a generation with
     one location missing (the crash-between-renames window) is not
     half-adopted — the next call rebuilds both."""
-    from bigbugdata_spark.operators.similarity_incr import ivf_index_generation
+    from bigbugdata_spark.operators.similarity import ivf_index_generation
 
     cb_loc, cnt_loc = _gen_paths(sf_oracle)
     ivf_index_generation(spark, sf_oracle)
@@ -140,7 +141,7 @@ def test_incremental_assign_warm_plan_is_batch_sized(spark, sf_oracle):
     parquets.  Through r12 the plan held THREE embeddings scans
     (existing-assign, batch-assign, codebook sample) — the O(corpus)
     recompute this round moved into the amortized build."""
-    from bigbugdata_spark.operators.similarity_incr import ivf_index_generation
+    from bigbugdata_spark.operators.similarity import ivf_index_generation
     from bigbugdata_spark.plans.inspect import scan_info
 
     ivf_index_generation(spark, sf_oracle)  # ensure warm
@@ -160,7 +161,7 @@ def test_stream_mta_over_cap_through_engine(spark, tmp_path):
     whose credit matches the uncapped batch math."""
     import datetime as dt
 
-    from bigbugdata_spark.streaming.mta import MTA_PATH_CAP
+    from bigbugdata_spark.streaming.events import MTA_PATH_CAP
 
     base = dt.datetime(2024, 1, 1)
     rows = []
@@ -397,7 +398,7 @@ def _mta_chunk(rows):
 def _mta_run(state, rows):
     import pandas as pd
 
-    from bigbugdata_spark.streaming.mta import _credit_path
+    from bigbugdata_spark.streaming.events import _credit_path
 
     out = list(_credit_path((1,), iter([_mta_chunk(rows)]), state))
     return pd.concat(out) if out else None
@@ -408,7 +409,7 @@ def test_stream_mta_at_cap_equals_uncapped_batch_math():
     every touch credits, base/remainder math identical to the batch
     derivation (the cap bounds state, it does not change any path a
     real user produces — sf0.1's max run is 45, an order below)."""
-    from bigbugdata_spark.streaming.mta import MTA_PATH_CAP
+    from bigbugdata_spark.streaming.events import MTA_PATH_CAP
 
     s = _State()
     cap = MTA_PATH_CAP
@@ -428,7 +429,7 @@ def test_stream_mta_over_cap_credits_last_k_exactly():
     credits exactly the last MTA_PATH_CAP touches (deterministic
     last-K degrade), state never exceeds the cap, and total credit
     still conserves the purchase's cents."""
-    from bigbugdata_spark.streaming.mta import MTA_PATH_CAP
+    from bigbugdata_spark.streaming.events import MTA_PATH_CAP
 
     s = _State()
     cap = MTA_PATH_CAP
@@ -450,7 +451,7 @@ def test_stream_mta_over_cap_credits_last_k_exactly():
 def _funnel_run(state, rows):
     import pandas as pd
 
-    from bigbugdata_spark.streaming.funnel_steps import _advance_funnel
+    from bigbugdata_spark.streaming.events import _advance_funnel
 
     out = list(_advance_funnel((7,), iter([_mta_chunk(rows)]), state))
     return list(pd.concat(out)["step"]) if out else []
@@ -461,7 +462,7 @@ def test_stream_funnel_kernel_steps_and_deadlines():
     (t1, t1+6h], the purchase only inside (t2, t2+6h]; each step emits
     exactly once; pre-signup clicks and equal-timestamp boundaries
     (strict >) are ignored — the batch query's exact semantics."""
-    from bigbugdata_spark.operators.events_funnel_steps import STEP_WINDOW_US
+    from bigbugdata_spark.operators.events import STEP_WINDOW_US
 
     w_s = STEP_WINDOW_US // 1_000_000  # the 6h window in seconds
     # full conversion, sliced across two calls (state round-trip)

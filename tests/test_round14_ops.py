@@ -89,14 +89,14 @@ def _chunk(rows):
 
 
 def _mta_run(state, rows):
-    from bigbugdata_spark.streaming.mta import _credit_path
+    from bigbugdata_spark.streaming.events import _credit_path
 
     out = list(_credit_path((1,), iter([_chunk(rows)]), state))
     return pd.concat(out) if out else None
 
 
 def _funnel_run(state, rows):
-    from bigbugdata_spark.streaming.funnel_steps import _advance_funnel
+    from bigbugdata_spark.streaming.events import _advance_funnel
 
     out = list(_advance_funnel((7,), iter([_chunk(rows)]), state))
     return list(pd.concat(out)["step"]) if out else []
@@ -256,9 +256,9 @@ def test_stream_mta_reordered_feed_fails_through_engine(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     from bigbugdata_spark.functions.fragments import cents_col
-    from bigbugdata_spark.streaming.mta import (
-        _OUTPUT_SCHEMA,
-        _STATE_SCHEMA,
+    from bigbugdata_spark.streaming.events import (
+        _MTA_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
+        _MTA_STATE_SCHEMA as _STATE_SCHEMA,
         _credit_path,
     )
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -317,9 +317,7 @@ def test_stream_funnel_engine_slicing_fuzz(spark, tmp_path):
         tuple(r)
         for r in SPECS["evt_funnel_steps"].fn(spark, str(tmp_path)).collect()
     ]
-    from bigbugdata_spark.streaming.funnel_steps import (
-        evt_stream_funnel_steps,
-    )
+    from bigbugdata_spark.streaming.events import evt_stream_funnel_steps
 
     for trial in range(2):
         cuts = sorted(rng.sample(range(1, len(rows)), rng.randint(2, 5)))
@@ -333,9 +331,9 @@ def test_stream_funnel_engine_slicing_fuzz(spark, tmp_path):
         # default file stream delivers every available file in ONE
         # availableNow batch, so force one-file-per-batch via the
         # harness to make the slicing real
-        from bigbugdata_spark.streaming.funnel_steps import (
-            _OUTPUT_SCHEMA,
-            _STATE_SCHEMA,
+        from bigbugdata_spark.streaming.events import (
+            _FUNNEL_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
+            _FUNNEL_STATE_SCHEMA as _STATE_SCHEMA,
             _advance_funnel,
         )
         from pyspark.sql.streaming.state import GroupStateTimeout
@@ -424,9 +422,7 @@ def test_publish_generation_adopts_concurrent_winner(tmp_path, monkeypatch):
     import errno
     import os
 
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        publish_generation,
-    )
+    from bigbugdata_spark.operators.dedup_incr import publish_generation
 
     def _racing_rename(winner_success):
         def fake(src, dst):
@@ -465,9 +461,7 @@ def test_publish_generation_never_deletes_a_complete_target(tmp_path):
     rmtree-then-rename window (r14 self-review — the first fix only
     covered the interleaving where the winner renamed between our
     rmtree and our rename)."""
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        publish_generation,
-    )
+    from bigbugdata_spark.operators.dedup_incr import publish_generation
 
     tmp = tmp_path / "gen_w.tmp"
     loc = tmp_path / "gen_w"
@@ -486,9 +480,7 @@ def test_publish_generation_never_deletes_a_complete_target(tmp_path):
 def test_publish_generation_normal_path(tmp_path):
     """No race: tmp moves into place wholesale, replacing any stale
     prior generation directory."""
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        publish_generation,
-    )
+    from bigbugdata_spark.operators.dedup_incr import publish_generation
 
     tmp = tmp_path / "gen_x.tmp"
     loc = tmp_path / "gen_x"
@@ -514,7 +506,7 @@ def test_mta_fixture_runs_sit_far_below_path_cap(spark, sf_oracle):
     from pyspark.sql import Window
 
     from bigbugdata_spark.catalog import table
-    from bigbugdata_spark.streaming.mta import MTA_PATH_CAP
+    from bigbugdata_spark.streaming.events import MTA_PATH_CAP
 
     ev = table(spark, sf_oracle, "events")
     w = (
@@ -584,9 +576,9 @@ def _mta_stream_build(ev):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from bigbugdata_spark.functions.fragments import cents_col
-    from bigbugdata_spark.streaming.mta import (
-        _OUTPUT_SCHEMA,
-        _STATE_SCHEMA,
+    from bigbugdata_spark.streaming.events import (
+        _MTA_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
+        _MTA_STATE_SCHEMA as _STATE_SCHEMA,
         _credit_path,
     )
 
@@ -612,9 +604,9 @@ def _mta_stream_build(ev):
 def _funnel_stream_build(ev):
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from bigbugdata_spark.streaming.funnel_steps import (
-        _OUTPUT_SCHEMA,
-        _STATE_SCHEMA,
+    from bigbugdata_spark.streaming.events import (
+        _FUNNEL_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
+        _FUNNEL_STATE_SCHEMA as _STATE_SCHEMA,
         _advance_funnel,
     )
 
@@ -788,9 +780,7 @@ def test_publish_debris_clear_cannot_destroy_a_late_winner(
     import os
     import shutil
 
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        publish_generation,
-    )
+    from bigbugdata_spark.operators.dedup_incr import publish_generation
 
     tmp = tmp_path / "gen_z.tmp-me"
     tmp.mkdir()
@@ -843,7 +833,7 @@ def test_build_tmp_paths_are_unique_per_builder():
     other's in-progress Spark write (r14 review)."""
     import pathlib
 
-    from bigbugdata_spark.operators.dedup_incr_core import build_tmp_path
+    from bigbugdata_spark.operators.dedup_incr import build_tmp_path
 
     loc = pathlib.Path("/x/knn_edges_aaaaaaaa1111")
     a, b = build_tmp_path(loc), build_tmp_path(loc)
@@ -863,7 +853,7 @@ def test_sweep_spares_live_same_fp_builds(spark, tmp_path, monkeypatch):
     collect_abandoned_siblings.  Only the published generation name
     and same-fp tmp/debris survive; other-fp generations, their tmps,
     and their debris are fair game."""
-    from bigbugdata_spark.operators import dedup_incr_core as core
+    from bigbugdata_spark.operators import dedup_incr as core
 
     root = tmp_path / "idxroot"
     root.mkdir()
@@ -949,7 +939,7 @@ def test_concurrent_generation_builders_both_succeed(tmp_path):
     script = (
         "import sys\n"
         "from bigbugdata_spark.session import get_spark\n"
-        "from bigbugdata_spark.operators.similarity_incr import "
+        "from bigbugdata_spark.operators.similarity import "
         "ivf_index_generation\n"
         "cb, cnt = ivf_index_generation(get_spark('race'), sys.argv[1])\n"
         "print('BUILDER_OK', cb.count(), cnt.count())\n"
@@ -969,8 +959,8 @@ def test_concurrent_generation_builders_both_succeed(tmp_path):
     ]
     outs = [p.communicate(timeout=600) for p in procs]
 
-    from bigbugdata_spark.operators.dedup_incr_core import index_path
-    from bigbugdata_spark.operators.similarity_incr import (
+    from bigbugdata_spark.operators.dedup_incr import index_path
+    from bigbugdata_spark.operators.similarity import (
         _IVF_CB_PREFIX,
         _IVF_CNT_PREFIX,
         ivf_generation_fp,
@@ -1019,7 +1009,7 @@ def test_sessionizer_timeout_and_state_survive_query_restart(
     recovered-then-advanced watermark passes it."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from bigbugdata_spark.streaming.stateful import (
+    from bigbugdata_spark.streaming.events import (
         _SESSION_OUTPUT_SCHEMA,
         _SESSION_STATE_SCHEMA,
         _sessionize_user,
@@ -1084,9 +1074,7 @@ def test_collector_reaps_abandoned_spares_live(tmp_path):
     import os
     import time
 
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        collect_abandoned_siblings,
-    )
+    from bigbugdata_spark.operators.dedup_incr import collect_abandoned_siblings
 
     loc = tmp_path / "gen_q"
     loc.mkdir()
@@ -1120,9 +1108,7 @@ def test_collector_liveness_is_newest_file_not_dir_mtime(tmp_path):
     import os
     import time
 
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        collect_abandoned_siblings,
-    )
+    from bigbugdata_spark.operators.dedup_incr import collect_abandoned_siblings
 
     loc = tmp_path / "gen_r"
     busy = tmp_path / "gen_r.tmp-busy"
@@ -1155,9 +1141,7 @@ def test_publish_generation_interleaving_fuzz(tmp_path):
 
     from hypothesis import given, settings, strategies as st
 
-    from bigbugdata_spark.operators.dedup_incr_core import (
-        publish_generation,
-    )
+    from bigbugdata_spark.operators.dedup_incr import publish_generation
 
     real_rename, real_rmtree = os.rename, shutil.rmtree
 
@@ -1242,7 +1226,7 @@ def test_upsert_sink_exactly_once_across_restart_with_overlap(
     the overlapping key — the table ends exactly one row per event_id.
     This is the cross-instance face of test_streaming.py's replay
     idempotence (which replays into a FRESH checkpoint)."""
-    from bigbugdata_spark.streaming.sink import run_incremental_dedup_sink
+    from bigbugdata_spark.streaming.core import run_incremental_dedup_sink
 
     out, ckpt = tmp_path / "mat", tmp_path / "ckpt"
     _write_slice_files(

@@ -112,7 +112,7 @@ def test_sessionizer_restart_recovery_on_rocksdb_state_store(
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from bigbugdata_spark.streaming.core import rocksdb_state_store
-    from bigbugdata_spark.streaming.stateful import (
+    from bigbugdata_spark.streaming.events import (
         _SESSION_OUTPUT_SCHEMA,
         _SESSION_STATE_SCHEMA,
         _sessionize_user,
@@ -218,7 +218,7 @@ def test_publish_interleaving_fuzz_with_concurrent_sweep(tmp_path):
 
     from hypothesis import given, settings, strategies as st
 
-    from bigbugdata_spark.operators import dedup_incr_core as core
+    from bigbugdata_spark.operators import dedup_incr as core
 
     real_rename, real_rmtree = os.rename, shutil.rmtree
     fp = "aaaaaaaa1111"
@@ -478,10 +478,7 @@ def test_upsert_sink_converges_after_crash_between_write_and_commit(
     stands between the table and duplicate rows.  The restarted clean
     run must converge to exactly one row per event_id, including the
     untouched later slice."""
-    from bigbugdata_spark.streaming.sink import (
-        run_incremental_dedup_sink,
-        upsert_batch,
-    )
+    from bigbugdata_spark.streaming.core import run_incremental_dedup_sink, upsert_batch
 
     out, ckpt = tmp_path / "mat", tmp_path / "ckpt"
     _write_slice_files(
@@ -514,7 +511,7 @@ def test_bucketed_upsert_sink_converges_after_crash_mid_batch(
     bucketed table's own phase-1 append and land zero new rows for
     replayed keys — the bucketed layout changes the join physics
     (batch-side-only exchange), not the convergence contract."""
-    from bigbugdata_spark.streaming.sink import (
+    from bigbugdata_spark.streaming.core import (
         run_incremental_dedup_sink_bucketed,
         upsert_batch_bucketed,
     )
@@ -566,7 +563,7 @@ def test_rollup_sink_converges_after_crash_between_write_and_commit(
     merged rollup must equal the one-shot batch aggregation (a
     double-count would inflate n_events for batch 0's day/type
     groups)."""
-    from bigbugdata_spark.streaming.rollup import (
+    from bigbugdata_spark.operators.events import (
         merged_rollup,
         run_rollup_stream_sink,
         write_rollup_batch,
@@ -616,7 +613,7 @@ def test_scd2_sink_converges_after_crash_between_write_and_commit(
     view run."""
     import glob
 
-    from bigbugdata_spark.streaming.scd_sink import (
+    from bigbugdata_spark.operators.scd import (
         read_state_history,
         run_scd2_stream_sink,
         stamp_slice_mtimes,
@@ -692,9 +689,7 @@ def test_bucketed_upsert_antijoin_not_blinded_by_relation_cache(
     file index frozen at batch A and key 5 lands TWICE (observed
     [1, 5, 5, 6] before the fix).  The fresh-table case cannot catch
     this: there, no cache entry exists until the first read."""
-    from bigbugdata_spark.streaming.sink import (
-        run_incremental_dedup_sink_bucketed,
-    )
+    from bigbugdata_spark.streaming.core import run_incremental_dedup_sink_bucketed
 
     table = "r15_cache_leak_mat"
     spark.sql(f"DROP TABLE IF EXISTS {table}")
@@ -717,7 +712,7 @@ def test_bucketed_upsert_antijoin_not_blinded_by_relation_cache(
         )
         # drive with maxFilesPerTrigger=1 so A and B are separate
         # micro-batches within ONE query instance
-        from bigbugdata_spark.streaming.sink import upsert_batch_bucketed
+        from bigbugdata_spark.streaming.core import upsert_batch_bucketed
 
         def apply_batch(batch, _bid):
             upsert_batch_bucketed(

@@ -290,7 +290,7 @@ _SPINE_RUN = """
 import hashlib, json, sys
 sys.path.insert(0, sys.argv[1])
 from bigbugdata_spark.session import get_spark
-from bigbugdata_spark.operators import similarity_graph_core as G
+from bigbugdata_spark.operators import similarity_graph as G
 
 sf_dir = sys.argv[2]
 spark = get_spark(app_name="r16-spine-restart")
@@ -316,7 +316,7 @@ def test_spine_survives_session_restart_without_rebuild(sf_small):
     bytes served, floats included)."""
     import shutil
 
-    from bigbugdata_spark.operators import similarity_graph_core as G
+    from bigbugdata_spark.operators import similarity_graph as G
 
     loc = Path(G.index_path(f"{G._EDGES_PREFIX}{G.generation_fp(sf_small)}"))
     shutil.rmtree(loc, ignore_errors=True)
@@ -450,7 +450,7 @@ _IVF_RUN = """
 import hashlib, json, sys
 sys.path.insert(0, sys.argv[1])
 from bigbugdata_spark.session import get_spark
-from bigbugdata_spark.operators.similarity_incr import ivf_index_generation
+from bigbugdata_spark.operators.similarity import ivf_index_generation
 
 sf_dir = sys.argv[2]
 spark = get_spark(app_name="r16-ivf-restart")
@@ -475,8 +475,8 @@ def test_ivf_generation_survives_session_restart_without_rebuild(sf_small):
     by test_round13_ops; this is the cross-process adoption half."""
     import shutil
 
-    from bigbugdata_spark.operators import similarity_incr as SI
-    from bigbugdata_spark.operators.dedup_incr_core import index_path
+    from bigbugdata_spark.operators import similarity as SI
+    from bigbugdata_spark.operators.dedup_incr import index_path
 
     fp = SI.ivf_generation_fp(sf_small)
     locs = [
@@ -545,11 +545,10 @@ def test_attach_family_indexes_survive_session_restart(spark, sf_small):
     import shutil
     from importlib import import_module
 
-    from bigbugdata_spark.operators.dedup_incr_core import index_path
+    from bigbugdata_spark.operators.dedup_incr import index_path
 
     di = import_module("bigbugdata_spark.operators.dedup_incr")
-    dl = import_module("bigbugdata_spark.operators.dedup_incr_lsh")
-    er = import_module("bigbugdata_spark.operators.events_rollup_incr")
+    er = import_module("bigbugdata_spark.operators.events")
     specs = [
         (
             "bigbugdata_spark.operators.dedup_incr",
@@ -557,12 +556,12 @@ def test_attach_family_indexes_survive_session_restart(spark, sf_small):
             di._index_names(di._corpus_fingerprint(sf_small)),
         ),
         (
-            "bigbugdata_spark.operators.dedup_incr_lsh",
+            "bigbugdata_spark.operators.dedup_incr",
             "lsh_index",
-            dl._index_names(dl._corpus_fingerprint(sf_small)),
+            di._lsh_index_names(di._corpus_fingerprint(sf_small)),
         ),
         (
-            "bigbugdata_spark.operators.events_rollup_incr",
+            "bigbugdata_spark.operators.events",
             "rollup_store",
             (f"{er._PREFIX}{er._corpus_fingerprint(sf_small, 'events.parquet')}",),
         ),

@@ -31,7 +31,7 @@ generations (the window the r16 versioned-commit campaign did not
 cover): the gram/LSH/rollup append helpers run one saveAsTable-append
 JOB PER TABLE, so a writer killed between jobs tore the generation
 while the original build's _SUCCESS files kept the adoption gate
-green.  The r17 intent-sentinel protocol (dedup_incr_core.
+green.  The r17 intent-sentinel protocol (dedup_incr.
 begin_append_intent / commit_append_intent / pending_append_intents)
 is proven with a REAL process kill between the band and set appends,
 an in-process torn-state replication on the three-table gram path,
@@ -376,9 +376,9 @@ sys.path.insert(0, sys.argv[1])
 base_dir, full_dir = sys.argv[2], sys.argv[3]
 from pyspark.sql import functions as F
 from bigbugdata_spark.session import get_spark
-import bigbugdata_spark.operators.dedup_incr_lsh as L
+import bigbugdata_spark.operators.dedup_incr as L
 from bigbugdata_spark.operators.dedup import _doc_shingles
-from bigbugdata_spark.operators.dedup_incr_core import _corpus_fingerprint
+from bigbugdata_spark.operators.dedup_incr import _corpus_fingerprint
 
 spark = get_spark(app_name="torn-append-child")
 L.lsh_index(spark, base_dir)                      # build the generation
@@ -429,12 +429,12 @@ def test_lsh_append_killed_between_tables_is_torn_then_rebuilt(
 
     from tests.test_round10_ops import _doc_rows, _write_docs
     from bigbugdata_spark.operators.dedup import _doc_shingles
-    from bigbugdata_spark.operators.dedup_incr_core import (
+    from bigbugdata_spark.operators.dedup_incr import (
         _corpus_fingerprint,
         index_path,
         pending_append_intents,
     )
-    import bigbugdata_spark.operators.dedup_incr_lsh as L
+    import bigbugdata_spark.operators.dedup_incr as L
 
     rows = _doc_rows()
     base_dir, full_dir = tmp_path / "base", tmp_path / "full"
@@ -453,7 +453,7 @@ def test_lsh_append_killed_between_tables_is_torn_then_rebuilt(
     assert "FIRST_APPEND_DONE" in proc.stdout
 
     fp = _corpus_fingerprint(str(base_dir))
-    band_name, set_name = L._index_names(fp)
+    band_name, set_name = L._lsh_index_names(fp)
     band_loc, set_loc = index_path(band_name), index_path(set_name)
 
     # (a) torn: sentinel present; band has the batch's docs, set does not
@@ -527,7 +527,7 @@ def test_gram_append_torn_state_blocks_adoption_and_further_appends(
     from tests.test_round10_ops import _doc_rows, _write_docs
     from bigbugdata_spark.operators.dedup import _doc_shingles
     import bigbugdata_spark.operators.dedup_incr as D
-    from bigbugdata_spark.operators.dedup_incr_core import (
+    from bigbugdata_spark.operators.dedup_incr import (
         _corpus_fingerprint,
         attach_index_tables,
         begin_append_intent,
@@ -594,7 +594,7 @@ def test_completed_append_commits_sentinel_free_and_adopts(spark, tmp_path):
     from tests.test_round10_ops import _doc_rows, _write_docs
     from bigbugdata_spark.operators.dedup import _doc_shingles
     import bigbugdata_spark.operators.dedup_incr as D
-    from bigbugdata_spark.operators.dedup_incr_core import (
+    from bigbugdata_spark.operators.dedup_incr import (
         _corpus_fingerprint,
         index_path,
         pending_append_intents,

@@ -8,8 +8,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.operators.corpus_shard import N_SHARDS
-from bigbugdata_spark.operators.text_bpe import TOP_PAIRS
+from bigbugdata_spark.operators.corpus import N_SHARDS
+from bigbugdata_spark.operators.text import TOP_PAIRS
 from bigbugdata_spark.plans import inspect as I
 from bigbugdata_spark.registry import load_all
 
@@ -86,7 +86,7 @@ def test_distribution_drift_flag_is_exact_integer(spark, sf):
     """The drift flag must agree with the reported fp delta at the
     documented threshold (the integer cross-multiplication is the same
     predicate, decided exactly)."""
-    from bigbugdata_spark.operators.dq_drift import DRIFT_THRESHOLD_PM
+    from bigbugdata_spark.operators.dq import DRIFT_THRESHOLD_PM
 
     rows = SPECS["dq_distribution_drift"].fn(spark, sf).collect()
     for r in rows:
@@ -100,11 +100,7 @@ def test_distribution_drift_fires_on_planted_shift(spark):
     volume stays flat — the exact failure volume checks cannot see."""
     import datetime as dt
 
-    from bigbugdata_spark.operators.dq_drift import (
-        DRIFT_CUTOFF,
-        finish_drift,
-        window_counts,
-    )
+    from bigbugdata_spark.operators.dq import DRIFT_CUTOFF, finish_drift, window_counts
 
     cutoff = dt.datetime.fromisoformat(DRIFT_CUTOFF)
     before = cutoff - dt.timedelta(days=1)
@@ -152,7 +148,7 @@ def test_shard_assignment_is_stable_under_append(spark, sf):
     """Membership is a pure function of doc_id: sharding a subset
     assigns every doc the same shard as sharding the full corpus —
     the re-shard-after-append guarantee the docstring sells."""
-    from bigbugdata_spark.operators.corpus_shard import shard_col
+    from bigbugdata_spark.operators.corpus import shard_col
 
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     full = docs.select("doc_id", shard_col(F.col("doc_id")).alias("s"))
@@ -268,7 +264,7 @@ def test_state_dwell_conservation(spark, sf):
     start - first run start) — the chain covers each user's history
     with no gaps or overlaps."""
     from bigbugdata_spark.catalog import table
-    from bigbugdata_spark.operators.scd_core import runs_from_events
+    from bigbugdata_spark.operators.scd import runs_from_events
 
     rows = SPECS["evt_state_dwell"].fn(spark, sf).collect()
     runs = runs_from_events(table(spark, sf, "events")).cache()
@@ -324,7 +320,7 @@ def test_rfm_never_cell_on_orderless_customers(spark, sf):
     """Every sf0.01 customer has orders, so the left-join path is
     fixture-invisible: plant two orderless customers and prove they
     land in exactly the ('never','none','none') cell with zero cents."""
-    from bigbugdata_spark.operators.orders_rfm import rfm_segments
+    from bigbugdata_spark.operators.orders import rfm_segments
 
     orders = spark.read.parquet(f"{sf}/orders.parquet")
     cust = spark.read.parquet(f"{sf}/customer.parquet").limit(0)
@@ -405,7 +401,7 @@ def test_bigram_lm_plan_single_scan(spark, sf):
 def test_stream_lifecycle_equals_batch_and_subset_of_features(spark, sf):
     """stream == batch through the shared builder, and the overlapping
     columns agree row-for-row with the full batch feature table."""
-    from bigbugdata_spark.streaming.features import batch_user_lifecycle
+    from bigbugdata_spark.streaming.events import batch_user_lifecycle
 
     stream = sorted(
         tuple(r)
@@ -546,7 +542,7 @@ def test_emb_coverage_corrupted_fixture_exact_counts(spark):
     import math
 
     from bigbugdata_spark.functions.fragments import EMB_DIM
-    from bigbugdata_spark.operators.dq_emb import emb_coverage
+    from bigbugdata_spark.operators.dq import emb_coverage
 
     good = [0.5] * EMB_DIM
     docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
@@ -607,8 +603,8 @@ def test_release_manifest_consistent_with_components(spark, sf):
     """The composed manifest must agree with its component queries
     computed independently: released docs = quality-gated docs minus
     extra exact-dup copies among them; keys stay in range."""
-    from bigbugdata_spark.operators.corpus_shard import N_SHARDS
-    from bigbugdata_spark.operators.pipeline_release import MIN_QUALITY
+    from bigbugdata_spark.operators.corpus import N_SHARDS
+    from bigbugdata_spark.operators.pipeline import MIN_QUALITY
     from bigbugdata_spark.operators.text import text_quality_score
 
     rows = SPECS["pipe_release_manifest"].fn(spark, sf).collect()
@@ -638,7 +634,7 @@ def test_template_prefix_matches_python_witness(spark, sf):
     from collections import Counter
 
     from bigbugdata_spark.functions import hashing as H
-    from bigbugdata_spark.operators.text_prefix import PREFIX_TOKENS
+    from bigbugdata_spark.operators.text import PREFIX_TOKENS
 
     docs = (
         spark.read.parquet(f"{sf}/documents.parquet")
@@ -663,7 +659,7 @@ def test_template_prefix_matches_python_witness(spark, sf):
 
 
 def test_user_burst_flags_and_conservation(spark, sf):
-    from bigbugdata_spark.operators.events_burst import BURST_PM
+    from bigbugdata_spark.operators.events import BURST_PM
 
     rows = SPECS["evt_user_burst"].fn(spark, sf).collect()
     ev = spark.read.parquet(f"{sf}/events.parquet")
@@ -684,7 +680,7 @@ def test_budget_trim_respects_budget_and_priority(spark, sf):
     """All three statuses live; admitted tokens never exceed the
     budget; admission follows the (quality DESC, lang ASC) priority
     order exactly — no dropped band may precede a full one."""
-    from bigbugdata_spark.operators.corpus_budget import TOKEN_BUDGET
+    from bigbugdata_spark.operators.corpus import TOKEN_BUDGET
 
     rows = sorted(
         SPECS["corpus_budget_trim"].fn(spark, sf).collect(),
@@ -712,7 +708,7 @@ def test_budget_trim_hard_guarantee_on_skewed_band(spark):
     """The review scenario the greedy exists for: a marginal band with
     one outsized document. The greedy must skip it when it would cross
     the remaining budget, keeping admitted tokens <= budget exactly."""
-    from bigbugdata_spark.operators.corpus_budget import budget_trim
+    from bigbugdata_spark.operators.corpus import budget_trim
 
     rows = (
         # band A (q=1000): 90 tokens -> full under budget 100
@@ -760,7 +756,7 @@ def test_knn_graph_shape_and_recall(spark, sf):
 
     import numpy as np
 
-    from bigbugdata_spark.operators.similarity_knn import KNN_K
+    from bigbugdata_spark.operators.similarity_graph import KNN_K
 
     rows = SPECS["sim_knn_graph"].fn(spark, sf).collect()
     per_src = defaultdict(list)
@@ -907,7 +903,7 @@ def test_stream_drift_foreachbatch_overwrite_sink(spark, sf, tmp_path):
     overwrite a parquet card table per trigger via foreachBatch; the
     final table finished through finish_drift equals the batch query,
     and re-running the stream (replay) leaves it unchanged."""
-    from bigbugdata_spark.operators.dq_drift import finish_drift, window_counts
+    from bigbugdata_spark.operators.dq import finish_drift, window_counts
     from bigbugdata_spark.streaming.core import stream_events
 
     out = str(tmp_path / "drift_card")

@@ -148,7 +148,7 @@ def test_bpe_train_equals_python_greedy_witness(spark, sf_oracle):
     import collections
     import re
 
-    from bigbugdata_spark.operators.text_bpe_train import BPE_STEPS
+    from bigbugdata_spark.operators.text import BPE_STEPS
 
     docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
     freqs = collections.Counter()
@@ -246,9 +246,9 @@ def test_lsh_index_incremental_append_equals_rebuild(tmp_path, spark):
     from pyspark.sql import functions as F
 
     from bigbugdata_spark.operators.dedup import _doc_shingles
-    from bigbugdata_spark.operators.dedup_incr import _corpus_fingerprint
-    from bigbugdata_spark.operators.dedup_incr_lsh import (
-        _index_names,
+    from bigbugdata_spark.operators.dedup_incr import (
+        _corpus_fingerprint,
+        _lsh_index_names as _index_names,
         append_batch_to_lsh_index,
         lsh_index,
     )
@@ -381,7 +381,7 @@ def test_revenue_concentration_bounds(spark, sf_oracle):
     against the raw table; the plan takes top-k (no global sort)."""
     from pyspark.sql import functions as F
 
-    from bigbugdata_spark.operators.orders_conc import TOP_CUSTOMERS
+    from bigbugdata_spark.operators.orders import TOP_CUSTOMERS
     from bigbugdata_spark.plans import inspect as I
 
     df = SPECS["orders_revenue_concentration"].fn(spark, sf_oracle)

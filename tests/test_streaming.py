@@ -11,8 +11,8 @@ from pyspark.sql import functions as F
 
 from bigbugdata_spark.catalog import table
 from bigbugdata_spark.registry import load_all
-from bigbugdata_spark.streaming.stateful import stream_user_totals
-from bigbugdata_spark.streaming.windows import (
+from bigbugdata_spark.streaming.events import (
+    stream_user_totals,
     stream_tumbling_append,
     stream_tumbling_complete,
 )
@@ -57,7 +57,7 @@ def test_stateful_sessionizer_matches_batch_sessions(spark, sf_oracle):
     session windows, minus each user's final session when the final
     watermark hasn't passed its close (the append-mode finalization
     contract)."""
-    from bigbugdata_spark.streaming.stateful import stream_sessions
+    from bigbugdata_spark.streaming.events import stream_sessions
 
     fmt = "%Y-%m-%d %H:%M:%S.%f"
     streamed = {
@@ -96,7 +96,7 @@ def test_streaming_dedup_matches_batch_distinct(spark, sf_oracle):
     """Watermarked dropDuplicates over the full stream == batch distinct
     (every event's time is within the single availableNow batch, so no
     key state expires before its duplicates arrive)."""
-    from bigbugdata_spark.streaming.dedup import (
+    from bigbugdata_spark.streaming.events import (
         batch_dedup_events,
         stream_dedup_events,
     )
@@ -132,7 +132,7 @@ def test_stateful_user_totals_match_batch(spark, sf_oracle):
 def test_stream_stream_join_matches_batch(spark, sf_oracle):
     """Inner stream-stream interval join == the batch join: the
     watermark bounds state, never the inner-join output."""
-    from bigbugdata_spark.streaming.joins import (
+    from bigbugdata_spark.streaming.events import (
         batch_click_attribution,
         evt_stream_click_attribution,
     )
@@ -148,7 +148,7 @@ def test_foreach_batch_incremental_sink_is_idempotent(tmp_path, spark, sf_oracle
     """The foreachBatch upsert sink materializes the stream exactly once:
     a full replay (fresh checkpoint, same source) appends nothing."""
     from bigbugdata_spark.catalog import table
-    from bigbugdata_spark.streaming.sink import run_incremental_dedup_sink
+    from bigbugdata_spark.streaming.core import run_incremental_dedup_sink
 
     out = str(tmp_path / "events_table")
     run_incremental_dedup_sink(spark, sf_oracle, out, str(tmp_path / "ckpt1"))
@@ -172,7 +172,7 @@ def test_bucketed_incremental_sink_idempotent_and_shuffle_free(
 
     from bigbugdata_spark.catalog import table
     from bigbugdata_spark.plans import inspect as I
-    from bigbugdata_spark.streaming.sink import run_incremental_dedup_sink_bucketed
+    from bigbugdata_spark.streaming.core import run_incremental_dedup_sink_bucketed
 
     tname = "bb_events_upsert_bucketed"
     spark.sql(f"DROP TABLE IF EXISTS {tname}")
@@ -227,7 +227,7 @@ def test_partitioned_stream_sink_layout_and_rows(tmp_path, spark, sf_oracle):
 
     from bigbugdata_spark.catalog import table
     from bigbugdata_spark.sources.partitioned import DAY_COL
-    from bigbugdata_spark.streaming.sink import run_partitioned_stream_sink
+    from bigbugdata_spark.streaming.core import run_partitioned_stream_sink
 
     out = str(tmp_path / "events_lake")
     run_partitioned_stream_sink(
@@ -263,7 +263,7 @@ def test_scd2_incremental_sink_matches_batch_and_is_idempotent(
 
     from bigbugdata_spark.catalog import table
     from bigbugdata_spark.registry import load_all
-    from bigbugdata_spark.streaming.scd_sink import (
+    from bigbugdata_spark.operators.scd import (
         BUCKET_COL,
         read_state_history,
         run_scd2_stream_sink,
@@ -343,7 +343,7 @@ def test_stream_static_enrichment_matches_batch(spark, sf_oracle):
     same shared plan row-for-row (the registered oracle additionally
     re-derives it in DuckDB)."""
     from bigbugdata_spark.registry import load_all
-    from bigbugdata_spark.streaming.enrich import batch_enriched_totals
+    from bigbugdata_spark.streaming.events import batch_enriched_totals
 
     specs = load_all()
     streamed = {
@@ -370,7 +370,7 @@ def test_scd2_out_of_order_slice_detected_then_repaired(
     the registered oracle. Afterwards, replay idempotence still holds."""
     import pytest
 
-    from bigbugdata_spark.streaming.scd_sink import (
+    from bigbugdata_spark.operators.scd import (
         OutOfOrderSliceError,
         read_state_history,
         repair_user_runs,
@@ -427,10 +427,7 @@ def test_scd2_bucket_count_is_persisted_and_validated(tmp_path, spark, sf_oracle
 
     import pytest
 
-    from bigbugdata_spark.streaming.scd_sink import (
-        _META_NAME,
-        upsert_state_runs,
-    )
+    from bigbugdata_spark.operators.scd import _META_NAME, upsert_state_runs
 
     ev = table(spark, sf_oracle, "events")
     out = str(tmp_path / "table")

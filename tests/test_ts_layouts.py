@@ -132,7 +132,7 @@ def test_stream_matches_batch_on_every_layout(spark, layout_dirs):
     """The r4 failure mode: batch and stream interpreting the same file
     differently. The streaming tumbling query (complete mode, availableNow)
     must equal the batch tumbling query bit-for-bit on each layout."""
-    from bigbugdata_spark.streaming.windows import stream_tumbling_complete
+    from bigbugdata_spark.streaming.events import stream_tumbling_complete
 
     specs = load_all()
     batch_fn = specs["evt_tumbling_window"].fn

@@ -291,7 +291,7 @@ def test_backfill_through_versioned_table_lifecycle(tmp_path, spark, sf_oracle):
         replace_versioned,
         unpin_version,
     )
-    from bigbugdata_spark.streaming.scd_sink import (
+    from bigbugdata_spark.operators.scd import (
         OutOfOrderSliceError,
         read_state_history,
         repair_user_runs,
