@@ -8,14 +8,27 @@ hand rather than the 200 default, and a generated-code cache large enough
 that one long-lived session compiles each plan shape once (a repeated
 kraken run or the many-query test session reuses its compiled classes
 instead of recompiling them on every run).
+
+The driver JVM starts from a per-user class-data-sharing archive
+(``CACHE_DIR``): the first session dumps the classes it loaded when its JVM
+exits, and later sessions map them instead of loading and verifying them
+again (see ``plan_class_archive``).
 """
 
 from __future__ import annotations
 
+import atexit
 import getpass
+import hashlib
 import os
+import shutil
+import subprocess
 import tempfile
+from dataclasses import dataclass
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 #: per-user session storage (advisory r9, same hazard as the dedup index
@@ -38,6 +51,206 @@ DERBY_HOME = os.path.join(tempfile.gettempdir(), f"bigbugdata-derby-{_USER}")
 #: entries a warm run compiles a handful.
 CODEGEN_CACHE_ENTRIES = 1000
 
+#: per-user cache of the driver JVM's class archive and the empty conf
+#: directory it is dumped with. Not under tempfile.gettempdir(): a caller may
+#: point TMPDIR at a per-run directory it deletes (perfbench does), which
+#: would throw the archive away after every run.
+CACHE_DIR = os.path.join(
+    os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache"),
+    "bigbugdata-spark",
+)
+#: environment variables through which the launcher puts user directories on
+#: the driver's classpath; JDK 17 refuses to dump an archive when a
+#: non-empty directory is on it
+_CLASSPATH_ENV = (
+    "SPARK_CLASSPATH",
+    "SPARK_DIST_CLASSPATH",
+    "HADOOP_CONF_DIR",
+    "YARN_CONF_DIR",
+)
+#: the JVM logs CDS warnings to stdout, where the CLI writes its CSVs; a dump
+#: logs hundreds (classes it skips), a stale archive one. Errors go to stderr.
+_CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
+#: seconds stop_spark waits for the driver JVM to exit. The exit that dumps
+#: the archive writes ~150 MB and took ~16 s on a busy 4-vCPU host.
+_JVM_EXIT_WAIT_S = 120
+
+
+@dataclass(frozen=True)
+class ArchiveBuild:
+    """A driver JVM that dumps its loaded classes to ``partial`` when it
+    exits, under ``lock``. JDK 17 crashes with SIGBUS when it maps a
+    truncated archive, so the dump is written under a name no session reads
+    and renamed to ``archive`` only once it is whole."""
+
+    partial: str
+    archive: str
+    lock: str
+
+    def finish(self, exit_status: int | None) -> bool:
+        """Publish the dump if the JVM exited with status 0, otherwise
+        delete it, and release the lock. Returns whether it published."""
+        try:
+            if exit_status != 0 or not os.path.isfile(self.partial):
+                return False
+            os.replace(self.partial, self.archive)
+            _prune(os.path.dirname(self.archive), keep=self.archive)
+            return True
+        finally:
+            _unlink(self.partial)
+            _unlink(self.lock)
+
+
+@dataclass(frozen=True)
+class ArchivePlan:
+    """How to launch the driver JVM: extra options for
+    ``spark.driver.extraJavaOptions``, the ``SPARK_CONF_DIR`` to launch
+    with, and the dump to publish at exit, if this launch builds one."""
+
+    java_options: str
+    conf_dir: str
+    build: ArchiveBuild | None
+
+
+def archive_key(spark_home: str, java: str) -> str:
+    """Hash of what a dumped archive depends on: the java binary and its
+    mtime, the pyspark version, and the name, size and mtime of every jar on
+    the launcher's classpath. A stale archive is rejected by the JVM anyway
+    (``-Xshare:auto``); the key keeps a new install from loading it at all."""
+    h = hashlib.sha256()
+    h.update(f"{java}\0{os.stat(java).st_mtime_ns}\0{pyspark.__version__}".encode())
+    jars = os.scandir(os.path.join(spark_home, "jars"))
+    for jar in sorted((e for e in jars if e.name.endswith(".jar")), key=lambda e: e.name):
+        st = jar.stat()
+        h.update(f"\0{jar.name}\0{st.st_size}\0{st.st_mtime_ns}".encode())
+    return h.hexdigest()[:24]
+
+
+def plan_class_archive(cache_dir: str, spark_home: str, java: str) -> ArchivePlan | None:
+    """Use the published archive for this install, or build it if no live
+    process is building it already; None launches the JVM without one.
+
+    pyspark puts ``$SPARK_CONF_DIR`` on the classpath, and JDK 17 dumps no
+    archive while a non-empty directory is on it. When the user has not set
+    it and the default ``$SPARK_HOME/conf`` holds only templates, the JVM is
+    launched with an empty per-user conf directory instead. A user-set conf
+    directory, or any other classpath directory, leaves the JVM as it is:
+    every run would otherwise pay for a dump that fails.
+    """
+    if "SPARK_CONF_DIR" in os.environ or any(os.environ.get(v) for v in _CLASSPATH_ENV):
+        return None
+    default_conf = os.path.join(spark_home, "conf")
+    if os.path.isdir(default_conf) and any(
+        not name.endswith(".template") for name in os.listdir(default_conf)
+    ):
+        return None
+    conf_dir = os.path.join(cache_dir, "conf")
+    archives = os.path.join(cache_dir, "cds")
+    os.makedirs(conf_dir, exist_ok=True)
+    os.makedirs(archives, exist_ok=True)
+    if os.listdir(conf_dir):
+        return None
+    key = archive_key(spark_home, java)
+    archive = os.path.join(archives, f"{key}.jsa")
+    if os.path.isfile(archive):
+        options = f"-XX:SharedArchiveFile={archive} -Xshare:auto {_CDS_LOG}"
+        return ArchivePlan(options, conf_dir, None)
+    lock = os.path.join(archives, f"{key}.lock")
+    if not _take_lock(lock):
+        return None
+    partial = os.path.join(archives, f"{key}.{os.getpid()}.partial")
+    options = f"-XX:ArchiveClassesAtExit={partial} {_CDS_LOG}"
+    return ArchivePlan(options, conf_dir, ArchiveBuild(partial, archive, lock))
+
+
+def _take_lock(lock: str) -> bool:
+    """Create ``lock`` naming this pid, reclaiming it from a dead pid. Two
+    processes that race here both build, each into its own partial file,
+    and the later rename wins: the lock only spares a second dump."""
+    for _ in range(2):
+        try:
+            fd = os.open(lock, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
+        except FileExistsError:
+            if _pid_alive(_read_pid(lock)):
+                return False
+            _unlink(lock)
+            continue
+        with os.fdopen(fd, "w") as f:
+            f.write(str(os.getpid()))
+        return True
+    return False
+
+
+def _read_pid(path: str) -> int | None:
+    try:
+        with open(path) as f:
+            return int(f.read().strip())
+    except (OSError, ValueError):
+        return None
+
+
+def _pid_alive(pid: int | None) -> bool:
+    if pid is None:
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass  # alive, owned by another user
+    return True
+
+
+def _prune(archives: str, keep: str) -> None:
+    """Delete the archives of other keys and the partial dumps of dead
+    processes."""
+    for entry in os.scandir(archives):
+        if entry.path == keep:
+            continue
+        if entry.name.endswith(".jsa"):
+            _unlink(entry.path)
+        elif entry.name.endswith(".partial"):
+            pid = entry.name.rsplit(".", 2)[-2]
+            if not (pid.isdigit() and _pid_alive(int(pid))):
+                _unlink(entry.path)
+
+
+def _unlink(path: str) -> None:
+    try:
+        os.unlink(path)
+    except FileNotFoundError:
+        pass
+
+
+def _java() -> str | None:
+    """The java binary the launcher runs (bin/spark-class's choice)."""
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    return os.path.realpath(java) if java and os.path.isfile(java) else None
+
+
+def _launch_plan(extra_conf: dict[str, str]) -> ArchivePlan | None:
+    """The archive plan for a session that launches its own driver JVM; None
+    when the JVM already runs, or the caller sets the driver's options or
+    classpath itself."""
+    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+        return None
+    own = {"spark.driver.extraJavaOptions", "spark.driver.extraClassPath"}
+    if own & extra_conf.keys():
+        return None
+    java = _java()
+    if java is None:
+        return None
+    try:
+        return plan_class_archive(CACHE_DIR, _find_spark_home(), java)
+    except OSError:
+        return None  # no writable cache: start without an archive
+
+
+#: the dump this process's driver JVM writes at exit; one driver JVM per
+#: process, like pyspark's own SparkContext._gateway
+_build: ArchiveBuild | None = None
+
 
 def get_spark(
     app_name: str = "bigbugdata_spark",
@@ -49,7 +262,12 @@ def get_spark(
     At 100 TB scale the same knobs apply, with shuffle_partitions sized to
     ~2-3x total executor cores and `spark.sql.files.maxPartitionBytes`
     left at 128 MB so scan tasks stay memory-bounded.
+
+    A session that launches the driver JVM starts it from the class
+    archive, or builds the archive (see ``plan_class_archive``).
     """
+    global _build
+    extra_conf = extra_conf or {}
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
@@ -82,13 +300,61 @@ def get_spark(
         # catalog tables (bucketed-layout support) live outside the repo,
         # scoped per-user (see WAREHOUSE_DIR/DERBY_HOME above)
         .config("spark.sql.warehouse.dir", WAREHOUSE_DIR)
-        .config(
-            "spark.driver.extraJavaOptions",
-            f"-Dderby.system.home={DERBY_HOME}",
-        )
     )
-    for k, v in (extra_conf or {}).items():
+    java_options = f"-Dderby.system.home={DERBY_HOME}"
+    plan = _launch_plan(extra_conf)
+    if plan is not None:
+        java_options += " " + plan.java_options
+        # the launcher reads it from the environment it inherits; restored
+        # below so that child processes judge their own launch
+        os.environ["SPARK_CONF_DIR"] = plan.conf_dir
+        if plan.build is not None:
+            _build = plan.build
+            atexit.register(stop_spark)
+    builder = builder.config("spark.driver.extraJavaOptions", java_options)
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if plan is not None:
+            del os.environ["SPARK_CONF_DIR"]
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def stop_spark() -> None:
+    """Stop the session and wait for the driver JVM to exit. When that JVM
+    dumps the class archive, publish it if the JVM exited cleanly. Safe to
+    call more than once; ``get_spark`` registers it with ``atexit`` when it
+    launches a JVM that dumps."""
+    global _build
+    try:
+        if SparkSession._instantiatedSession is not None:
+            SparkSession._instantiatedSession.stop()
+        if SparkContext._active_spark_context is not None:
+            SparkContext._active_spark_context.stop()
+    finally:
+        status = _stop_gateway()
+        build, _build = _build, None
+        if build is not None:
+            build.finish(status)
+
+
+def _stop_gateway() -> int | None:
+    """End the driver JVM this process launched; its exit status, or None
+    when there is none or it had to be killed."""
+    gateway = SparkContext._gateway
+    if gateway is None or gateway.proc is None:
+        return None
+    gateway.shutdown()
+    gateway.proc.stdin.close()  # the gateway JVM exits on EOF
+    SparkContext._gateway = None
+    SparkContext._jvm = None
+    try:
+        return gateway.proc.wait(timeout=_JVM_EXIT_WAIT_S)
+    except subprocess.TimeoutExpired:
+        gateway.proc.kill()
+        gateway.proc.wait()
+        return None
+
