@@ -30,10 +30,9 @@ import logging
 import os
 import sys
 
-from pyspark import SparkContext
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.session import get_spark, stop_spark
+from bigbugdata_spark.session import get_spark
 
 VERSION = "0.2.0+spark"
 
@@ -290,15 +289,7 @@ def build_parser() -> argparse.ArgumentParser:
 
 def main(argv: list[str] | None = None) -> None:
     args = build_parser().parse_args(argv)
-    # a session the subcommand starts is stopped here, so its JVM exits (and
-    # publishes the class archive it may dump) before Python does; a session
-    # the caller already holds stays up
-    owned = SparkContext._active_spark_context is None
-    try:
-        args.func(args)
-    finally:
-        if owned:
-            stop_spark()
+    args.func(args)
 
 
 if __name__ == "__main__":

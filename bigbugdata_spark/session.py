@@ -10,9 +10,10 @@ kraken run or the many-query test session reuses its compiled classes
 instead of recompiling them on every run).
 
 The driver JVM starts from a per-user class-data-sharing archive
-(``CACHE_DIR``): the first session dumps the classes it loaded when its JVM
-exits, and later sessions map them instead of loading and verifying them
-again (see ``plan_class_archive``).
+(``CACHE_DIR``), so it maps the classes a session loads instead of loading
+and verifying them again. A session that finds no archive runs without one
+and, when its process exits, starts a detached process that builds it
+(``bigbugdata_spark.class_archive``); see ``plan_class_archive``.
 """
 
 from __future__ import annotations
@@ -23,6 +24,7 @@ import hashlib
 import os
 import shutil
 import subprocess
+import sys
 import tempfile
 from dataclasses import dataclass
 
@@ -51,14 +53,21 @@ DERBY_HOME = os.path.join(tempfile.gettempdir(), f"bigbugdata-derby-{_USER}")
 #: entries a warm run compiles a handful.
 CODEGEN_CACHE_ENTRIES = 1000
 
-#: per-user cache of the driver JVM's class archive and the empty conf
-#: directory it is dumped with. Not under tempfile.gettempdir(): a caller may
-#: point TMPDIR at a per-run directory it deletes (perfbench does), which
-#: would throw the archive away after every run.
+#: per-user cache of the driver JVM's class archives, the empty conf
+#: directory they are dumped and used with, and the builder's scratch space.
+#: Not under tempfile.gettempdir(): a caller may point TMPDIR at a per-run
+#: directory it deletes (perfbench does), which would throw the archive away
+#: after every run.
 CACHE_DIR = os.path.join(
     os.environ.get("XDG_CACHE_HOME") or os.path.join(os.path.expanduser("~"), ".cache"),
     "bigbugdata-spark",
 )
+#: builds started per key. A build whose dump fails, or whose process is
+#: killed, still counts, so an install that cannot dump stops trying.
+MAX_BUILDS = 2
+#: archives kept, the most recently used first: installs that share the
+#: cache (two environments, two JDKs) each keep theirs
+KEEP_ARCHIVES = 3
 #: environment variables through which the launcher puts user directories on
 #: the driver's classpath; JDK 17 refuses to dump an archive when a
 #: non-empty directory is on it
@@ -68,48 +77,79 @@ _CLASSPATH_ENV = (
     "HADOOP_CONF_DIR",
     "YARN_CONF_DIR",
 )
+#: the caller's environment the builder does not inherit: directories that
+#: may be deleted when the caller exits (perfbench points all three at its
+#: per-run directory), and the caller's own gateway
+_CALLER_ENV = (
+    "TMPDIR",
+    "SPARK_LOCAL_DIRS",
+    "JAVA_TOOL_OPTIONS",
+    "PYSPARK_GATEWAY_PORT",
+    "PYSPARK_GATEWAY_SECRET",
+)
 #: the JVM logs CDS warnings to stdout, where the CLI writes its CSVs; a dump
 #: logs hundreds (classes it skips), a stale archive one. Errors go to stderr.
-_CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
-#: seconds stop_spark waits for the driver JVM to exit. The exit that dumps
-#: the archive writes ~150 MB and took ~16 s on a busy 4-vCPU host.
-_JVM_EXIT_WAIT_S = 120
+CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
+#: the first bytes of a JDK 17 dynamic archive (its header's magic,
+#: 0xf00baba8, in native order). A JVM handed a file without them drops
+#: class sharing altogether, the JDK's own base archive included.
+_DYNAMIC_MAGIC = (0xF00BABA8).to_bytes(4, sys.byteorder)
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @dataclass(frozen=True)
-class ArchiveBuild:
-    """A driver JVM that dumps its loaded classes to ``partial`` when it
-    exits, under ``lock``. JDK 17 crashes with SIGBUS when it maps a
-    truncated archive, so the dump is written under a name no session reads
-    and renamed to ``archive`` only once it is whole."""
+class ArchiveFiles:
+    """The files of one archive key in the cache's ``cds`` directory: the
+    published archive, the live builder's lock (its pid), the count of
+    builds started, and a builder's dump while it is written. JDK 17
+    crashes with SIGBUS when it maps a truncated archive, so a dump is
+    written under a name no session reads and renamed into place whole."""
 
-    partial: str
-    archive: str
-    lock: str
+    cds: str
+    key: str
 
-    def finish(self, exit_status: int | None) -> bool:
-        """Publish the dump if the JVM exited with status 0, otherwise
-        delete it, and release the lock. Returns whether it published."""
+    @property
+    def archive(self) -> str:
+        return os.path.join(self.cds, f"{self.key}.jsa")
+
+    @property
+    def lock(self) -> str:
+        return os.path.join(self.cds, f"{self.key}.lock")
+
+    @property
+    def tries(self) -> str:
+        return os.path.join(self.cds, f"{self.key}.tries")
+
+    def partial(self, pid: int) -> str:
+        return os.path.join(self.cds, f"{self.key}.{pid}.partial")
+
+    def publish(self, partial: str, exit_status: int | None) -> bool:
+        """Rename the builder's dump into place if its JVM exited with
+        status 0 and the dump is an archive, otherwise delete it; release
+        the lock either way. Returns whether it published."""
         try:
-            if exit_status != 0 or not os.path.isfile(self.partial):
+            if exit_status != 0 or not _is_dynamic_archive(partial):
                 return False
-            os.replace(self.partial, self.archive)
-            _prune(os.path.dirname(self.archive), keep=self.archive)
+            os.replace(partial, self.archive)
+            _unlink(self.tries)
+            _prune(self.cds)
             return True
         finally:
-            _unlink(self.partial)
+            _unlink(partial)
             _unlink(self.lock)
 
 
 @dataclass(frozen=True)
 class ArchivePlan:
     """How to launch the driver JVM: extra options for
-    ``spark.driver.extraJavaOptions``, the ``SPARK_CONF_DIR`` to launch
-    with, and the dump to publish at exit, if this launch builds one."""
+    ``spark.driver.extraJavaOptions`` (empty without an archive), the
+    ``SPARK_CONF_DIR`` to launch with, and whether to start a build when
+    the process exits."""
 
     java_options: str
     conf_dir: str
-    build: ArchiveBuild | None
+    files: ArchiveFiles
+    build: bool
 
 
 def archive_key(spark_home: str, java: str) -> str:
@@ -127,15 +167,19 @@ def archive_key(spark_home: str, java: str) -> str:
 
 
 def plan_class_archive(cache_dir: str, spark_home: str, java: str) -> ArchivePlan | None:
-    """Use the published archive for this install, or build it if no live
-    process is building it already; None launches the JVM without one.
+    """Map the published archive for this install. Without one, launch the
+    JVM as it is and build the archive at exit, unless a live process is
+    building it or ``MAX_BUILDS`` builds have been started already. A file
+    at the published path that is not a dynamic archive is deleted and
+    rebuilt. None launches the JVM untouched.
 
     pyspark puts ``$SPARK_CONF_DIR`` on the classpath, and JDK 17 dumps no
     archive while a non-empty directory is on it. When the user has not set
     it and the default ``$SPARK_HOME/conf`` holds only templates, the JVM is
-    launched with an empty per-user conf directory instead. A user-set conf
-    directory, or any other classpath directory, leaves the JVM as it is:
-    every run would otherwise pay for a dump that fails.
+    launched with an empty per-user conf directory instead, with or without
+    an archive, so that the builder and its users share one classpath. A
+    user-set conf directory, or any other classpath directory, leaves the
+    JVM as it is: no build could succeed.
     """
     if "SPARK_CONF_DIR" in os.environ or any(os.environ.get(v) for v in _CLASSPATH_ENV):
         return None
@@ -145,33 +189,72 @@ def plan_class_archive(cache_dir: str, spark_home: str, java: str) -> ArchivePla
     ):
         return None
     conf_dir = os.path.join(cache_dir, "conf")
-    archives = os.path.join(cache_dir, "cds")
+    cds = os.path.join(cache_dir, "cds")
     os.makedirs(conf_dir, exist_ok=True)
-    os.makedirs(archives, exist_ok=True)
+    os.makedirs(cds, exist_ok=True)
     if os.listdir(conf_dir):
         return None
-    key = archive_key(spark_home, java)
-    archive = os.path.join(archives, f"{key}.jsa")
-    if os.path.isfile(archive):
-        options = f"-XX:SharedArchiveFile={archive} -Xshare:auto {_CDS_LOG}"
-        return ArchivePlan(options, conf_dir, None)
-    lock = os.path.join(archives, f"{key}.lock")
-    if not _take_lock(lock):
+    files = ArchiveFiles(cds, archive_key(spark_home, java))
+    if _is_dynamic_archive(files.archive):
+        os.utime(files.archive)  # most recently used, for the pruning
+        options = f"-XX:SharedArchiveFile={files.archive} -Xshare:auto {CDS_LOG}"
+        return ArchivePlan(options, conf_dir, files, build=False)
+    _unlink(files.archive)
+    build = _read_int(files.tries) < MAX_BUILDS and not _pid_alive(_read_int(files.lock))
+    return ArchivePlan("", conf_dir, files, build)
+
+
+def _is_dynamic_archive(path: str) -> bool:
+    try:
+        with open(path, "rb") as f:
+            return f.read(len(_DYNAMIC_MAGIC)) == _DYNAMIC_MAGIC
+    except FileNotFoundError:
+        return False
+
+
+def start_build(plan: ArchivePlan) -> int | None:
+    """Start the detached process that builds ``plan``'s archive, under the
+    key's lock; its pid, or None when the archive was published or the
+    builds used up since ``plan`` was made, or another live process holds
+    the lock.
+
+    The builder runs in its own session, with a temporary directory in the
+    cache, and logs to ``build.log`` there; it lowers its own CPU priority
+    (``class_archive.main``).
+    """
+    files = plan.files
+    if _is_dynamic_archive(files.archive) or _read_int(files.tries) >= MAX_BUILDS:
         return None
-    partial = os.path.join(archives, f"{key}.{os.getpid()}.partial")
-    options = f"-XX:ArchiveClassesAtExit={partial} {_CDS_LOG}"
-    return ArchivePlan(options, conf_dir, ArchiveBuild(partial, archive, lock))
+    if not _take_lock(files.lock):
+        return None
+    cache_dir = os.path.dirname(files.cds)
+    tmp = os.path.join(cache_dir, "build")
+    shutil.rmtree(tmp, ignore_errors=True)  # a killed builder's leftovers
+    os.makedirs(tmp)
+    _write_int(files.tries, _read_int(files.tries) + 1)
+    env = {k: v for k, v in os.environ.items() if k not in _CALLER_ENV}
+    env["TMPDIR"] = tmp
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, (_PACKAGE_ROOT, env.get("PYTHONPATH"))))
+    with open(os.path.join(cache_dir, "build.log"), "wb") as log:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "bigbugdata_spark.class_archive",
+             files.cds, files.key, plan.conf_dir],
+            env=env, cwd=tmp, stdin=subprocess.DEVNULL, stdout=log, stderr=log,
+            start_new_session=True,
+        )
+    _write_int(files.lock, proc.pid)
+    return proc.pid
 
 
 def _take_lock(lock: str) -> bool:
     """Create ``lock`` naming this pid, reclaiming it from a dead pid. Two
     processes that race here both build, each into its own partial file,
-    and the later rename wins: the lock only spares a second dump."""
+    and the later rename wins: the lock only spares a second build."""
     for _ in range(2):
         try:
             fd = os.open(lock, os.O_WRONLY | os.O_CREAT | os.O_EXCL, 0o644)
         except FileExistsError:
-            if _pid_alive(_read_pid(lock)):
+            if _pid_alive(_read_int(lock)):
                 return False
             _unlink(lock)
             continue
@@ -181,16 +264,26 @@ def _take_lock(lock: str) -> bool:
     return False
 
 
-def _read_pid(path: str) -> int | None:
+def _read_int(path: str) -> int:
+    """The number in a lock or tries file; 0 when there is none."""
     try:
         with open(path) as f:
             return int(f.read().strip())
-    except (OSError, ValueError):
-        return None
+    except (FileNotFoundError, ValueError):
+        return 0
 
 
-def _pid_alive(pid: int | None) -> bool:
-    if pid is None:
+def _write_int(path: str, value: int) -> None:
+    """Replace ``path`` with ``value`` in one rename, so a reader sees the
+    old number or the new one."""
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        f.write(str(value))
+    os.replace(tmp, path)
+
+
+def _pid_alive(pid: int) -> bool:
+    if pid <= 0:
         return False
     try:
         os.kill(pid, 0)
@@ -199,20 +292,6 @@ def _pid_alive(pid: int | None) -> bool:
     except PermissionError:
         pass  # alive, owned by another user
     return True
-
-
-def _prune(archives: str, keep: str) -> None:
-    """Delete the archives of other keys and the partial dumps of dead
-    processes."""
-    for entry in os.scandir(archives):
-        if entry.path == keep:
-            continue
-        if entry.name.endswith(".jsa"):
-            _unlink(entry.path)
-        elif entry.name.endswith(".partial"):
-            pid = entry.name.rsplit(".", 2)[-2]
-            if not (pid.isdigit() and _pid_alive(int(pid))):
-                _unlink(entry.path)
 
 
 def _unlink(path: str) -> None:
@@ -227,6 +306,21 @@ def _java() -> str | None:
     java_home = os.environ.get("JAVA_HOME")
     java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
     return os.path.realpath(java) if java and os.path.isfile(java) else None
+
+
+def _prune(cds: str) -> None:
+    """Keep the ``KEEP_ARCHIVES`` most recently used archives, and delete the
+    partial dumps of dead processes."""
+    archives = []
+    for entry in os.scandir(cds):
+        if entry.name.endswith(".jsa"):
+            archives.append((entry.stat().st_mtime_ns, entry.path))
+        elif entry.name.endswith(".partial"):
+            pid = entry.name.rsplit(".", 2)[-2]
+            if not (pid.isdigit() and _pid_alive(int(pid))):
+                _unlink(entry.path)
+    for _, path in sorted(archives, reverse=True)[KEEP_ARCHIVES:]:
+        _unlink(path)
 
 
 def _launch_plan(extra_conf: dict[str, str]) -> ArchivePlan | None:
@@ -247,9 +341,11 @@ def _launch_plan(extra_conf: dict[str, str]) -> ArchivePlan | None:
         return None  # no writable cache: start without an archive
 
 
-#: the dump this process's driver JVM writes at exit; one driver JVM per
-#: process, like pyspark's own SparkContext._gateway
-_build: ArchiveBuild | None = None
+def _start_build_at_exit(plan: ArchivePlan) -> None:
+    try:
+        start_build(plan)
+    except OSError:
+        pass  # no writable cache or no process to spare: the next run tries
 
 
 def get_spark(
@@ -264,9 +360,9 @@ def get_spark(
     left at 128 MB so scan tasks stay memory-bounded.
 
     A session that launches the driver JVM starts it from the class
-    archive, or builds the archive (see ``plan_class_archive``).
+    archive, or has the archive built when the process exits (see
+    ``plan_class_archive``).
     """
-    global _build
     extra_conf = extra_conf or {}
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -304,13 +400,13 @@ def get_spark(
     java_options = f"-Dderby.system.home={DERBY_HOME}"
     plan = _launch_plan(extra_conf)
     if plan is not None:
-        java_options += " " + plan.java_options
+        if plan.java_options:
+            java_options += " " + plan.java_options
         # the launcher reads it from the environment it inherits; restored
         # below so that child processes judge their own launch
         os.environ["SPARK_CONF_DIR"] = plan.conf_dir
-        if plan.build is not None:
-            _build = plan.build
-            atexit.register(stop_spark)
+        if plan.build:
+            atexit.register(_start_build_at_exit, plan)
     builder = builder.config("spark.driver.extraJavaOptions", java_options)
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
@@ -321,40 +417,3 @@ def get_spark(
             del os.environ["SPARK_CONF_DIR"]
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    """Stop the session and wait for the driver JVM to exit. When that JVM
-    dumps the class archive, publish it if the JVM exited cleanly. Safe to
-    call more than once; ``get_spark`` registers it with ``atexit`` when it
-    launches a JVM that dumps."""
-    global _build
-    try:
-        if SparkSession._instantiatedSession is not None:
-            SparkSession._instantiatedSession.stop()
-        if SparkContext._active_spark_context is not None:
-            SparkContext._active_spark_context.stop()
-    finally:
-        status = _stop_gateway()
-        build, _build = _build, None
-        if build is not None:
-            build.finish(status)
-
-
-def _stop_gateway() -> int | None:
-    """End the driver JVM this process launched; its exit status, or None
-    when there is none or it had to be killed."""
-    gateway = SparkContext._gateway
-    if gateway is None or gateway.proc is None:
-        return None
-    gateway.shutdown()
-    gateway.proc.stdin.close()  # the gateway JVM exits on EOF
-    SparkContext._gateway = None
-    SparkContext._jvm = None
-    try:
-        return gateway.proc.wait(timeout=_JVM_EXIT_WAIT_S)
-    except subprocess.TimeoutExpired:
-        gateway.proc.kill()
-        gateway.proc.wait()
-        return None
-

@@ -1,11 +1,12 @@
-"""The driver JVM's class archive (session.plan_class_archive).
+"""The driver JVM's class archive (session.plan_class_archive, the builder in
+bigbugdata_spark.class_archive).
 
 The unit tests build fake installs under tmp_path and start no JVM. The
-subprocess tests start real sessions in child interpreters, each with its
-cache directory under tmp_path (XDG_CACHE_HOME), and check the archive's
-life cycle: a clean exit publishes exactly one archive, a later session
-maps it, a builder killed mid-dump publishes nothing, and a junk file at
-the published path costs only the speed-up.
+subprocess tests start real sessions and builders, each with its cache
+directory under tmp_path, and check the archive's life cycle: a session that
+finds no archive (or junk in its place) runs without one and leaves a build
+behind that publishes exactly one archive, a later session maps it, and a
+builder killed mid-dump publishes nothing.
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ import pytest
 from bigbugdata_spark import session as S
 
 REPO = str(Path(__file__).resolve().parents[1])
+_POPEN = subprocess.Popen  # fake_builder patches the module's
 
 
 @pytest.fixture
@@ -47,8 +49,26 @@ def clean_env(monkeypatch):
         monkeypatch.delenv(var, raising=False)
 
 
+class _FakeBuilder:
+    """Stands in for subprocess.Popen in start_build: records the command
+    and environment, and is a process that has already ended."""
+
+    calls: list[tuple[list[str], dict[str, str]]] = []
+
+    def __init__(self, cmd, env, **kwargs):
+        _FakeBuilder.calls.append((cmd, env))
+        self.pid = _dead_pid()
+
+
+@pytest.fixture
+def fake_builder(monkeypatch):
+    _FakeBuilder.calls = []
+    monkeypatch.setattr(S.subprocess, "Popen", _FakeBuilder)
+    return _FakeBuilder.calls
+
+
 def _dead_pid() -> int:
-    proc = subprocess.Popen(["true"])
+    proc = _POPEN(["true"])
     proc.wait()
     return proc.pid
 
@@ -57,45 +77,61 @@ def _plan(tmp_path, install):
     return S.plan_class_archive(str(tmp_path / "cache"), *install)
 
 
+def _archive_bytes(size: int = 4096) -> bytes:
+    return S._DYNAMIC_MAGIC + b"\0" * (size - len(S._DYNAMIC_MAGIC))
+
+
 def test_partial_and_dead_lock_are_never_mapped(tmp_path, install, clean_env):
-    key = S.archive_key(*install)
-    cds = tmp_path / "cache" / "cds"
-    cds.mkdir(parents=True)
+    files = S.ArchiveFiles(str(tmp_path / "cache" / "cds"), S.archive_key(*install))
+    Path(files.cds).mkdir(parents=True)
     dead = _dead_pid()
-    (cds / f"{key}.{dead}.partial").write_bytes(b"\0" * 4096)
-    (cds / f"{key}.lock").write_text(str(dead))
+    Path(files.partial(dead)).write_bytes(_archive_bytes())
+    Path(files.lock).write_text(str(dead))
 
     plan = _plan(tmp_path, install)
 
-    assert "SharedArchiveFile" not in plan.java_options
-    partial = str(cds / f"{key}.{os.getpid()}.partial")
-    assert f"-XX:ArchiveClassesAtExit={partial}" in plan.java_options.split()
-    lock = str(cds / f"{key}.lock")
-    assert plan.build == S.ArchiveBuild(partial, str(cds / f"{key}.jsa"), lock)
-    assert (cds / f"{key}.lock").read_text() == str(os.getpid())
+    assert plan.java_options == ""
+    assert plan.build
+    assert plan.files == files
     assert plan.conf_dir == str(tmp_path / "cache" / "conf")
-    plan.build.finish(None)
 
 
-def test_live_lock_yields_neither_flag(tmp_path, install, clean_env):
+def test_live_lock_yields_no_flag_and_no_build(tmp_path, install, clean_env):
     cds = tmp_path / "cache" / "cds"
     cds.mkdir(parents=True)
     (cds / f"{S.archive_key(*install)}.lock").write_text(str(os.getpid()))
 
-    assert _plan(tmp_path, install) is None
+    plan = _plan(tmp_path, install)
+
+    assert plan.java_options == ""
+    assert not plan.build
 
 
-def test_published_archive_is_mapped(tmp_path, install, clean_env):
+def test_published_archive_is_mapped_and_marked_used(tmp_path, install, clean_env):
     archive = tmp_path / "cache" / "cds" / f"{S.archive_key(*install)}.jsa"
     archive.parent.mkdir(parents=True)
-    archive.write_bytes(b"\0" * 4096)
+    archive.write_bytes(_archive_bytes())
+    os.utime(archive, (1, 1))
 
     plan = _plan(tmp_path, install)
 
-    assert plan.build is None
+    assert not plan.build
     opts = plan.java_options.split()
     assert f"-XX:SharedArchiveFile={archive}" in opts and "-Xshare:auto" in opts
     assert not any(o.startswith("-XX:ArchiveClassesAtExit") for o in opts)
+    assert archive.stat().st_mtime > 1
+
+
+def test_junk_at_the_published_path_is_deleted_and_rebuilt(tmp_path, install, clean_env):
+    archive = tmp_path / "cache" / "cds" / f"{S.archive_key(*install)}.jsa"
+    archive.parent.mkdir(parents=True)
+    archive.write_bytes(b"\x01\x02\x03\x04" + os.urandom(4092))
+
+    plan = _plan(tmp_path, install)
+
+    assert plan.java_options == ""
+    assert plan.build
+    assert not archive.exists()
 
 
 def test_key_follows_pyspark_version_and_jar_listing(install, monkeypatch):
@@ -139,27 +175,91 @@ def test_classpath_dir_from_environment_yields_no_flag(
     assert _plan(tmp_path, install) is None
 
 
-def test_finish_publishes_only_a_clean_exit(tmp_path, install, clean_env):
-    cds = tmp_path / "cache" / "cds"
-    for status in (1, -9, None):
-        build = _plan(tmp_path, install).build
-        Path(build.partial).write_bytes(b"dump")
-        assert not build.finish(status)
-        assert sorted(os.listdir(cds)) == []
+def test_start_build_hands_the_lock_to_a_detached_builder(
+    tmp_path, install, clean_env, fake_builder, monkeypatch
+):
+    monkeypatch.setenv("TMPDIR", str(tmp_path / "run-tmp"))
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", f"-Djava.io.tmpdir={tmp_path / 'run-tmp'}")
+    plan = _plan(tmp_path, install)
 
-    stale = cds / "0123.jsa"
-    stale.write_bytes(b"old key")
-    orphan = cds / f"0123.{_dead_pid()}.partial"
+    pid = S.start_build(plan)
+
+    [(cmd, env)] = fake_builder
+    assert cmd[1:] == ["-m", "bigbugdata_spark.class_archive",
+                       plan.files.cds, plan.files.key, plan.conf_dir]
+    assert env["TMPDIR"] == str(tmp_path / "cache" / "build")
+    assert "JAVA_TOOL_OPTIONS" not in env
+    assert env["PYTHONPATH"].split(os.pathsep)[0] == REPO
+    assert S._read_int(plan.files.lock) == pid
+    assert S._read_int(plan.files.tries) == 1
+
+
+def test_start_build_skips_an_archive_published_since_the_plan(
+    tmp_path, install, clean_env, fake_builder
+):
+    plan = _plan(tmp_path, install)
+    Path(plan.files.archive).write_bytes(_archive_bytes())
+
+    assert S.start_build(plan) is None
+    assert fake_builder == []
+    assert not Path(plan.files.lock).exists()
+
+
+def test_failed_builds_stop_after_max_builds(tmp_path, install, clean_env, fake_builder):
+    """A build that fails or is killed is counted; after MAX_BUILDS of them
+    the key is left alone until the cache is deleted."""
+    for status in (-9, None)[: S.MAX_BUILDS]:
+        plan = _plan(tmp_path, install)
+        assert plan.build
+        pid = S.start_build(plan)
+        partial = Path(plan.files.partial(pid))
+        partial.write_bytes(_archive_bytes())
+        assert not plan.files.publish(str(partial), status)
+        assert not partial.exists() and not Path(plan.files.lock).exists()
+
+    plan = _plan(tmp_path, install)
+    assert plan.java_options == ""
+    assert not plan.build
+    assert len(fake_builder) == S.MAX_BUILDS
+
+
+def test_publish_takes_only_a_clean_exit_of_a_whole_archive(tmp_path, install, clean_env):
+    files = _plan(tmp_path, install).files
+    for status, dump in ((1, _archive_bytes()), (-9, _archive_bytes()),
+                         (None, _archive_bytes()), (0, b"not an archive")):
+        Path(files.lock).write_text(str(os.getpid()))
+        partial = Path(files.partial(os.getpid()))
+        partial.write_bytes(dump)
+        assert not files.publish(str(partial), status)
+        assert sorted(os.listdir(files.cds)) == []
+
+    Path(files.tries).write_text("1")
+    partial = Path(files.partial(os.getpid()))
+    partial.write_bytes(_archive_bytes())
+    assert files.publish(str(partial), 0)
+    assert os.listdir(files.cds) == [os.path.basename(files.archive)]
+    assert Path(files.archive).read_bytes() == _archive_bytes()
+
+
+def test_publish_keeps_the_most_recently_used_archives(tmp_path, install, clean_env):
+    files = _plan(tmp_path, install).files
+    cds = Path(files.cds)
+    others = [cds / f"other{i}.jsa" for i in range(S.KEEP_ARCHIVES + 1)]
+    for age, path in enumerate(others):  # other0 is the most recently used
+        path.write_bytes(_archive_bytes())
+        os.utime(path, (1000 - age, 1000 - age))
+    orphan = cds / f"other0.{_dead_pid()}.partial"
     orphan.write_bytes(b"killed builder")
-    build = _plan(tmp_path, install).build
-    Path(build.partial).write_bytes(b"dump")
+    partial = Path(files.partial(os.getpid()))
+    partial.write_bytes(_archive_bytes())
 
-    assert build.finish(0)
-    assert os.listdir(cds) == [os.path.basename(build.archive)]
-    assert Path(build.archive).read_bytes() == b"dump"
+    assert files.publish(str(partial), 0)
+
+    kept = [os.path.basename(files.archive)] + [p.name for p in others[: S.KEEP_ARCHIVES - 1]]
+    assert sorted(os.listdir(cds)) == sorted(kept)
 
 
-# -- subprocess tests: real sessions in child interpreters ------------------
+# -- subprocess tests: real sessions and builders ----------------------------
 
 _CHILD = textwrap.dedent(
     """
@@ -172,36 +272,31 @@ _CHILD = textwrap.dedent(
     print("SUM", spark.range(100).selectExpr("sum(id)").first()[0], flush=True)
     print("ARGS", " ".join(jvm.java.lang.management.ManagementFactory
                            .getRuntimeMXBean().getInputArguments()), flush=True)
-    print("VMINFO", jvm.java.lang.System.getProperty("java.vm.info"), flush=True)
-    print("JVM", spark.sparkContext._gateway.proc.pid, flush=True)
     """
 )
 
 
-def _child_env(cache: Path) -> dict[str, str]:
+def _child_env(cache: Path, **extra: str) -> dict[str, str]:
     env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g",
-               SPARK_GRAFT_CPUS="2")
-    for var in ("SPARK_CONF_DIR", *S._CLASSPATH_ENV):
-        env.pop(var, None)
+               SPARK_GRAFT_CPUS="2", **extra)
+    for var in ("SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS", *S._CLASSPATH_ENV):
+        if var not in extra:
+            env.pop(var, None)
     return env
 
 
-def _run_child(cache: Path) -> dict[str, str]:
+def _run_child(cache: Path, **extra: str) -> dict[str, str]:
     proc = subprocess.run(
-        [sys.executable, "-c", _CHILD, REPO], env=_child_env(cache),
+        [sys.executable, "-c", _CHILD, REPO], env=_child_env(cache, **extra),
         capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     return dict(line.split(" ", 1) for line in proc.stdout.splitlines())
 
 
-def _cds(cache: Path) -> Path:
-    return cache / "bigbugdata-spark" / "cds"
-
-
-def _published_path(cache: Path) -> Path:
+def _files(cache: Path) -> S.ArchiveFiles:
     key = S.archive_key(S._find_spark_home(), S._java())
-    return _cds(cache) / f"{key}.jsa"
+    return S.ArchiveFiles(str(cache / "bigbugdata-spark" / "cds"), key)
 
 
 def _gone(pid: int) -> bool:
@@ -212,6 +307,34 @@ def _gone(pid: int) -> bool:
             return f.read().rsplit(")", 1)[1].split()[0] == "Z"
     except FileNotFoundError:
         return True
+
+
+def _wait_gone(pid: int, timeout: float) -> None:
+    deadline = time.monotonic() + timeout
+    while not _gone(pid):
+        assert time.monotonic() < deadline, f"process {pid} still runs"
+        time.sleep(0.1)
+
+
+def _reap(pid: int) -> None:
+    """Wait for our child `pid`, so that its pid stops looking alive."""
+    try:
+        os.waitpid(pid, 0)
+    except ChildProcessError:
+        pass  # subprocess reaped it already
+
+
+def _children(pid: int) -> list[int]:
+    found = []
+    for entry in os.listdir("/proc"):
+        if entry.isdigit():
+            try:
+                with open(f"/proc/{entry}/stat") as f:
+                    if int(f.read().rsplit(")", 1)[1].split()[1]) == pid:
+                        found.append(int(entry))
+            except (FileNotFoundError, ProcessLookupError):
+                pass
+    return found
 
 
 def _holds(pid: int, target: str) -> bool:
@@ -225,74 +348,69 @@ def _holds(pid: int, target: str) -> bool:
     return False
 
 
-def test_clean_exit_publishes_one_archive_that_the_next_session_maps(tmp_path):
+def test_junk_is_replaced_by_one_built_archive_that_the_next_session_maps(tmp_path):
     cache = tmp_path / "cache"
+    files = _files(cache)
+    Path(files.cds).mkdir(parents=True)
+    Path(files.archive).write_bytes(os.urandom(4096))
 
     first = _run_child(cache)
 
+    # the session ran without the junk and without a dump flag; the build
+    # it left behind runs in its own process
     assert first["SUM"] == "4950"
-    archive = _published_path(cache)
-    assert sorted(os.listdir(_cds(cache))) == [archive.name]
-    assert f"-XX:ArchiveClassesAtExit={_cds(cache)}/{archive.stem}." in first["ARGS"]
-    assert archive.stat().st_size > 0
+    assert "SharedArchiveFile" not in first["ARGS"]
+    assert "ArchiveClassesAtExit" not in first["ARGS"]
+    builder = S._read_int(files.lock)
+    assert builder > 0
+    _wait_gone(builder, timeout=300)
+    assert os.listdir(files.cds) == [os.path.basename(files.archive)]
+    assert S._is_dynamic_archive(files.archive)
 
-    second = _run_child(cache)
+    log = tmp_path / "class-load.log"
+    second = _run_child(cache, JAVA_TOOL_OPTIONS=f"-Xlog:class+load=info:file={log}")
 
     assert second["SUM"] == "4950"
-    assert f"-XX:SharedArchiveFile={archive}" in second["ARGS"].split()
-    assert "sharing" in second["VMINFO"]
-    assert sorted(os.listdir(_cds(cache))) == [archive.name]
+    assert f"-XX:SharedArchiveFile={files.archive}" in second["ARGS"].split()
+    assert "org.apache.spark.SparkContext source: shared objects file (top)" in log.read_text()
+    assert os.listdir(files.cds) == [os.path.basename(files.archive)]
 
 
-def test_builder_killed_while_dumping_publishes_nothing(tmp_path):
+def test_builder_killed_while_dumping_publishes_nothing(tmp_path, monkeypatch):
     cache = tmp_path / "cache"
-    child = subprocess.Popen(
-        [sys.executable, "-c", _CHILD, REPO], env=_child_env(cache),
-        stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True,
-    )
+    for var in ("SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS", *S._CLASSPATH_ENV):
+        monkeypatch.delenv(var, raising=False)
+    plan = S.plan_class_archive(str(cache / "bigbugdata-spark"), S._find_spark_home(), S._java())
+    builder = S.start_build(plan)
     jvm = None
     try:
-        for line in child.stdout:
-            if line.startswith("JVM "):
-                jvm = int(line.split()[1])
-                break
-        assert jvm is not None, "the child printed no JVM pid"
-        # the child is in its exit hook once it has closed the JVM's stdin
+        deadline = time.monotonic() + 120
+        while jvm is None:
+            assert time.monotonic() < deadline, "the builder started no JVM"
+            assert not _gone(builder), (cache / "bigbugdata-spark" / "build.log").read_text()
+            jvm = next(iter(_children(builder)), None)
+            time.sleep(0.1)
+        # the builder has stopped its session once it closed the JVM's stdin
         # pipe; from then on the JVM is exiting, and dumps before it ends
         stdin_pipe = os.readlink(f"/proc/{jvm}/fd/0")
-        deadline = time.monotonic() + 120
-        while _holds(child.pid, stdin_pipe):
-            assert time.monotonic() < deadline, "the child never closed the JVM's stdin"
+        deadline = time.monotonic() + 240
+        while _holds(builder, stdin_pipe):
+            assert time.monotonic() < deadline, "the builder never closed the JVM's stdin"
             time.sleep(0.02)
-        assert not _gone(jvm), "the JVM ended before the child was killed"
-        os.kill(child.pid, signal.SIGKILL)
-        child.wait(timeout=30)
-        deadline = time.monotonic() + 180
-        while not _gone(jvm) and time.monotonic() < deadline:
-            time.sleep(0.1)
+        assert not _gone(jvm), "the JVM ended before the builder was killed"
+        os.kill(builder, signal.SIGKILL)
+        _wait_gone(jvm, timeout=180)
     finally:
-        child.kill()
-        child.wait(timeout=30)
+        if not _gone(builder):
+            os.kill(builder, signal.SIGKILL)
+        _reap(builder)
         if jvm is not None and not _gone(jvm):
             os.kill(jvm, signal.SIGKILL)
 
-    assert not list(_cds(cache).glob("*.jsa"))
-    # the dead builder's lock and dump are reclaimed, never mapped
-    plan = S.plan_class_archive(
-        str(cache / "bigbugdata-spark"), S._find_spark_home(), S._java()
-    )
-    assert plan.build is not None
-    assert "SharedArchiveFile" not in plan.java_options
-    plan.build.finish(None)
-
-
-def test_junk_at_the_published_path_still_gives_a_working_session(tmp_path):
-    cache = tmp_path / "cache"
-    archive = _published_path(cache)
-    archive.parent.mkdir(parents=True)
-    archive.write_bytes(os.urandom(4096))
-
-    out = _run_child(cache)
-
-    assert out["SUM"] == "4950"
-    assert f"-XX:SharedArchiveFile={archive}" in out["ARGS"].split()
+    assert not list(Path(plan.files.cds).glob("*.jsa"))
+    # the dead builder's lock and dump are passed over, never mapped; the
+    # killed build counts against MAX_BUILDS
+    again = S.plan_class_archive(str(cache / "bigbugdata-spark"), S._find_spark_home(), S._java())
+    assert again.java_options == ""
+    assert again.build == (S.MAX_BUILDS > 1)
+    assert S._read_int(plan.files.tries) == 1
