@@ -548,14 +548,16 @@ SCALE_PROBE_RESET = {
 }
 
 
-def _read_sf2_sweep() -> dict | None:
-    """The last recorded second-scale parity sweep (SF2_SWEEP.json,
-    written by tests/conftest.py under SPARK_GRAFT_PARITY_SF2=1), with
-    its age attached so a stale record reads as stale."""
+def _read_sweep(name: str) -> dict | None:
+    """The last recorded opt-in test sweep in the repo file `name`
+    (tests/conftest.py writes SF2_SWEEP.json under
+    SPARK_GRAFT_PARITY_SF2=1 and SLOWTIER_SWEEP.json under
+    SPARK_GRAFT_SLOW_TIER=1), with its age attached so a stale record
+    reads as stale."""
     import json
     from pathlib import Path
 
-    p = Path(__file__).parent / "SF2_SWEEP.json"
+    p = Path(__file__).parent / name
     if not p.exists():
         return None
     try:
@@ -1589,7 +1591,10 @@ def main() -> None:
         # (VERDICT r12 #7): tests/conftest.py writes SF2_SWEEP.json on
         # a SPARK_GRAFT_PARITY_SF2=1 pytest run; embedding it (with
         # its age) makes the two-scale claim auditable per round.
-        "sf2_sweep": _read_sf2_sweep(),
+        "sf2_sweep": _read_sweep("SF2_SWEEP.json"),
+        # the opt-in slow tier's last run (restart/crash/stream-equivalence/
+        # fuzz/multicycle; tests/parity.py), with its age, the same way
+        "slowtier_sweep": _read_sweep("SLOWTIER_SWEEP.json"),
         # r14 closing A/B (VERDICT r13 #5, the last first<=9s attempt):
         # two plan-count-reduction variants measured in fresh processes,
         # interleaved order, fixture page-cache pre-warmed, 3 e2e runs

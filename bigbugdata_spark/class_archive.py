@@ -24,7 +24,13 @@ from pyspark.sql import SparkSession
 
 from bigbugdata_spark.caching import release_pinned
 from bigbugdata_spark.operators.kraken import run_pipeline, write_outputs
-from bigbugdata_spark.session import CDS_LOG, DERBY_HOME, ArchiveFiles, get_spark
+from bigbugdata_spark.session import (
+    CDS_LOG,
+    DERBY_HOME,
+    ArchiveFiles,
+    collector_options,
+    get_spark,
+)
 
 #: seconds to wait for the JVM's exit, which writes the dump (~150 MB;
 #: about 16 s on a busy 4-vCPU host, longer on one idle-priority core)
@@ -88,18 +94,21 @@ def _stop_jvm(spark: SparkSession) -> int | None:
 
 def build(files: ArchiveFiles, conf_dir: str, cpus: int) -> bool:
     """Dump and publish ``files``' archive; whether it was published. The
-    JVM is told it has ``cpus`` cores, however many it may use, so that it
-    makes the ergonomic choices (collector, thread counts) of the JVMs that
-    will map the archive. The archive holds classes, not compiled code, so
-    the JVM compiles with C1 alone: on one core a build took 58 s of CPU,
-    against 101 s with both compilers, and archived the same classes."""
+    JVM runs on the collector ``get_spark`` gives the JVMs that will map the
+    archive (sessions with the default heap), and is told it has ``cpus``
+    cores, however many it may use, so that it makes their ergonomic choices
+    (thread counts) too. The archive holds classes, not compiled code, so the
+    JVM compiles with C1 alone: on one core a build took 58 s of CPU, against
+    101 s with both compilers, and archived the same classes."""
     partial = files.partial(os.getpid())
     work = tempfile.mkdtemp(prefix="class-archive-")
     os.environ["SPARK_CONF_DIR"] = conf_dir
-    options = (
-        f"-Dderby.system.home={DERBY_HOME} -XX:ActiveProcessorCount={cpus}"
-        f" -XX:TieredStopAtLevel=1 -XX:ArchiveClassesAtExit={partial} {CDS_LOG}"
-    )
+    options = " ".join(filter(None, (
+        f"-Dderby.system.home={DERBY_HOME}",
+        collector_options({}, conf_dir),
+        f"-XX:ActiveProcessorCount={cpus} -XX:TieredStopAtLevel=1",
+        f"-XX:ArchiveClassesAtExit={partial} {CDS_LOG}",
+    )))
     status = None
     try:
         spark = get_spark(

@@ -14,6 +14,11 @@ The driver JVM starts from a per-user class-data-sharing archive
 and verifying them again. A session that finds no archive runs without one
 and, when its process exits, starts a detached process that builds it
 (``bigbugdata_spark.class_archive``); see ``plan_class_archive``.
+
+That JVM, the driver and in local mode every executor, runs on the parallel
+collector with a 512 MB young generation (``COLLECTOR_OPTIONS``), unless the
+caller chose a collector or the heap is 1.5 GB or less; see
+``collector_options``.
 """
 
 from __future__ import annotations
@@ -22,6 +27,7 @@ import atexit
 import getpass
 import hashlib
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -94,6 +100,35 @@ CDS_LOG = "-Xlog:cds*=off -Xlog:cds*=error:stderr"
 #: 0xf00baba8, in native order). A JVM handed a file without them drops
 #: class sharing altogether, the JDK's own base archive included.
 _DYNAMIC_MAGIC = (0xF00BABA8).to_bytes(4, sys.byteorder)
+#: the driver's heap when neither SPARK_DRIVER_MEMORY nor the caller sets it
+DRIVER_MEMORY = "8g"
+#: the driver JVM's collector when the caller chose none and the heap is
+#: larger than three times the young-generation cap. Under JDK 17's default,
+#: G1, the CLI's 8 GB-heap driver peaked at 2.2-3.5 GB of RSS on the 48x20k
+#: kraken fixture; under the parallel collector at 1.54-1.61 GB, in the same
+#: or less wall time. The cap is part of that: without it the parallel
+#: collector grows eden toward a third of the heap (its default young
+#: generation), and the same run peaked at 2.8-3.7 GB. A smaller heap keeps
+#: G1: there the cap caps nothing, and the parallel collector reports the
+#: heap less a survivor space as the JVM's memory, which at 512-600 MB heaps
+#: is under the 450 MB a Spark driver needs to start.
+YOUNG_CAP_MB = 512
+COLLECTOR_OPTIONS = f"-XX:+UseParallelGC -XX:MaxNewSize={YOUNG_CAP_MB}m"
+#: a caller's choice of collector; the JVM refuses to start with two
+_COLLECTOR_FLAG = re.compile(r"-XX:\+Use(?:Serial|Parallel|G1|Z|Shenandoah|Epsilon)GC\b")
+#: environment variables whose options reach the driver JVM: read by the JVM
+#: itself, by the java launcher, and by pyspark's spark-submit
+_JAVA_OPTIONS_ENV = (
+    "JAVA_TOOL_OPTIONS",
+    "_JAVA_OPTIONS",
+    "JDK_JAVA_OPTIONS",
+    "SPARK_SUBMIT_OPTS",
+    "PYSPARK_SUBMIT_ARGS",
+)
+_JAVA_OPTIONS_CONF = ("spark.driver.defaultJavaOptions", "spark.driver.extraJavaOptions")
+#: a JVM memory size, as spark.driver.memory takes it (no unit: MB)
+_MEMORY = re.compile(r"\s*(\d+)\s*([kmgt]?)b?\s*")
+_MEMORY_UNIT_MB = {"k": 1 / 1024, "": 1, "m": 1, "g": 1024, "t": 1024 * 1024}
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -323,6 +358,45 @@ def _prune(cds: str) -> None:
         _unlink(path)
 
 
+def _driver_memory(extra_conf: dict[str, str]) -> str:
+    """The driver's heap size for a session built with ``extra_conf``."""
+    return extra_conf.get("spark.driver.memory") or os.environ.get(
+        "SPARK_DRIVER_MEMORY", DRIVER_MEMORY
+    )
+
+
+def collector_options(extra_conf: dict[str, str], conf_dir: str) -> str:
+    """``COLLECTOR_OPTIONS`` for the driver JVM of a session built with
+    ``extra_conf``, or "" (the JVM's default) when its heap is
+    ``3 * YOUNG_CAP_MB`` or less, or when the caller chose its collector: a
+    ``-XX:+Use<Name>GC`` flag in an environment variable the JVM or its
+    launcher reads, in ``extra_conf``'s driver Java options, or in the
+    ``spark-defaults.conf`` or ``java-opts`` of ``conf_dir``, the conf
+    directory the launcher reads."""
+    m = _MEMORY.fullmatch(_driver_memory(extra_conf).lower())
+    if m is None or int(m[1]) * _MEMORY_UNIT_MB[m[2]] <= 3 * YOUNG_CAP_MB:
+        return ""
+    sources = [os.environ.get(v, "") for v in _JAVA_OPTIONS_ENV]
+    sources += [extra_conf.get(k, "") for k in _JAVA_OPTIONS_CONF]
+    sources += _conf_java_options(conf_dir)
+    if any(_COLLECTOR_FLAG.search(s) for s in sources):
+        return ""
+    return COLLECTOR_OPTIONS
+
+
+def _conf_java_options(conf_dir: str) -> list[str]:
+    """The lines of a conf directory's files that can give the launcher
+    driver Java options, less comments."""
+    found = []
+    for name in ("spark-defaults.conf", "java-opts"):
+        try:
+            with open(os.path.join(conf_dir, name)) as f:
+                found += [line for line in f if not line.lstrip().startswith(("#", "!"))]
+        except OSError:
+            pass
+    return found
+
+
 def _launch_plan(extra_conf: dict[str, str]) -> ArchivePlan | None:
     """The archive plan for a session that launches its own driver JVM; None
     when the JVM already runs, or the caller sets the driver's options or
@@ -361,7 +435,8 @@ def get_spark(
 
     A session that launches the driver JVM starts it from the class
     archive, or has the archive built when the process exits (see
-    ``plan_class_archive``).
+    ``plan_class_archive``), and on the parallel collector unless the caller
+    chose a collector or the heap is small (see ``collector_options``).
     """
     extra_conf = extra_conf or {}
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -391,17 +466,22 @@ def get_spark(
         # At a 100 TB site with millions of objects, lower this back so
         # listing distributes.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config("spark.driver.memory", _driver_memory(extra_conf))
         .config("spark.ui.enabled", "false")
         # catalog tables (bucketed-layout support) live outside the repo,
         # scoped per-user (see WAREHOUSE_DIR/DERBY_HOME above)
         .config("spark.sql.warehouse.dir", WAREHOUSE_DIR)
     )
-    java_options = f"-Dderby.system.home={DERBY_HOME}"
     plan = _launch_plan(extra_conf)
+    conf_dir = plan.conf_dir if plan is not None else (
+        os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    )
+    java_options = " ".join(filter(None, (
+        f"-Dderby.system.home={DERBY_HOME}",
+        collector_options(extra_conf, conf_dir),
+        plan and plan.java_options,
+    )))
     if plan is not None:
-        if plan.java_options:
-            java_options += " " + plan.java_options
         # the launcher reads it from the environment it inherits; restored
         # below so that child processes judge their own launch
         os.environ["SPARK_CONF_DIR"] = plan.conf_dir

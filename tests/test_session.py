@@ -1,12 +1,13 @@
 """The driver JVM's class archive (session.plan_class_archive, the builder in
-bigbugdata_spark.class_archive).
+bigbugdata_spark.class_archive) and its collector (session.collector_options).
 
 The unit tests build fake installs under tmp_path and start no JVM. The
 subprocess tests start real sessions and builders, each with its cache
 directory under tmp_path, and check the archive's life cycle: a session that
 finds no archive (or junk in its place) runs without one and leaves a build
 behind that publishes exactly one archive, a later session maps it, and a
-builder killed mid-dump publishes nothing.
+builder killed mid-dump publishes nothing. Both run on the parallel
+collector, and a session whose caller chose another collector runs on that.
 """
 
 from __future__ import annotations
@@ -259,6 +260,72 @@ def test_publish_keeps_the_most_recently_used_archives(tmp_path, install, clean_
     assert sorted(os.listdir(cds)) == sorted(kept)
 
 
+@pytest.fixture
+def no_java_options(monkeypatch):
+    for var in ("SPARK_DRIVER_MEMORY", *S._JAVA_OPTIONS_ENV):
+        monkeypatch.delenv(var, raising=False)
+
+
+@pytest.mark.parametrize(
+    "where",
+    [
+        *(f"env:{var}" for var in S._JAVA_OPTIONS_ENV),
+        *(f"extra_conf:{key}" for key in S._JAVA_OPTIONS_CONF),
+        *(f"spark-defaults.conf:{key}" for key in S._JAVA_OPTIONS_CONF),
+        "java-opts",
+    ],
+)
+def test_a_chosen_collector_yields_neither_flag(where, tmp_path, monkeypatch, no_java_options):
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    extra_conf = {"spark.driver.defaultJavaOptions": "-Xms2g"}
+    chosen = "-Xss4m -XX:+UseG1GC -XX:-UsePerfData"
+    kind, _, name = where.partition(":")
+    if kind == "env":
+        monkeypatch.setenv(name, chosen)
+    elif kind == "extra_conf":
+        extra_conf[name] = chosen
+    elif kind == "spark-defaults.conf":
+        (conf_dir / kind).write_text(f"# defaults\nspark.driver.memory 2g\n{name}  {chosen}\n")
+    else:
+        (conf_dir / kind).write_text(chosen + "\n")
+
+    assert S.collector_options(extra_conf, str(conf_dir)) == ""
+
+
+def test_default_collector_is_parallel_with_a_capped_young_generation(
+    tmp_path, monkeypatch, no_java_options
+):
+    """perfbench's JAVA_TOOL_OPTIONS and heap size, and a commented-out
+    choice, choose no collector."""
+    monkeypatch.setenv("JAVA_TOOL_OPTIONS", f"-Djava.io.tmpdir={tmp_path} -XX:-UsePerfData")
+    (tmp_path / "spark-defaults.conf").write_text(
+        "# spark.driver.extraJavaOptions -XX:+UseG1GC\nspark.driver.memory 2g\n"
+    )
+
+    options = S.collector_options({"spark.driver.defaultJavaOptions": "-Xms2g"}, str(tmp_path))
+
+    assert options.split() == ["-XX:+UseParallelGC", "-XX:MaxNewSize=512m"]
+    assert S.collector_options({}, str(tmp_path / "missing")) == options
+
+
+@pytest.mark.parametrize(
+    "memory, parallel",
+    [("8g", True), ("2g", True), ("1537m", True), ("1536m", False), ("1g", False),
+     ("512m", False), ("512", False), ("lots", False)],
+)
+def test_a_heap_the_young_cap_would_not_cap_keeps_the_default_collector(
+    memory, parallel, tmp_path, monkeypatch, no_java_options
+):
+    """The parallel collector's young generation is a third of the heap by
+    default; at 512-600 MB heaps it leaves a Spark driver too little memory
+    to start."""
+    expected = S.COLLECTOR_OPTIONS if parallel else ""
+    assert S.collector_options({"spark.driver.memory": memory}, str(tmp_path)) == expected
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", memory)
+    assert S.collector_options({}, str(tmp_path)) == expected
+
+
 # -- subprocess tests: real sessions and builders ----------------------------
 
 _CHILD = textwrap.dedent(
@@ -270,14 +337,16 @@ _CHILD = textwrap.dedent(
     spark = get_spark("class-archive-child")
     jvm = spark.sparkContext._jvm
     print("SUM", spark.range(100).selectExpr("sum(id)").first()[0], flush=True)
-    print("ARGS", " ".join(jvm.java.lang.management.ManagementFactory
-                           .getRuntimeMXBean().getInputArguments()), flush=True)
+    management = jvm.java.lang.management.ManagementFactory
+    print("ARGS", " ".join(management.getRuntimeMXBean().getInputArguments()), flush=True)
+    print("GC", ",".join(sorted(b.getName() for b in management.getGarbageCollectorMXBeans())),
+          flush=True)
     """
 )
 
 
 def _child_env(cache: Path, **extra: str) -> dict[str, str]:
-    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="1g",
+    env = dict(os.environ, XDG_CACHE_HOME=str(cache), SPARK_DRIVER_MEMORY="2g",
                SPARK_GRAFT_CPUS="2", **extra)
     for var in ("SPARK_CONF_DIR", "JAVA_TOOL_OPTIONS", *S._CLASSPATH_ENV):
         if var not in extra:
@@ -374,6 +443,20 @@ def test_junk_is_replaced_by_one_built_archive_that_the_next_session_maps(tmp_pa
     assert f"-XX:SharedArchiveFile={files.archive}" in second["ARGS"].split()
     assert "org.apache.spark.SparkContext source: shared objects file (top)" in log.read_text()
     assert os.listdir(files.cds) == [os.path.basename(files.archive)]
+    assert second["GC"] == "PS MarkSweep,PS Scavenge"
+
+
+def test_a_session_whose_caller_chose_a_collector_runs_on_it(tmp_path):
+    cache = tmp_path / "cache"
+    files = _files(cache)
+    Path(files.cds).mkdir(parents=True)
+    Path(files.tries).write_text(str(S.MAX_BUILDS))  # start no builder at exit
+
+    child = _run_child(cache, JAVA_TOOL_OPTIONS="-XX:+UseG1GC")
+
+    assert child["SUM"] == "4950"
+    assert child["GC"] == "G1 Old Generation,G1 Young Generation"
+    assert "-XX:+UseParallelGC" not in child["ARGS"].split()
 
 
 def test_builder_killed_while_dumping_publishes_nothing(tmp_path, monkeypatch):
