@@ -115,129 +115,101 @@ KRAKEN_SAMPLES = 48
 KRAKEN_TAXA = 20_000
 KRAKEN_BASELINE_SEC = 13.7
 
-# Canary reference window (VERDICT r6 #6): the round-6 DRIVER run's
-# canaries (BENCH_r06.json — the authoritative artifact). Each artifact
-# now carries canary-ADJUSTED totals next to the raw ones:
-#     adjusted = raw * (SPARK_CANARY_REF_SEC / spark_canary_sec)
-# i.e. "what this run would have measured in the r6 reference host
-# window" — the spark canary is a fixed data-independent JVM workload,
-# so its ratio tracks the shared-VM throughput drift that moved every
-# query by the same factor round-over-round (r5->r6 medians).  Raw
-# values stay the comparison of record; adjusted values exist so a
-# judge does not have to re-derive the host-drift story from medians.
+# --- the measuring window's drift ------------------------------------------
+# One instrument, _spark_canary: a fixed data-independent Spark job, read
+# between query blocks every MID_LOOP_PROBE_EVERY queries (outside every
+# timed window), once at the close of the query loop, and once in the
+# kraken session after its last section.  window_policy judges the
+# readings against the calibration reference, the round-6 driver run's
+# reading (BENCH_r06.json).  A drift is reference / reading: it is usable
+# inside DRIFT_GATE_BAND and clean inside WINDOW_CLEAN_BAND.
 SPARK_CANARY_REF_SEC = 0.0857
-HOST_CANARY_REF_SEC = 0.0566
-# the stage-scheduling canary's calibration reference (r12, the session
-# family every sched_canary comment in this file refers to)
-SCHED_CANARY_REF_SEC = 0.0846
-
-# --- mid-loop window certification (r18, VERDICT r17 #1) -------------------
-# The r17 artifact of record read geomean 0.81 "regressed" while the
-# session-BOUNDARY canaries sat in band: untouched, plan-identical
-# queries doubled (op07 +87%, op14 +127%) because the host window
-# drifted MID-LOOP, after the loop started and before the closing
-# canary ran — a failure mode boundary sampling cannot see.  The
-# headline loop now samples the spark+sched canaries every
-# MID_LOOP_PROBE_EVERY query blocks (between blocks, outside every
-# per-query timed window) and the artifact records the whole trace;
-# a probe out of the calibration band, or a spread across probes
-# beyond MID_LOOP_SPREAD_GATE, stamps the artifact low_confidence
-# with a computed reason.  Probe cost: ~1.5 s per probe x ~6 probes,
-# outside all timed windows.
+DRIFT_GATE_BAND = (1 / 3, 3.0)
+WINDOW_CLEAN_BAND = (1 / 1.35, 1.35)
 MID_LOOP_PROBE_EVERY = 8
 MID_LOOP_SPREAD_GATE = 2.0
 
-#: window_class bounds (ADVICE r17 #3): out_of_calibration is the wide
-#: DRIFT_GATE_BAND gate, so an in-band-but-1.5x-slow window printed
-#:   out_of_calibration: false
-#: and read as "clean" unless the reader consulted bench.py.  The
-#: artifact now carries an explicit three-way classification with its
-#: bounds: "clean" when every mid-loop probe's drift sits inside
-#: WINDOW_CLEAN_BAND and the spread gate holds, "drifted" when inside
-#: DRIFT_GATE_BAND but not clean, "out_of_calibration" otherwise.
-WINDOW_CLEAN_BAND = (1 / 1.35, 1.35)
+
+def _drift_within(sec: float | None, band: tuple[float, float]) -> bool:
+    return bool(sec) and sec > 0 and (
+        band[0] <= SPARK_CANARY_REF_SEC / sec <= band[1]
+    )
 
 
-def midloop_probe_reasons(
+def window_policy(
     probes: list[dict],
-    spread_gate: float = MID_LOOP_SPREAD_GATE,
-) -> list[str]:
-    """Why the mid-loop canary trace convicts this measuring window
-    ([] = the trace acquits it).  Pure policy, unit-tested.
+    closing_sec: float | None,
+    kraken_sec: float | None = None,
+    kraken_ran: bool = False,
+) -> tuple[str, list[str]]:
+    """(window_class, reasons) for one bench run; the artifact is
+    low_confidence when `reasons` is non-empty.  Pure policy.
 
-    * any probe's spark canary outside DRIFT_GATE_BAND of calibration
-      -> the window drifted out of the usable band mid-loop, even when
-      it is the only probe that produced a reading (the others having
-      errored, as they may under the very load being detected);
-    * a non-positive reading -> the instrument failed, which must not
-      pass for a calm window;
-    * max/min spark-canary spread across probes > spread_gate -> the
-      window moved materially DURING the loop even if every individual
-      reading stayed in band (the r17 failure mode: per-query numbers
-      from different probes' neighborhoods are not comparable); this
-      needs two readings, so a single in-band probe acquits."""
+    `probes` are the mid-loop readings ({"at", "spark_sec"}; a failed
+    probe carries no spark_sec and is skipped).  Reasons:
+      * the closing reading, or the kraken session's when the kraken
+        section ran, is missing, zero or outside DRIFT_GATE_BAND;
+      * the first mid-loop reading that is non-positive or outside
+        DRIFT_GATE_BAND (a single surviving probe can convict);
+      * the positive mid-loop readings spread by more than
+        MID_LOOP_SPREAD_GATE (max / min).
+    window_class reads the mid-loop and closing readings: 'unknown' with
+    none or a non-positive one, 'out_of_calibration' when one is outside
+    DRIFT_GATE_BAND, 'clean' when all sit inside WINDOW_CLEAN_BAND and
+    their spread is within the gate, else 'drifted'.  The kraken reading
+    only enters the band check: a fresh JVM's canary is bimodal with its
+    C1/C2 state."""
     reasons: list[str] = []
-    readings = [
+
+    def _ratio(sec: float) -> str:
+        return (
+            f"{round(sec / SPARK_CANARY_REF_SEC, 2)}x its "
+            f"{SPARK_CANARY_REF_SEC}s calibration"
+        )
+
+    sessions = [("query-loop", closing_sec)]
+    if kraken_ran:
+        sessions.append(("kraken-session", kraken_sec))
+    for label, sec in sessions:
+        if not sec:
+            reasons.append(f"{label} spark canary gave no reading ({sec})")
+        elif not _drift_within(sec, DRIFT_GATE_BAND):
+            reasons.append(f"{label} spark canary {sec}s is {_ratio(sec)}")
+    loop = [
         (p.get("at"), p["spark_sec"])
         for p in probes
         if p.get("spark_sec") is not None
     ]
-    for at, sec in readings:
-        if sec <= 0:
+    for at, sec in loop:
+        if not _drift_within(sec, DRIFT_GATE_BAND):
             reasons.append(
-                f"mid-loop spark canary at block {at} read {sec}s, a "
-                "non-positive time: the canary failed to measure"
-            )
-            break
-        if not _canary_in_band(sec):
-            reasons.append(
-                f"mid-loop spark canary at block {at} read "
-                f"{sec}s ({round(sec / SPARK_CANARY_REF_SEC, 2)}x its "
-                f"{SPARK_CANARY_REF_SEC}s calibration)"
+                f"mid-loop spark canary at block {at} read {sec}s "
+                f"({_ratio(sec)})"
             )
             break  # one representative reading; the trace has the rest
-    secs = [sec for _, sec in readings if sec > 0]
-    if len(secs) < 2:
-        return reasons
-    spread = max(secs) / min(secs)
-    if spread > spread_gate:
+    pos = [sec for _, sec in loop if sec > 0]
+    if len(pos) > 1 and max(pos) / min(pos) > MID_LOOP_SPREAD_GATE:
         reasons.append(
-            f"spark canary swung {round(spread, 2)}x across the "
-            f"headline loop (min {min(secs)}s, max {max(secs)}s; gate "
-            f"{spread_gate}x) — per-query numbers straddle different "
-            "host windows"
+            f"spark canary swung {round(max(pos) / min(pos), 2)}x across "
+            f"the headline loop (min {min(pos)}s, max {max(pos)}s; gate "
+            f"{MID_LOOP_SPREAD_GATE}x)"
         )
-    return reasons
-
-
-def window_class(
-    probes: list[dict],
-    closing_canary: "float | None",
-    clean_band: tuple[float, float] = WINDOW_CLEAN_BAND,
-) -> str:
-    """Three-way window classification for the artifact (ADVICE r17
-    #3): 'clean' / 'drifted' / 'out_of_calibration' / 'unknown'.  Pure
-    policy, unit-tested.  Uses every mid-loop probe plus the closing
-    canary so a mid-loop stall cannot hide behind a calm close.  A
-    missing (None) reading is skipped; a non-positive one is an
-    instrument failure and makes the window 'unknown'."""
-    secs = [p["spark_sec"] for p in probes if p.get("spark_sec") is not None]
-    if closing_canary is not None:
-        secs.append(closing_canary)
-    if not secs or any(s <= 0 for s in secs):
-        return "unknown"
-    drifts = [SPARK_CANARY_REF_SEC / s for s in secs]
-    if any(
-        not (DRIFT_GATE_BAND[0] <= d <= DRIFT_GATE_BAND[1]) for d in drifts
+    secs = [sec for _, sec in loop]
+    if closing_sec is not None:
+        secs.append(closing_sec)
+    if not secs or min(secs) <= 0:
+        cls = "unknown"
+    elif not all(_drift_within(s, DRIFT_GATE_BAND) for s in secs):
+        cls = "out_of_calibration"
+    elif (
+        all(_drift_within(s, WINDOW_CLEAN_BAND) for s in secs)
+        and max(secs) / min(secs) <= MID_LOOP_SPREAD_GATE
     ):
-        return "out_of_calibration"
-    spread = max(secs) / min(secs) if len(secs) > 1 else 1.0
-    if (
-        all(clean_band[0] <= d <= clean_band[1] for d in drifts)
-        and spread <= MID_LOOP_SPREAD_GATE
-    ):
-        return "clean"
-    return "drifted"
+        cls = "clean"
+    else:
+        cls = "drifted"
+    return cls, reasons
+
 
 # --- scale probe: the empirical linearity check (VERDICT r5 #6) ------------
 # No sf1 testdata exists, so the probe builds a 10x replication of the
@@ -669,7 +641,7 @@ def probe_iterations(name: str, subsec: bool = False) -> int:
     budget breach — because the sub-second re-measure branch silently
     demoted its declared min-of-8, recreating the exact warm-up-tail
     truncation class the override exists to pay for (the r14 incident,
-    root-caused in r15).  Unit-tested in tests/test_round16_ops.py."""
+    root-caused in r15).  Unit-tested in tests/test_bench.py."""
     iters = SCALE_PROBE_ITERATIONS.get(name, SCALE_ITERATIONS)
     if subsec:
         iters = max(iters, SCALE_ITERATIONS_SUBSEC)
@@ -747,42 +719,9 @@ def bench_scale_probe(spark, specs) -> dict:
                     "x10": round(entry["ratio"] / SCALE_REPLICATION, 3),
                 }
             if name in X10_WALL_BUDGET_SEC:
-                # canary-normalized wall gate with bounded same-session
-                # retry (VERDICT r16 #2): each reading is judged against
-                # a canary sampled ADJACENT to it; a breach on a drifted
-                # window re-measures instead of publishing red (policy
-                # in wall_gate_verdict, unit-tested)
                 budget = X10_WALL_BUDGET_SEC[name]
                 entry["x10_budget_sec"] = budget
-                attempts = run_wall_gate(
-                    entry["x10_sec"],
-                    budget,
-                    measure_fn=lambda: _measure(sdir, iters),
-                    canary_fn=lambda: _spark_canary(spark),
-                )
-                entry["wall_gate_attempts"] = attempts
-                # publish the best raw across attempts (min-of-more of
-                # the same measurement), keeping the ratio consistent
-                best = min(a["raw_sec"] for a in attempts)
-                if best < entry["x10_sec"]:
-                    entry["x10_sec"] = best
-                    entry["ratio"] = round(best / entry["base_sec"], 2)
-                    if "per_replica_slope" in entry:
-                        entry["per_replica_slope"]["x10"] = round(
-                            entry["ratio"] / SCALE_REPLICATION, 3
-                        )
-                final = attempts[-1]
-                entry["x10_within_budget"] = final["within"]
-                entry["x10_within_budget_raw"] = (
-                    entry["x10_sec"] <= budget
-                )
-                entry["x10_normalized_sec"] = final["normalized_sec"]
-                entry["x10_canary_sec"] = final["canary_sec"]
-                entry["wall_gate_policy"] = (
-                    "pass if raw <= budget, or canary-normalized <= "
-                    "budget on an in-band window; breach retries up to "
-                    f"{WALL_GATE_MAX_ATTEMPTS} same-session readings"
-                )
+                entry["x10_within_budget"] = entry["x10_sec"] <= budget
             if name in X10_RATIO_BUDGET:
                 rb = X10_RATIO_BUDGET[name]
                 entry["ratio_budget"] = rb
@@ -793,197 +732,16 @@ def bench_scale_probe(spark, specs) -> dict:
     ratios = [e["ratio"] for e in out["queries"].values() if "ratio" in e]
     if ratios:
         out["max_ratio"] = max(ratios)
-    # r15 root-cause note (VERDICT r14 #1): the r14 sim_ivf_batch_assign
-    # x10 "breach" (1.96 s > 1.5 s) was min-of-2 truncation of a long
-    # warm-up tail, not a regression — min-of-8 reads x10 at 0.99 s,
-    # within budget; the publish rework was ruled out by code path (the
-    # query derives its codebook in-query, never touching the persisted
-    # generation).  Probe now runs min-of-8 (SCALE_PROBE_ITERATIONS).
-    # r16 (VERDICT r15 #7, the two tight wall gates): FOUR in-round
-    # re-anchor runs.  Runs 1-2 (canaries 1.96x / 1.53x):
-    # dedup_incremental x10 1.43 / 1.34 s, lsh 1.22 / 1.06 s.  Run 3
-    # (standalone min-of-8 after the probe-demotion fix, canary
-    # ~1.1x): 1.46 s (in-bench) / lsh 1.15 s.  Run 4 (canary 1.86x):
-    # 1.24 s / lsh 1.51 s — the one nominal lsh exceedance of the
-    # round, 0.81 s canary-normalized, i.e. the drifted window, not
-    # the query (three same-round min-of-8 readings sit 1.06-1.15 s
-    # and git log shows no code change on the path since the r15
-    # sweep fix).  Every reading of both gates normalizes to
-    # 0.8-1.3 s, at-or-below r14's clean window.
-    # r17 (VERDICT r16 #2): the wall gates are now CANARY-NORMALIZED
-    # with bounded same-session retry (wall_gate_verdict) — each
-    # reading is judged against a canary sampled adjacent to it; a
-    # breach on a drifted in-band window passes on the normalized
-    # number (recorded per reading in wall_gate_attempts), a breach on
-    # an out-of-band window re-measures, and a breach that survives
-    # WALL_GATE_MAX_ATTEMPTS readings publishes red.  A real
-    # regression in a clean window (drift ~1) still breaches — the
-    # normalization absorbs window drift, not slowness.
-    out["wall_gate_note"] = (
-        "wall gates are canary-normalized per reading with bounded "
-        "same-session retry (wall_gate_verdict; VERDICT r16 #2): "
-        "pass if raw <= budget or normalized <= budget on an in-band "
-        "window; per-reading raw/canary/normalized recorded in "
-        "wall_gate_attempts. r16 context: four-run re-anchor read "
-        "dedup_incremental 1.43/1.34/1.46/1.24s across drifted "
-        "windows, all 0.8-1.3s normalized — the class this policy "
-        "absorbs; a clean-window regression still breaches."
-    )
-    out["batch_assign_note"] = (
-        "r14 sim_ivf_batch_assign x10 1.96s>1.5s attributed to "
-        "min-of-2 warm-up-tail truncation (min-of-8 re-measure: x10 "
-        "0.99s, ratio 1.83); publish-rework ruled out by code path "
-        "(codebook derived in-query, persisted generation untouched); "
-        "probe now min-of-8. r16: the sub-second re-measure branch "
-        "was found silently demoting the min-of-8 override to "
-        "min-of-6 (false 1.67s breach in the clean-window bench); "
-        "fixed with max(), standalone min-of-8 re-measure x10 1.26s "
-        "<= 1.5s. See bench.py comment."
-    )
     return out
-
-
-#: drift band for the artifact-confidence gate: a measuring session
-#: whose Spark canary sits outside [ref/3, 3*ref] is a window where
-#: neither raw numbers nor the linear canary adjustment are usable
-#: (VERDICT r15 #1: the 8.4x window inflated raw 1.5-7x NON-uniformly,
-#: so no single multiplier can rescue it).
-DRIFT_GATE_BAND = (1 / 3, 3.0)
-
-
-def _canary_in_band(canary_sec: float | None) -> bool:
-    if not canary_sec:
-        return False
-    drift = SPARK_CANARY_REF_SEC / canary_sec
-    return DRIFT_GATE_BAND[0] <= drift <= DRIFT_GATE_BAND[1]
-
-
-#: how many same-session re-measurements a breached wall gate gets
-#: before the red verdict is published (VERDICT r16 #2: "a drifted
-#: window triggers an automatic same-round re-run until a clean
-#: reading lands" — bounded so one genuinely regressed query cannot
-#: spin the bench)
-WALL_GATE_MAX_ATTEMPTS = 3
-
-
-def wall_gate_verdict(
-    raw_sec: float,
-    budget_sec: float,
-    canary_sec: float | None,
-    ref_sec: float | None = None,
-    band: tuple[float, float] = DRIFT_GATE_BAND,
-) -> dict:
-    """Canary-normalized absolute wall gate — pure policy, unit-tested
-    (VERDICT r16 #1/#2: the r16 artifact shipped a red
-    `dedup_incremental` gate whose four-run re-anchor proved window
-    drift; a red gate left standing in the artifact is a weak
-    regardless of the explanation).
-
-    The gate passes when EITHER holds:
-      * raw <= budget — a clean reading needs no canary at all, and a
-        missing/failed canary can never turn a green raw reading red;
-      * the adjacent canary sits inside `band` of its calibration
-        reference AND raw * (ref / canary) <= budget — the same linear
-        normalization the headline totals publish (`value_adj`),
-        recorded per reading so the judge sees the window, not a shrug.
-
-    What it deliberately does NOT absorb: a real regression in a clean
-    window (drift ~1 leaves normalized ~= raw, still breached), and a
-    breach on an out-of-band window (normalization there is
-    extrapolation, VERDICT r15 #1 — the reading is unusable either
-    way, so the caller re-measures instead of trusting it)."""
-    ref = SPARK_CANARY_REF_SEC if ref_sec is None else ref_sec
-    v: dict = {
-        "raw_sec": raw_sec,
-        "budget_sec": budget_sec,
-        "canary_sec": canary_sec,
-        "raw_within": raw_sec <= budget_sec,
-    }
-    if not canary_sec or canary_sec <= 0:
-        v.update(
-            drift_factor=None,
-            normalized_sec=None,
-            canary_in_band=False,
-            within=v["raw_within"],
-            reason=(
-                "raw within budget (no canary needed)"
-                if v["raw_within"]
-                else "raw exceeds budget and no canary reading to "
-                "normalize against"
-            ),
-        )
-        return v
-    drift = ref / canary_sec
-    v["drift_factor"] = round(drift, 4)
-    v["normalized_sec"] = round(raw_sec * drift, 4)
-    v["canary_in_band"] = band[0] <= drift <= band[1]
-    if v["raw_within"]:
-        v["within"] = True
-        v["reason"] = "raw within budget"
-    elif v["canary_in_band"] and v["normalized_sec"] <= budget_sec:
-        v["within"] = True
-        v["reason"] = (
-            f"raw {raw_sec}s exceeds {budget_sec}s on a "
-            f"{round(1 / drift, 2)}x-slow window; canary-normalized "
-            f"{v['normalized_sec']}s is within budget"
-        )
-    elif not v["canary_in_band"]:
-        v["within"] = False
-        v["reason"] = (
-            f"raw {raw_sec}s exceeds {budget_sec}s and the canary is "
-            f"out of the calibration band (drift {v['drift_factor']}) "
-            "— normalization unusable, reading untrustworthy"
-        )
-    else:
-        v["within"] = False
-        v["reason"] = (
-            f"raw {raw_sec}s and canary-normalized "
-            f"{v['normalized_sec']}s both exceed {budget_sec}s on an "
-            "in-band window — treat as a real breach"
-        )
-    return v
-
-
-def run_wall_gate(
-    raw_sec: float,
-    budget_sec: float,
-    measure_fn,
-    canary_fn,
-    max_attempts: int = WALL_GATE_MAX_ATTEMPTS,
-) -> list[dict]:
-    """The bounded-retry loop around wall_gate_verdict, factored out so
-    the retry policy is unit-testable with fake measure/canary
-    callables.  Each reading gets a canary sampled ADJACENT to it; a
-    failing verdict triggers a fresh measurement (same iterations, same
-    scale dir) until one passes or attempts run out.  Returns every
-    attempt's verdict — the caller publishes the whole list so a pass
-    on attempt 3 is visibly a pass-on-retry, not a clean first
-    reading."""
-    attempts: list[dict] = []
-    raw = raw_sec
-    for _ in range(max_attempts):
-        try:
-            canary = canary_fn()
-        except Exception:  # noqa: BLE001 — raw-only verdict
-            canary = None
-        verdict = wall_gate_verdict(raw, budget_sec, canary)
-        attempts.append(verdict)
-        if verdict["within"]:
-            break
-        raw = measure_fn()
-    return attempts
 
 
 def parse_driver_tail(tail: str) -> dict | None:
     """Mirror of the round driver's bench-line parse: the driver keeps
     the last ~2000 chars of bench stdout and parses the final
-    non-empty line as JSON (VERDICT r16 #4 — r13-r15 shipped
-    parsed:null for three rounds and nothing noticed until
-    archaeology; tests/test_round17_ops.py runs this against the
-    PREVIOUS round's recorded artifact at round open so a regrowth or
-    driver-contract change is caught the round it happens).  Returns
-    None when the final line is clipped or non-JSON — exactly the
-    driver's failure mode."""
+    non-empty line as JSON (tests/test_bench.py runs this against the
+    latest recorded BENCH_r*.json, so a regrown line or a changed
+    driver contract fails a test).  Returns None when the final line
+    is clipped or non-JSON — exactly the driver's failure mode."""
     for line in reversed(re.split(r"[\r\n]+", tail.strip())):
         line = line.strip()
         if not line:
@@ -996,88 +754,16 @@ def parse_driver_tail(tail: str) -> dict | None:
     return None
 
 
-def drift_gate_reasons(
-    spark_canary: float | None,
-    kraken_canary: float | None,
-    kraken_ran: bool,
-) -> list[str]:
-    """Why this artifact should be stamped low_confidence ([] = full
-    confidence).  Pure policy, unit-tested: both measuring sessions'
-    Spark canaries must exist and sit inside DRIFT_GATE_BAND of the
-    calibration reference; the kraken session is only checked when the
-    kraken section actually ran (SPARK_GRAFT_SKIP_KRAKEN skips both
-    the run and its check)."""
-    reasons: list[str] = []
-
-    def _check(label: str, sec: float) -> None:
-        if not _canary_in_band(sec):
-            reasons.append(
-                f"{label} spark canary {sec}s is "
-                f"{round(sec / SPARK_CANARY_REF_SEC, 2)}x its "
-                f"{SPARK_CANARY_REF_SEC}s calibration reference"
-            )
-
-    if spark_canary:
-        _check("query-loop", spark_canary)
-    else:
-        reasons.append("query-loop spark canary failed to run")
-    if kraken_ran:
-        if kraken_canary:
-            _check("kraken-session", kraken_canary)
-        else:
-            reasons.append("kraken-session spark canary missing")
-    return reasons
-
-
-def _host_canary() -> float:
-    """Seconds to sha256 64 MiB single-threaded — a fixed CPU+memory
-    workload with no Spark/JVM involvement, min of 3."""
-    import hashlib
-
-    block = b"\xab" * (1 << 26)
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        hashlib.sha256(block).hexdigest()
-        runs.append(time.perf_counter() - t0)
-    return round(min(runs), 4)
-
-
 def _spark_canary(spark) -> float:
     """Seconds for a fixed data-independent Spark job (range 50M ->
-    sum, 32 partitions), min of 3 warm — tracks the JVM/executor-side
-    throughput the sha256 canary cannot see (the observed session-to-
-    session slowdowns hit Spark jobs ~40% while sha256 stayed flat, so
-    both canaries together separate host-CPU drift from JVM-side
-    drift)."""
+    sum, 32 partitions), min of 3 warm: the JVM/executor-side
+    throughput of the window the timings were taken in."""
     runs = []
     for _ in range(4):
         t0 = time.perf_counter()
         spark.range(0, 50_000_000, 1, 32).selectExpr(
             "sum(id * 2) as s"
         ).collect()
-        runs.append(time.perf_counter() - t0)
-    return round(min(runs[1:]), 4)  # drop the cold first run
-
-
-def _sched_canary(spark) -> float:
-    """Seconds for a fixed TINY multi-stage job (range 32k -> shuffle
-    32 partitions -> agg -> collect), min of 5 warm — tracks STAGE
-    SCHEDULING latency, the cost class that dominates sub-0.5 s
-    multi-stage queries and that neither throughput canary models
-    (r12, VERDICT r11 #3: the r11 evt-family +0.1 s-additive uniform
-    swing matched this class exactly — shortest multi-stage plans in
-    the bench set — while both throughput canaries stayed flat)."""
-    runs = []
-    for _ in range(6):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 32_000, 1, 8)
-            .selectExpr("id % 97 as k", "id as v")
-            .groupBy("k")
-            .count()
-            .collect()
-        )
         runs.append(time.perf_counter() - t0)
     return round(min(runs[1:]), 4)  # drop the cold first run
 
@@ -1151,7 +837,7 @@ def _warm_engine_machinery(spark) -> None:
     # session restart REUSES the query loop's JVM, so bench's
     # first-vs-min gap is dominated by janino compile of the kraken
     # plans themselves — per-plan generated source, not pre-warmable
-    # without running the measured plans; see the first_note field.)
+    # without running the measured plans.)
     wa = Window.partitionBy("k")
     j.select(
         ((F.col("id") - F.avg("id").over(wa)) / F.stddev_pop("id").over(wa)),
@@ -1165,78 +851,16 @@ def _warm_engine_machinery(spark) -> None:
     spark.range(16).localCheckpoint().count()
 
 
-def kraken_drift_mechanism(
-    trace: list[dict], calibration_sec: float | None
-) -> str | None:
-    """Name the kraken-session canary-drift mechanism from the
-    three-point trace — pure policy, unit-tested (VERDICT r16 #3: two
-    rounds running, the kraken session's canary drifted 8.4x/5.33x
-    while the query-loop session sat in band; a drift that follows one
-    session type deserves a mechanism, not a stamp).
-
-    Returns None when every point (including the calibration-point
-    sample) is in band — no mechanism needed."""
-    pts = [
-        (t["point"], t["sec"]) for t in trace if t.get("sec")
-    ]
-    if calibration_sec:
-        pts.append(("calibration_point", calibration_sec))
-    if not pts:
-        return "canary trace empty — every sample failed"
-    in_band = [(_canary_in_band(sec)) for _, sec in pts]
-    if all(in_band):
-        return None
-    if not any(in_band):
-        return (
-            "whole-session window drift: canary out of band at every "
-            "trace point (host/shared-VM window, not session "
-            "construction); readings "
-            + ", ".join(f"{p}={s}s" for p, s in pts)
-        )
-    if not in_band[0] and in_band[-1]:
-        return (
-            "cold-session warm-up: canary out of band at session "
-            "start, recovers within the session — the calibration "
-            "reference is too fast for a cold session; readings "
-            + ", ".join(f"{p}={s}s" for p, s in pts)
-        )
-    return (
-        "non-monotonic canary drift across the session (intermittent "
-        "window, e.g. GC/compile storms riding pipeline work); "
-        "readings " + ", ".join(f"{p}={s}s" for p, s in pts)
-    )
-
-
 def bench_kraken_e2e(spark) -> dict[str, float]:
     """Wall-time the full domain pipeline: TSV scan -> RPM/z/rRPM/tophits
-    -> three CSV sinks via the distributed (collect-free) writer. Two
+    -> three CSV sinks via the distributed (collect-free) writer. Four
     runs: `first` is the directly-comparable cold-plan number (the
     reference pays its full cost every run), `min` the warm steady state."""
     from pathlib import Path
 
     from bigbugdata_spark.operators.kraken import run_pipeline, write_outputs
 
-    # three-point canary trace (VERDICT r16 #3): sample the SAME spark
-    # canary immediately after session start, after the engine warm-up,
-    # and after the first pipeline run, so drift that follows the
-    # kraken session (r15: 8.4x, r16: 5.33x while the query loop sat
-    # in band) gets a mechanism.  Perturbation note: the first sample
-    # compiles the canary's plan and starts its JIT tiering, so THIS
-    # round's calibration-point sample runs on a warmer canary path
-    # than r15/r16's first-touch samples did (~12% per the r11
-    # measurement) — the trace is the diagnostic, the raw pipeline
-    # numbers are untouched by it.
-    trace: list[dict] = []
-
-    def _trace(point: str) -> None:
-        try:
-            trace.append({"point": point, "sec": _spark_canary(spark)})
-        except Exception:  # noqa: BLE001 — diagnostics never kill the run
-            trace.append({"point": point, "sec": None})
-
-    _trace("session_start")
     _warm_engine_machinery(spark)
-    _trace("post_engine_warm")
 
     fixture = _kraken_fixture_dir()
     report_paths = sorted(str(p) for p in Path(fixture).glob("*_report.txt"))
@@ -1245,16 +869,11 @@ def bench_kraken_e2e(spark) -> dict[str, float]:
         ("CF_RNA_Negative$", "^CF_RNA"),
     ]
     times = []
-    # four runs (round 11, was two): the warm steady state has ~0.5-1 s
-    # of run-to-run spread on this host AND the fresh session's JIT is
-    # still tiering through run 3 (measured: 13.5/8.7/8.1/8.9/8.1 over
-    # five runs), so a single warm run made `min` a coin flip — the r10
-    # "+14% regression" was mostly this noise (the r11 bisect measured
-    # zero in-window cost from the 25 new module registrations: load_all
-    # is 0.6 s of import OUTSIDE the window, and gen2 GC collections
-    # in-window are zero). `first` stays the cold-plan number.
-    canary_at_calibration_point = None
-    for i in range(4):
+    # four runs: the warm steady state varies ~0.5-1 s run to run and a
+    # fresh session's JIT is still tiering through run 3 (measured
+    # 13.5/8.7/8.1/8.9/8.1 over five runs), so one warm run would make
+    # `min` a coin flip
+    for _ in range(4):
         out = tempfile.mkdtemp(prefix="bigbugdata-bench-kraken-out-")
         t0 = time.perf_counter()
         result = run_pipeline(
@@ -1263,39 +882,13 @@ def bench_kraken_e2e(spark) -> dict[str, float]:
         )
         write_outputs(result, out, "species", mode="scale")
         times.append(time.perf_counter() - t0)
-        if i == 0:
-            _trace("post_run1")
-        if i == 1:
-            # the adjustment canary is sampled HERE — after exactly two
-            # pipeline executions — because that is the session state
-            # SPARK_CANARY_REF_SEC was calibrated at (rounds <= 10 ran
-            # two kraken iterations, then the canary).  The canary's
-            # own codegen path keeps JIT-warming with session work
-            # (measured: 0.080 after 2 runs vs 0.067 after 4 on the
-            # same host), so sampling it after the two extra r11 runs
-            # would silently inflate *_adj by ~12% against every prior
-            # round's number.
-            # guarded (ADVICE r11): a canary failure must not abort
-            # the kraken loop and discard completed pipeline runs —
-            # None here makes main() fall back to its own guarded
-            # post-hoc _spark_canary sample
-            try:
-                canary_at_calibration_point = _spark_canary(spark)
-            except Exception:  # noqa: BLE001
-                canary_at_calibration_point = None
-    mech = kraken_drift_mechanism(trace, canary_at_calibration_point)
-    res = {
+    return {
         "first": round(times[0], 4),
         "min": round(min(times), 4),
         "baseline_sec": KRAKEN_BASELINE_SEC,
         "samples": KRAKEN_SAMPLES,
         "taxa": KRAKEN_TAXA,
-        "canary_at_calibration_point": canary_at_calibration_point,
-        "canary_trace": trace,
     }
-    if mech:
-        res["drift_mechanism"] = mech
-    return res
 
 
 def main() -> None:
@@ -1317,17 +910,13 @@ def main() -> None:
     medians: dict[str, float] = {}
     firsts: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # mid-loop window certification (r18, VERDICT r17 #1): canary
-    # probes BETWEEN query blocks — outside every per-query timed
-    # window — so the artifact can convict or acquit its own window
-    # at sub-loop granularity (see midloop_probe_reasons)
+    # canary probes between query blocks, outside every timed window
     midloop_probes: list[dict] = []
 
     def _midloop_probe(at: str) -> None:
         probe: dict = {"at": at}
         try:
             probe["spark_sec"] = _spark_canary(spark)
-            probe["sched_sec"] = _sched_canary(spark)
         except Exception as exc:  # noqa: BLE001 — diagnostics never kill
             probe["error"] = f"{type(exc).__name__}: {exc}"[:120]
         midloop_probes.append(probe)
@@ -1415,13 +1004,8 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — record and continue
         errors["ivfgen_build"] = f"{type(exc).__name__}: {exc}"[:300]
 
-    # sim_mmr_topk re-derivation cost, measured (VERDICT r16 #5): the
-    # one driver-controlled iterative op measured nowhere else in the
-    # bench — its greedy selection re-runs per query over the persisted
-    # kNN spine (spine itself restart-proof since r16).  The other
-    # three (text_bpe_train, sim_pagerank, emb_kmeans_assign) are
-    # already measured as headline/scale-probe rows; rederive_costs
-    # below cites each.
+    # sim_mmr_topk's greedy selection re-runs per query over the
+    # persisted kNN spine; no headline or probe row times it
     mmr_rederive_sec: float | None = None
     try:
         spark.catalog.clearCache()
@@ -1435,21 +1019,16 @@ def main() -> None:
     except Exception as exc:  # noqa: BLE001 — record and continue
         errors["mmr_rederive"] = f"{type(exc).__name__}: {exc}"[:300]
 
-    # Spark-side canary measured NOW, on the SAME session that ran the
-    # query loop — it exists to normalize those numbers, so measuring it
-    # on the restarted kraken session below would let a slow session 1 /
-    # fast session 2 split report a misleadingly fast canary. Guarded:
-    # the bench must always emit its JSON (round-4 rule).
-    try:
-        spark_canary = _spark_canary(spark)
-    except Exception as exc:  # noqa: BLE001
-        spark_canary = None
-        errors["spark_canary"] = f"{type(exc).__name__}: {exc}"[:300]
-    try:
-        sched_canary = _sched_canary(spark)
-    except Exception as exc:  # noqa: BLE001
-        sched_canary = None
-        errors["sched_canary"] = f"{type(exc).__name__}: {exc}"[:300]
+    def _canary(key: str) -> float | None:
+        # guarded: the bench must always print its line
+        try:
+            return _spark_canary(spark)
+        except Exception as exc:  # noqa: BLE001
+            errors[key] = f"{type(exc).__name__}: {exc}"[:300]
+            return None
+
+    # the closing canary, on the session that ran the query loop
+    spark_canary = _canary("spark_canary")
 
     # Kraken e2e on a FRESH SparkSession: it is the one head-to-head
     # number against the measured reference, and a session aged by the
@@ -1466,43 +1045,6 @@ def main() -> None:
             spark.stop()
             spark = get_spark(app_name="bigbugdata-bench-kraken")
             kraken = bench_kraken_e2e(spark)
-            # kraken runs on its own fresh session, so it gets its own
-            # canary for normalization (the query-loop canary measures a
-            # different session's window); sampled INSIDE the run loop
-            # at the exact session state SPARK_CANARY_REF_SEC was
-            # calibrated at (after two pipeline executions — see
-            # bench_kraken_e2e).  Guarded: a canary failure must not
-            # mis-attribute an error to (or discard) the already-
-            # successful kraken result.
-            try:
-                kc = kraken.pop("canary_at_calibration_point", None)
-                if kc is None:
-                    kc = _spark_canary(spark)
-                kraken["spark_canary_sec"] = kc
-                if kc:
-                    kraken["first_adj"] = round(
-                        kraken["first"] * SPARK_CANARY_REF_SEC / kc, 4
-                    )
-                    kraken["min_adj"] = round(
-                        kraken["min"] * SPARK_CANARY_REF_SEC / kc, 4
-                    )
-                # the spark canary is BIMODAL with the shared JVM's
-                # compilation state (measured r11: ~0.08 s when its
-                # path sits at C1, ~0.04 s once C2 engages — a 2x
-                # multiplier swing on identical hardware and identical
-                # raw kraken numbers), so the sha256 host canary's
-                # adjustment rides alongside: hardware-stable (+-4%
-                # across every r10/r11 run), blind to JVM drift.  Read
-                # the RAW numbers first, then whichever adjustment's
-                # premise fits the question.
-                hc = _host_canary()
-                kraken["host_canary_sec"] = hc
-                if hc:
-                    kraken["min_adj_host"] = round(
-                        kraken["min"] * HOST_CANARY_REF_SEC / hc, 4
-                    )
-            except Exception as exc:  # noqa: BLE001
-                errors["kraken_canary"] = f"{type(exc).__name__}: {exc}"[:300]
         except Exception as exc:  # noqa: BLE001
             errors["kraken_e2e"] = f"{type(exc).__name__}: {exc}"[:300]
             try:  # the restart itself may have failed: the scale probe
@@ -1516,149 +1058,45 @@ def main() -> None:
             scale = bench_scale_probe(spark, specs)
         except Exception as exc:  # noqa: BLE001
             errors["scale_probe"] = f"{type(exc).__name__}: {exc}"[:300]
+    if kraken is not None:
+        # the kraken session's canary, after its last section
+        kraken["spark_canary_sec"] = _canary("kraken_canary")
 
     total = round(sum(timings[n] for n in relational if n in timings), 4)
     ext_total = round(sum(timings[n] for n in ext if n in timings), 4)
     modern_total = round(sum(modern_timings.values()), 4)
+    window, low_conf_reasons = window_policy(
+        midloop_probes,
+        spark_canary,
+        (kraken or {}).get("spark_canary_sec"),
+        kraken_ran=kraken is not None,
+    )
     out = {
         "metric": "headline_queries_total_wall",
         "value": total,
         "unit": "sec",
         "queries": timings,
         "queries_median": medians,
-        # first-iteration wall next to min (VERDICT r17 #9): cold plan
-        # + any pinned-cache build, paid inside iteration 1's window
+        # first iteration next to min: cold plan + any pinned-cache
+        # build, paid inside iteration 1's window
         "queries_first": firsts,
         "ext_total": ext_total,
         "modern_queries": modern_timings,
         "modern_total": modern_total,
         "spine_build_sec": spine_build_sec,
         "ivfgen_build_sec": ivfgen_build_sec,
-        "sched_canary_sec": sched_canary,
-        # r12 root-cause note (VERDICT r11 #3, the evt-family +33-86%
-        # raw regression): NOT code (no evt-path diff r10->r11, judge-
-        # verified), NOT the events ts physical layout (all three
-        # layouts A/B'd within 25% in one session: nanos-bigint 0.233,
-        # us-UTC 0.232, ntz 0.185 s on the rollup plan), NOT the
-        # nanosAsLong/UTC session confs (with-conf measured FASTER),
-        # NOT session aging or registry size (a fresh minimal-import
-        # session reproduced the slow numbers), NOT cpus/sf (identical
-        # in both artifacts).  The family's shared trait is the
-        # SHORTEST multi-stage plans in the bench set (0.1-0.4 s, 3-5
-        # stages on 100k rows) — stage-SCHEDULING-latency dominated, a
-        # cost class both throughput canaries are blind to; the swing
-        # was ~+0.1 s additive per query, matching that class.
-        # sched_canary_sec exists so future rounds can normalize it.
-        # (r18, VERDICT r17 #1: the per-round regression-prose fields
-        # that used to ship here — evt_regression_note,
-        # pipe_regression_note, sched_window_note, tpch_regression_note
-        # — were hard-coded narrative about PAST sessions that shipped
-        # verbatim inside every future artifact, including driver runs
-        # they did not describe.  The history stays in the comments
-        # above/below; the artifact now carries only fields COMPUTED
-        # from this run: midloop_canaries, window_class,
-        # sched_canary_vs_ref, queries_first.)
-        # r13 root-cause note (VERDICT r12 #5, the +24% raw
-        # pipe_training_corpus swing r11->r12): NOT code — git diff of
-        # the r11 bench commit vs r12 shows ZERO Spark-side changes in
-        # the query's whole composition (pipeline.py, text.py,
-        # dedup.py, hashing.py, graph.py, catalog.py, session.py all
-        # untouched; the r12 'shared quality fragments' refactor the
-        # verdict suspected moved ORACLE SQL strings only, rebuilt
-        # byte-identically — hash-checked).  With a plan change
-        # excluded, the swing is the r11 evt class: an additive
-        # ~0.1 s scheduling-latency delta on a short multi-stage plan
-        # (r12 median 0.68 vs min 0.59 shows that spread within one
-        # session), on a session whose sched_canary (0.0846) ran 35%
-        # above its r11-calibration — the throughput canary the
-        # 'faster VM' reading came from is blind to that cost class.
-        # r13 cold-start finding (VERDICT r12 #6): the kraken session
-        # restart reuses the bench process's JVM, so `first` - `min` is
-        # NOT JIT (already tiered by the query loop) but janino
-        # compilation of the kraken plans on first encounter —
-        # generated source is per-plan, so no warm-up short of running
-        # the measured plans can pre-pay it, and running them would
-        # make `first` no longer a cold-plan number.  Measured this
-        # round: generic extended warm bought ~0.7 s on a truly fresh
-        # JVM (shipped in _warm_engine_machinery) but cannot move the
-        # in-bench gap; codegen-off A/B improved first ~3 s but
-        # regressed the warm min ~0.7 s (rejected — min is the
-        # baseline-comparable headline); 1-key pivot regroup measured
-        # a wash.  `first` therefore carries an irreducible ~2-2.5 s
-        # plan-compile cost the reference's interpreted loop never
-        # pays — and still beats the reference's 13.7 s every-run cost.
-        # the round's opt-in second-scale parity sweep, if one ran
-        # (VERDICT r12 #7): tests/conftest.py writes SF2_SWEEP.json on
-        # a SPARK_GRAFT_PARITY_SF2=1 pytest run; embedding it (with
-        # its age) makes the two-scale claim auditable per round.
+        "mmr_rederive_sec": mmr_rederive_sec,
+        # the opt-in second-scale parity sweep and slow tier's last runs
+        # (tests/conftest.py writes them), with their age
         "sf2_sweep": _read_sweep("SF2_SWEEP.json"),
-        # the opt-in slow tier's last run (restart/crash/stream-equivalence/
-        # fuzz/multicycle; tests/parity.py), with its age, the same way
         "slowtier_sweep": _read_sweep("SLOWTIER_SWEEP.json"),
-        # r14 closing A/B (VERDICT r13 #5, the last first<=9s attempt):
-        # two plan-count-reduction variants measured in fresh processes,
-        # interleaved order, fixture page-cache pre-warmed, 3 e2e runs
-        # each x2 trials: (B) fuse the matrix sinks' coalesce+sort into
-        # the pinned pivot so both sinks are projection-only writes —
-        # firsts 11.16/11.60 vs HEAD 12.39/10.19; (C) whole-stage
-        # codegen OFF scoped to the sink section — firsts 12.59/10.58.
-        # No variant beats HEAD's best by >=0.7 s; the spread between
-        # identical-variant trials (~1.5-2 s) exceeds any between-
-        # variant delta.  The note below is FINAL: first-run cost is
-        # per-plan janino on the big shared plans (parse/rpm/z/pivot),
-        # which every variant still compiles.
-        "first_note": (
-            "kraken first-run gap over min is janino plan-compile "
-            "(JVM pre-warmed by the query loop); generic warm cannot "
-            "pre-pay per-plan generated source. FINAL per the r14 "
-            "fused-sinks and scoped-codegen-off A/Bs (no >=0.7 s win; "
-            "see bench.py comment); three earlier A/Bs in r13."
-        ),
-        # r14 root-cause note (VERDICT r13 #1/#2 watch items): the r13
-        # +32% tpch_q8 / +23% dedup_incremental raw swings.  NOT code —
-        # git log shows zero changes on either query's composition
-        # r12->r13 (tpch_full.py, catalog.py, session.py, dedup_incr*.py
-        # all untouched between the two bench commits).  A min-of-8
-        # re-measurement this round read dedup_incremental at 0.784 s,
-        # BELOW both rounds' numbers, and q8's per-iteration series as a
-        # monotone-declining JIT tail still falling at iteration 4 —
-        # min-of-4 truncated that tail on a session whose canary drifted
-        # 1.14x.  Both queries now run min-of-8 (HEADLINE_ITERATIONS) so
-        # the tail is paid outside the min.
-        # r17 window note: the in-round bench read the headline total
-        # at 4.82 s vs r16's 3.83 s with the spark THROUGHPUT canary
-        # flat (0.0927 vs 0.0955) and the SCHEDULING canary at 0.2147
-        # vs r16's 0.1254 (2.5x its r12 calibration of 0.0846) — the
-        # r11/r12-documented stage-scheduling-latency class, additive
-        # on short multi-stage plans (largest mover: tpch_q21, the
-        # most stages in the set).  No code change on any query path
-        # this round (git: r17 touched bench.py, registry order,
-        # tests, README only).  A same-day fresh-process min-of-8
-        # re-anchor drew an even slower window (canary 0.337, 3.9x —
-        # out of band) and still read q21 declining 10.3 -> 2.1 s
-        # across iterations: window, not regression.
         "iterations": ITERATIONS,
         "iterations_overrides": HEADLINE_ITERATIONS,
         "agg": "min",
         "sf": sf_from_dir(SF_DIR),
-        # fixed pure-CPU workload timed alongside the queries: this
-        # shared VM's effective throughput swings 40%+ between sessions
-        # (identical workloads measured 3.3 s vs 4.5 s hours apart), so
-        # round-over-round comparisons should normalize by the canary
-        # ratio before reading anything into absolute seconds
-        "host_canary_sec": _host_canary(),
         "spark_canary_sec": spark_canary,
-        # the mid-loop canary trace (VERDICT r17 #1): sampled between
-        # query blocks inside the headline loop, outside every timed
-        # window — the instrument that convicts or acquits a window at
-        # sub-loop granularity (midloop_probe_reasons feeds the
-        # low_confidence gate below)
         "midloop_canaries": midloop_probes,
-        # three-way window classification with its bounds (ADVICE r17
-        # #3): 'clean' readings are calibration-grade; 'drifted' are
-        # in the usable band but need the canary adjustment; 'out_of_
-        # calibration' readings are untrustworthy either way
-        "window_class": window_class(midloop_probes, spark_canary),
+        "window_class": window,
         "window_class_bounds": {
             "clean_drift_band": [
                 round(WINDOW_CLEAN_BAND[0], 4),
@@ -1670,101 +1108,14 @@ def main() -> None:
             ],
             "midloop_spread_gate": MID_LOOP_SPREAD_GATE,
         },
+        "low_confidence": bool(low_conf_reasons),
     }
-    if sched_canary:
-        # computed replacement for the old hard-coded sched_window_note
-        # (history in the comments above): how far THIS run's stage-
-        # scheduling latency sits from its r12 calibration — the cost
-        # class that dominates sub-0.5 s multi-stage queries and that
-        # the throughput canaries cannot see
-        out["sched_canary_vs_ref"] = {
-            "ref_sec": SCHED_CANARY_REF_SEC,
-            "ratio": round(sched_canary / SCHED_CANARY_REF_SEC, 2),
-        }
-    # Canary-drift GATE (VERDICT r15 #1): the r15 artifact shipped with
-    # the Spark canary 8.4x over its calibration reference — raw numbers
-    # inflated 1.5-7x non-uniformly and the linear adjustment
-    # extrapolated 8x outside any calibrated envelope, so NEITHER was
-    # usable, yet the artifact carried no machine-readable warning.  A
-    # drifted measuring session (drift_gate_reasons) now stamps the
-    # whole artifact low_confidence: re-run in a calmer window instead
-    # of comparing these numbers round-over-round.
-    if spark_canary:
-        drift = SPARK_CANARY_REF_SEC / spark_canary
-        out["canary_adjusted"] = {
-            "formula": "raw * (spark_canary_ref_sec / spark_canary_sec)",
-            "spark_canary_ref_sec": SPARK_CANARY_REF_SEC,
-            "drift_factor": round(drift, 4),
-            # the adjustment is a ~±40% normalization, not an 8x one:
-            # outside the gate it is an out-of-calibration EXTRAPOLATION
-            # and must not be read as a measurement (VERDICT r15 #1)
-            "out_of_calibration": not _canary_in_band(spark_canary),
-            "value_adj": round(total * drift, 4),
-            "ext_total_adj": round(ext_total * drift, 4),
-            "modern_total_adj": round(modern_total * drift, 4),
-        }
-    low_conf_reasons = drift_gate_reasons(
-        spark_canary,
-        (kraken or {}).get("spark_canary_sec"),
-        kraken_ran=kraken is not None,
-    ) + midloop_probe_reasons(midloop_probes)
-    out["low_confidence"] = bool(low_conf_reasons)
     if low_conf_reasons:
         out["low_confidence_reason"] = "; ".join(low_conf_reasons)
     if kraken is not None:
         out["kraken_e2e"] = kraken
     if scale is not None:
         out["scale_probe"] = scale
-    # measured re-derivation costs for the per-session iterative ops
-    # (VERDICT r16 #5): each driver-controlled iterative op either
-    # rides a restart-proof persisted generation (kNN spine, IVF
-    # generation, attach indexes — r16 tests) or re-derives per
-    # session; this block pins the measured re-derivation cost of the
-    # four that re-derive, citing where in THIS artifact each number
-    # was measured.
-    pagerank_probe = ((scale or {}).get("queries") or {}).get(
-        "sim_pagerank", {}
-    )
-    out["rederive_costs"] = {
-        "policy": (
-            "VERDICT r16 #5: iterative ops without a persisted "
-            "generation are documented cheap-to-rederive with their "
-            "measured per-session re-derivation cost"
-        ),
-        "text_bpe_train": {
-            "sec": modern_timings.get("text_bpe_train"),
-            "state": (
-                "nothing persisted — full merge training re-runs "
-                "in-query; cost IS the modern headline row"
-            ),
-        },
-        "emb_kmeans_assign": {
-            "sec": timings.get("emb_kmeans_assign"),
-            "state": (
-                "nothing persisted — Lloyd iterations re-run "
-                "in-query; cost IS the ext headline row"
-            ),
-        },
-        "sim_mmr_topk": {
-            "sec": mmr_rederive_sec,
-            "state": (
-                "greedy selection re-runs per query over the "
-                "persisted kNN spine (spine restart-proof with zero "
-                "rebuild I/O, r16 test); measured min-of-"
-                f"{ITERATIONS} above"
-            ),
-        },
-        "sim_pagerank": {
-            "warm_memo_sec": modern_timings.get("sim_pagerank"),
-            "rounds_sec": pagerank_probe.get("base_sec"),
-            "state": (
-                "edge spine persisted + restart-proof; rank rounds "
-                "re-derive per session — measured as the scale "
-                "probe's base point with the downstream reset "
-                "(memo + derived frames cleared, edges kept)"
-            ),
-        },
-    }
     if errors:
         out["errors"] = errors
 
@@ -1781,17 +1132,12 @@ def main() -> None:
     print(compact_line(out), flush=True)
 
 
-# r16 find: every BENCH_r13..r15.json carries parsed:null — the r5
-# blocklist approach (drop queries_median/scale_probe, keep everything
-# else) silently regrew past the driver's 2000-char stdout tail as the
-# root-cause prose notes accumulated, so the driver has not parsed a
-# bench line in three rounds (the judge fell back to BENCH_out.json).
-# Replaced with a WHITELIST of the driver-contract keys plus the
-# headline diagnostics, then a hard byte cap with deterministic
-# shedding: prose lowest-value-first, then the FASTEST per-query
-# timings (the slow tail is what round-over-round comparison reads),
-# with a queries_omitted count so truncation is loud. Unit-tested in
-# tests/test_round16_ops.py against a synthetic 60-query artifact.
+# The compact line is a WHITELIST of the driver-contract keys plus the
+# headline diagnostics (a blocklist regrew past the driver's 2000-char
+# stdout tail), then a hard byte cap with deterministic shedding: prose
+# lowest-value-first, then the FASTEST per-query timings (the slow tail
+# is what run-over-run comparison reads), with a queries_omitted count
+# so truncation is loud. Unit-tested in tests/test_bench.py.
 _COMPACT_LINE_CAP = 1800  # < 2000-char driver tail, margin for a newline
 
 
@@ -1811,8 +1157,6 @@ def compact_line(out: dict, cap: int = _COMPACT_LINE_CAP) -> str:
         "low_confidence",
         "window_class",
         "spark_canary_sec",
-        "host_canary_sec",
-        "sched_canary_sec",
         "iterations",
         "agg",
     ):
@@ -1820,10 +1164,6 @@ def compact_line(out: dict, cap: int = _COMPACT_LINE_CAP) -> str:
             compact[k] = out[k]
     if out.get("low_confidence_reason"):
         compact["low_confidence_reason"] = out["low_confidence_reason"][:160]
-    ca = out.get("canary_adjusted")
-    if ca:
-        compact["drift_factor"] = ca.get("drift_factor")
-        compact["value_adj"] = ca.get("value_adj")
     kraken = out.get("kraken_e2e")
     if isinstance(kraken, dict):
         compact["kraken_min"] = kraken.get("min")
@@ -1851,24 +1191,20 @@ def compact_line(out: dict, cap: int = _COMPACT_LINE_CAP) -> str:
         omitted += 1
         compact["queries_omitted"] = omitted
         line = _dump()
-    # terminal guarantee (ADVICE r16): the docstring promises "always
-    # parseable", so if the line is still over cap with every query
-    # shed, drop the remaining optional diagnostics too,
-    # least-valuable-first — only the driver-contract core
-    # (metric/value/unit/sf/queries/full) is unshedabble
+    # terminal guarantee: the docstring promises "always parseable", so
+    # if the line is still over cap with every query shed, drop the
+    # remaining optional diagnostics too, least-valuable-first — only
+    # the driver-contract core (metric/value/unit/sf/queries/full) is
+    # unshedabble
     for victim in (
-        "sched_canary_sec",
-        "host_canary_sec",
         "agg",
         "window_class",
         "kraken_first",
-        "drift_factor",
         "scale_probe_max_ratio",
         "modern_total",
         "ext_total",
         "spark_canary_sec",
         "kraken_min",
-        "value_adj",
         "low_confidence",
     ):
         if len(line) <= cap:

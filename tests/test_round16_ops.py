@@ -14,19 +14,11 @@ band+set pair, rollup partial store): a fresh process must ADOPT, with
 zero rebuild I/O, pinned by file-inventory identity across two real
 interpreter+JVM runs.
 
-3) The bench artifact's canary-drift gate (bench.drift_gate_reasons)
-as pure unit-tested policy, including the r15 8.4x-incident values.
-
-4) The driver-facing bench line and probe-iteration policies
-(bench.compact_line, bench.probe_iterations) — both born from real
-r16 artifact finds: three rounds of parsed:null driver records, and a
-false budget breach from a silently demoted min-of-8 override.
-
-5) Cross-process commit contention: six real processes released at the
+3) Cross-process commit contention: six real processes released at the
 same instant race _commit_manifest; os-level exclusive-create is the
 only arbiter, and no writer's rows are ever lost or doubled.
 
-6) The vacuum-vs-time-travel loudness contract: an in-flight DataFrame
+4) The vacuum-vs-time-travel loudness contract: an in-flight DataFrame
 whose version expires fails with an exception at its next action,
 never a silent zero-row answer (ignoreMissingFiles stays false).
 
@@ -348,43 +340,6 @@ def test_spine_survives_session_restart_without_rebuild(sf_small):
     assert r1["n"] > 0
 
 
-# --- the bench artifact's canary-drift gate (pure policy) --------------------
-
-
-def test_bench_drift_gate_policy():
-    """VERDICT r15 #1: an artifact measured on a drifted window must
-    carry a machine-readable low-confidence stamp.  The gate is pure
-    policy over the two measuring sessions' Spark canaries — pin the
-    band edges, the r15 incident values, and the skip/missing cases."""
-    import bench
-
-    ref = bench.SPARK_CANARY_REF_SEC
-    gate = bench.drift_gate_reasons
-
-    # clean window (the r16 re-anchor values): full confidence
-    assert gate(0.1678, 0.126, kraken_ran=True) == []
-    # the r15 incident (canary 0.7161 = 8.4x ref): named on both ends
-    reasons = gate(0.7161, 0.7161, kraken_ran=True)
-    assert len(reasons) == 2
-    assert "8.36x" in reasons[0] and "query-loop" in reasons[0]
-    assert "kraken-session" in reasons[1]
-    # band edges: 3x slow is still confident, beyond it is not;
-    # an implausibly FAST canary (sub-ref/3) is equally suspicious
-    assert gate(ref * 3, None, kraken_ran=False) == []
-    assert gate(ref * 3.1, None, kraken_ran=False) != []
-    assert gate(ref / 3, None, kraken_ran=False) == []
-    assert gate(ref / 3.1, None, kraken_ran=False) != []
-    # a failed/missing canary is never silent confidence
-    assert gate(None, 0.1, kraken_ran=True) == [
-        "query-loop spark canary failed to run"
-    ]
-    assert any(
-        "missing" in r for r in gate(0.1, None, kraken_ran=True)
-    )
-    # SPARK_GRAFT_SKIP_KRAKEN: no kraken section, no kraken check
-    assert gate(0.1, None, kraken_ran=False) == []
-
-
 def test_compactor_crash_before_commit_leaves_layout_and_data_intact(
     spark, tmp_path, monkeypatch
 ):
@@ -602,75 +557,6 @@ def test_attach_family_indexes_survive_session_restart(spark, sf_small):
         assert counts2 == counts1 and all(c > 0 for c in counts1), fn
 
 
-def test_bench_compact_line_always_fits_driver_tail():
-    """r16 find: BENCH_r13..r15.json all carry parsed:null — the r5
-    blocklist compact line regrew past the driver's 2000-char stdout
-    tail as prose notes accumulated, so the driver has not parsed a
-    bench line in three rounds.  compact_line is now a whitelist with a
-    hard byte cap and deterministic shedding (prose first, then the
-    FASTEST per-query timings, with a loud queries_omitted count).
-    Pin: (a) a small artifact passes through unshed, (b) a synthetic
-    worst-case (80 long-named queries + every optional section) still
-    fits and keeps the slow tail, (c) the line is valid JSON with the
-    driver-contract keys."""
-    import bench
-
-    small = {
-        "metric": "headline_queries_total_wall",
-        "value": 3.21,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {"q1": 0.5, "q2": 1.0},
-        "low_confidence": False,
-        "low_confidence_reason": None,
-    }
-    line = bench.compact_line(small)
-    parsed = json.loads(line)
-    assert parsed["queries"] == {"q1": 0.5, "q2": 1.0}
-    assert "queries_omitted" not in parsed
-    assert len(line) <= bench._COMPACT_LINE_CAP
-
-    worst = {
-        "metric": "headline_queries_total_wall",
-        "value": 123.4567,
-        "unit": "sec",
-        "sf": 0.1,
-        "queries": {
-            f"tpch_extremely_long_query_name_number_{i:03d}": i / 100.0
-            for i in range(80)
-        },
-        "ext_total": 12.3,
-        "modern_total": 4.5,
-        "iterations": 4,
-        "agg": "min",
-        "spark_canary_sec": 0.7161,
-        "host_canary_sec": 0.0553,
-        "sched_canary_sec": 0.888,
-        "low_confidence": True,
-        "low_confidence_reason": "x" * 400,
-        "canary_adjusted": {"drift_factor": 0.1197, "value_adj": 0.41},
-        "kraken_e2e": {"min": 13.58, "first": 23.33},
-        "scale_probe": {"max_ratio": 6.88},
-        "errors": {f"err_{i}": "boom" for i in range(20)},
-    }
-    line = bench.compact_line(worst)
-    assert len(line) <= bench._COMPACT_LINE_CAP
-    parsed = json.loads(line)
-    for key in ("metric", "value", "unit", "sf", "queries"):
-        assert key in parsed
-    assert parsed["kraken_min"] == 13.58
-    assert parsed["drift_factor"] == 0.1197
-    # shedding dropped the FASTEST queries and said so
-    assert parsed.get("queries_omitted", 0) > 0
-    kept = parsed["queries"]
-    slowest = "tpch_extremely_long_query_name_number_079"
-    assert slowest in kept
-    dropped = set(worst["queries"]) - set(kept)
-    assert dropped and max(worst["queries"][q] for q in dropped) < min(
-        kept.values()
-    )
-
-
 # --- cross-process writer contention on the commit protocol ------------------
 
 _CONTEND_RUN = r"""
@@ -800,33 +686,6 @@ def test_commit_protocol_cross_process_writer_contention(spark, tmp_path):
     assert counts == {i: n_rows for i in range(n_writers)}
 
 
-def test_scale_probe_iteration_overrides_survive_subsec_floor():
-    """r16 bench find: the sub-second re-measure branch demoted
-    sim_ivf_batch_assign's declared min-of-8 to the generic min-of-6
-    floor, producing a FALSE 1.67 s > 1.5 s budget breach in the
-    clean-window bench (standalone min-of-8 re-measure: 1.26 s, green).
-    Pin the policy: an override never loses to the floor, the floor
-    still promotes un-overridden queries, and every ingest-class query
-    with an absolute x10 wall budget carries a min-of-8 override (the
-    r15 rule that prevented this class in the first place)."""
-    import bench
-
-    # overridden + sub-second: keeps its 8, never the 6 floor
-    assert bench.probe_iterations("sim_ivf_batch_assign") == 8
-    assert bench.probe_iterations("sim_ivf_batch_assign", subsec=True) == 8
-    # un-overridden: base 2, promoted to the floor when sub-second
-    assert bench.probe_iterations("no_such_query") == bench.SCALE_ITERATIONS
-    assert (
-        bench.probe_iterations("no_such_query", subsec=True)
-        == bench.SCALE_ITERATIONS_SUBSEC
-    )
-    # the r15 rule: absolute-wall-budget (ingest-class) queries all
-    # run min-of-8 — at BOTH sizes, whichever branch measures them
-    for name, budget in bench.X10_WALL_BUDGET_SEC.items():
-        if budget <= 1.5:  # the tight ingest-class gates
-            assert bench.probe_iterations(name, subsec=True) >= 8, name
-
-
 def test_expired_version_inflight_dataframe_fails_loud_never_silent(
     spark, tmp_path
 ):
@@ -887,69 +746,3 @@ def test_expired_version_inflight_dataframe_fails_loud_never_silent(
     assert read_versioned(spark, path).count() == 30
     with pytest.raises(FileNotFoundError):
         read_versioned(spark, path, 0)
-
-
-def test_bench_compact_line_fuzz_always_parseable():
-    """Property fuzz over the artifact space: whatever mix of query
-    counts, name lengths, prose sizes, and optional sections the bench
-    produces, compact_line must stay under the driver-tail cap, parse
-    as JSON, preserve the contract keys verbatim, and never fabricate
-    or lose a query silently (kept ∪ omitted-count == input)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    import bench
-
-    name = st.text(
-        alphabet="abcdefghijklmnopqrstuvwxyz_0123456789", min_size=1,
-        max_size=60,
-    )
-    artifact = st.fixed_dictionaries(
-        {
-            "metric": st.just("headline_queries_total_wall"),
-            "value": st.floats(0, 1e4, allow_nan=False),
-            "unit": st.just("sec"),
-            "sf": st.sampled_from([0.001, 0.01, 0.1, 1.0]),
-            "queries": st.dictionaries(
-                name, st.floats(0, 1e3, allow_nan=False), max_size=120
-            ),
-        },
-        optional={
-            "low_confidence": st.booleans(),
-            "low_confidence_reason": st.text(max_size=600),
-            "ext_total": st.floats(0, 1e4, allow_nan=False),
-            "modern_total": st.floats(0, 1e4, allow_nan=False),
-            "iterations": st.integers(1, 16),
-            "agg": st.just("min"),
-            "spark_canary_sec": st.floats(0.001, 10, allow_nan=False),
-            "kraken_e2e": st.fixed_dictionaries(
-                {"min": st.floats(0, 100), "first": st.floats(0, 100)}
-            ),
-            "canary_adjusted": st.fixed_dictionaries(
-                {"drift_factor": st.floats(0.01, 100),
-                 "value_adj": st.floats(0, 1e4)}
-            ),
-            "scale_probe": st.fixed_dictionaries(
-                {"max_ratio": st.floats(0, 100)}
-            ),
-            "errors": st.dictionaries(name, st.text(max_size=50),
-                                      max_size=30),
-        },
-    )
-
-    @settings(max_examples=150, deadline=None)
-    @given(artifact)
-    def check(out):
-        line = bench.compact_line(out)
-        assert len(line) <= bench._COMPACT_LINE_CAP
-        parsed = json.loads(line)
-        assert parsed["metric"] == out["metric"]
-        assert parsed["value"] == out["value"]
-        assert parsed["unit"] == "sec" and parsed["sf"] == out["sf"]
-        kept = parsed["queries"]
-        assert set(kept) <= set(out["queries"])
-        assert len(kept) + parsed.get("queries_omitted", 0) == len(
-            out["queries"]
-        )
-
-    check()
