@@ -921,6 +921,9 @@ def main() -> None:
             probe["error"] = f"{type(exc).__name__}: {exc}"[:120]
         midloop_probes.append(probe)
 
+    # the canary's first run in a session is cold and reads several times
+    # its calibration; run it once, untimed, so loop_start reads the window
+    _spark_canary(spark)
     _midloop_probe("loop_start")
     for qi, name in enumerate(relational + ext):
         # isolate queries from one another's persisted frames (several

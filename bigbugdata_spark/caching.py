@@ -9,11 +9,13 @@ queries in a long-lived session.
 
 Contract: operators persist through `pin()`, which records the frame in a
 session-keyed registry; callers that materialize results release the
-blocks with `release_pinned(spark)` (bench.py and the CLI do; tests rely
-on the conftest fixture).  Frames are tracked weakly — dropping every
-reference lets the JVM-side blocks go with normal cache eviction, so
+blocks with `release_pinned(spark)` (perfbench does after every unit; the
+tests rely on the conftest fixture).  Frames are tracked weakly — dropping
+every reference lets the JVM-side blocks go with normal cache eviction, so
 forgetting to call release degrades to Spark's LRU behavior rather than
-an error.
+an error.  An eager function that materializes its own result, like the
+kraken pipeline's run_pipeline and write_outputs, persists and unpersists
+its frames itself instead.
 """
 
 from __future__ import annotations

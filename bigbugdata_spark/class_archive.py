@@ -22,7 +22,6 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-from bigbugdata_spark.caching import release_pinned
 from bigbugdata_spark.operators.kraken import run_pipeline, write_outputs
 from bigbugdata_spark.session import (
     CDS_LOG,
@@ -71,10 +70,7 @@ def exercise(spark: SparkSession, work: str) -> None:
     paths = write_reports(work)
     for mode in ("fidelity", "scale"):
         result = run_pipeline(spark, paths, n_tophits=3, group_patterns=_GROUPS)
-        try:
-            write_outputs(result, os.path.join(work, mode), "species", mode=mode)
-        finally:
-            release_pinned(spark)
+        write_outputs(result, os.path.join(work, mode), "species", mode=mode)
 
 
 def _stop_jvm(spark: SparkSession) -> int | None:

@@ -38,7 +38,6 @@ VERSION = "0.2.0+spark"
 
 
 def _cmd_run(args) -> None:
-    from bigbugdata_spark.caching import release_pinned
     from bigbugdata_spark.operators.kraken import run_pipeline, write_outputs
 
     # startup version line, matching ref bigbugdata.py:421
@@ -51,11 +50,7 @@ def _cmd_run(args) -> None:
         n_tophits=args.tophits,
         group_patterns=[tuple(p) for p in args.nc_group] if args.nc_group else None,
     )
-    try:
-        paths = write_outputs(result, args.output, args.rank, mode=args.mode)
-    finally:
-        release_pinned(spark)
-    for p in paths:
+    for p in write_outputs(result, args.output, args.rank, mode=args.mode):
         print(p)
 
 
@@ -89,8 +84,10 @@ def _cmd_filter_rrpm(args) -> None:
     from bigbugdata_spark.sources.kraken_reports import read_lines_ordered
 
     spark = get_spark("bigbugdata-filter-rrpm")
-    # string-typed taxID set, broadcast semi-join (op 18), input order kept
+    # string-typed taxID set (op 18); the rrpm rows are filtered on the
+    # driver, which holds them anyway, in input order
     taxids = spark.read.option("header", True).csv(args.taxids).select("taxID")
+    taxid_set = {r["taxID"] for r in taxids.collect()}
     lines = read_lines_ordered(spark, args.rrpm).orderBy("row_order").collect()
     if not lines:
         return  # reference emits nothing for an empty rrpm file
@@ -100,22 +97,13 @@ def _cmd_filter_rrpm(args) -> None:
     # line-oriented reader, as they are for kraken report data.
     reader = csv.reader(r["line"] for r in lines)
     header = next(reader)
-    parsed = list(reader)
     tax_idx = header.index("taxID")
-    body = spark.createDataFrame(
-        [(i, row[tax_idx]) for i, row in enumerate(parsed)],
-        "idx long, taxID string",
-    )
-    kept_idx = {
-        r["idx"]
-        for r in body.join(F.broadcast(taxids), "taxID", "left_semi").collect()
-    }
-    rows = [dict(zip(header, row)) for i, row in enumerate(parsed) if i in kept_idx]
+    rows = [dict(zip(header, row)) for row in reader if row[tax_idx] in taxid_set]
     _write_stdout_csv(rows, header)
 
 
 def _cmd_filter_reports(args) -> None:
-    from bigbugdata_spark.sources.kraken_reports import read_lines_ordered
+    from bigbugdata_spark.sources.kraken_reports import data_lines, read_lines_ordered
 
     spark = get_spark("bigbugdata-filter-reports")
     taxids = spark.read.option("header", True).csv(args.taxids).select("taxID")
@@ -124,15 +112,14 @@ def _cmd_filter_reports(args) -> None:
     )
     if not paths:
         return
-    lines = read_lines_ordered(spark, paths).filter(~F.col("line").startswith("#"))
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("path").orderBy("row_order")
-    body = lines.withColumn("_rn", F.row_number().over(w))
+    lines = read_lines_ordered(spark, paths)
     # one header per file (tiny collect); all files must agree — a
     # reordered header would silently misindex taxID otherwise
     headers = {
-        r["line"] for r in body.filter(F.col("_rn") == 1).select("line").collect()
+        r["line"]
+        for r in lines.filter(F.col("row_order") == F.col("header_order"))
+        .select("line")
+        .collect()
     }
     if not headers:
         return
@@ -142,7 +129,7 @@ def _cmd_filter_reports(args) -> None:
     tax_idx = header.index("taxID")
     f = F.split(F.col("line"), "\t")
     kept = (
-        body.filter(F.col("_rn") > 1)
+        data_lines(lines)
         .withColumn("taxID", f.getItem(tax_idx))
         .join(F.broadcast(taxids), "taxID", "left_semi")
         .withColumn(
@@ -158,8 +145,6 @@ def _cmd_filter_reports(args) -> None:
         for r in kept
     ]
     _write_stdout_csv(rows, out_fields)
-
-
 
 
 def _cmd_query(args) -> None:

@@ -91,7 +91,6 @@ def text_decontaminate(
     spark: SparkSession,
     sf_dir: str,
     benchmark: "DataFrame | str | None" = None,
-    preagg: bool = False,
 ) -> DataFrame:
     """Benchmark decontamination — flag training documents that share any
     word-{n}-gram with the benchmark, with the distinct shared-gram and
@@ -110,27 +109,12 @@ def text_decontaminate(
         broadcast is sized by the external eval set, which is small
         intrinsically, not corpus-proportionally.
 
-    `preagg` selects the join shape (r18 decision, VERDICT r17 #6):
-      * False (registered default, the measured winner): broadcast the
-        (gram_hash, bench_id) rows and let the two COUNT(DISTINCT)s
-        aggregate the fan-out. The r17 pre-aggregate form measured
-        10-20% SLOWER in both r17 driver runs at sf0.1 and again in the
-        r18 interleaved A/B at sf0.1 (-16/-19%) and x10 (-4/-15%)
-        (plans/r18/decontam_ab.json) — the Expand x2 it removed is
-        cheaper here than its collect_set build + per-row set-union
-        work, so the "strictly better plan" never beat the simple one
-        at any measurable scale and the round rule (keep only if not
-        worse) reverts it.
-      * True (kept for extreme bench-side fan-out): the benchmark side
-        pre-aggregated to ONE row per gram carrying its distinct
-        bench-doc set, making the broadcast join 1:1 against the corpus
-        gram stream — no per-(gram, bench_doc) row multiplication, no
-        Expand. Worth switching only when benchmark documents overlap
-        each other so heavily that the per-gram fan-out multiplier (the
-        old shape's joined-row count over the new one's) is large;
-        measured on this corpus it is exactly 1.0 (2386 joined rows
-        either way — no gram is shared by two bench docs), so there is
-        nothing for the pre-aggregate to win back.
+    The join broadcasts the (gram_hash, bench_id) rows and lets the two
+    COUNT(DISTINCT)s aggregate the fan-out. A form that pre-aggregated
+    the benchmark side to one row per gram with its bench-doc set (no
+    Expand) measured 4-20% slower at sf0.1 and x10
+    (plans/r18/decontam_ab.json) and was deleted: no gram of this corpus
+    is shared by two bench docs, so it had no fan-out to win back.
 
     For corpus-vs-corpus overlap, where neither side is small, the
     right tool is the shuffled inverted-index join of
@@ -143,20 +127,6 @@ def text_decontaminate(
     else:
         bench = _decon_grams(bench_docs)
         corpus = grams
-    if preagg:
-        per_gram = bench.groupBy("gram_hash").agg(
-            F.collect_set("doc_id").alias("bids")
-        )
-        return (
-            corpus.join(F.broadcast(per_gram), "gram_hash")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_shared_grams"),
-                F.size(F.array_distinct(F.flatten(F.collect_list("bids"))))
-                .cast("long")
-                .alias("n_bench_docs"),
-            )
-        )
     bench_rows = bench.select(F.col("doc_id").alias("bench_id"), "gram_hash")
     return (
         corpus.join(F.broadcast(bench_rows), "gram_hash")

@@ -7,7 +7,8 @@ happens only at the sink. `run_pipeline` builds it with one pass per
 grouping key and no joins:
 
 1. a per-sample totals collect — the fail-fast check, and the job that
-   materializes the pinned parse;
+   materializes the persisted parse, which is unpersisted once step 3 has
+   run;
 2. one (sample_id, taxID) aggregate for the cell's reads, name and side
    stats (`cell_stats`), with rpm read from a per-sample map literal;
 3. one window over taxID for the taxon's name, total, z moments and
@@ -63,7 +64,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from bigbugdata_spark.caching import pin
 from bigbugdata_spark.operators.relational import (
     control_lookup,
     negative_control_groups,
@@ -352,53 +352,52 @@ def run_pipeline(
         )
     samples = ordered_sample_ids(sorted(by_sample))
 
-    # pin the parsed scan: the totals collect materializes it, and the
-    # cell aggregate reads it back. The ordered fidelity parse
-    # (wholetext+posexplode) is the single most expensive subtree in the
-    # pipeline — one parse, read from cache ever after. Project to the
-    # columns the pipeline consumes before pinning (pct/taxReads/path are
-    # dead downstream — pruning them shrinks the cached blocks). Callers
-    # that materialize the result release the blocks via
-    # bigbugdata_spark.caching.release_pinned (the CLI does after its
-    # sinks complete).
-    reports = pin(
-        read_reports(spark, report_paths, with_row_order=True).select(
-            "sample_id", "taxID", "reads", "kmers", "dup", "cov",
-            "rank", "taxName", "row_order",
-        )
-    )
+    # Persist the parsed scan: the totals collect materializes it, and the
+    # cell aggregate reads it back. The ordered parse (wholetext +
+    # posexplode) is the single most expensive subtree in the pipeline —
+    # one parse, read from cache after. Project to the columns the
+    # pipeline consumes before persisting (pct/taxReads/path are dead
+    # downstream — pruning them shrinks the cached blocks). Nothing reads
+    # the parse after the eager checkpoint below, so its blocks are freed
+    # as soon as the checkpoint has run, or a check before it has failed.
+    reports = read_reports(spark, report_paths, with_row_order=True).select(
+        "sample_id", "taxID", "reads", "kmers", "dup", "cov",
+        "rank", "taxName", "row_order",
+    ).persist()
+    try:
+        # The first job: one row per sample, and the fail-fast check. A
+        # sample with no taxID-0/1 rows makes the reference silently drop it
+        # and later KeyError (ref bigbugdata.py:121); one whose taxID-0/1
+        # rows hold 0 (or no parsable) reads makes it raise
+        # ZeroDivisionError. We raise before any other job runs, so every
+        # rpm and rRPM below is a number.
+        n_reads = {r["sample_id"]: r["n_reads"] for r in sample_totals(reports).collect()}
+        missing = [s for s in samples if not n_reads.get(s)]
+        if missing:
+            raise ValueError(
+                f"samples with no taxID 0/1 reads (cannot compute RPM): {missing}"
+            )
+        mapping = control_lookup(samples, negative_control_groups(samples, group_patterns))
 
-    # The first job: one row per sample, and the fail-fast check. A
-    # sample with no taxID-0/1 rows makes the reference silently drop it
-    # and later KeyError (ref bigbugdata.py:121); one whose taxID-0/1
-    # rows hold 0 (or no parsable) reads makes it raise
-    # ZeroDivisionError. We raise before any other job runs, so every
-    # rpm and rRPM below is a number.
-    n_reads = {r["sample_id"]: r["n_reads"] for r in sample_totals(reports).collect()}
-    missing = [s for s in samples if not n_reads.get(s)]
-    if missing:
-        raise ValueError(
-            f"samples with no taxID 0/1 reads (cannot compute RPM): {missing}"
+        # One pass per grouping key, no joins: the (sample, taxID) aggregate
+        # builds every cell with its side stats, rpm reads the totals from a
+        # map literal, and one window over taxID adds the taxon's name, total,
+        # z moments and control rpm. Zeros stay implicit: they are
+        # reconstituted only at the pivot sinks and the tophits ranking
+        # (VERDICT r1 fixes #4/#10).
+        cells = cell_stats(species_rows(reports, rank)).selectExpr(
+            "*", _rpm_expr(n_reads)
         )
-    mapping = control_lookup(samples, negative_control_groups(samples, group_patterns))
-
-    # One pass per grouping key, no joins: the (sample, taxID) aggregate
-    # builds every cell with its side stats, rpm reads the totals from a
-    # map literal, and one window over taxID adds the taxon's name, total,
-    # z moments and control rpm. Zeros stay implicit: they are
-    # reconstituted only at the pivot sinks and the tophits ranking
-    # (VERDICT r1 fixes #4/#10).
-    cells = cell_stats(species_rows(reports, rank)).selectExpr(
-        "*", _rpm_expr(n_reads)
-    )
-    # The frame feeds the tophits ranking and both pivot sinks.
-    # Materialize it NOW with an eager localCheckpoint instead of a lazy
-    # pin: every downstream plan then analyzes a tiny RDD-scan lineage
-    # instead of re-walking the parse, aggregate and window per operator.
-    # (Local checkpoint blocks don't survive executor loss; on a real
-    # cluster the cache-only pin() form degrades gracefully instead —
-    # this pipeline's result is consumed immediately by its sinks.)
-    rrpm_df = taxon_window(cells, samples, mapping).localCheckpoint()
+        # The frame feeds the tophits ranking and both pivot sinks.
+        # Materialize it NOW with an eager localCheckpoint instead of a lazy
+        # pin: every downstream plan then analyzes a tiny RDD-scan lineage
+        # instead of re-walking the parse, aggregate and window per operator.
+        # (Local checkpoint blocks don't survive executor loss; on a real
+        # cluster the cache-only pin() form degrades gracefully instead —
+        # this pipeline's result is consumed immediately by its sinks.)
+        rrpm_df = taxon_window(cells, samples, mapping).localCheckpoint()
+    finally:
+        reports.unpersist()
 
     top = tophits(rrpm_df, n_tophits, samples)
 
@@ -433,30 +432,29 @@ def _taxon_entries(rrpm: DataFrame) -> DataFrame:
 
 def _scale_matrix_frames(
     by_taxon: DataFrame, samples: list[str]
-) -> tuple[DataFrame, DataFrame]:
-    """(combined_wide, rrpm_wide) for the scale sink: the per-taxon
-    entries of _taxon_entries spread into one column per sample, pinned
-    once, and each matrix projects from the cache with its zero fill.
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(wide, combined_wide, rrpm_wide) for the scale sink: `wide` is the
+    per-taxon entries of _taxon_entries spread into one column per
+    sample, persisted once, and each matrix projects from its cache with
+    its zero fill. The caller unpersists `wide` after its writes.
 
     selectExpr, not Column-object loops (r17): building 96
     getItem/getField/alias Column objects plus 2x48 coalesce projections
     cost 1.2-1.8 s of py4j round-trips per run on the 48-sample fixture;
     the same projections as SQL strings parse in one call each."""
-    wide = pin(
-        by_taxon.selectExpr(
-            "taxID",
-            "taxName",
-            "total_reads as `Total # of Reads`",
-            *[
-                e
-                for s in samples
-                for e in (
-                    f"_m[{_slit(s)}].r as {_ident(s + '_r')}",
-                    f"_m[{_slit(s)}].m as {_ident(s + '_m')}",
-                )
-            ],
-        )
-    )
+    wide = by_taxon.selectExpr(
+        "taxID",
+        "taxName",
+        "total_reads as `Total # of Reads`",
+        *[
+            e
+            for s in samples
+            for e in (
+                f"_m[{_slit(s)}].r as {_ident(s + '_r')}",
+                f"_m[{_slit(s)}].m as {_ident(s + '_m')}",
+            )
+        ],
+    ).persist()
     base_cols = ["taxID", "taxName", "`Total # of Reads`"]
     combined_wide = wide.selectExpr(
         *base_cols,
@@ -466,7 +464,7 @@ def _scale_matrix_frames(
         *base_cols,
         *[f"coalesce({_ident(s + '_m')}, 0.0d) as {_ident(s)}" for s in samples],
     )
-    return combined_wide, rrpm_wide
+    return wide, combined_wide, rrpm_wide
 
 
 def _pylist(values: pa.ChunkedArray) -> list:
@@ -546,24 +544,24 @@ def write_outputs(
     sorted by taxID and zero-filled on the driver (_fidelity_matrices);
     the tophits rows are written as run_pipeline returned them.
     mode='scale': the matrices go through Spark's distributed CSV writer
-    (one ordered part file each) from one pinned wide frame of the
-    per-taxon entries — no collect; the 100 TB path (VERDICT r1 fix
-    #2/#7) — and the driver-sized tophits rows through the same writer,
-    from a local Arrow relation."""
+    (one ordered part file each) from one persisted wide frame of the
+    per-taxon entries, unpersisted after the writes — no collect; the
+    100 TB path (VERDICT r1 fix #2/#7) — and the driver-sized tophits
+    rows through the same writer, from a local Arrow relation."""
     combined_path, rrpm_path, tophits_path = output_paths(results_dir, rank)
     samples = result.samples
 
     if mode == "scale":
-        combined_wide, rrpm_wide = _scale_matrix_frames(
+        wide, combined_wide, rrpm_wide = _scale_matrix_frames(
             _taxon_entries(result.rrpm), samples
         )
         top_df = _tophits_frame(result.rrpm.sparkSession, result.tophits)
-        # run_pipeline already materialized the shared base (checkpointed
-        # rrpm frame + pinned reports cache), so the sink chains start
+        # run_pipeline already materialized the shared base (the
+        # checkpointed rrpm frame), so the sink chains start
         # concurrently with no barrier job (standard multi-threaded job
         # submission — each thread only issues actions; the scheduler
         # overlaps their stages). The combined write runs FIRST on its
-        # thread and materializes the pinned pivot cache as a side
+        # thread and materializes the persisted pivot cache as a side
         # effect of its own evaluation; the rrpm write then reads the
         # hot cache. (A separate wide.count() materialization pass was
         # one more distinct plan to analyze on every run, and to codegen
@@ -572,22 +570,19 @@ def write_outputs(
         # single-pass loop never pays, VERDICT r6 #5.)
 
         def _matrix_sinks():
-            write_csv_scale(
-                combined_wide, str(combined_path),
-                single_file=True, sort_cols=["taxID"],
-            )
-            write_csv_scale(
-                rrpm_wide, str(rrpm_path),
-                single_file=True, sort_cols=["taxID"],
-            )
+            write_csv_scale(combined_wide, str(combined_path), sort_cols=["taxID"])
+            write_csv_scale(rrpm_wide, str(rrpm_path), sort_cols=["taxID"])
 
         def _tophits_sink():
-            write_csv_scale(top_df, str(tophits_path), single_file=True)
+            write_csv_scale(top_df, str(tophits_path))
 
-        with ThreadPoolExecutor(max_workers=4) as ex:
-            futs = [ex.submit(_matrix_sinks), ex.submit(_tophits_sink)]
-            for f in futs:
-                f.result()
+        try:
+            with ThreadPoolExecutor(max_workers=4) as ex:
+                futs = [ex.submit(_matrix_sinks), ex.submit(_tophits_sink)]
+                for f in futs:
+                    f.result()
+        finally:
+            wide.unpersist()
         return str(combined_path), str(rrpm_path), str(tophits_path)
 
     header = ["taxID", "taxName", "Total # of Reads", *samples]

@@ -12,7 +12,7 @@ species rows DO transit the driver (collected per file to be written
 into local per-sample TSVs — the sink the reference defines), so driver
 memory is bounded by reports x report size: KrakenUniq reports are
 taxonomy-bounded (<=10^5 rows / a few MB each), the same bound the
-wholetext ordered reader already assumes. Echoed rows are the raw input
+ordered line reader assumes. Echoed rows are the raw input
 line bytes, which is exactly what the reference's DictWriter re-emits
 for tab-free fields.
 
@@ -42,7 +42,7 @@ import os
 from pathlib import Path
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.sources.kraken_reports import (
@@ -75,13 +75,8 @@ def merged_totals(
     both = read_totalreads(spark, dna_path, 1).unionByName(
         read_totalreads(spark, rna_path, 2)
     )
-    w = Window.partitionBy("sample_name").orderBy(
-        F.desc("pri"), F.desc("row_order")
-    )
-    return (
-        both.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("sample_name", "total_reads")
+    return both.groupBy("sample_name").agg(
+        F.max_by("total_reads", F.struct("pri", "row_order")).alias("total_reads")
     )
 
 
@@ -110,13 +105,18 @@ def complete_reports(
         timestamp = datetime.now().strftime("%a %b %d %H:%M:%S %Y")
 
     lines = read_lines_ordered(spark, species_reports)
-    w = Window.partitionBy("path").orderBy("row_order")
-    body = lines.withColumn("_rn", F.row_number().over(w))
-    hdr_rows = body.filter(F.col("_rn") == 1).select("path", "line").collect()
+    # each file's header row, and any '#' line before it: the reference's
+    # DictReader takes a file's first line as its header, so it cannot
+    # parse a report with a preamble
+    head_rows = lines.filter(
+        F.col("header_order").isNull() | (F.col("row_order") <= F.col("header_order"))
+    ).collect()
 
     # per-file fieldnames, mirroring DictReader (ref :58-73)
     fields_by_path: dict[str, list[str]] = {}
-    for r in hdr_rows:
+    for r in head_rows:
+        if r["row_order"] != r["header_order"]:
+            raise ValueError(f"'#' line before the report header in: [{r['path']!r}]")
         line = r["line"]
         if line == CANONICAL_HEADER:
             fields_by_path[r["path"]] = FIELDNAMES
@@ -144,7 +144,8 @@ def complete_reports(
         "path string, i_reads int, i_kmers int, i_rank int",
     )
     f = F.split(F.col("line"), "\t")
-    rows = body.filter(F.col("_rn") > 1).join(F.broadcast(idx_df), "path").select(
+    body = lines.filter(F.col("row_order") > F.col("header_order"))
+    rows = body.join(F.broadcast(idx_df), "path").select(
         "path",
         "row_order",
         "line",

@@ -2,9 +2,14 @@
 
 Scan (SURVEY §2 ops 1-2; ref bigbugdata.py:248-254, 35-42): one TSV file per
 sample — two '#' comment lines, a header row, then tab-separated data rows.
-All files load as ONE DataFrame (Spark's multi-file scan is the distributed
-analog of the reference's per-file loop); file identity is recovered as a
-`sample_id` column from input_file_name().
+Every kraken command reads its text inputs through one ordered reader,
+read_lines_ordered: a wholetext scan (one record and one task per file)
+split into lines where Python's text mode splits them, each line carrying
+its physical index and its file's header index. read_reports is that
+reader filtered to the data rows and parsed. All files load as ONE
+DataFrame (Spark's multi-file scan is the distributed analog of the
+reference's per-file loop); file identity is recovered as a `sample_id`
+column from input_file_name().
 
 Sinks (ops 16-17, 23; ref bigbugdata.py:208-222, scripts/modify_reports.py:
 95-107): the pivoted presentation tables are O(taxa x samples) — bounded,
@@ -48,97 +53,64 @@ def sample_id_sql(col: str) -> str:
     return f"regexp_extract(element_at(split({col}, '/'), -1), '^(.*)_', 1)"
 
 
-def read_reports(
-    spark: SparkSession, paths: list[str] | str, *, with_row_order: bool = False
-) -> DataFrame:
-    """Multi-file TSV scan with comment skip + header (op 1).
-
-    `with_row_order` adds a per-file line index so last-row-wins semantics
-    for duplicate taxID rows within one report (ref bigbugdata.py:278-284
-    overwrites; :301-302 accumulates) stay reproducible. The index comes
-    from a wholetext read (one record per file, contractually unsplittable)
-    + posexplode — NOT monotonically_increasing_id, whose cross-split
-    ordering stops matching file order once a file spans multiple scan
-    splits (ADVICE r1). Scale bound: wholetext holds one report in one task
-    (KrakenUniq reports are per-sample taxonomy summaries, <=10^5 rows /
-    a few MB — bounded by taxonomy size, not by corpus size); the
-    splittable fast path below serves order-free scans of any file size.
-    """
-    if with_row_order:
-        return _read_reports_ordered(spark, paths)
-    # `path` is materialized at the scan (input_file_name is only valid
-    # before the first exchange) so callers can audit file<->sample mapping.
-    return (
-        spark.read.option("sep", "\t")
-        .option("header", True)
-        .option("comment", "#")
-        .schema(REPORT_SCHEMA)
-        .csv(paths)
-        .withColumn("path", F.input_file_name())
-        .withColumn("sample_id", F.expr(sample_id_sql("path")))
-    )
-
-
 def read_lines_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """(path, row_order, line): every file's lines with their physical
-    line index, order-stable at any split configuration (wholetext: one
-    record per file). The fidelity primitive under every order-sensitive
-    text scan; empty lines are dropped."""
+    """(path, row_order, line, header_order): every non-empty line of every
+    file with its physical line index, order-stable at any split
+    configuration (wholetext: one record and one task per file; an id
+    taken over a splittable scan stops matching file order once a file
+    spans splits).
+
+    Lines end at \\r\\n, a lone \\r or \\n, where Python's text mode ends
+    them: the reference reads every report and script input in text mode.
+    `header_order` is the index of the file's first line that is neither
+    empty nor a '#' comment, null when there is none. It is computed over
+    the file's line array with higher-order functions while the file is
+    still one record, and posexplode carries it along: a header skip is a
+    plain filter, with no window over the lines and no shuffle."""
+    header_order = F.expr(
+        "array_min(filter(transform(_lines, (x, i) -> "
+        "CASE WHEN x NOT LIKE '#%' AND x != '' THEN i END), v -> v IS NOT NULL))"
+    )
     return (
         spark.read.format("text")
         .option("wholetext", "true")
         .load(paths)
         .select(
             F.input_file_name().alias("path"),
-            F.posexplode(F.split(F.col("value"), "\n")).alias("row_order", "_raw"),
+            F.split(F.col("value"), "\r\n|\r|\n").alias("_lines"),
         )
-        # universal-newline semantics (python text mode / csv module):
-        # \r\n-terminated rows lose the trailing \r
+        .withColumn("header_order", header_order)
         .select(
             "path",
-            "row_order",
-            F.regexp_replace(F.col("_raw"), "\r$", "").alias("line"),
+            F.posexplode(F.col("_lines")).alias("row_order", "line"),
+            "header_order",
         )
         .filter(F.col("line") != "")
     )
 
 
-def _read_reports_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """Wholetext + posexplode fidelity reader: row_order == physical line
-    index within the file, at any split/partition configuration.
-
-    ONE pass, no shuffle: while the file is still a single wholetext
-    record, the header position (first non-comment, non-empty line) is
-    computed over the lines ARRAY with higher-order functions; the rows
-    then posexplode carrying that per-file scalar along, so the header
-    skip is a plain filter — no row_number window over every data row,
-    no second scan to aggregate header positions, no join."""
-    header_order = F.expr(
-        "array_min(filter(transform(_lines, (x, i) -> "
-        "CASE WHEN x NOT LIKE '#%' AND x != '' THEN i END), v -> v IS NOT NULL))"
+def data_lines(lines: DataFrame) -> DataFrame:
+    """The lines of read_lines_ordered after each file's header that are
+    not '#' comments: a report's data rows."""
+    return lines.filter(
+        (F.col("row_order") > F.col("header_order")) & ~F.col("line").startswith("#")
     )
-    body = (
-        spark.read.format("text")
-        .option("wholetext", "true")
-        .load(paths)
-        .select(
-            F.input_file_name().alias("_path"),
-            # universal-newline split (python text mode / csv module
-            # semantics): \r\n and lone \r terminate lines too
-            F.split(F.col("value"), "\r\n|\r|\n").alias("_lines"),
-        )
-        .withColumn("_header_order", header_order)
-        .select(
-            "_path",
-            "_header_order",
-            F.posexplode(F.col("_lines")).alias("row_order", "_line"),
-        )
-        .filter(
-            (F.col("row_order") > F.col("_header_order"))
-            & (F.col("_line") != "")
-            & ~F.col("_line").startswith("#")
-        )
-        .withColumn("_f", F.split(F.col("_line"), "\t"))
+
+
+def read_reports(
+    spark: SparkSession, paths: list[str] | str, *, with_row_order: bool = False
+) -> DataFrame:
+    """The report scan (op 1): the data rows after each file's header,
+    '#' lines skipped, parsed to REPORT_SCHEMA plus `path` and `sample_id`.
+
+    `with_row_order` keeps each row's physical line index, so last-row-wins
+    semantics for duplicate taxID rows within one report (ref
+    bigbugdata.py:278-284 overwrites; :301-302 accumulates) stay
+    reproducible. Scale bound: the reader holds one report in one task
+    (KrakenUniq reports are per-sample taxonomy summaries, <=10^5 rows / a
+    few MB — bounded by taxonomy size, not by corpus size)."""
+    body = data_lines(read_lines_ordered(spark, paths)).withColumn(
+        "_f", F.split(F.col("line"), "\t")
     )
     # one selectExpr: as getItem/cast/alias Column objects the same
     # columns cost four py4j round-trips each
@@ -147,9 +119,9 @@ def _read_reports_ordered(spark: SparkSession, paths: list[str] | str) -> DataFr
             f"CAST(_f[{i}] AS {field.dataType.simpleString()}) AS {field.name}"
             for i, field in enumerate(REPORT_SCHEMA.fields)
         ],
-        "_path AS path",
-        f"{sample_id_sql('_path')} AS sample_id",
-        "row_order",
+        "path",
+        f"{sample_id_sql('path')} AS sample_id",
+        *(["row_order"] if with_row_order else []),
     )
 
 
@@ -178,22 +150,16 @@ def write_csv_fidelity(file_path: Path, header: list[str], rows: Iterable[list])
 
 
 def write_csv_scale(
-    df: DataFrame,
-    directory: str,
-    single_file: bool = False,
-    sort_cols: list[str] | None = None,
+    df: DataFrame, directory: str, sort_cols: list[str] | None = None
 ) -> None:
-    """Scale-path CSV sink: distributed write, optional coalesce(1) when a
-    single ordered file is required (a physical-layout choice, not a plan
-    change).
-
-    When both single_file and sort_cols are given, ordering is
-    sortWithinPartitions AFTER the coalesce: one partition sorted is a
-    total order, without the range-boundary sampling job and extra
-    exchange a global orderBy would run just to feed a single writer."""
-    out = df.coalesce(1) if single_file else df
+    """Scale-path CSV sink: Spark's distributed writer, coalesced to one
+    part file (a physical-layout choice, not a plan change). `sort_cols`
+    order it with sortWithinPartitions after the coalesce: one sorted
+    partition is a total order, without the range-boundary sampling job
+    and extra exchange a global orderBy would run to feed one writer."""
+    out = df.coalesce(1)
     if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols) if single_file else out.orderBy(*sort_cols)
+        out = out.sortWithinPartitions(*sort_cols)
     out.write.option("header", True).mode("overwrite").csv(directory)
 
 

@@ -2,7 +2,8 @@
 reference crashes on some of them): reads==0 e_val, physical row order
 under the wholetext reader, and the sample_id collision, missing-total
 and zero-total fail-fasts. Also the reference-free end-to-end gate (both
-sinks checked against the benchmark's plain-Python oracle), the fidelity
+sinks checked against the benchmark's plain-Python oracle), that a unit
+leaves no frame in the session's cache, the fidelity
 sink's CSV quoting, the scale tophits frame's local plan, and the pins
 that a repeated run reuses its compiled code and stays within its Spark
 job budget."""
@@ -300,6 +301,16 @@ def test_outputs_match_oracle(spark, request, tmp_path, reports, mode):
     _run_unit(spark, paths, tmp_path, mode)
     expected = oracle.expected_outputs(paths, TOP_K, GROUP_PATTERNS)
     assert oracle.check_outputs(expected, tmp_path, mode) == []
+
+
+@pytest.mark.parametrize("mode", ["fidelity", "scale"])
+def test_unit_leaves_no_cached_frame(spark, oracle_reports, tmp_path, mode):
+    """run_pipeline and write_outputs unpersist what they persist: the
+    session's CacheManager is empty after a unit, with nothing released
+    by the caller."""
+    spark.catalog.clearCache()
+    _run_unit(spark, oracle_reports, tmp_path, mode)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 #: Janino compiles a warm kraken unit may run. A unit generates ~170

@@ -1,6 +1,8 @@
 """Golden tests for the modify_reports domain pipeline and the filter
 CLIs: byte-for-byte against the actual reference scripts, plus the full
-two-step e2e (completion -> main pipeline)."""
+two-step e2e (completion -> main pipeline). The line-reading commands are
+also checked without the reference, against plain-Python text-mode
+witnesses, on inputs with each of the three line endings."""
 
 from __future__ import annotations
 
@@ -372,3 +374,171 @@ def test_filter_reports_matches_reference(tmp_path, spark):
     )
     assert got == want
     assert len(want) > 0
+
+
+# --- reference-free: the line-reading commands against text mode ----------
+#
+# The reference reads every input in Python's text mode, where "\r\n" and a
+# lone "\r" end a line as "\n" does. Each test writes the same input with
+# each of the three line endings and checks the command against a plain-
+# Python witness that reads it the reference's way.
+
+LINE_ENDINGS = pytest.mark.parametrize(
+    "ending", ["\n", "\r\n", "\r"], ids=["lf", "crlf", "cr"]
+)
+
+
+def _write_lines(path, lines, ending):
+    path.write_bytes("".join(line + ending for line in lines).encode())
+    return str(path)
+
+
+def _taxid_set(taxids):
+    with open(taxids) as fh:
+        return {row["taxID"] for row in csv.DictReader(fh)}
+
+
+def _stdout_csv(rows, fieldnames):
+    out = io.StringIO()
+    if rows:
+        writer = csv.DictWriter(out, fieldnames=fieldnames)
+        writer.writeheader()
+        writer.writerows(rows)
+    return out.getvalue()
+
+
+def _filter_rrpm_witness(rrpm, taxids):
+    keep = _taxid_set(taxids)
+    with open(rrpm) as fh:
+        reader = csv.DictReader(fh)
+        rows = [row for row in reader if row["taxID"] in keep]
+        return _stdout_csv(rows, reader.fieldnames)
+
+
+def _filter_reports_witness(folder, taxids):
+    """Text-mode DictReader per report, with the port's one documented
+    divergence: '#' preamble lines are skipped (cli.py docstring)."""
+    keep = _taxid_set(taxids)
+    rows, fields = [], None
+    for path in sorted(folder.glob("*_species-level-report.tsv")):
+        with open(path) as fh:
+            reader = csv.DictReader(
+                (line for line in fh if not line.startswith("#")), delimiter="\t"
+            )
+            for row in reader:
+                if row["taxID"] in keep:
+                    rows.append({"sampleName": path.name.split("_")[0], **row})
+            fields = reader.fieldnames
+    return _stdout_csv(rows, ["sampleName", *fields])
+
+
+@LINE_ENDINGS
+def test_filter_rrpm_matches_text_mode(tmp_path, spark, ending):
+    rng = random.Random(41)
+    buf = io.StringIO()
+    w = csv.writer(buf, lineterminator="\n")
+    w.writerow(["taxID", "taxName", "S1", "S2"])
+    for t in range(30):
+        w.writerow([2000 + t, f"Sp {t}", rng.randint(0, 9), rng.randint(0, 9)])
+    w.writerow([2030, "Severe virus, strain B", 3, 4])  # a quoted comma
+    rrpm = _write_lines(tmp_path / "rrpm.csv", buf.getvalue().splitlines(), ending)
+    picked = [str(t) for t in rng.sample(range(2000, 2030), 8)] + ["2030"]
+    taxids = _write_lines(tmp_path / "taxids.csv", ["taxID", *picked], "\n")
+
+    want = _filter_rrpm_witness(rrpm, taxids)
+    from bigbugdata_spark.cli import main as cli_main
+
+    got = _capture_stdout(
+        lambda: cli_main(["filter-rrpm", "--rrpm", rrpm, "--taxids", taxids]), ["x"]
+    )
+    assert want.count("\r\n") == 10  # header + 9 rows
+    assert got == want
+
+
+@LINE_ENDINGS
+def test_filter_reports_matches_text_mode(tmp_path, spark, ending):
+    rng = random.Random(43)
+    folder = tmp_path / "reports"
+    folder.mkdir()
+    for s in ("A01", "B02", "C03"):
+        lines = ["# kraken2 --report x", "# Fri Aug 13 00:00:00 2026", HEADER]
+        for t in range(20):
+            lines.append(
+                f"0.01\t{rng.randint(1, 999)}\t0\t{rng.randint(1, 99)}\t1.0\t0.5"
+                f"\t{2000 + t}\tspecies\t  Sp {2000 + t}"
+            )
+        _write_lines(folder / f"{s}_species-level-report.tsv", lines, ending)
+    picked = [str(t) for t in rng.sample(range(2000, 2020), 6)]
+    taxids = _write_lines(tmp_path / "taxids.csv", ["taxID", *picked], "\n")
+
+    want = _filter_reports_witness(folder, taxids)
+    from bigbugdata_spark.cli import main as cli_main
+
+    got = _capture_stdout(
+        lambda: cli_main(["filter-reports", "--folder", str(folder), "--taxids", taxids]),
+        ["x"],
+    )
+    assert want.count("\r\n") == 1 + 3 * 6
+    assert got == want
+
+
+def _modify_header_witness(report):
+    """The reference's header rule: DictReader takes the file's first line
+    as its fieldnames. (fields, species rows), or None when a canonical
+    field is missing, where the reference cannot write its synthesized
+    rows."""
+    with open(report) as fh:
+        reader = csv.DictReader(fh, delimiter="\t")
+        rows = list(reader)
+        fields = reader.fieldnames
+    if any(f not in fields for f in HEADER.split("\t")):
+        return None
+    return fields, [r for r in rows if r["rank"] == "species"]
+
+
+@LINE_ENDINGS
+@pytest.mark.parametrize("layout", ["canonical", "reordered", "preamble"])
+def test_modify_reports_header_rule_matches_text_mode(tmp_path, spark, ending, layout):
+    rng = random.Random(47)
+    header = REORDERED_HEADER if layout == "reordered" else HEADER
+    fields = header.split("\t")
+    lines = ["# kraken2 --report x", "# Fri Aug 13"] if layout == "preamble" else []
+    lines.append(header)
+    classified = 0
+    for t in range(25):
+        reads = rng.randint(1, 9999)
+        rank = "species" if t % 5 else "genus"
+        classified += reads if rank == "species" else 0
+        row = {
+            "%": "0.01", "reads": str(reads), "taxReads": str(reads),
+            "kmers": str(rng.randint(1, 99)), "dup": "1.0", "cov": "0.5",
+            "taxID": str(5000 + t), "rank": rank, "taxName": f"  Sp {5000 + t}",
+        }
+        lines.append("\t".join(row[f] for f in fields))
+    sample = "CF_DNA_S042"
+    report = _write_lines(tmp_path / f"{sample}_report.tsv", lines, ending)
+    dna = _write_lines(tmp_path / "dna.tsv", [f"{sample}_L001\tx\t{3 * classified}"], ending)
+    rna = _write_lines(tmp_path / "rna.tsv", [], ending)
+    out_dir = tmp_path / "out"
+
+    def complete():
+        return complete_reports(
+            spark, species_reports=[report], dna_totalreads=dna, rna_totalreads=rna,
+            output_dir=str(out_dir), timestamp=FROZEN_TS, adapt_headers=True,
+        )
+
+    witness = _modify_header_witness(report)
+    if witness is None:
+        assert layout == "preamble"
+        with pytest.raises(ValueError):
+            complete()
+        return
+    want_fields, want_species = witness
+    written, skipped = complete()
+    assert skipped == [] and len(written) == 1
+    out = (out_dir / f"{sample}_species-level-report.tsv").read_text().split("\n")
+    assert out[2] == "\t".join(want_fields)
+    body = [dict(zip(want_fields, line.split("\t"))) for line in out[3:-1]]
+    root = [r for r in body if r["rank"] == "root"]
+    assert [r["reads"] for r in root] == [str(classified)]
+    assert [r for r in body if r["rank"] == "species"] == want_species

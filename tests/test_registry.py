@@ -7,7 +7,8 @@ them, whatever order the query modules were imported in.
 
 The query modules under operators/ and streaming/ are one module per
 domain.  Domains import each other at module level only, one way, and
-each module imports on its own.
+each module imports on its own.  One module opens the package's one
+wholetext reader.
 """
 
 from __future__ import annotations
@@ -167,3 +168,18 @@ def test_each_query_module_imports_on_its_own():
             if proc.returncode:
                 failed[mod] = proc.stderr.strip().splitlines()[-1:]
     assert not failed, f"modules that fail to import alone: {failed}"
+
+
+def test_one_wholetext_reader():
+    """Every kraken command reads its text through
+    sources.kraken_reports.read_lines_ordered: that module names the
+    wholetext option once, and no other module names it."""
+    found = {}
+    for path in sorted((_ROOT / "bigbugdata_spark").rglob("*.py")):
+        n = sum(
+            isinstance(node, ast.Constant) and node.value == "wholetext"
+            for node in ast.walk(ast.parse(path.read_text()))
+        )
+        if n:
+            found[str(path.relative_to(_ROOT))] = n
+    assert found == {"bigbugdata_spark/sources/kraken_reports.py": 1}
