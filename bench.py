@@ -23,6 +23,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import statistics
 import sys
 import tempfile
@@ -478,8 +479,6 @@ def _reset_graph_spine(sf_dir: str) -> None:
     """Clear the shared graph spine's session memo AND its persisted
     edge generation for `sf_dir`, so a probe iteration measures the
     full build (the scale-sensitive cost) instead of a memo hit."""
-    import shutil
-
     from bigbugdata_spark.operators import similarity_graph as G
 
     fp = G.generation_fp(sf_dir)
@@ -544,8 +543,6 @@ def _reset_ivf_generation(sf_dir: str) -> None:
     """Remove the persisted IVF index generation for `sf_dir` so the
     next sim_ivf_incremental_assign call pays the full cold build —
     fingerprint-scoped via the shared ivf_generation_fp definition."""
-    import shutil
-
     from bigbugdata_spark.operators import similarity as SI
     from bigbugdata_spark.operators.dedup_incr import index_path
 
@@ -661,6 +658,8 @@ def bench_scale_probe(spark, specs) -> dict:
     out: dict = {
         "replication": SCALE_REPLICATION,
         "iterations": SCALE_ITERATIONS,
+        # the session's parallelism: the x10 budgets hold for a core count
+        "cores": spark.sparkContext.defaultParallelism,
         "queries": {},
     }
     probe_fns = [(n, specs[n].fn) for n in SCALE_PROBE_QUERIES if n in specs]
@@ -827,6 +826,7 @@ def _warm_engine_machinery(spark) -> None:
         ],
     )
     flat.write.option("header", True).mode("overwrite").csv(str(tmp / "csvout"))
+    shutil.rmtree(tmp, ignore_errors=True)
     w = Window.partitionBy("v").orderBy("id")
     j.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= 2).count()
     # r13 (VERDICT r12 #6) — the remaining first-use classes the kraken
@@ -874,14 +874,14 @@ def bench_kraken_e2e(spark) -> dict[str, float]:
     # 13.5/8.7/8.1/8.9/8.1 over five runs), so one warm run would make
     # `min` a coin flip
     for _ in range(4):
-        out = tempfile.mkdtemp(prefix="bigbugdata-bench-kraken-out-")
-        t0 = time.perf_counter()
-        result = run_pipeline(
-            spark, report_paths, rank="species", n_tophits=15,
-            group_patterns=group_patterns,
-        )
-        write_outputs(result, out, "species", mode="scale")
-        times.append(time.perf_counter() - t0)
+        with tempfile.TemporaryDirectory(prefix="bigbugdata-bench-kraken-out-") as out:
+            t0 = time.perf_counter()
+            result = run_pipeline(
+                spark, report_paths, rank="species", n_tophits=15,
+                group_patterns=group_patterns,
+            )
+            write_outputs(result, out, "species", mode="scale")
+            times.append(time.perf_counter() - t0)
     return {
         "first": round(times[0], 4),
         "min": round(min(times), 4),
@@ -891,7 +891,20 @@ def bench_kraken_e2e(spark) -> dict[str, float]:
     }
 
 
+def midloop_probe(at: str, canary, started: float) -> dict:
+    """One mid-loop canary reading: the block it follows (`at`), when it
+    ran (`t_s`, seconds since `started`, a time.perf_counter() reading)
+    and what `canary()` read (`spark_sec`), or why it failed."""
+    probe: dict = {"at": at, "t_s": round(time.perf_counter() - started, 1)}
+    try:
+        probe["spark_sec"] = canary()
+    except Exception as exc:  # noqa: BLE001 — diagnostics never kill
+        probe["error"] = f"{type(exc).__name__}: {exc}"[:120]
+    return probe
+
+
 def main() -> None:
+    started = time.perf_counter()
     specs = load_all()
     relational = [n for n in RELATIONAL_HEADLINE if n in specs]
     ext = sorted(
@@ -914,12 +927,9 @@ def main() -> None:
     midloop_probes: list[dict] = []
 
     def _midloop_probe(at: str) -> None:
-        probe: dict = {"at": at}
-        try:
-            probe["spark_sec"] = _spark_canary(spark)
-        except Exception as exc:  # noqa: BLE001 — diagnostics never kill
-            probe["error"] = f"{type(exc).__name__}: {exc}"[:120]
-        midloop_probes.append(probe)
+        midloop_probes.append(
+            midloop_probe(at, lambda: _spark_canary(spark), started)
+        )
 
     # the canary's first run in a session is cold and reads several times
     # its calibration; run it once, untimed, so loop_start reads the window

@@ -67,7 +67,6 @@ def _cmd_modify_reports(args) -> None:
         rna_totalreads=args.rna_totalreads,
         output_dir=args.output_dir,
         timestamp=args.timestamp,
-        adapt_headers=args.adapt_headers,
     )
 
 
@@ -234,10 +233,6 @@ def build_parser() -> argparse.ArgumentParser:
                        help="Output directory for complete reports")
     mod_p.add_argument("--timestamp", default=None,
                        help="preamble timestamp override (determinism)")
-    mod_p.add_argument("--adapt-headers", action="store_true",
-                       help="parse each report by its own header row "
-                            "(the reference's DictReader behavior) instead "
-                            "of requiring the canonical header")
     mod_p.set_defaults(func=_cmd_modify_reports)
 
     frr_p = sub.add_parser("filter-rrpm", help="filter rrpm CSV by taxID set")

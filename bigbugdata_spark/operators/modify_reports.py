@@ -21,13 +21,13 @@ Fidelity notes:
   reference's loop (ref :42-146): two inputs resolving to the same
   sample_name each get processed and the later one overwrites the
   earlier one's output file — no cross-file merging (ADVICE r2 #5);
-* `adapt_headers=False` (default) fails fast on a non-canonical header;
-  `adapt_headers=True` mirrors the reference's csv.DictReader behavior
-  (ref :59-73): each file is parsed BY ITS OWN header row and the output
-  carries that header's column order. A header missing one of the nine
-  canonical fields still raises — the reference's DictWriter would raise
-  the same way when writing the synthesized rows (csv 'dict contains
-  fields not in fieldnames'), we just say so before doing the work;
+* each file is parsed BY ITS OWN header row, as the reference's
+  csv.DictReader does (ref :59-73), and the output carries that header's
+  column order. A header missing one of the nine canonical fields
+  raises — the reference's DictWriter would raise the same way when
+  writing the synthesized rows (csv 'dict contains fields not in
+  fieldnames'), we just say so before doing the work — and so does a '#'
+  line before the header, which DictReader would take as the header;
 * per-report summary stats print to stdout exactly like the reference
   (ref :141-146): Created complete report / Total / Classified /
   Unclassified, plus the negative-unclassified and missing-totals
@@ -40,7 +40,6 @@ from __future__ import annotations
 
 import os
 from pathlib import Path
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,8 +49,8 @@ from bigbugdata_spark.sources.kraken_reports import (
     write_tsv_with_preamble,
 )
 
-CANONICAL_HEADER = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName"
-FIELDNAMES = CANONICAL_HEADER.split("\t")
+# the canonical report columns (ref :59-73): every header must name them
+FIELDNAMES = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName".split("\t")
 
 
 def read_totalreads(spark: SparkSession, path: str, priority: int) -> DataFrame:
@@ -80,12 +79,6 @@ def merged_totals(
     )
 
 
-def _canon_path(p: str) -> str:
-    """input_file_name() URI (file:///a%20b) -> local filesystem path."""
-    parsed = urlparse(p)
-    return unquote(parsed.path) if parsed.scheme else p
-
-
 def complete_reports(
     spark: SparkSession,
     species_reports: list[str],
@@ -93,7 +86,6 @@ def complete_reports(
     rna_totalreads: str,
     output_dir: str,
     timestamp: str | None = None,
-    adapt_headers: bool = False,
 ) -> tuple[list[str], list[str]]:
     """Run the completion pipeline; returns (written paths, skipped
     samples). See module docstring for the division of labor."""
@@ -109,7 +101,7 @@ def complete_reports(
     # DictReader takes a file's first line as its header, so it cannot
     # parse a report with a preamble
     head_rows = lines.filter(
-        F.col("header_order").isNull() | (F.col("row_order") <= F.col("header_order"))
+        (F.col("header_order") < 0) | (F.col("row_order") <= F.col("header_order"))
     ).collect()
 
     # per-file fieldnames, mirroring DictReader (ref :58-73)
@@ -117,16 +109,7 @@ def complete_reports(
     for r in head_rows:
         if r["row_order"] != r["header_order"]:
             raise ValueError(f"'#' line before the report header in: [{r['path']!r}]")
-        line = r["line"]
-        if line == CANONICAL_HEADER:
-            fields_by_path[r["path"]] = FIELDNAMES
-            continue
-        if not adapt_headers:
-            raise ValueError(
-                f"non-canonical report header in: [{r['path']!r}] "
-                "(pass adapt_headers=True to parse by the file's own header)"
-            )
-        fields = line.split("\t")
+        fields = r["line"].split("\t")
         missing = [f_ for f_ in FIELDNAMES if f_ not in fields]
         if missing:
             raise ValueError(
@@ -167,21 +150,20 @@ def complete_reports(
         for r in merged_totals(spark, dna_totalreads, rna_totalreads).collect()
     }
 
-    agg_by_canon = {_canon_path(r["path"]): r for r in agg.collect()}
-    fields_by_canon = {_canon_path(p): f_ for p, f_ in fields_by_path.items()}
+    agg_by_path = {r["path"]: r for r in agg.collect()}
 
     # driver side: O(files) formatting of the two synthesized rows
     written: list[str] = []
     skipped: list[str] = []
     for report in species_reports:
-        cp = os.path.abspath(report)
+        report_path = os.path.abspath(report)
         sample = os.path.basename(report).rpartition("_")[0]
         if sample not in totals:
             print(f"Warning: No total reads data found for sample {sample}")
             skipped.append(sample)
             continue
-        r = agg_by_canon.get(cp)  # None -> report had no species rows
-        fields = fields_by_canon.get(cp, FIELDNAMES)  # default: empty file
+        r = agg_by_path.get(report_path)  # None -> report had no species rows
+        fields = fields_by_path.get(report_path, FIELDNAMES)  # default: empty file
         total = totals[sample]
         classified = r["classified"] if r is not None else 0
         sum_kmers = r["sum_kmers"] if r is not None else 0

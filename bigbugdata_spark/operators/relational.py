@@ -225,7 +225,8 @@ def op01_scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def op02_id_from_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filename->sample_id projection pattern (op 2, ref bigbugdata.py:35-42):
     greedy prefix before the last separator, as a vectorized regexp_extract
-    (the kraken scan applies the same expression to input_file_name())."""
+    (the kraken reader applies the same expression to each file's decoded
+    path)."""
     return table(spark, sf_dir, "customer").select(
         "c_custkey", F.regexp_extract("c_name", r"^(.*)#", 1).alias("sample_id")
     )

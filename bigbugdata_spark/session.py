@@ -424,14 +424,15 @@ def _start_build_at_exit(plan: ArchivePlan) -> None:
 
 def get_spark(
     app_name: str = "bigbugdata_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's default config.
 
-    At 100 TB scale the same knobs apply, with shuffle_partitions sized to
-    ~2-3x total executor cores and `spark.sql.files.maxPartitionBytes`
-    left at 128 MB so scan tasks stay memory-bounded.
+    Shuffles run one partition per local core (32 when SPARK_GRAFT_CPUS is
+    unset). At 100 TB scale the same knobs apply, with
+    `spark.sql.shuffle.partitions` sized to ~2-3x total executor cores
+    (through `extra_conf`) and `spark.sql.files.maxPartitionBytes` left at
+    128 MB so scan tasks stay memory-bounded.
 
     A session that launches the driver JVM starts it from the class
     archive, or has the archive built when the process exits (see
@@ -440,8 +441,7 @@ def get_spark(
     """
     extra_conf = extra_conf or {}
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
+    shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
 
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")

@@ -5,11 +5,11 @@ sample — two '#' comment lines, a header row, then tab-separated data rows.
 Every kraken command reads its text inputs through one ordered reader,
 read_lines_ordered: a wholetext scan (one record and one task per file)
 split into lines where Python's text mode splits them, each line carrying
-its physical index and its file's header index. read_reports is that
-reader filtered to the data rows and parsed. All files load as ONE
-DataFrame (Spark's multi-file scan is the distributed analog of the
-reference's per-file loop); file identity is recovered as a `sample_id`
-column from input_file_name().
+its file's path and sample_id, its physical index and its file's header
+index. read_reports is that reader filtered to the data rows and parsed.
+All files load as ONE DataFrame (Spark's multi-file scan is the
+distributed analog of the reference's per-file loop); file identity is
+each file's path, decoded once from input_file_name().
 
 Sinks (ops 16-17, 23; ref bigbugdata.py:208-222, scripts/modify_reports.py:
 95-107): the pivoted presentation tables are O(taxa x samples) — bounded,
@@ -46,42 +46,48 @@ REPORT_SCHEMA = T.StructType(
 )
 
 
-def sample_id_sql(col: str) -> str:
-    """basename(path).rpartition('_')[0] (ref bigbugdata.py:35-42) of the
-    path column `col`, as SQL: greedy prefix before the LAST underscore;
-    '' when no underscore — matching str.rpartition."""
-    return f"regexp_extract(element_at(split({col}, '/'), -1), '^(.*)_', 1)"
-
-
 def read_lines_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """(path, row_order, line, header_order): every non-empty line of every
-    file with its physical line index, order-stable at any split
-    configuration (wholetext: one record and one task per file; an id
-    taken over a splittable scan stops matching file order once a file
+    """(path, sample_id, row_order, line, header_order): every non-empty
+    line of every file with its physical line index, order-stable at any
+    split configuration (wholetext: one record and one task per file; an
+    id taken over a splittable scan stops matching file order once a file
     spans splits).
+
+    `path` is the file's absolute path: input_file_name() is a
+    percent-encoded URI, decoded here exactly ('+' is escaped first, which
+    url_decode would read as a space) and without a file: scheme.
+    `sample_id` is basename(path).rpartition('_')[0] (ref
+    bigbugdata.py:35-42): the greedy prefix before the LAST underscore, ''
+    when there is none.
 
     Lines end at \\r\\n, a lone \\r or \\n, where Python's text mode ends
     them: the reference reads every report and script input in text mode.
     `header_order` is the index of the file's first line that is neither
-    empty nor a '#' comment, null when there is none. It is computed over
-    the file's line array with higher-order functions while the file is
-    still one record, and posexplode carries it along: a header skip is a
-    plain filter, with no window over the lines and no shuffle."""
-    header_order = F.expr(
-        "array_min(filter(transform(_lines, (x, i) -> "
-        "CASE WHEN x NOT LIKE '#%' AND x != '' THEN i END), v -> v IS NOT NULL))"
-    )
+    empty nor a '#' comment, -1 when there is none. Every per-file column
+    is computed while the file is still one record, and posexplode
+    carries it along: a header skip is a plain filter, with no window over
+    the lines and no shuffle. The header index is never null, so the
+    optimizer infers no null filter that would evaluate its lambda a
+    second time."""
+    uri = "replace(input_file_name(), '+', '%2B')"
     return (
         spark.read.format("text")
         .option("wholetext", "true")
         .load(paths)
         .select(
-            F.input_file_name().alias("path"),
+            F.expr(f"regexp_replace(url_decode({uri}), '^file:(//)?', '')").alias("path"),
             F.split(F.col("value"), "\r\n|\r|\n").alias("_lines"),
         )
-        .withColumn("header_order", header_order)
+        .selectExpr(
+            "path",
+            "regexp_extract(element_at(split(path, '/'), -1), '^(.*)_', 1) AS sample_id",
+            "_lines",
+            "CAST(coalesce(array_position(transform(_lines, x -> "
+            "x NOT LIKE '#%' AND x != ''), true), 0) - 1 AS INT) AS header_order",
+        )
         .select(
             "path",
+            "sample_id",
             F.posexplode(F.col("_lines")).alias("row_order", "line"),
             "header_order",
         )
@@ -120,7 +126,7 @@ def read_reports(
             for i, field in enumerate(REPORT_SCHEMA.fields)
         ],
         "path",
-        f"{sample_id_sql('path')} AS sample_id",
+        "sample_id",
         *(["row_order"] if with_row_order else []),
     )
 

@@ -1,6 +1,6 @@
 """bench.py's pure policies: the window-drift policy, the driver's
 bench-line parse, the compact line, the scale probe's iteration counts
-and the artifact contract.  No Spark, no clock.
+and the artifact contract.  No Spark.
 
 The live check of the drift policy (injected load flipping
 low_confidence) is plans/r18/injected_load_demo.sh.
@@ -12,6 +12,8 @@ import glob
 import json
 import os
 import re
+import time
+from types import SimpleNamespace
 
 import pytest
 
@@ -399,6 +401,28 @@ def test_scale_probe_iteration_overrides_survive_subsec_floor():
 
 
 class TestArtifactContract:
+    def test_midloop_probe_records_its_time(self):
+        """Each mid-loop probe says when it ran, in seconds since the
+        bench started, so a reading can be placed against injected load."""
+        started = time.perf_counter() - 5.0
+        probe = bench.midloop_probe("after_q", lambda: 0.1, started)
+        assert probe["at"] == "after_q" and probe["spark_sec"] == 0.1
+        assert 5.0 <= probe["t_s"] < 60.0
+
+        def _fails():
+            raise RuntimeError("no session")
+
+        failed = bench.midloop_probe("loop_end", _fails, started)
+        assert "spark_sec" not in failed and "t_s" in failed
+        assert failed["error"].startswith("RuntimeError")
+
+    def test_scale_probe_records_cores(self, monkeypatch):
+        """The x10 scale probe names the core count its budgets ran at."""
+        monkeypatch.setattr(bench, "_build_scale_dir", lambda spark: "/nonexistent")
+        spark = SimpleNamespace(sparkContext=SimpleNamespace(defaultParallelism=4))
+        out = bench.bench_scale_probe(spark, specs={})
+        assert out["cores"] == 4 and out["queries"] == {}
+
     def test_compact_line_carries_window_class(self):
         out = {
             "metric": "m", "value": 1.0, "unit": "sec", "sf": 0.1,

@@ -1,12 +1,13 @@
 """Unit fixtures for kraken edge cases the goldens cannot carry (the
 reference crashes on some of them): reads==0 e_val, physical row order
-under the wholetext reader, and the sample_id collision, missing-total
-and zero-total fail-fasts. Also the reference-free end-to-end gate (both
-sinks checked against the benchmark's plain-Python oracle), that a unit
-leaves no frame in the session's cache, the fidelity
-sink's CSV quoting, the scale tophits frame's local plan, and the pins
-that a repeated run reuses its compiled code and stays within its Spark
-job budget."""
+under the wholetext reader, the reader's one evaluation of each file's
+header index, and the sample_id collision, missing-total and zero-total
+fail-fasts. Also the reference-free end-to-end gate (both sinks checked
+against the benchmark's plain-Python oracle, report names with URI
+escapes among the inputs), that a unit leaves no frame in the session's
+cache, the fidelity sink's CSV quoting, the scale tophits frame's local
+plan, and the pins that a repeated run reuses its compiled code and stays
+within its Spark job budget."""
 
 from __future__ import annotations
 
@@ -79,6 +80,18 @@ def test_row_order_is_physical_line_order(spark, tmp_path):
     side = {r["taxID"]: r for r in cell_stats(rows).collect()}
     assert side[1234]["kmers"] == 222  # the physically-last duplicate
     assert side[1234]["sample_reads"] == 9
+
+
+def test_header_index_evaluated_once(spark, tmp_path):
+    """The reader's header index walks each file's line array once: a
+    nullable index let the optimizer infer an isnotnull filter from
+    `row_order > header_order` and push it below the Project that defines
+    the index, so the optimized plan held the lambda twice."""
+    p = tmp_path / "S1_report.txt"
+    _write_report(p, ["50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified"])
+    df = read_reports(spark, [str(p)], with_row_order=True)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("lambdafunction") == 1, plan
 
 
 def test_sample_id_collision_fails_fast(spark, tmp_path):
@@ -265,6 +278,29 @@ def oracle_reports(tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
+def escaped_reports(tmp_path_factory, oracle_reports):
+    """The oracle reports under sample names that input_file_name()
+    percent-encodes or that a plain url_decode misreads: a space, '+', a
+    literal '%20' and a non-ASCII letter, in a directory whose name has a
+    space too."""
+    out = tmp_path_factory.mktemp("escaped") / "report dir"
+    out.mkdir()
+    renames = {
+        "CF_DNA_S001": "CF_DNA_S 001",
+        "CF_DNA_S002": "CF_DNA_S+002",
+        "CF_RNA_S001": "CF_RNA_S%20001",
+        "CF_RNA_S002": "CF_RNA_S\u00e9002",
+    }
+    paths = []
+    for src in map(Path, oracle_reports):
+        sample = src.name.rpartition("_")[0]
+        dst = out / f"{renames.get(sample, sample)}_report.txt"
+        dst.write_bytes(src.read_bytes())
+        paths.append(str(dst))
+    return sorted(paths)
+
+
+@pytest.fixture(scope="module")
 def needy_reports(tmp_path_factory):
     """Every sample has fewer than TOP_K positive taxa, so every tophits
     ranking needs the dense-rank repair and keeps rank gaps."""
@@ -290,6 +326,8 @@ def _run_unit(spark, paths, out_dir, mode):
         pytest.param("oracle_reports", "scale", id="scale"),
         pytest.param("needy_reports", "fidelity", id="needy-fidelity"),
         pytest.param("needy_reports", "scale", id="needy-scale"),
+        pytest.param("escaped_reports", "fidelity", id="escaped-fidelity"),
+        pytest.param("escaped_reports", "scale", id="escaped-scale"),
     ],
 )
 def test_outputs_match_oracle(spark, request, tmp_path, reports, mode):

@@ -187,8 +187,8 @@ def _gen_reordered_report(base, sample, n_taxa=40, seed=23):
 
 def test_adapt_headers_matches_reference(tmp_path, spark, capsys):
     """Reordered-header report: reference parses/writes by the file's own
-    header; ours must be byte-identical under adapt_headers=True — and
-    the per-report summary stdout must match line for line."""
+    header; ours must be byte-identical — and the per-report summary
+    stdout must match line for line."""
     report, dna, rna = _gen_reordered_report(tmp_path / "in", "CF_RNA_S900")
 
     ref_mod = _load_ref_script("modify_reports")
@@ -211,7 +211,6 @@ def test_adapt_headers_matches_reference(tmp_path, spark, capsys):
         rna_totalreads=rna,
         output_dir=str(tmp_path / "our_out"),
         timestamp=FROZEN_TS,
-        adapt_headers=True,
     )
     our_stdout = capsys.readouterr().out
     assert skipped == []
@@ -223,19 +222,6 @@ def test_adapt_headers_matches_reference(tmp_path, spark, capsys):
     assert norm(our_stdout, tmp_path / "our_out") == norm(
         ref_stdout, tmp_path / "ref_out"
     )
-
-
-def test_reordered_header_fails_fast_by_default(tmp_path, spark):
-    report, dna, rna = _gen_reordered_report(tmp_path / "in", "CF_RNA_S901")
-    with pytest.raises(ValueError, match="non-canonical report header"):
-        complete_reports(
-            spark,
-            species_reports=[report],
-            dna_totalreads=dna,
-            rna_totalreads=rna,
-            output_dir=str(tmp_path / "out"),
-            timestamp=FROZEN_TS,
-        )
 
 
 def test_duplicate_sample_last_file_wins(tmp_path, spark):
@@ -460,7 +446,8 @@ def test_filter_reports_matches_text_mode(tmp_path, spark, ending):
     rng = random.Random(43)
     folder = tmp_path / "reports"
     folder.mkdir()
-    for s in ("A01", "B02", "C03"):
+    # "B 02": input_file_name() percent-encodes the space
+    for s in ("A01", "B 02", "C03"):
         lines = ["# kraken2 --report x", "# Fri Aug 13 00:00:00 2026", HEADER]
         for t in range(20):
             lines.append(
@@ -515,7 +502,7 @@ def test_modify_reports_header_rule_matches_text_mode(tmp_path, spark, ending, l
             "taxID": str(5000 + t), "rank": rank, "taxName": f"  Sp {5000 + t}",
         }
         lines.append("\t".join(row[f] for f in fields))
-    sample = "CF_DNA_S042"
+    sample = "CF_DNA S042"  # a space, which input_file_name() percent-encodes
     report = _write_lines(tmp_path / f"{sample}_report.tsv", lines, ending)
     dna = _write_lines(tmp_path / "dna.tsv", [f"{sample}_L001\tx\t{3 * classified}"], ending)
     rna = _write_lines(tmp_path / "rna.tsv", [], ending)
@@ -524,7 +511,7 @@ def test_modify_reports_header_rule_matches_text_mode(tmp_path, spark, ending, l
     def complete():
         return complete_reports(
             spark, species_reports=[report], dna_totalreads=dna, rna_totalreads=rna,
-            output_dir=str(out_dir), timestamp=FROZEN_TS, adapt_headers=True,
+            output_dir=str(out_dir), timestamp=FROZEN_TS,
         )
 
     witness = _modify_header_witness(report)

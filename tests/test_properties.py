@@ -176,11 +176,10 @@ def test_pipeline_invariants(spark, tmp_path_factory, corpus):
         assert len(set(ranks)) == len(ranks)
         assert all(1 <= r <= k for r in ranks)
 
-    # combined long form: per-taxon total equals the sum over samples
-    combined = result.combined.collect()
+    # per-taxon total equals the sum of its cells' reads over samples
     per_taxon: dict[int, int] = {}
     totals: dict[int, int] = {}
-    for c in combined:
+    for c in rrpm:
         per_taxon[c["taxID"]] = per_taxon.get(c["taxID"], 0) + c["reads"]
         totals[c["taxID"]] = c["total_reads"]
     assert per_taxon == totals
