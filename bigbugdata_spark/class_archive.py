@@ -30,13 +30,14 @@ from bigbugdata_spark.session import (
     collector_options,
     get_spark,
 )
+from bigbugdata_spark.sources.kraken_reports import REPORT_FIELDS
 
 #: seconds to wait for the JVM's exit, which writes the dump (~150 MB;
 #: about 16 s on a busy 4-vCPU host, longer on one idle-priority core)
 JVM_EXIT_WAIT_S = 300
 #: the builder's JVM: small, since what it loads does not depend on size
 _BUILD_CONF = {"spark.driver.memory": "1g", "spark.master": "local[1]"}
-_HEADER = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName"
+_HEADER = "\t".join(REPORT_FIELDS)
 _GROUPS = [("A_Negative$", "^A_"), ("B_Negative$", "^B_")]
 
 

@@ -14,9 +14,11 @@
 The reference ships these as four entry points; one subcommand tree keeps
 the flag surfaces byte-compatible per command. taxID comparisons in the
 filters are STRING comparisons, as in the reference (both sides come from
-the same text files). filter-reports skips '#' preamble lines — a
-documented divergence: the reference's DictReader treats a preamble line
-as the header and crashes on its own completed reports.
+the same text files). filter-reports reads each report by its own header
+and writes sampleName plus the last file's header, as the reference does.
+It skips '#' preamble lines — a documented divergence: the reference's
+DictReader treats a preamble line as the header and crashes on its own
+completed reports.
 
 Run with: python -m bigbugdata_spark.cli <subcommand> ...
 """
@@ -112,38 +114,28 @@ def _cmd_filter_reports(args) -> None:
     if not paths:
         return
     lines = read_lines_ordered(spark, paths)
-    # one header per file (tiny collect); all files must agree — a
-    # reordered header would silently misindex taxID otherwise
-    headers = {
-        r["line"]
-        for r in lines.filter(F.col("row_order") == F.col("header_order"))
-        .select("line")
-        .collect()
-    }
-    if not headers:
+    # the output columns are sampleName and the last file's header: the
+    # reference's DictWriter takes the fieldnames its loop saw last
+    last = lines.filter("row_order = header_order").orderBy(F.desc("path")).first()
+    if last is None:
         return
-    if len(headers) > 1:
-        raise ValueError(f"reports disagree on header: {sorted(headers)}")
-    header = headers.pop().split("\t")
-    tax_idx = header.index("taxID")
-    f = F.split(F.col("line"), "\t")
+    # each row's taxID at its position in its own file's header
+    taxid = "get(split(line, '\t'), array_position(header, 'taxID') - 1)"
     kept = (
         data_lines(lines)
-        .withColumn("taxID", f.getItem(tax_idx))
+        .withColumn("taxID", F.expr(taxid))
         .join(F.broadcast(taxids), "taxID", "left_semi")
-        .withColumn(
-            "sampleName",
-            F.split(F.element_at(F.split(F.col("path"), "/"), -1), "_").getItem(0),
-        )
         .orderBy("path", "row_order")
         .collect()
     )
-    out_fields = ["sampleName"] + header
     rows = [
-        {"sampleName": r["sampleName"], **dict(zip(header, r["line"].split("\t")))}
+        {
+            "sampleName": os.path.basename(r["path"]).split("_")[0],
+            **dict(zip(r["header"], r["line"].split("\t"))),
+        }
         for r in kept
     ]
-    _write_stdout_csv(rows, out_fields)
+    _write_stdout_csv(rows, ["sampleName", *last["header"]])
 
 
 def _cmd_query(args) -> None:

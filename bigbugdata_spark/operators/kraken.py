@@ -35,6 +35,9 @@ Every documented numeric quirk of the reference is reproduced:
   NaN when all-equal (ref :322-331).
 
 Divergences (each fail-fast or documented):
+* a report whose header lacks a canonical field makes the reference
+  KeyError (ref :250-254, fields read by name in each file's own header);
+  we raise ValueError naming the file and the fields before any output;
 * a sample with no taxID-0/1 rows makes the reference silently drop it
   from RPM and later KeyError (ref :121); we raise ValueError at once;
 * reads == 0 makes the reference crash with ZeroDivisionError (ref :275);
@@ -70,7 +73,9 @@ from bigbugdata_spark.operators.relational import (
 )
 from bigbugdata_spark.sources.kraken_reports import (
     output_paths,
+    read_lines_ordered,
     read_reports,
+    require_fields,
     write_csv_fidelity,
     write_csv_scale,
 )
@@ -374,6 +379,11 @@ def run_pipeline(
         n_reads = {r["sample_id"]: r["n_reads"] for r in sample_totals(reports).collect()}
         missing = [s for s in samples if not n_reads.get(s)]
         if missing:
+            # a report whose header lacks a canonical field parses to
+            # NULLs, so it has no total either: name its fields first
+            heads = read_lines_ordered(spark, [by_sample[s][0] for s in missing])
+            for r in heads.filter("row_order = header_order").collect():
+                require_fields(r["path"], r["header"])
             raise ValueError(
                 f"samples with no taxID 0/1 reads (cannot compute RPM): {missing}"
             )

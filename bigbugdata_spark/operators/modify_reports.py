@@ -45,12 +45,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bigbugdata_spark.sources.kraken_reports import (
+    REPORT_FIELDS,
     read_lines_ordered,
+    require_fields,
     write_tsv_with_preamble,
 )
-
-# the canonical report columns (ref :59-73): every header must name them
-FIELDNAMES = "%\treads\ttaxReads\tkmers\tdup\tcov\ttaxID\trank\ttaxName".split("\t")
 
 
 def read_totalreads(spark: SparkSession, path: str, priority: int) -> DataFrame:
@@ -109,32 +108,19 @@ def complete_reports(
     for r in head_rows:
         if r["row_order"] != r["header_order"]:
             raise ValueError(f"'#' line before the report header in: [{r['path']!r}]")
-        fields = r["line"].split("\t")
-        missing = [f_ for f_ in FIELDNAMES if f_ not in fields]
-        if missing:
-            raise ValueError(
-                f"report header in {r['path']!r} lacks canonical fields "
-                f"{missing}; the synthesized rows cannot be written"
-            )
-        fields_by_path[r["path"]] = fields
+        require_fields(r["path"], r["header"])
+        fields_by_path[r["path"]] = r["header"]
 
-    # per-file parse positions, broadcast into the distributed parse
-    idx_df = spark.createDataFrame(
-        [
-            (p, f_.index("reads"), f_.index("kmers"), f_.index("rank"))
-            for p, f_ in fields_by_path.items()
-        ],
-        "path string, i_reads int, i_kmers int, i_rank int",
-    )
-    f = F.split(F.col("line"), "\t")
-    body = lines.filter(F.col("row_order") > F.col("header_order"))
-    rows = body.join(F.broadcast(idx_df), "path").select(
+    # each field at its position in its own file's header
+    rows = lines.filter(F.col("row_order") > F.col("header_order")).selectExpr(
         "path",
         "row_order",
         "line",
-        F.get(f, F.col("i_reads")).cast("long").alias("reads"),
-        F.get(f, F.col("i_kmers")).cast("long").alias("kmers"),
-        F.get(f, F.col("i_rank")).alias("rank"),
+        *[
+            f"CAST(get(split(line, '\t'), field_at[{i}] - 1) AS {t}) AS {f}"
+            for i, (f, t) in enumerate(REPORT_FIELDS.items())
+            if f in ("reads", "kmers", "rank")
+        ],
     )
     species = rows.filter(F.col("rank") == "species")
     # per-FILE aggregates (op 21) + the ordered raw lines to echo; keyed
@@ -163,7 +149,7 @@ def complete_reports(
             skipped.append(sample)
             continue
         r = agg_by_path.get(report_path)  # None -> report had no species rows
-        fields = fields_by_path.get(report_path, FIELDNAMES)  # default: empty file
+        fields = fields_by_path.get(report_path, list(REPORT_FIELDS))  # default: empty file
         total = totals[sample]
         classified = r["classified"] if r is not None else 0
         sum_kmers = r["sum_kmers"] if r is not None else 0
@@ -176,41 +162,18 @@ def complete_reports(
             unclassified = 0
         path = out_dir / f"{sample}_species-level-report.tsv"
 
-        def fmt(entry: dict) -> str:
+        def synthesized(reads: int, kmers: int, tax_id: str, name: str) -> str:
+            """A synthesized row (op 22) in this report's column order: the
+            REPORT_FIELDS values, with dup and cov 0."""
+            pct = f"{(reads / total) * 100:.4f}"
+            values = (pct, str(reads), str(reads), str(kmers), "0", "0", tax_id, name, name)
+            entry = dict(zip(REPORT_FIELDS, values))
             return "\t".join(entry.get(f_, "") for f_ in fields)
 
         body_lines: list[str] = []
         if unclassified > 0:
-            body_lines.append(
-                fmt(
-                    {
-                        "%": f"{(unclassified / total) * 100:.4f}",
-                        "reads": str(unclassified),
-                        "taxReads": str(unclassified),
-                        "kmers": "0",
-                        "dup": "0",
-                        "cov": "0",
-                        "taxID": "0",
-                        "rank": "unclassified",
-                        "taxName": "unclassified",
-                    }
-                )
-            )
-        body_lines.append(
-            fmt(
-                {
-                    "%": f"{(classified / total) * 100:.4f}",
-                    "reads": str(classified),
-                    "taxReads": str(classified),
-                    "kmers": str(sum_kmers),
-                    "dup": "0",
-                    "cov": "0",
-                    "taxID": "1",
-                    "rank": "root",
-                    "taxName": "root",
-                }
-            )
-        )
+            body_lines.append(synthesized(unclassified, 0, "0", "unclassified"))
+        body_lines.append(synthesized(classified, sum_kmers, "1", "root"))
         body_lines.extend(s["line"] for s in echo)
         write_tsv_with_preamble(
             path,

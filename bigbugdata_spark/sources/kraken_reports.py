@@ -5,11 +5,16 @@ sample — two '#' comment lines, a header row, then tab-separated data rows.
 Every kraken command reads its text inputs through one ordered reader,
 read_lines_ordered: a wholetext scan (one record and one task per file)
 split into lines where Python's text mode splits them, each line carrying
-its file's path and sample_id, its physical index and its file's header
-index. read_reports is that reader filtered to the data rows and parsed.
-All files load as ONE DataFrame (Spark's multi-file scan is the
+its file's path, sample_id, header index and header fields, and its own
+physical index. read_reports is that reader filtered to the data rows and
+parsed. All files load as ONE DataFrame (Spark's multi-file scan is the
 distributed analog of the reference's per-file loop); file identity is
 each file's path, decoded once from input_file_name().
+
+Header rule (ref bigbugdata.py:250-254, scripts/modify_reports.py:59-73):
+every command finds a report's columns by name in that file's own header,
+as csv.DictReader does; `run` and `modify-reports` reject a header that
+lacks one of REPORT_FIELDS (require_fields).
 
 Sinks (ops 16-17, 23; ref bigbugdata.py:208-222, scripts/modify_reports.py:
 95-107): the pivoted presentation tables are O(taxa x samples) — bounded,
@@ -26,32 +31,38 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-# ref scripts/modify_reports.py:59-73 — the canonical 9-column report schema.
-# '%' is named pct; dup/cov keep raw string copies so sinks can echo the
+# ref scripts/modify_reports.py:59-73 — the canonical report fields, in
+# KrakenUniq's column order, each with the type read_reports parses it to
+# ('%' is named pct there). dup/cov stay strings so sinks can echo the
 # input text byte-for-byte (the reference never casts dup: bigbugdata.py:196).
-REPORT_SCHEMA = T.StructType(
-    [
-        T.StructField("pct", T.StringType()),
-        T.StructField("reads", T.LongType()),
-        T.StructField("taxReads", T.LongType()),
-        T.StructField("kmers", T.LongType()),
-        T.StructField("dup", T.StringType()),
-        T.StructField("cov", T.StringType()),
-        T.StructField("taxID", T.LongType()),
-        T.StructField("rank", T.StringType()),
-        T.StructField("taxName", T.StringType()),
-    ]
-)
+REPORT_FIELDS = {
+    "%": "string",
+    "reads": "bigint",
+    "taxReads": "bigint",
+    "kmers": "bigint",
+    "dup": "string",
+    "cov": "string",
+    "taxID": "bigint",
+    "rank": "string",
+    "taxName": "string",
+}
+
+
+def require_fields(path: str, header: list[str]) -> None:
+    """Raise ValueError, naming the file and the fields, when a report's
+    header lacks canonical fields."""
+    missing = [f for f in REPORT_FIELDS if f not in header]
+    if missing:
+        raise ValueError(f"report header in {path!r} lacks canonical fields {missing}")
 
 
 def read_lines_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame:
-    """(path, sample_id, row_order, line, header_order): every non-empty
-    line of every file with its physical line index, order-stable at any
-    split configuration (wholetext: one record and one task per file; an
-    id taken over a splittable scan stops matching file order once a file
-    spans splits).
+    """(path, sample_id, header_order, header, field_at, row_order, line):
+    every non-empty line of every file with its physical line index,
+    order-stable at any split configuration (wholetext: one record and
+    one task per file; an id taken over a splittable scan stops matching
+    file order once a file spans splits).
 
     `path` is the file's absolute path: input_file_name() is a
     percent-encoded URI, decoded here exactly ('+' is escaped first, which
@@ -63,13 +74,18 @@ def read_lines_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame
     Lines end at \\r\\n, a lone \\r or \\n, where Python's text mode ends
     them: the reference reads every report and script input in text mode.
     `header_order` is the index of the file's first line that is neither
-    empty nor a '#' comment, -1 when there is none. Every per-file column
+    empty nor a '#' comment, -1 when there is none, and `header` is that
+    line's tab-separated fields, empty when there is none: a command finds
+    a column by its name in its own file's header. `field_at` holds the
+    1-based position of each REPORT_FIELDS field in that header, and is
+    NULL when the header lacks one of them. Every per-file column
     is computed while the file is still one record, and posexplode
     carries it along: a header skip is a plain filter, with no window over
     the lines and no shuffle. The header index is never null, so the
     optimizer infers no null filter that would evaluate its lambda a
     second time."""
     uri = "replace(input_file_name(), '+', '%2B')"
+    at = "array(" + ", ".join(f"array_position(header, '{f}')" for f in REPORT_FIELDS) + ")"
     return (
         spark.read.format("text")
         .option("wholetext", "true")
@@ -85,11 +101,19 @@ def read_lines_ordered(spark: SparkSession, paths: list[str] | str) -> DataFrame
             "CAST(coalesce(array_position(transform(_lines, x -> "
             "x NOT LIKE '#%' AND x != ''), true), 0) - 1 AS INT) AS header_order",
         )
+        # Projects of their own, which read header_order and header more
+        # than once, so the optimizer inlines neither into the next one
+        .selectExpr(
+            "*", "coalesce(split(get(_lines, header_order), '\t'), array()) AS header"
+        )
+        .selectExpr("*", f"IF(array_contains({at}, 0), NULL, {at}) AS field_at")
         .select(
             "path",
             "sample_id",
-            F.posexplode(F.col("_lines")).alias("row_order", "line"),
             "header_order",
+            "header",
+            "field_at",
+            F.posexplode(F.col("_lines")).alias("row_order", "line"),
         )
         .filter(F.col("line") != "")
     )
@@ -107,7 +131,12 @@ def read_reports(
     spark: SparkSession, paths: list[str] | str, *, with_row_order: bool = False
 ) -> DataFrame:
     """The report scan (op 1): the data rows after each file's header,
-    '#' lines skipped, parsed to REPORT_SCHEMA plus `path` and `sample_id`.
+    '#' lines skipped, parsed to REPORT_FIELDS plus `path` and `sample_id`.
+
+    Each field is read at its position in its own file's header
+    (`field_at`; ref bigbugdata.py:250-254, csv.DictReader). A report
+    whose header lacks a canonical field parses every field to NULL, so it
+    has no taxID 0/1 rows and run_pipeline names the missing fields.
 
     `with_row_order` keeps each row's physical line index, so last-row-wins
     semantics for duplicate taxID rows within one report (ref
@@ -122,8 +151,8 @@ def read_reports(
     # columns cost four py4j round-trips each
     return body.selectExpr(
         *[
-            f"CAST(_f[{i}] AS {field.dataType.simpleString()}) AS {field.name}"
-            for i, field in enumerate(REPORT_SCHEMA.fields)
+            f"CAST(get(_f, field_at[{i}] - 1) AS {t}) AS {'pct' if f == '%' else f}"
+            for i, (f, t) in enumerate(REPORT_FIELDS.items())
         ],
         "path",
         "sample_id",

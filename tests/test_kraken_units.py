@@ -1,13 +1,14 @@
 """Unit fixtures for kraken edge cases the goldens cannot carry (the
 reference crashes on some of them): reads==0 e_val, physical row order
 under the wholetext reader, the reader's one evaluation of each file's
-header index, and the sample_id collision, missing-total and zero-total
-fail-fasts. Also the reference-free end-to-end gate (both sinks checked
-against the benchmark's plain-Python oracle, report names with URI
-escapes among the inputs), that a unit leaves no frame in the session's
-cache, the fidelity sink's CSV quoting, the scale tophits frame's local
-plan, and the pins that a repeated run reuses its compiled code and stays
-within its Spark job budget."""
+header index, and the sample_id collision, missing-total, missing header
+field and zero-total fail-fasts. Also the reference-free end-to-end gate
+(both sinks checked against the benchmark's plain-Python oracle, report
+names with URI escapes among the inputs), that permuted report columns
+give the same outputs, alone and after modify-reports, that a unit leaves
+no frame in the session's cache, the fidelity sink's CSV quoting, the
+scale tophits frame's local plan, and the pins that a repeated run reuses
+its compiled code and stays within its Spark job budget."""
 
 from __future__ import annotations
 
@@ -127,6 +128,41 @@ def test_missing_totals_fail_fast(spark, tmp_path):
     _write_report(bad, ["1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp."])
     with pytest.raises(ValueError, match=r"cannot compute RPM\): \['B'\]"):
         run_pipeline(spark, [str(ok), str(bad)])
+
+
+def test_missing_header_field_fails_fast(spark, tmp_path):
+    """A report whose header lacks a canonical field: the reference's dict
+    lookup raises KeyError (ref bigbugdata.py:250-254). `run` must raise
+    ValueError naming the file and the field before it writes anything,
+    not read NULLs into empty outputs."""
+    from bigbugdata_spark.cli import main as cli_main
+
+    ok = tmp_path / "A_report.txt"
+    _write_report(
+        ok,
+        [
+            "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
+            "50.0\t100\t0\t10\t1.0\t0.5\t1\troot\t  root",
+            "1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp.",
+        ],
+    )
+    bad = tmp_path / "B_report.txt"  # no cov column
+    bad.write_text(
+        "\n".join(
+            [
+                "# kraken2 fake",
+                HEADER.replace("\tcov", ""),
+                "50.0\t100\t100\t0\t0\t0\tunclassified\tunclassified",
+                "50.0\t100\t0\t10\t1.0\t1\troot\t  root",
+                "1.0\t10\t0\t5\t1.5\t1235\tspecies\t  Ok sp.",
+            ]
+        )
+        + "\n"
+    )
+    out = tmp_path / "out"
+    with pytest.raises(ValueError, match=r"B_report\.txt.*\['cov'\]"):
+        cli_main(["run", "-r", str(ok), str(bad), "-o", str(out)])
+    assert not out.exists()
 
 
 def test_zero_totals_fail_fast(spark, tmp_path):
@@ -339,6 +375,86 @@ def test_outputs_match_oracle(spark, request, tmp_path, reports, mode):
     _run_unit(spark, paths, tmp_path, mode)
     expected = oracle.expected_outputs(paths, TOP_K, GROUP_PATTERNS)
     assert oracle.check_outputs(expected, tmp_path, mode) == []
+
+
+#: the canonical columns permuted: reads<->taxReads, dup<->cov, taxID moved
+PERMUTED = ["%", "taxReads", "reads", "taxID", "kmers", "cov", "dup", "rank", "taxName"]
+
+
+def _permute(src: Path, dst: Path) -> str:
+    """`src` rewritten with its header and every data row in PERMUTED
+    column order; '#' lines stay as they are."""
+    lines = []
+    for line in src.read_text().splitlines():
+        if not line.startswith("#"):
+            row = dict(zip(HEADER.split("\t"), line.split("\t")))
+            line = "\t".join(row[f] for f in PERMUTED)
+        lines.append(line)
+    dst.write_text("\n".join(lines) + "\n")
+    return str(dst)
+
+
+@pytest.fixture(scope="module")
+def permuted_reports(tmp_path_factory, oracle_reports):
+    out = tmp_path_factory.mktemp("permuted")
+    return sorted(_permute(Path(p), out / Path(p).name) for p in oracle_reports)
+
+
+def _outputs(out_dir: Path) -> dict[str, bytes]:
+    """Each output's bytes: the fidelity sink's CSV, or the scale sink's
+    part files in name order."""
+    got = {}
+    for p in sorted(out_dir.iterdir()):
+        parts = sorted(p.glob("part-*")) if p.is_dir() else [p]
+        got[p.name] = b"".join(f.read_bytes() for f in parts)
+    assert len(got) == 3 and all(got.values())
+    return got
+
+
+@pytest.mark.parametrize("mode", ["fidelity", "scale"])
+def test_run_reads_reports_by_their_headers(
+    spark, oracle_reports, permuted_reports, tmp_path, mode
+):
+    """Each field is read by its name in its own file's header, as the
+    reference's DictReader reads it (ref bigbugdata.py:250-254): the
+    oracle reports with their columns permuted give the same bytes."""
+    _run_unit(spark, oracle_reports, tmp_path / "canonical", mode)
+    _run_unit(spark, permuted_reports, tmp_path / "permuted", mode)
+    assert _outputs(tmp_path / "permuted") == _outputs(tmp_path / "canonical")
+
+
+def test_completed_reordered_report_runs_alike(
+    spark, oracle_reports, permuted_reports, tmp_path
+):
+    """modify-reports writes a report in its input's column order, and
+    that output is what `run` reads next: the chain gives the same bytes
+    from permuted reports as from canonical ones. modify-reports takes
+    reports without the '#' preamble, as the reference's DictReader does."""
+    from bigbugdata_spark.operators.modify_reports import complete_reports
+
+    got = {}
+    for name, reports in (("canonical", oracle_reports), ("permuted", permuted_reports)):
+        d = tmp_path / name
+        (d / "in").mkdir(parents=True)
+        paths = []
+        for src in map(Path, reports):
+            body = [x for x in src.read_text().splitlines() if not x.startswith("#")]
+            paths.append(d / "in" / src.name)
+            paths[-1].write_text("\n".join(body) + "\n")
+        dna = d / "dna.tsv"
+        dna.write_text(
+            "".join(f"{Path(p).name.rpartition('_')[0]}_L001\tx\t90000000\n" for p in paths)
+        )
+        rna = d / "rna.tsv"
+        rna.write_text("")
+        written, skipped = complete_reports(
+            spark, list(map(str, paths)), str(dna), str(rna), str(d / "complete"),
+            timestamp="Fri Aug 13 00:00:00 2026",
+        )
+        assert skipped == [] and len(written) == len(paths)
+        _run_unit(spark, sorted(written), d / "out", "fidelity")
+        got[name] = _outputs(d / "out")
+    assert got["permuted"] == got["canonical"]
 
 
 @pytest.mark.parametrize("mode", ["fidelity", "scale"])

@@ -441,19 +441,34 @@ def test_filter_rrpm_matches_text_mode(tmp_path, spark, ending):
     assert got == want
 
 
-@LINE_ENDINGS
-def test_filter_reports_matches_text_mode(tmp_path, spark, ending):
+@pytest.mark.parametrize(
+    "ending, layout",
+    [
+        pytest.param(e, layout, id=f"{layout}-{i}" if layout != "canonical" else i)
+        for layout in ("canonical", "reordered")
+        for e, i in (("\n", "lf"), ("\r\n", "crlf"), ("\r", "cr"))
+    ],
+)
+def test_filter_reports_matches_text_mode(tmp_path, spark, ending, layout):
+    """In the reordered layout the last report has REORDERED_HEADER: each
+    report is read by its own header, and the output takes the last
+    one's."""
     rng = random.Random(43)
     folder = tmp_path / "reports"
     folder.mkdir()
     # "B 02": input_file_name() percent-encodes the space
     for s in ("A01", "B 02", "C03"):
-        lines = ["# kraken2 --report x", "# Fri Aug 13 00:00:00 2026", HEADER]
+        header = REORDERED_HEADER if layout == "reordered" and s == "C03" else HEADER
+        lines = ["# kraken2 --report x", "# Fri Aug 13 00:00:00 2026", header]
         for t in range(20):
-            lines.append(
-                f"0.01\t{rng.randint(1, 999)}\t0\t{rng.randint(1, 99)}\t1.0\t0.5"
-                f"\t{2000 + t}\tspecies\t  Sp {2000 + t}"
+            row = dict(
+                zip(
+                    HEADER.split("\t"),
+                    f"0.01\t{rng.randint(1, 999)}\t0\t{rng.randint(1, 99)}\t1.0\t0.5"
+                    f"\t{2000 + t}\tspecies\t  Sp {2000 + t}".split("\t"),
+                )
             )
+            lines.append("\t".join(row[f] for f in header.split("\t")))
         _write_lines(folder / f"{s}_species-level-report.tsv", lines, ending)
     picked = [str(t) for t in rng.sample(range(2000, 2020), 6)]
     taxids = _write_lines(tmp_path / "taxids.csv", ["taxID", *picked], "\n")
