@@ -25,12 +25,12 @@ from bigbugdata_spark.registry import register
 # (image/audio/video) ride as opaque `binary` columns next to typed
 # metadata; decode / feature-extraction runs as Arrow-batched Pandas
 # functions over mapInPandas (the only sanctioned Python-in-the-loop path —
-# never row-at-a-time UDFs). The decode kernels in this container are
-# STUBS by necessity (no image/audio libraries installed): `decode_image`
-# raises NotImplementedError, and the pipeline wires a deterministic fake
-# (`_fake_decode`, pure arithmetic on the byte length) so the Spark-side
-# plumbing — binary schema, Arrow batch shape, partition-preserving
-# mapInPandas, metadata join-back — is real and oracle-testable.
+# never row-at-a-time UDFs). The decode kernel in this container is a
+# STUB by necessity (no image/audio libraries installed): `_decode_batches`
+# derives width, height and frame count by pure arithmetic on the byte
+# length, so the Spark-side plumbing — binary schema, Arrow batch shape,
+# partition-preserving mapInPandas, metadata join-back — is real and
+# oracle-testable.
 # ---------------------------------------------------------------------------
 
 
@@ -99,25 +99,6 @@ def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- decode kernels ---------------------------------------------------------
-
-
-def decode_image(data: bytes) -> tuple[int, int, int]:
-    """Real image decode (width, height, channels). STUB: no imaging
-    library ships in this container — the Spark plumbing around it is
-    exercised via _fake_decode instead."""
-    raise NotImplementedError(
-        "image decoding requires an imaging library not present in this "
-        "environment; the pipeline substitutes _fake_decode"
-    )
-
-
-def _fake_decode(n_bytes: int) -> tuple[int, int, int]:
-    """Deterministic decode stand-in: pure arithmetic on payload size, so
-    the mapInPandas output is oracle-checkable."""
-    width = n_bytes % 317 + 1
-    height = (n_bytes * 7919) % 211 + 1
-    n_frames = n_bytes % 7 + 1
-    return width, height, n_frames
 
 
 _DECODE_SCHEMA = T.StructType(
@@ -258,9 +239,8 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     back. Partition-preserving (no shuffle); at 100 TB the decode stage
     scales with executors and the Arrow batch size
     (spark.sql.execution.arrow.maxRecordsPerBatch) bounds memory.
-    The fake kernel is arithmetic on byte length (decode_image documents
-    the NotImplementedError boundary), which is what makes this
-    oracle-checkable end to end."""
+    The fake kernel is arithmetic on byte length, which is what makes
+    this oracle-checkable end to end."""
     docs = table(spark, sf_dir, "documents").select(
         "doc_id", F.encode(F.col("text"), "UTF-8").alias("payload")
     )
@@ -277,7 +257,7 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # under the full hash gate.
 #
 # The kernel is the documented deterministic decode stand-in (the
-# _fake_decode convention): each sampled frame's "feature vector" is the
+# _decode_batches convention): each sampled frame's "feature vector" is the
 # code points of 4 characters read at the frame's offset into the payload
 # (cyclic) — an opaque per-item computation with the real kernel's
 # signature (bytes in, fixed-width vector out), swappable for a real

@@ -1161,8 +1161,7 @@ def corpus_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: broadcast the 5-row quota table into one corpus scan; the keep
     predicate is a scan-side filter — no shuffle at all. At 100 TB the
     same predicate runs inside the scan of each partition and composes
-    with partition pruning on lang-partitioned layouts
-    (sources/jsonl.write_corpus_partitioned)."""
+    with partition pruning on lang-partitioned layouts."""
     quota = spark.createDataFrame(
         sorted(_MIX_PERMILLE.items()), "lang string, permille int"
     )

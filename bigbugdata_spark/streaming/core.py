@@ -1,6 +1,6 @@
 """Shared Structured-Streaming plumbing: the events file-source stream,
-the drive-to-memory-sink harness, and the incremental foreachBatch
-upsert sinks.
+the drive-to-memory-sink harness, the out-of-order feed error and the
+RocksDB state-store settings.
 """
 
 from __future__ import annotations
@@ -10,7 +10,6 @@ import itertools
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.utils import AnalysisException
 
 
 # ---------------------------------------------------------------------------
@@ -117,7 +116,7 @@ def _run_to_memory(result: DataFrame, mode: str) -> DataFrame:
 #: snapshot zip.  All five stateful kernels are provider-agnostic by
 #: construction (state crosses as plain Arrow rows either way) —
 #: pinned by the restart-recovery test that reruns the funnel on
-#: RocksDB (tests/test_round14_ops.py).
+#: RocksDB (tests/test_streaming.py).
 #:
 #: Deploy-time: pass to the session factory,
 #: ``get_spark(extra_conf=ROCKSDB_STATE_STORE_CONF)``.  The provider is
@@ -157,173 +156,3 @@ def rocksdb_state_store(spark: SparkSession):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, old)
-
-
-# ---------------------------------------------------------------------------
-# Incremental materialization sink — the foreachBatch upsert pattern
-# that turns a stream into an idempotently-maintained parquet table.
-#
-# Structured Streaming's file sink is append-only per micro-batch with
-# exactly-once tracked via the checkpoint, but it cannot dedup against
-# what is ALREADY in the table (e.g. after a source replay or a second
-# pipeline writing the same keys). foreachBatch closes that gap: each
-# micro-batch is anti-joined against the current table keys before the
-# append, so re-processing the same data is a no-op — the MERGE-when-
-# not-matched pattern on a plain parquet directory, no lakehouse format
-# required.
-#
-# Scale posture: the anti-join's right side is a keys-only projection of
-# the existing table (column-pruned at the scan); for a 100 TB table the
-# same pattern runs against a key-bucketed layout (sources/bucketed.py)
-# so the anti-join co-locates instead of shuffling the batch.
-# ---------------------------------------------------------------------------
-
-
-def upsert_batch(
-    spark: SparkSession, batch: DataFrame, out_dir: str, key: str
-) -> None:
-    """Append only rows whose key is not already in the table (and dedup
-    the batch itself on the key first — a replayed micro-batch can carry
-    internal duplicates)."""
-    fresh = batch.dropDuplicates([key])
-    try:
-        existing = spark.read.parquet(out_dir).select(key)
-    except AnalysisException:  # first batch: nothing materialized yet
-        existing = None
-    if existing is not None:
-        fresh = fresh.join(existing, key, "left_anti")
-    fresh.write.mode("append").parquet(out_dir)
-
-
-def run_incremental_dedup_sink(
-    spark: SparkSession, sf_dir: str, out_dir: str, checkpoint_dir: str
-) -> None:
-    """Drive the events stream into an idempotent event_id-keyed parquet
-    table with availableNow (runs to completion, testable)."""
-    stream = stream_events(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _bid: upsert_batch(spark, batch, out_dir, "event_id")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def upsert_batch_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_name: str,
-    key: str,
-    n_buckets: int = 8,
-) -> None:
-    """The scale form of upsert_batch: the materialized table lives
-    key-BUCKETED (+sorted) on disk, so the per-batch anti-join reads the
-    existing side pre-hashed — only the micro-batch shuffles to align
-    with the bucket layout, never the (ever-growing) table. For a
-    long-running stream this is the difference between per-batch cost
-    O(batch + table/buckets-scan, no table shuffle) and re-shuffling the
-    whole table every batch (VERDICT r3/r4 weak flag).
-
-    tests/test_streaming.py locks in the plan property: exactly one
-    Exchange (the batch side) in the anti-join, zero on the table side.
-    """
-    # repartition to the bucket layout FIRST: the one exchange then
-    # serves both the in-batch dedup aggregate and the join alignment
-    fresh = batch.repartition(n_buckets, key).dropDuplicates([key])
-    if spark.catalog.tableExists(table_name):
-        # refresh BEFORE the anti-join read: the per-batch append runs
-        # on the micro-batch session clone, whose saveAsTable does NOT
-        # invalidate this (caller-supplied) session's table-relation
-        # cache — without the refresh, a restarted query's batch B
-        # anti-joins against a file index cached at batch A and lets
-        # batch A's keys back in as duplicates (r15 fault-injection
-        # finding; pinned by tests/test_round15_ops.py).  At scale the
-        # refresh is metadata-only — it forces the re-listing a correct
-        # read of the just-appended table needs anyway.
-        spark.catalog.refreshTable(table_name)
-        existing = spark.table(table_name).select(key)
-        fresh = fresh.join(existing, key, "left_anti")
-    (
-        fresh.write.format("parquet")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .mode("append")
-        .saveAsTable(table_name)
-    )
-
-
-def run_incremental_dedup_sink_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    table_name: str,
-    checkpoint_dir: str,
-    n_buckets: int = 8,
-) -> None:
-    """availableNow driver for the bucketed upsert sink (same contract as
-    run_incremental_dedup_sink, but materializing into a bucketed catalog
-    table instead of a plain parquet directory)."""
-    stream = stream_events(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _bid: upsert_batch_bucketed(
-                spark, batch, table_name, "event_id", n_buckets
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def run_partitioned_stream_sink(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    files_per_partition: int = 1,
-    compact_at_end: bool = True,
-) -> None:
-    """Stream events into the size-budgeted date-partitioned layout
-    (sources/partitioned.py) — the streaming face of the small-files
-    story: each micro-batch appends at most `files_per_partition` files
-    per day it touches (the salt-keyed repartition bounds the batch's
-    writer tasks exactly as in the batch path), so after B batches a
-    partition holds <= B x budget files instead of B x
-    upstream-parallelism. The compaction pass then restores the budget
-    — in production it runs periodically against recent partitions
-    (`compact_partitions(predicate=...)`); here it runs once at
-    availableNow completion so the whole lifecycle is testable.
-
-    Delivery guarantee — AT-LEAST-ONCE, stated plainly: foreachBatch
-    replays any batch whose checkpoint commit didn't land, and this
-    sink's plain-parquet append has no transaction to make that replay
-    a no-op — a crash between write_partitioned and the checkpoint
-    commit duplicates that batch's rows in the lake. That is the
-    standard foreachBatch + non-transactional-sink contract; exactly-
-    once here needs either key-level dedup downstream (upsert_batch /
-    the bucketed MERGE sinks above — which ARE replay-idempotent by
-    key) or a transactional table format. This sink's job is layout
-    (file budget + partitioning), not delivery semantics."""
-    from bigbugdata_spark.sources.partitioned import (
-        compact_partitions,
-        write_partitioned,
-    )
-
-    stream = stream_events(spark, sf_dir)
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda batch, _bid: write_partitioned(
-                batch, out_dir, files_per_partition, mode="append"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if compact_at_end:
-        compact_partitions(spark, out_dir, files_per_partition)

@@ -37,84 +37,6 @@ from bigbugdata_spark.streaming.core import (
 
 
 # ---------------------------------------------------------------------------
-# Custom stateful streaming operator via applyInPandasWithState — the
-# escape hatch for semantics the built-in window operators can't express
-# (SURVEY.md §7 phase 3). Demo operator: per-user running engagement
-# tracker (event count, centi-value total, last-seen timestamp) carried in
-# the state store across micro-batches, emitted per batch in update mode.
-#
-# Why this shape: state is keyed by user_id (the shuffle key), each batch's
-# rows arrive as Arrow-backed pandas frames, and the operator updates O(1)
-# state per key — bounded state, horizontally scalable, no driver
-# involvement. A production sessionizer adds EventTimeTimeout to close and
-# emit sessions when the watermark passes; the running-total form keeps the
-# demo deterministic under the availableNow trigger (no timeout races), and
-# the event-time session semantics themselves are already covered —
-# exactly — by evt_session_window's merge-window formulation.
-# ---------------------------------------------------------------------------
-
-
-_STATEFUL_OUTPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("value_cents", T.LongType()),
-        T.StructField("last_seen", T.TimestampType()),
-    ]
-)
-
-_STATEFUL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n_events", T.LongType()),
-        T.StructField("value_cents", T.LongType()),
-        T.StructField("last_seen_us", T.LongType()),
-    ]
-)
-
-
-def _track_user(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    """Fold this batch's events for one user into the carried state and
-    emit the updated running totals."""
-    n, cents, last_us = state.get if state.exists else (0, 0, 0)
-    for pdf in batches:
-        n += len(pdf)
-        # floor(x+0.5): HALF-AWAY rounding for the positive cent values,
-        # matching Spark F.round / DuckDB ROUND — pandas .round() is
-        # half-to-even and would diverge on exact .5 ties
-        cents += int((pdf["value"].mul(100) + 0.5).astype("int64").sum())
-        batch_max_us = int(ts_us(pdf["ts"]).max())
-        last_us = max(last_us, batch_max_us)
-    state.update((n, cents, last_us))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n],
-            "value_cents": [cents],
-            "last_seen": [pd.Timestamp(last_us, unit="us")],
-        }
-    )
-
-
-def stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the stateful tracker over the events stream to completion and
-    return the final per-user totals (one batch under availableNow ->
-    one output row per user)."""
-    events = stream_events(spark, sf_dir).select("user_id", "ts", "value")
-    tracked = events.groupBy("user_id").applyInPandasWithState(
-        _track_user,
-        outputStructType=_STATEFUL_OUTPUT_SCHEMA,
-        stateStructType=_STATEFUL_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    return _run_to_memory(tracked, "update")
-
-
-# ---------------------------------------------------------------------------
 # event-time sessionizer: custom session semantics with watermark timeouts
 # ---------------------------------------------------------------------------
 
@@ -298,13 +220,10 @@ def stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the window/session state store keyed by (window, key) and is expired by
 # the watermark — the 10-minute delay bounds state to ~10 min of keys.
 #
-# Semantics notes (asserted in tests/test_streaming.py):
-# * complete mode + availableNow reproduces the batch tumbling result
-#   EXACTLY (all state retained, flushed at end) — so the streaming query
-#   is oracle-checkable against the same DuckDB SQL as the batch twin;
-# * append mode emits only windows finalized by the final watermark
-#   (window.end <= max(ts) - delay); the held-back tail windows are the
-#   documented difference vs batch.
+# Semantics note: complete mode + availableNow reproduces the batch
+# tumbling result EXACTLY (all state retained, flushed at end) — so the
+# streaming query is oracle-checkable against the same DuckDB SQL as the
+# batch twin.
 # ---------------------------------------------------------------------------
 
 
@@ -325,19 +244,6 @@ def stream_tumbling_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling counts, COMPLETE mode: equals the batch
     result exactly once the stream drains."""
     out = _run_to_memory(_tumbling_agg(stream_events(spark, sf_dir)), "complete")
-    return out.select(
-        F.date_format(F.col("w.start"), TS_FMT).alias("window_start"),
-        "event_type",
-        "n_events",
-        "value_cents",
-    )
-
-
-def stream_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermarked tumbling counts, APPEND mode: only windows whose end
-    precedes the final watermark (max ts - 10 min) are emitted — the
-    late-data/finalization demo."""
-    out = _run_to_memory(_tumbling_agg(stream_events(spark, sf_dir)), "append")
     return out.select(
         F.date_format(F.col("w.start"), TS_FMT).alias("window_start"),
         "event_type",
@@ -492,8 +398,7 @@ def evt_stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale posture: the dimension is broadcast per batch when small (the
 # planner sees its size each time); a 100 TB-era dimension instead lives
 # key-bucketed (sources/bucketed.py) so each micro-batch aligns to the
-# bucket layout and the dim never shuffles — the same posture as the
-# bucketed upsert sink.
+# bucket layout and the dim never shuffles.
 # ---------------------------------------------------------------------------
 
 
@@ -571,8 +476,7 @@ def batch_enriched_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # equals the batch derivation, and the oracle (the matching projection
 # of the batch query's SQL) gates both. Scale posture: state is one row
 # of six scalars per user — the same user-grain the batch table
-# materializes; the production sink is the bucketed MERGE
-# (streaming/core.py) keyed on user_id.
+# materializes.
 # ---------------------------------------------------------------------------
 
 

@@ -65,6 +65,11 @@ def sf_oracle():
     return SF_ORACLE
 
 
+@pytest.fixture(scope="session")
+def sf(sf_oracle):
+    return sf_oracle
+
+
 def pytest_sessionfinish(session, exitstatus):
     """Record the opt-in second-scale parity sweep's result (VERDICT
     r12 #7): when SPARK_GRAFT_PARITY_SF2 is set, write the

@@ -56,7 +56,7 @@ def slow_tier_opted_in() -> bool:
 
 #: how many tests carry @pytest.mark.slow_tier — the sweep recorder's
 #: completeness guard (a targeted -k run must not overwrite the real
-#: record, the SF2 rule) and a lint pin (tests/test_round18_ops.py
+#: record, the SF2 rule) and a lint pin (tests/test_oracle_parity.py
 #: counts the markers so the constant cannot drift silently).
 SLOW_TIER_SIZE = 24
 

@@ -1,12 +1,11 @@
-"""Storage-layout and skew-tool guarantees: bucketed co-located joins
-drop both exchanges; salted join/agg are semantics-preserving."""
+"""Storage-layout guarantees: bucketed co-located joins drop both
+exchanges, and a date-partitioned layout prunes to the filtered day."""
 
 from __future__ import annotations
 
 import pytest
 
 from bigbugdata_spark.catalog import table
-from bigbugdata_spark.functions.skew import salted_agg, salted_join
 from bigbugdata_spark.plans import inspect as I
 from bigbugdata_spark.sources.bucketed import bucketed, write_bucketed
 
@@ -73,37 +72,3 @@ def test_date_partitioned_layout_prunes(spark, sf_oracle, tmp_path):
     assert want > 0
 
 
-def test_salted_join_preserves_semantics(spark, sf_oracle):
-    li = table(spark, sf_oracle, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity"
-    )
-    parts = table(spark, sf_oracle, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_size"
-    )
-    plain = li.join(parts, "l_partkey")
-    salted = salted_join(
-        li, parts, "l_partkey", n_salts=4, salt_from=["l_orderkey", "l_quantity"]
-    )
-    assert salted.count() == plain.count()
-    a = {tuple(r) for r in plain.select("l_orderkey", "l_partkey", "p_size").collect()}
-    b = {tuple(r) for r in salted.select("l_orderkey", "l_partkey", "p_size").collect()}
-    assert a == b
-
-
-def test_salted_agg_preserves_semantics(spark, sf_oracle):
-    li = table(spark, sf_oracle, "lineitem")
-    plain = {
-        r["l_partkey"]: r["q"]
-        for r in li.groupBy("l_partkey").agg(F.sum("l_quantity").alias("q")).collect()
-    }
-    salted = {
-        r["l_partkey"]: r["l_quantity"]
-        for r in salted_agg(
-            li,
-            "l_partkey",
-            n_salts=4,
-            salt_from=["l_orderkey", "l_linenumber"],
-            sum_cols=["l_quantity"],
-        ).collect()
-    }
-    assert salted == plain

@@ -7,8 +7,9 @@ field and zero-total fail-fasts. Also the reference-free end-to-end gate
 names with URI escapes among the inputs), that permuted report columns
 give the same outputs, alone and after modify-reports, that a unit leaves
 no frame in the session's cache, the fidelity sink's CSV quoting, the
-scale tophits frame's local plan, and the pins that a repeated run reuses
-its compiled code and stays within its Spark job budget."""
+scale tophits frame's local plan, the scale pivot's hash aggregate, and
+the pins that a repeated run reuses its compiled code and stays within
+its Spark job budget."""
 
 from __future__ import annotations
 
@@ -513,3 +514,32 @@ def test_repeated_run_job_budget(spark, oracle_reports, tmp_path, mode):
     _run_unit(spark, oracle_reports, tmp_path / "second", mode)
     n = _last_job_id(spark) - before
     assert n <= MAX_WARM_JOBS[mode], f"warm {mode} run submitted {n} jobs"
+
+
+# --- kraken matrix-sink pivot stays HashAggregate (r13) --------------------
+
+
+def test_kraken_scale_pivot_is_hash_aggregate(spark, tmp_path):
+    """The scale sink's per-taxon aggregate must HashAggregate: the r12
+    struct-valued PivotFirst silently fell to SortAggregate (two full
+    sorts of the long fact — measured 0.5-1.1 s on the bench fixture);
+    the r13 dual-scalar form keeps primitive slot buffers.  Pinned
+    here so a future 'tidy it into one struct agg' change is a red X,
+    not a silent regression."""
+    from bigbugdata_spark.operators.kraken import _taxon_entries, run_pipeline
+
+    rows = [
+        "50.0\t100\t100\t0\t0\t0\t0\tunclassified\tunclassified",
+        "50.0\t100\t0\t10\t1.0\t0.5\t1\troot\t  root",
+        "1.0\t10\t0\t5\t1.5\t0.5\t1235\tspecies\t  Ok sp.",
+    ]
+    paths = []
+    for s in ("A_report.txt", "B_report.txt"):
+        p = tmp_path / s
+        _write_report(p, rows)
+        paths.append(str(p))
+    result = run_pipeline(spark, paths)
+    by_taxon = _taxon_entries(result.rrpm)
+    plan = by_taxon._jdf.queryExecution().executedPlan().toString()
+    assert "SortAggregate" not in plan
+    assert "HashAggregate" in plan

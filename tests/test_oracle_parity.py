@@ -1,5 +1,7 @@
 """The local correctness gate: every registered query with an oracle must
-match DuckDB exactly at sf0.01 — the same comparison the driver runs."""
+match DuckDB exactly at sf0.01 — the same comparison the driver runs.
+The opt-in tiers' parse and the slow tier's declared size (tests/parity.py)
+are pinned here too."""
 
 from __future__ import annotations
 
@@ -92,3 +94,32 @@ def test_oracle_parity_second_scale(spark, con_sf2, name):
     spec = SPECS[name]
     ok, msg = compare(spec.fn(spark, _SF2), con_sf2, spec.oracle)
     assert ok, f"{name} @ sf0.001: {msg}"
+
+
+class TestSlowTier:
+    def test_marker_count_matches_declared_size(self):
+        """The sweep recorder's completeness guard uses
+        parity.SLOW_TIER_SIZE; pin it to the actual marker count so
+        adding/removing a tier test without updating the constant is a
+        red X, not a silently-unrecordable sweep."""
+        import pathlib
+        import re
+
+        from tests.parity import SLOW_TIER_SIZE
+
+        tests_dir = pathlib.Path(__file__).parent
+        n = sum(
+            len(re.findall(r"^@pytest\.mark\.slow_tier$", p.read_text(), re.M))
+            for p in tests_dir.glob("test_*.py")
+        )
+        assert n == SLOW_TIER_SIZE
+
+    def test_opt_in_parse_matches_sf2_contract(self, monkeypatch):
+        from tests.parity import slow_tier_opted_in
+
+        for v, expect in (("", False), ("0", False), ("false", False),
+                          ("1", True), ("yes", True)):
+            monkeypatch.setenv("SPARK_GRAFT_SLOW_TIER", v)
+            assert slow_tier_opted_in() is expect, v
+        monkeypatch.delenv("SPARK_GRAFT_SLOW_TIER")
+        assert slow_tier_opted_in() is False

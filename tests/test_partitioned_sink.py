@@ -4,7 +4,9 @@ The small-files failure mode is invisible to row-level correctness tests
 (the data is identical however it is splintered), so these tests assert
 the FILE layout: budgeted counts after a write, splinter growth under
 repeated appends, and restoration of the budget by an incremental
-compaction pass that leaves untouched partitions' bytes alone."""
+compaction pass that leaves untouched partitions' bytes alone.  The
+storage advisors (operators/storage.py) that plan compaction and pick
+the partition granularity are checked here too."""
 
 from __future__ import annotations
 
@@ -12,11 +14,14 @@ import os
 
 from pyspark.sql import functions as F
 
+from bigbugdata_spark.registry import load_all
 from bigbugdata_spark.sources.partitioned import (
     DAY_COL,
     compact_partitions,
     write_partitioned,
 )
+
+SPECS = load_all()
 
 
 def _events(spark, sf_oracle):
@@ -174,3 +179,39 @@ def test_cluster_by_yields_skippable_row_groups(tmp_path, spark, sf_oracle):
         spark.read.parquet(clustered).select(F.sum("event_id")).first()[0]
         == spark.read.parquet(plain).select(F.sum("event_id")).first()[0]
     )
+
+
+def test_compaction_plan_executed_on_plan(spark, sf_oracle):
+    """Row totals preserved, every day's executed file count equals its
+    plan, and at least one day actually needed more than one file."""
+    from bigbugdata_spark.catalog import table
+
+    rows = SPECS["store_compaction_plan"].fn(spark, sf_oracle).collect()
+    assert rows
+    assert all(r["rows_match"] == 1 for r in rows)
+    assert all(r["files_after"] == r["target_files"] for r in rows)
+    assert sum(r["n_rows"] for r in rows) == table(
+        spark, sf_oracle, "events"
+    ).count()
+    assert any(r["target_files"] > 1 for r in rows)
+
+
+def test_partition_advisor_picks_finest_clearing_granularity(spark, sf_oracle):
+    """total_rows is identical for all granularities (same events),
+    partition counts are monotone day >= week >= month, and exactly one
+    granularity is chosen whenever any clears the floor — the finest."""
+    rows = {r["gran"]: r for r in SPECS["store_partition_advisor"].fn(spark, sf_oracle).collect()}
+    assert set(rows) == {"day", "week", "month"}
+    totals = {r["total_rows"] for r in rows.values()}
+    assert len(totals) == 1
+    assert (
+        rows["day"]["n_partitions"]
+        >= rows["week"]["n_partitions"]
+        >= rows["month"]["n_partitions"]
+    )
+    clearing = [g for g in ("day", "week", "month") if rows[g]["meets_floor"] == 1]
+    chosen = [g for g, r in rows.items() if r["chosen"] == 1]
+    if clearing:
+        assert chosen == [clearing[0]]
+    else:
+        assert chosen == []

@@ -17,6 +17,7 @@ import ast
 import concurrent.futures
 import json
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -42,6 +43,7 @@ def test_gate_order_leads_and_every_gated_query_has_an_oracle():
 # the gate order must not depend on that.
 _EARLY_IMPORT = """
 import json
+import re
 import bigbugdata_spark.operators.tpch
 import __spark_entry__
 print(json.dumps(list(__spark_entry__.queries())[:50]))
@@ -183,3 +185,118 @@ def test_one_wholetext_reader():
         if n:
             found[str(path.relative_to(_ROOT))] = n
     assert found == {"bigbugdata_spark/sources/kraken_reports.py": 1}
+
+
+# --- reachability ----------------------------------------------------------
+
+#: whole files whose code is reached: the CLI, the class-archive builder,
+#: the driver entry, bench.py and the benchmark of record
+_REACH_ROOTS = (
+    "bigbugdata_spark/cli.py",
+    "bigbugdata_spark/class_archive.py",
+    "__spark_entry__.py",
+    "bench.py",
+    "perfbench",
+)
+
+#: top-level definitions that no query, CLI command or benchmark reaches,
+#: kept for the reason each group names
+_UNREACHED_KEPT = {
+    # reference twins: tests compare registered streaming queries to them
+    "twins": (
+        "streaming.events.batch_click_attribution",
+        "streaming.events.batch_dedup_events",
+        "streaming.events.batch_enriched_totals",
+        "streaming.events.batch_user_lifecycle",
+    ),
+    # test infrastructure: the SQL-surface gate, the plan audits, and the
+    # restart tests of registered queries on ROCKSDB_STATE_STORE_CONF
+    "test infrastructure": (
+        "catalog.register_views",
+        "plans.inspect.read_columns",
+        "plans.inspect.has_broadcast_join",
+        "streaming.core.rocksdb_state_store",
+    ),
+    # maintenance APIs whose crash-safe publishing the tests prove
+    "maintenance": (
+        "operators.dedup_incr.append_batch_to_index",
+        "operators.dedup_incr.append_batch_to_lsh_index",
+        "operators.dedup_incr.append_bucketed",
+        "operators.dedup_incr.begin_append_intent",
+        "operators.dedup_incr.commit_append_intent",
+        "operators.events.append_batch_to_rollup",
+        "sources.partitioned.compact_partitions",
+        "sources.versioned.compact_versioned",
+        "sources.versioned.pin_version",
+        "sources.versioned.unpin_version",
+        "sources.versioned.versions",
+    ),
+}
+
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _parsed(path: pathlib.Path) -> tuple[ast.Module, set[int]]:
+    """The module and the ids of its docstring nodes."""
+    tree = ast.parse(path.read_text())
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, *_DEFS))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return tree, docs
+
+
+def _used_names(node: ast.AST, docs: set[int]) -> set[str]:
+    """Names the code uses: identifiers, attributes and the words of its
+    strings.  Docstrings and comments name nothing; an import binds a
+    name but uses none."""
+    out: set[str] = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            out.add(n.id)
+        elif isinstance(n, ast.Attribute):
+            out.add(n.attr)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and id(n) not in docs:
+            out.update(re.findall(r"\w+", n.value))
+    return out
+
+
+def _registers(node: ast.AST) -> bool:
+    return any(
+        isinstance(d, ast.Call) and getattr(d.func, "id", None) == "register"
+        for d in getattr(node, "decorator_list", ())
+    )
+
+
+def test_only_kept_definitions_lack_a_caller():
+    """Every top-level definition in the package is reached from a
+    registered query, module-level code or a _REACH_ROOTS file, or is
+    kept on purpose in _UNREACHED_KEPT.  A name reaches every definition
+    it names."""
+    pkg = _ROOT / "bigbugdata_spark"
+    roots = [_ROOT / r for r in _REACH_ROOTS]
+    files = [p for r in roots for p in ([r] if r.suffix else sorted(r.rglob("*.py")))]
+    candidates: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
+    used: set[str] = set()
+    for path in sorted(pkg.rglob("*.py")) + files:
+        tree, docs = _parsed(path)
+        for node in tree.body:
+            if path.is_relative_to(pkg) and path not in roots and isinstance(node, _DEFS) and not _registers(node):
+                qual = ".".join((*path.relative_to(pkg).with_suffix("").parts, node.name))
+                candidates.setdefault(node.name, []).append((qual, node, docs))
+            else:
+                used |= _used_names(node, docs)
+    done: set[str] = set()
+    while used - done:
+        name = (used - done).pop()
+        done.add(name)
+        for _, node, docs in candidates.pop(name, ()):
+            used |= _used_names(node, docs)
+    unreached = {q for defs in candidates.values() for q, _, _ in defs}
+    kept = {q for group in _UNREACHED_KEPT.values() for q in group}
+    assert not unreached - kept, f"only tests reach: {sorted(unreached - kept)}"
+    assert not kept - unreached, f"kept but reached or gone: {sorted(kept - unreached)}"
