@@ -282,10 +282,11 @@ def test_only_kept_definitions_lack_a_caller():
     files = [p for r in roots for p in ([r] if r.suffix else sorted(r.rglob("*.py")))]
     candidates: dict[str, list[tuple[str, ast.AST, set[int]]]] = {}
     used: set[str] = set()
-    for path in sorted(pkg.rglob("*.py")) + files:
+    for path in sorted({*pkg.rglob("*.py"), *files}):
         tree, docs = _parsed(path)
+        candidate = path.is_relative_to(pkg) and path not in roots
         for node in tree.body:
-            if path.is_relative_to(pkg) and path not in roots and isinstance(node, _DEFS) and not _registers(node):
+            if candidate and isinstance(node, _DEFS) and not _registers(node):
                 qual = ".".join((*path.relative_to(pkg).with_suffix("").parts, node.name))
                 candidates.setdefault(node.name, []).append((qual, node, docs))
             else:
