@@ -589,7 +589,7 @@ def dq_distribution_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # foreachBatch overwrite of the dataset-card-sized table (complete-mode
 # counts REPLACE per trigger; overwrite of a 5-row table is trivially
 # idempotent under replay).
-# tests/test_dq.py proves that path through the engine.
+# tests/test_round8_ops.py proves that path through the engine.
 # ---------------------------------------------------------------------------
 
 
@@ -1353,7 +1353,7 @@ def dq_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # On this synthetic fixture both feeds are dense and duplicate-free, so
 # both cards read all-clear (0 missing / 0 dupes) — the correct answer
 # for healthy data; the defect counters themselves are exercised by a
-# planted-gap/planted-replay corpus in tests/test_dq.py, the
+# planted-gap/planted-replay corpus in tests/test_round10_ops.py, the
 # fires-when-it-should half of the contract.
 #
 # No analog in the reference (SURVEY §2.1); dq extension surface.

@@ -1067,7 +1067,7 @@ def evt_state_dwell(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The exactness precondition (weighted 20-day totals < 2^34 cents, i.e.
 # partial sums < 2^53 ulps of 2^-19) holds with two orders of magnitude
 # of margin at every local gate SF — asserted by
-# tests/test_events.py::test_ewma_exactness_bound_at_gate_sfs, the
+# tests/test_round10_ops.py::test_ewma_exactness_bound_at_gate_sfs, the
 # guard the docstring claim rides on.  Beyond the bound (hot types at
 # cluster scale) the result degrades gracefully to ordinary
 # double-precision smoothing; only last-ulp oracle parity is lost.

@@ -55,7 +55,7 @@ from bigbugdata_spark.registry import register
 # candidate top-k with vec_id tie-break) in SQL, so both engines build
 # the same graph independently and any drift in codebook, probing or
 # scoring goes hash-red. Graph quality vs brute force is pinned
-# separately by a recall-floor test (tests/test_similarity_graph.py).
+# separately by a recall-floor test (tests/test_round8_ops.py).
 #
 # Scale posture: candidates come from shared probed cells — a cell-keyed
 # equi-join bounded by cell occupancy, never an all-pairs product; per

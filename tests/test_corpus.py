@@ -1,201 +1,13 @@
 """Behaviour tests for the corpus-curation operators in
-operators/corpus.py: sharding, curriculum, budget trim, dedup lineage,
-epoch and temperature mixes and survivor quality.
-"""
+operators/corpus.py: temperature mixes and survivor quality."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.operators.corpus import N_SHARDS
 from bigbugdata_spark.registry import load_all
 
 SPECS = load_all()
-
-
-# --- corpus_shard_assignment -----------------------------------------------
-
-
-def test_shard_assignment_covers_all_shards(spark, sf):
-    df = SPECS["corpus_shard_assignment"].fn(spark, sf).cache()
-    rows = df.collect()
-    assert sorted(r["shard"] for r in rows) == list(range(N_SHARDS))
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    # affine-hash balance: no shard beyond 2x the even share at sf0.01
-    for r in rows:
-        assert 0 < r["share_pm"] < 2000
-    df.unpersist()
-
-
-def test_shard_assignment_is_stable_under_append(spark, sf):
-    """Membership is a pure function of doc_id: sharding a subset
-    assigns every doc the same shard as sharding the full corpus —
-    the re-shard-after-append guarantee the docstring sells."""
-    from bigbugdata_spark.operators.corpus import shard_col
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    full = docs.select("doc_id", shard_col(F.col("doc_id")).alias("s"))
-    subset = docs.where(F.col("doc_id") % 3 == 0).select(
-        "doc_id", shard_col(F.col("doc_id")).alias("s2")
-    )
-    moved = (
-        full.join(subset, "doc_id").where(F.col("s") != F.col("s2")).count()
-    )
-    assert moved == 0
-
-
-# --- corpus_curriculum_plan ------------------------------------------------
-
-
-def test_curriculum_plan_covers_corpus_contiguously(spark, sf):
-    """All three stages populated at sf0.01, doc/token totals conserve,
-    and stage start offsets tile the token stream with no gaps."""
-    rows = sorted(
-        SPECS["corpus_curriculum_plan"].fn(spark, sf).collect(),
-        key=lambda r: r["stage"],
-    )
-    assert [r["stage"] for r in rows] == [1, 2, 3]
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    pos = 0
-    for r in rows:
-        assert r["start_token"] == pos
-        pos += r["n_tokens"]
-
-
-# --- corpus_budget_trim ----------------------------------------------------
-
-
-def test_budget_trim_respects_budget_and_priority(spark, sf):
-    """All three statuses live; admitted tokens never exceed the
-    budget; admission follows the (quality DESC, lang ASC) priority
-    order exactly — no dropped band may precede a full one."""
-    from bigbugdata_spark.operators.corpus import TOKEN_BUDGET
-
-    rows = sorted(
-        SPECS["corpus_budget_trim"].fn(spark, sf).collect(),
-        key=lambda r: (-r["q_milli"], r["lang"]),
-    )
-    assert {r["status"] for r in rows} == {"full", "partial", "dropped"}
-    admitted = sum(r["n_tokens_sel"] for r in rows)
-    assert admitted <= TOKEN_BUDGET
-    # the partial band's shortfall is at most what the draw granularity
-    # (permille of the band) can leave on the table
-    order = [r["status"] for r in rows]
-    assert order == sorted(
-        order, key=lambda s: {"full": 0, "partial": 1, "dropped": 2}[s]
-    )
-    for r in rows:
-        assert 0 <= r["n_docs_sel"] <= r["n_docs"]
-        assert 0 <= r["n_tokens_sel"] <= r["n_tokens"]
-        if r["status"] == "full":
-            assert r["n_docs_sel"] == r["n_docs"]
-        if r["status"] == "dropped":
-            assert r["n_docs_sel"] == 0
-
-
-def test_budget_trim_hard_guarantee_on_skewed_band(spark):
-    """The review scenario the greedy exists for: a marginal band with
-    one outsized document. The greedy must skip it when it would cross
-    the remaining budget, keeping admitted tokens <= budget exactly."""
-    from bigbugdata_spark.operators.corpus import budget_trim
-
-    rows = (
-        # band A (q=1000): 90 tokens -> full under budget 100
-        [(1, 90, 1000, "en", 5)]
-        # band B (q=700, marginal): remaining = 10; doc 2 draws first
-        # with 1000 tokens and MUST be rejected; doc 3 (4 tokens) and
-        # doc 4 (5 tokens) fit; doc 5 (2 tokens) would cross 10 -> out
-        + [(2, 1000, 700, "en", 1), (3, 4, 700, "en", 2),
-           (4, 5, 700, "en", 3), (5, 2, 700, "en", 4)]
-    )
-    banded = spark.createDataFrame(
-        rows, "doc_id long, n_tokens long, q_milli long, lang string, draw long"
-    )
-    out = {
-        (r["q_milli"], r["lang"]): r
-        for r in budget_trim(banded, budget=100).collect()
-    }
-    assert out[(1000, "en")]["status"] == "full"
-    marg = out[(700, "en")]
-    assert marg["status"] == "partial"
-    # prefix-greedy semantics: admission takes the maximal priority-
-    # order PREFIX that fits, so the outsized first doc is rejected and
-    # everything behind it too (admitted = 0; shortfall bounded by the
-    # first rejected doc's size, per the docstring). The failure mode
-    # under review — admitting the 1000-token doc against a 10-token
-    # remainder — is impossible.
-    assert marg["n_docs_sel"] == 0 and marg["n_tokens_sel"] == 0
-    assert marg["n_tokens_sel"] + 90 <= 100
-
-
-def test_budget_trim_is_deterministic(spark, sf):
-    a = sorted(tuple(r) for r in SPECS["corpus_budget_trim"].fn(spark, sf).collect())
-    b = sorted(tuple(r) for r in SPECS["corpus_budget_trim"].fn(spark, sf).collect())
-    assert a == b
-
-
-def test_dedup_lineage_stages_consistent(spark, sf_oracle):
-    """Every survivor_id's own row is 'kept'; exact-removed docs share
-    their text with a doc of smaller id; every document appears exactly
-    once; at least one row per live stage on this fixture."""
-    rows = SPECS["corpus_dedup_lineage"].fn(spark, sf_oracle).collect()
-    by_id = {r["doc_id"]: r for r in rows}
-    assert len(by_id) == len(rows)
-    stages = {r["stage"] for r in rows}
-    assert stages <= {"exact", "near", "kept"}
-    # this fixture has near-dups but no byte-identical texts; the exact
-    # stage is exercised on a planted corpus in the next test
-    assert "kept" in stages and "near" in stages
-    for r in rows:
-        surv = by_id[r["survivor_id"]]
-        assert surv["stage"] == "kept"
-        assert surv["survivor_id"] == surv["doc_id"]
-        if r["stage"] == "kept":
-            assert r["survivor_id"] == r["doc_id"]
-
-
-def test_dedup_lineage_exact_stage_and_chaining(spark, tmp_path):
-    """Planted corpus: docs 1/2 byte-identical, doc 3 a near-dup of
-    their text, doc 4 unrelated.  Doc 2 must be removed at 'exact',
-    doc 3 at 'near', and BOTH must chain to survivor 1; doc 4 keeps
-    itself."""
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    rows = [
-        (1, base, "en", "web", len(base)),
-        (2, base, "en", "web", len(base)),  # byte-identical dup of 1
-        (3, base + " lambda", "en", "web", len(base) + 7),  # near-dup
-        (4, "one two three four five six seven eight", "en", "web", 40),
-    ]
-    spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    ).coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
-    got = {
-        r["doc_id"]: (r["stage"], r["survivor_id"])
-        for r in SPECS["corpus_dedup_lineage"].fn(spark, str(tmp_path)).collect()
-    }
-    assert got[1] == ("kept", 1)
-    assert got[2] == ("exact", 1)
-    assert got[3] == ("near", 1)
-    assert got[4] == ("kept", 4)
-
-
-def test_epoch_mix_plan_arithmetic(spark, sf_oracle):
-    """Exact integer identities: need = BUDGET_X * total * pm div 1000,
-    epochs = need*1000 div avail; target shares sum to 1000; oversample
-    flag consistent."""
-    from bigbugdata_spark.operators.corpus import BUDGET_X, TARGET_PM
-
-    rows = SPECS["corpus_epoch_mix_plan"].fn(spark, sf_oracle).collect()
-    total = sum(r["n_tokens"] for r in rows)
-    assert sum(TARGET_PM.values()) == 1000
-    for r in rows:
-        pm = TARGET_PM.get(r["lang"], 0)
-        assert r["target_pm"] == pm
-        assert r["need_tokens"] == BUDGET_X * total * pm // 1000
-        assert r["epochs_milli"] == r["need_tokens"] * 1000 // r["n_tokens"]
-        assert r["oversampled"] == int(r["epochs_milli"] > 1000)
 
 
 def test_temperature_mix_flattens_and_conserves(spark, sf_oracle):

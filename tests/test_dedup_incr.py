@@ -1,8 +1,6 @@
-"""The persisted dedup indexes in operators/dedup_incr.py: incremental
-appends equal rebuilds, session-restart adoption, candidate volume,
-the generation publish and sweep protocol under races and fuzz, and
-torn-append recovery.
-"""
+"""The persisted dedup indexes in operators/dedup_incr.py: candidate
+volume, session-restart adoption, the generation publish and sweep
+protocol under races and fuzz, and torn-append recovery."""
 
 from __future__ import annotations
 
@@ -13,119 +11,6 @@ import sys
 
 from pyspark.sql import functions as F
 import pytest
-
-from bigbugdata_spark.functions.fragments import JACCARD_T
-from bigbugdata_spark.registry import load_all
-
-SPECS = load_all()
-
-
-def test_incremental_lsh_equals_gram_path_and_plan(spark, sf_oracle):
-    """The band-index ingest path must produce the identical result
-    relation as the gram-index path (both are gated by the same
-    ground-truth oracle; this pins them against each other directly),
-    and its plan must shingle only the batch — exactly one documents
-    scan pruned to (doc_id, text)."""
-    from bigbugdata_spark.plans import inspect as I
-
-    rel = lambda df: {  # noqa: E731
-        (r["new_id"], r["match_id"], round(r["jaccard"], 12))
-        for r in df.collect()
-    }
-    lsh = SPECS["dedup_incremental_lsh"].fn(spark, sf_oracle)
-    gram = SPECS["dedup_incremental"].fn(spark, sf_oracle)
-    assert rel(lsh) == rel(gram) and rel(gram)
-    doc_scans = [
-        c for c in I.read_columns(lsh) if c == {"doc_id", "text"}
-    ]
-    assert len(doc_scans) == 1, "corpus must NOT be re-shingled"
-    assert "CartesianProduct" not in I.plan_string(lsh)
-
-
-@pytest.mark.slow_tier
-def test_lsh_index_incremental_append_equals_rebuild(tmp_path, spark):
-    """Band-index maintenance: base build + batch append must equal a
-    from-scratch full build in both tables (bands as multisets, sets
-    keyed by doc)."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.operators.dedup import _doc_shingles
-    from bigbugdata_spark.operators.dedup_incr import (
-        _corpus_fingerprint,
-        _lsh_index_names as _index_names,
-        append_batch_to_lsh_index,
-        lsh_index,
-    )
-
-    rows = [
-        (i, " ".join(f"w{i}x{j}" for j in range(12)), "en", "syn", 0)
-        for i in range(20)
-    ]
-    full_dir = tmp_path / "full"
-    base_dir = tmp_path / "base"
-    docs = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, source string, n_chars long"
-    )
-    docs.write.parquet(str(full_dir / "documents.parquet"))
-    batch_pred = F.col("doc_id") >= 15
-    docs.filter(~batch_pred).write.parquet(str(base_dir / "documents.parquet"))
-
-    bands_f, sets_f = lsh_index(spark, str(full_dir))
-    want_bands = sorted((r["doc_id"], r["bkey"]) for r in bands_f.collect())
-    want_sets = sorted(
-        (r["doc_id"], tuple(sorted(r["grams"]))) for r in sets_f.collect()
-    )
-
-    base_fp = _corpus_fingerprint(str(base_dir))
-    lsh_index(spark, str(base_dir))
-    append_batch_to_lsh_index(
-        spark, _doc_shingles(spark, str(full_dir)).filter(batch_pred), base_fp
-    )
-    band_name, set_name = _index_names(base_fp)
-    got_bands = sorted(
-        (r["doc_id"], r["bkey"]) for r in spark.table(band_name).collect()
-    )
-    got_sets = sorted(
-        (r["doc_id"], tuple(sorted(r["grams"])))
-        for r in spark.table(set_name).collect()
-    )
-    assert got_bands == want_bands
-    assert got_sets == want_sets
-
-
-def test_gram_index_survives_session_restart_via_attach(spark, sf_oracle):
-    """A fresh session (simulated by dropping this session's catalog
-    entries — the external files persist) must ADOPT the completed
-    on-disk generation instead of rebuilding: same results, and the
-    data files' mtimes do not change."""
-    from pathlib import Path
-
-    from bigbugdata_spark.operators.dedup_incr import (
-        _corpus_fingerprint,
-        _index_names,
-        gram_index,
-        index_path,
-    )
-
-    gram_index(spark, sf_oracle)  # ensure built
-    fp = _corpus_fingerprint(sf_oracle)
-    names = _index_names(fp)
-    before = {
-        f: f.stat().st_mtime_ns
-        for n in names
-        for f in Path(index_path(n)).glob("*.parquet")
-    }
-    assert before
-    for n in names:
-        spark.sql(f"DROP TABLE IF EXISTS {n}")
-    idx, sizes, gdf = gram_index(spark, sf_oracle)
-    assert idx.count() > 0 and sizes.count() > 0 and gdf.count() > 0
-    after = {
-        f: f.stat().st_mtime_ns
-        for n in names
-        for f in Path(index_path(n)).glob("*.parquet")
-    }
-    assert after == before, "attach must not rewrite the index files"
 
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -157,167 +42,6 @@ def _doc_rows():
         (i, " ".join(texts[i]), "en", "syn", len(" ".join(texts[i])))
         for i in range(40)
     ]
-
-
-def _rel(df):
-    return {
-        (r["new_id"], r["match_id"], round(r["jaccard"], 9))
-        for r in df.collect()
-    }
-
-
-def _gram_probe(spark, fp, batch_grams):
-    """incremental_pairs' probe join against an appended gram-index
-    generation, with an explicit batch frame."""
-    idx = spark.table(f"gram_idx_{fp}")
-    sz = spark.table(f"gram_sz_{fp}")
-    common = (
-        batch_grams.alias("n")
-        .join(
-            idx.alias("c"),
-            (F.col("n.g") == F.col("c.g"))
-            & (F.col("n.doc_id") != F.col("c.doc_id")),
-        )
-        .groupBy(
-            F.col("n.doc_id").alias("new_id"),
-            F.col("c.doc_id").alias("match_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    s1 = sz.select(F.col("doc_id").alias("new_id"), F.col("sz").alias("sz1"))
-    s2 = sz.select(F.col("doc_id").alias("match_id"), F.col("sz").alias("sz2"))
-    jac = F.col("c").cast("double") / (F.col("sz1") + F.col("sz2") - F.col("c"))
-    return (
-        common.join(s1, "new_id")
-        .join(s2, "match_id")
-        .select("new_id", "match_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
-    )
-
-
-def _lsh_probe(spark, fp, batch_sh):
-    """dedup_incremental_lsh's probe join against an appended band-index
-    generation, with an explicit batch shingle frame."""
-    from bigbugdata_spark.operators.dedup_incr import _band_frame
-
-    bands = spark.table(f"lsh_band_{fp}")
-    sets = spark.table(f"lsh_set_{fp}")
-    cand = (
-        _band_frame(batch_sh)
-        .alias("n")
-        .join(bands.alias("c"), "bkey")
-        .where(F.col("n.doc_id") != F.col("c.doc_id"))
-        .select(
-            F.col("n.doc_id").alias("new_id"),
-            F.col("c.doc_id").alias("match_id"),
-        )
-        .distinct()
-    )
-    g1 = batch_sh.select(
-        F.col("doc_id").alias("new_id"), F.col("grams").alias("g1")
-    )
-    g2 = sets.select(
-        F.col("doc_id").alias("match_id"), F.col("grams").alias("g2")
-    )
-    jac = F.size(F.array_intersect("g1", "g2")).cast("double") / F.size(
-        F.array_union("g1", "g2")
-    )
-    return (
-        cand.join(g1, "new_id")
-        .join(g2, "match_id")
-        .select("new_id", "match_id", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= JACCARD_T)
-    )
-
-
-@pytest.mark.slow_tier
-def test_incremental_index_multicycle_lifecycle(tmp_path, spark):
-    """VERDICT r9 #3: three admit->append->probe cycles on BOTH index
-    paths.  Per cycle: (a) each probe result equals the from-scratch
-    ground truth (set-Jaccard over the corpus-so-far, computed without
-    any index), (b) the gram and band routes stay relation-equal, and
-    (c) the appended gram-index generation equals a from-scratch build
-    over the corpus-so-far (multiset equality) — append==rebuild held
-    over a whole ingest history, not one batch."""
-    from bigbugdata_spark.operators.dedup import _doc_shingles
-    from bigbugdata_spark.operators.dedup_incr import (
-        _corpus_fingerprint,
-        append_batch_to_index,
-        gram_index,
-        append_batch_to_lsh_index,
-        lsh_index,
-    )
-
-    rows = _doc_rows()
-    full_dir = tmp_path / "full"
-    base_dir = tmp_path / "base"
-    _write_docs(spark, rows, full_dir)
-    _write_docs(spark, [r for r in rows if r[0] < 25], base_dir)
-
-    # ground-truth gram sets, no index anywhere near this derivation
-    sets_by_id = {
-        r["doc_id"]: set(r["grams"])
-        for r in _doc_shingles(spark, str(full_dir)).collect()
-    }
-
-    def truth(batch_ids, hi):
-        out = set()
-        for b in batch_ids:
-            for o in range(hi):
-                if o == b:
-                    continue
-                s1, s2 = sets_by_id[b], sets_by_id[o]
-                inter = len(s1 & s2)
-                if inter:
-                    j = inter / (len(s1) + len(s2) - inter)
-                    if j >= JACCARD_T:
-                        out.add((b, o, round(j, 9)))
-        return out
-
-    fp = _corpus_fingerprint(str(base_dir))
-    gram_index(spark, str(base_dir))
-    lsh_index(spark, str(base_dir))
-    full_sh = _doc_shingles(spark, str(full_dir))
-
-    for cycle, lo in enumerate((25, 30, 35)):
-        hi = lo + 5
-        batch_ids = list(range(lo, hi))
-        batch_pred = (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        batch_sh = full_sh.filter(batch_pred)
-        batch_grams = batch_sh.select(
-            "doc_id", F.explode("grams").alias("g")
-        )
-        # admit -> append (both paths) -> probe
-        append_batch_to_index(spark, batch_grams, fp)
-        append_batch_to_lsh_index(spark, batch_sh, fp)
-        want = truth(batch_ids, hi)
-        assert want, f"cycle {cycle}: fixture must produce pairs"
-        got_gram = _rel(_gram_probe(spark, fp, batch_grams))
-        got_lsh = _rel(_lsh_probe(spark, fp, batch_sh))
-        assert got_gram == want, f"cycle {cycle}: gram probe != truth"
-        assert got_lsh == want, f"cycle {cycle}: lsh probe != truth"
-
-        # (c) appended generation == from-scratch build over corpus-so-far
-        scratch_dir = tmp_path / f"scratch{cycle}"
-        _write_docs(spark, [r for r in rows if r[0] < hi], scratch_dir)
-        sfp = _corpus_fingerprint(str(scratch_dir))
-        gram_index(spark, str(scratch_dir))
-        for tbl in ("gram_idx", "gram_sz", "gram_df"):
-            got = sorted(map(tuple, spark.table(f"{tbl}_{fp}").collect()))
-            ref = sorted(map(tuple, spark.table(f"{tbl}_{sfp}").collect()))
-            if tbl == "gram_df":
-                # df rows are per-batch PARTIALS — readers SUM by g
-                agg = lambda t: sorted(  # noqa: E731
-                    map(
-                        tuple,
-                        spark.table(t)
-                        .groupBy("g")
-                        .agg(F.sum("df_part").alias("df"))
-                        .collect(),
-                    )
-                )
-                got, ref = agg(f"{tbl}_{fp}"), agg(f"{tbl}_{sfp}")
-            assert got == ref, f"cycle {cycle}: {tbl} append != rebuild"
 
 
 def _tagged_replication(spark, src_dir: str, out_dir: Path, factor: int):

@@ -1,373 +1,11 @@
-"""Behaviour tests for the data-quality cards in operators/dq.py: drift,
-coverage, freshness, completeness, null profiles, schema contracts and
-order reconciliation, on the fixture and on planted defects.
-"""
+"""Behaviour tests for the data-quality cards in operators/dq.py: order
+reconciliation on the fixture and on a planted book."""
 
 from __future__ import annotations
-
-import duckdb
-from pyspark.sql import functions as F
 
 from bigbugdata_spark.registry import load_all
 
 SPECS = load_all()
-
-
-# --- dq_distribution_drift -------------------------------------------------
-
-
-def test_distribution_drift_partitions_total(spark, sf):
-    """Window counts partition the feed exactly and the share deltas sum
-    to zero (both distributions are complete)."""
-    df = SPECS["dq_distribution_drift"].fn(spark, sf).cache()
-    row = df.agg(
-        F.sum("c_ref").alias("sr"),
-        F.sum("c_cur").alias("sc"),
-        F.max("n_ref").alias("nr"),
-        F.max("n_cur").alias("nc"),
-        F.sum("delta_pm").alias("dd"),
-    ).collect()[0]
-    n_events = spark.read.parquet(f"{sf}/events.parquet").count()
-    assert row["sr"] + row["sc"] == n_events
-    assert row["sr"] == row["nr"] and row["sc"] == row["nc"]
-    assert abs(row["dd"]) < 1e-9
-    df.unpersist()
-
-
-def test_distribution_drift_flag_is_exact_integer(spark, sf):
-    """The drift flag must agree with the reported fp delta at the
-    documented threshold (the integer cross-multiplication is the same
-    predicate, decided exactly)."""
-    from bigbugdata_spark.operators.dq import DRIFT_THRESHOLD_PM
-
-    rows = SPECS["dq_distribution_drift"].fn(spark, sf).collect()
-    for r in rows:
-        assert r["drift"] == int(abs(r["delta_pm"]) > DRIFT_THRESHOLD_PM)
-
-
-def test_distribution_drift_fires_on_planted_shift(spark):
-    """The fixture never trips the 10-permille flag (max |delta| ~9.2pm
-    at sf0.01), so plant a composition shift and prove the flag FIRES:
-    category 'b' doubles its share in the current window while total
-    volume stays flat — the exact failure volume checks cannot see."""
-    import datetime as dt
-
-    from bigbugdata_spark.operators.dq import DRIFT_CUTOFF, finish_drift, window_counts
-
-    cutoff = dt.datetime.fromisoformat(DRIFT_CUTOFF)
-    before = cutoff - dt.timedelta(days=1)
-    after = cutoff + dt.timedelta(days=1)
-    # ref: 900 a / 100 b; cur: 800 a / 200 b  (b: 10% -> 20%, +100pm)
-    rows = (
-        [("a", before)] * 900
-        + [("b", before)] * 100
-        + [("a", after)] * 800
-        + [("b", after)] * 200
-    )
-    ev = spark.createDataFrame(rows, "event_type string, ts timestamp")
-    out = {r["event_type"]: r for r in finish_drift(window_counts(ev)).collect()}
-    assert out["b"]["drift"] == 1 and out["a"]["drift"] == 1
-    assert abs(out["b"]["delta_pm"] - 100.0) < 1e-9
-    assert abs(out["a"]["delta_pm"] + 100.0) < 1e-9
-
-
-# --- dq_emb_coverage -------------------------------------------------------
-
-
-def test_emb_coverage_clean_fixture_all_green(spark, sf):
-    row = SPECS["dq_emb_coverage"].fn(spark, sf).collect()[0]
-    n = spark.read.parquet(f"{sf}/documents.parquet").count()
-    assert row["matched"] == n
-    assert (
-        row["docs_without_vec"]
-        == row["vecs_without_doc"]
-        == row["n_bad_dim"]
-        == row["n_nonfinite"]
-        == row["n_all_zero"]
-        == 0
-    )
-
-
-def test_emb_coverage_corrupted_fixture_exact_counts(spark):
-    """Every defect class fires with its exact count: 2 docs missing
-    vectors, 1 orphan vector, 1 short vector, 1 NaN vector, 1 Inf
-    vector, 1 all-zero vector."""
-    import math
-
-    from bigbugdata_spark.functions.fragments import EMB_DIM
-    from bigbugdata_spark.operators.dq import emb_coverage
-
-    good = [0.5] * EMB_DIM
-    docs = spark.createDataFrame([(i,) for i in range(8)], "doc_id long")
-    emb_rows = [
-        (0, good),
-        (1, good),
-        (2, good[: EMB_DIM - 4]),          # bad dim
-        (3, [math.nan] + good[1:]),        # non-finite (NaN)
-        (4, [math.inf] + good[1:]),        # non-finite (Inf)
-        (5, [0.0] * EMB_DIM),              # all-zero
-        # doc 6, 7 have no vector
-        (100, good),                       # orphan vector
-    ]
-    emb = spark.createDataFrame(
-        emb_rows, "vec_id long, embedding array<float>"
-    )
-    row = emb_coverage(docs, emb).collect()[0]
-    assert row["matched"] == 6
-    assert row["docs_without_vec"] == 2
-    assert row["vecs_without_doc"] == 1
-    assert row["n_bad_dim"] == 1
-    assert row["n_nonfinite"] == 2
-    assert row["n_all_zero"] == 1
-
-
-# --- dq_freshness ----------------------------------------------------------
-
-
-def test_freshness_exercises_both_flags(spark, sf):
-    """The fixture itself covers fresh AND stale: events land within a
-    day of their anchor, the orders feed is a month behind its SLA."""
-    rows = {r["feed"]: r for r in SPECS["dq_freshness"].fn(spark, sf).collect()}
-    assert rows["events"]["is_stale"] == 0
-    assert rows["orders"]["is_stale"] == 1
-    for r in rows.values():
-        assert r["lag_hours"] >= 0
-    ev_max = (
-        spark.read.parquet(f"{sf}/events.parquet")
-        .agg(F.max("ts"))
-        .collect()[0][0]
-    )
-    assert rows["events"]["max_ts"].startswith(str(ev_max.date()))
-
-
-# --- dq_stream_distribution_drift ------------------------------------------
-
-
-def test_stream_drift_foreachbatch_overwrite_sink(spark, sf, tmp_path):
-    """The documented production path: complete-mode window counts
-    overwrite a parquet card table per trigger via foreachBatch; the
-    final table finished through finish_drift equals the batch query,
-    and re-running the stream (replay) leaves it unchanged."""
-    from bigbugdata_spark.operators.dq import finish_drift, window_counts
-    from bigbugdata_spark.streaming.core import stream_events
-
-    out = str(tmp_path / "drift_card")
-
-    def write(batch, _bid):
-        batch.write.mode("overwrite").parquet(out)
-
-    for i in range(2):
-        # second run uses a FRESH checkpoint so the source genuinely
-        # re-reads everything and foreachBatch fires again — a run
-        # against the retained checkpoint would be a no-op and prove
-        # nothing about the overwrite's replay idempotence
-        q = (
-            window_counts(stream_events(spark, sf))
-            .writeStream.outputMode("complete")
-            .foreachBatch(write)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / f"ckpt{i}"))
-            .start()
-        )
-        q.awaitTermination()
-
-    got = sorted(
-        tuple(r) for r in finish_drift(spark.read.parquet(out)).collect()
-    )
-    want = sorted(
-        tuple(r) for r in SPECS["dq_distribution_drift"].fn(spark, sf).collect()
-    )
-    assert got == want
-
-
-def test_stream_drift_equals_batch(spark, sf):
-    """The streaming monitor's final table must equal the batch query
-    row-for-row (availableNow ingests the whole fixture)."""
-    batch = sorted(
-        tuple(r) for r in SPECS["dq_distribution_drift"].fn(spark, sf).collect()
-    )
-    stream = sorted(
-        tuple(r)
-        for r in SPECS["dq_stream_distribution_drift"].fn(spark, sf).collect()
-    )
-    assert stream == batch
-
-
-def test_stream_freshness_equals_batch_events_row(spark, sf_oracle):
-    """stream == batch for the live freshness monitor: the streaming
-    one-row card must equal the batch audit's events row exactly."""
-    batch = {
-        r["feed"]: (r["max_ts"], r["lag_hours"], r["is_stale"])
-        for r in SPECS["dq_freshness"].fn(spark, sf_oracle).collect()
-    }
-    rows = SPECS["dq_stream_freshness"].fn(spark, sf_oracle).collect()
-    assert len(rows) == 1
-    r = rows[0]
-    assert (r["max_ts"], r["lag_hours"], r["is_stale"]) == batch["events"]
-    assert r["is_stale"] == 0  # the fixture's events feed is fresh
-
-
-def test_id_completeness_counts_planted_defects(tmp_path, spark):
-    """dq_id_completeness's defect counters on a planted corpus: events
-    with ids {0..9} minus {3, 7} plus a double-delivered 5 -> span 10,
-    8 distinct, 2 missing, 1 duplicate; orders dense and clean -> zero
-    defects.  Oracle re-derives both cards."""
-    from tests.parity import compare
-
-    ids = [i for i in range(10) if i not in (3, 7)] + [5]
-    ev = spark.createDataFrame(
-        [(i, 100 + i, "click", "2024-01-05 10:00:00", 1.0) for i in ids],
-        "event_id long, user_id long, event_type string, ts string, value double",
-    ).selectExpr(
-        "event_id", "user_id", "event_type",
-        "CAST(ts AS TIMESTAMP) AS ts", "value",
-    )
-    orders = spark.createDataFrame(
-        [(k, 1, "O") for k in range(5)],
-        "o_orderkey long, o_custkey long, o_orderstatus string",
-    )
-    d = tmp_path / "seq"
-    ev.write.parquet(str(d / "events.parquet"))
-    orders.write.parquet(str(d / "orders.parquet"))
-
-    got = {
-        r["feed"]: r
-        for r in SPECS["dq_id_completeness"].fn(spark, str(d)).collect()
-    }
-    e = got["events"]
-    assert (e["n_rows"], e["n_ids"], e["span"]) == (9, 8, 10)
-    assert (e["n_missing"], e["n_dupes"]) == (2, 1)
-    o = got["orders"]
-    assert (o["n_missing"], o["n_dupes"]) == (0, 0)
-
-    con = duckdb.connect()
-    for t in ("events", "orders"):
-        con.sql(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"'{d}/{t}.parquet/*.parquet'"
-        )
-    q = SPECS["dq_id_completeness"]
-    ok, msg = compare(q.fn(spark, str(d)), con, q.oracle)
-    assert ok, msg
-
-
-def test_null_profile_counts(tmp_path, spark):
-    """dq_null_profile on planted documents exercising the null and
-    blank paths the real corpus has none of; oracle parity on the same
-    planted dir pins the UNION-ALL twin."""
-    from tests.parity import compare
-
-    d = tmp_path / "nulls"
-    docs = [
-        (0, "a", "en", "s", 1),
-        (1, "b", "en", "", 1),
-        (2, None, None, "s2", 2),
-        (3, "  ", "en", "s3", 2),
-    ]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(str(d / "documents.parquet"))
-    got = {
-        r["col_name"]: r
-        for r in SPECS["dq_null_profile"].fn(spark, str(d)).collect()
-    }
-    assert len(got) == 5
-    t = got["text"]
-    assert (t["n_null"], t["n_blank"], t["n_distinct"]) == (1, 1, 3)
-    lang = got["lang"]
-    assert (lang["n_null"], lang["n_blank"], lang["n_distinct"]) == (1, 0, 1)
-    src = got["source"]
-    assert (src["n_null"], src["n_blank"], src["n_distinct"]) == (0, 1, 4)
-    assert (got["doc_id"]["n_distinct"], got["n_chars"]["n_distinct"]) == (4, 2)
-    assert all(r["n_rows"] == 4 for r in got.values())
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{d}/documents.parquet/*.parquet'"
-    )
-    ok, msg = compare(
-        SPECS["dq_null_profile"].fn(spark, str(d)),
-        con,
-        SPECS["dq_null_profile"].oracle,
-    )
-    assert ok, msg
-
-
-def test_null_profile_empty_table(tmp_path, spark):
-    """An EMPTY table still profiles as one all-zeros row per column —
-    matching the oracle's one aggregate per UNION-ALL branch (the
-    empty-group edge the SF2 sweep exists to catch, pinned directly)."""
-    from tests.parity import compare
-
-    d = tmp_path / "empty"
-    spark.createDataFrame(
-        [], "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(str(d / "documents.parquet"))
-    got = {
-        r["col_name"]: tuple(r)[1:]
-        for r in SPECS["dq_null_profile"].fn(spark, str(d)).collect()
-    }
-    assert len(got) == 5
-    assert all(v == (0, 0, 0, 0) for v in got.values())
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{d}/documents.parquet/*.parquet'"
-    )
-    ok, msg = compare(
-        SPECS["dq_null_profile"].fn(spark, str(d)),
-        con,
-        SPECS["dq_null_profile"].oracle,
-    )
-    assert ok, msg
-
-
-def test_schema_contract_all_green_and_complete(spark, sf_oracle):
-    """Every contract column present with ok=1 on the healthy fixture;
-    exactly the contract's row count (no undeclared columns)."""
-    from bigbugdata_spark.operators.dq import CONTRACT
-
-    rows = SPECS["dq_schema_contract"].fn(spark, sf_oracle).collect()
-    assert len(rows) == len(CONTRACT)
-    assert all(r["ok"] == 1 for r in rows)
-    assert all(r["expected_kind"] == r["actual_kind"] for r in rows)
-
-
-def test_schema_contract_flags_drift(spark, tmp_path):
-    """A drifted table (renamed column + widened int) must go red: the
-    missing declared column, the mismatched kind, and the undeclared
-    newcomer each flip ok=0."""
-    import shutil
-
-    for t in ("region", "nation", "customer", "supplier", "part",
-              "orders", "lineitem", "events", "documents"):
-        src = f"/root/testdata/sf0.001/{t}.parquet"
-        shutil.copy(src, str(tmp_path / f"{t}.parquet"))
-    # embeddings drifts: label widened to int64, vec_id renamed
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    (
-        emb.select(
-            F.col("vec_id").alias("vector_id"),
-            "embedding",
-            F.col("label").cast("long").alias("label"),
-        )
-        .coalesce(1)
-        .write.parquet(str(tmp_path / "embeddings.parquet"))
-    )
-    rows = {
-        (r["table_name"], r["col_name"]): r
-        for r in SPECS["dq_schema_contract"].fn(spark, str(tmp_path)).collect()
-    }
-    assert rows[("embeddings", "vec_id")]["actual_kind"] == "missing"
-    assert rows[("embeddings", "vec_id")]["ok"] == 0
-    assert rows[("embeddings", "label")]["actual_kind"] == "int64"
-    assert rows[("embeddings", "label")]["ok"] == 0
-    assert rows[("embeddings", "vector_id")]["expected_kind"] == "missing"
-    assert rows[("embeddings", "vector_id")]["ok"] == 0
-    # untouched tables stay green
-    assert rows[("documents", "doc_id")]["ok"] == 1
 
 
 def test_order_reconciliation_planted_consistent_book(spark, tmp_path, sf_oracle):

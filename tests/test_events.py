@@ -1,435 +1,12 @@
 """Behaviour tests for the batch event analytics in operators/events.py:
-conservation, planted-fixture and Python-witness checks beyond oracle
-parity.
-"""
+multi-touch credit conservation, bot regularity and funnel deadlines,
+on planted fixtures beyond oracle parity."""
 
 from __future__ import annotations
-
-import duckdb
-from pyspark.sql import functions as F
-import pytest
 
 from bigbugdata_spark.registry import load_all
 
 SPECS = load_all()
-
-
-# --- evt_transition_matrix -------------------------------------------------
-
-
-def test_transition_matrix_conserves_events(spark, sf):
-    """Total transitions = total events - distinct users (each user's
-    chain has exactly len-1 edges), and per-source totals agree with
-    the pair counts."""
-    df = SPECS["evt_transition_matrix"].fn(spark, sf).cache()
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    n_events = ev.count()
-    n_users = ev.select("user_id").distinct().count()
-    total = df.agg(F.sum("n_trans")).collect()[0][0]
-    assert total == n_events - n_users
-
-    bad = (
-        df.groupBy("prev_state", "n_from")
-        .agg(F.sum("n_trans").alias("s"))
-        .where(F.col("s") != F.col("n_from"))
-        .count()
-    )
-    assert bad == 0
-    # probabilities are a proper conditional distribution per source state
-    sums = df.groupBy("prev_state").agg(F.sum("p").alias("ps")).collect()
-    for r in sums:
-        assert abs(r["ps"] - 1.0) < 1e-9
-    df.unpersist()
-
-
-# --- evt_state_dwell -------------------------------------------------------
-
-
-def test_state_dwell_conservation(spark, sf):
-    """Runs partition into closed+open; every user contributes exactly
-    one open run; total dwell equals the sum over users of (last run
-    start - first run start) — the chain covers each user's history
-    with no gaps or overlaps."""
-    from bigbugdata_spark.catalog import table
-    from bigbugdata_spark.operators.scd import runs_from_events
-
-    rows = SPECS["evt_state_dwell"].fn(spark, sf).collect()
-    runs = runs_from_events(table(spark, sf, "events")).cache()
-    n_runs = runs.count()
-    n_users = runs.select("user_id").distinct().count()
-    assert sum(r["n_closed"] + r["n_open"] for r in rows) == n_runs
-    assert sum(r["n_open"] for r in rows) == n_users
-
-    span = (
-        runs.groupBy("user_id")
-        .agg(
-            (
-                F.unix_micros(F.max("vf")) - F.unix_micros(F.min("vf"))
-            ).alias("span_us")
-        )
-        .agg(F.sum("span_us"))
-        .collect()[0][0]
-    )
-    assert sum(r["total_us"] for r in rows) == span
-    for r in rows:
-        if r["n_closed"] > 0:
-            assert r["mean_us"] == r["total_us"] / r["n_closed"]
-        else:
-            assert r["mean_us"] is None
-    runs.unpersist()
-
-
-# --- evt_user_features -----------------------------------------------------
-
-
-def test_user_features_conserve_and_bound(spark, sf):
-    rows = SPECS["evt_user_features"].fn(spark, sf).collect()
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    assert len(rows) == ev.select("user_id").distinct().count()
-    assert sum(r["n_events"] for r in rows) == ev.count()
-    for r in rows:
-        assert 1 <= r["n_types"] <= 5
-        assert r["n_purchases"] + r["n_errors"] <= r["n_events"]
-        assert r["tenure_us"] >= 0
-        assert r["first_ts"] <= r["last_ts"]
-        assert r["purchase_share"] == r["n_purchases"] / r["n_events"]
-
-
-# --- evt_user_burst --------------------------------------------------------
-
-
-def test_user_burst_flags_and_conservation(spark, sf):
-    from bigbugdata_spark.operators.events import BURST_PM
-
-    rows = SPECS["evt_user_burst"].fn(spark, sf).collect()
-    ev = spark.read.parquet(f"{sf}/events.parquet")
-    assert sum(r["n_events"] for r in rows) == ev.count()
-    flags = {r["is_bursty"] for r in rows}
-    assert flags == {0, 1}  # both outcomes live in the fixture
-    for r in rows:
-        assert 1 <= r["max_hour_events"] <= r["n_events"]
-        assert r["n_active_hours"] <= r["n_events"]
-        # flag must agree with the fp factor at the permille threshold
-        assert r["is_bursty"] == int(r["burst_factor"] * 1000 > BURST_PM)
-
-
-def test_mad_profile_bounds_and_conservation(spark, sf_oracle):
-    """Counts conserve; MAD is nonnegative and never above the group's
-    value span; the fixture's heavy-tailed purchase values make the
-    outlier flag fire somewhere (a monitor no fixture can trip is
-    untested code)."""
-    rows = SPECS["evt_anomaly_mad"].fn(spark, sf_oracle).collect()
-    ev = spark.read.parquet(f"{sf_oracle}/events.parquet")
-    assert sum(r["n_events"] for r in rows) == ev.count()
-    for r in rows:
-        assert r["mad_cents"] >= 0
-        assert 0 <= r["n_outliers"] < r["n_events"]
-    assert any(r["n_outliers"] > 0 for r in rows)
-
-
-def test_seasonality_profile_covers_clock(spark, sf_oracle):
-    """Cells conserve the event count, keys stay in the ISO clock
-    domain, and the hot flag agrees with the exact share arithmetic."""
-    rows = SPECS["evt_seasonality_profile"].fn(spark, sf_oracle).collect()
-    ev = spark.read.parquet(f"{sf_oracle}/events.parquet")
-    total = ev.count()
-    assert sum(r["n_events"] for r in rows) == total
-    for r in rows:
-        assert 1 <= r["dow"] <= 7 and 0 <= r["hod"] <= 23
-        assert r["is_hot"] == int(2 * 168 * r["n_events"] > 3 * total)
-
-
-def test_growth_accounting_splits_and_conserves(spark, sf_oracle):
-    """n_active = n_new + n_returning per day; every user is new on
-    exactly one day; event counts conserve."""
-    rows = SPECS["evt_growth_accounting"].fn(spark, sf_oracle).collect()
-    ev = spark.read.parquet(f"{sf_oracle}/events.parquet")
-    assert sum(r["n_events"] for r in rows) == ev.count()
-    assert sum(r["n_new"] for r in rows) == ev.select("user_id").distinct().count()
-    for r in rows:
-        assert r["n_active"] == r["n_new"] + r["n_returning"]
-
-
-def test_stream_seasonality_equals_batch(spark, sf_oracle):
-    """stream == batch for the live seasonality heatmap."""
-    def key(rows):
-        return sorted(
-            (r["dow"], r["hod"], r["n_events"], r["is_hot"]) for r in rows
-        )
-
-    batch = key(SPECS["evt_seasonality_profile"].fn(spark, sf_oracle).collect())
-    stream = key(SPECS["evt_stream_seasonality"].fn(spark, sf_oracle).collect())
-    assert stream == batch and len(batch) > 0
-
-
-@pytest.mark.slow_tier
-def test_rollup_store_multicycle_append_equals_recompute(tmp_path, spark):
-    """evt_rollup_materialized's maintenance path: build the partial
-    store on a base slice, append two ingest batches, and the merged
-    rollup must equal a direct recompute over the full table after each
-    cycle; a warm serve must scan ONLY the partial store."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.operators.dedup_incr import _corpus_fingerprint
-    from bigbugdata_spark.operators.events import append_batch_to_rollup, rollup_store
-    from bigbugdata_spark.plans import inspect as I
-
-    def ev_rows(lo, hi):
-        return [
-            (
-                i,
-                100 + i % 7,
-                ["click", "view", "purchase"][i % 3],
-                f"2024-01-{(i % 9) + 1:02d} 10:{i % 60:02d}:00",
-                float(i % 50) + 0.25,
-            )
-            for i in range(lo, hi)
-        ]
-
-    schema = (
-        "event_id long, user_id long, event_type string, "
-        "ts string, value double"
-    )
-
-    def write(rows, d):
-        spark.createDataFrame(rows, schema).selectExpr(
-            "event_id", "user_id", "event_type",
-            "CAST(ts AS TIMESTAMP) AS ts", "value",
-        ).write.parquet(str(d / "events.parquet"))
-
-    base_dir = tmp_path / "base"
-    write(ev_rows(0, 60), base_dir)
-    fp = _corpus_fingerprint(str(base_dir), "events.parquet")
-    rollup_store(spark, str(base_dir))
-
-    full = spark.createDataFrame(ev_rows(0, 100), schema).selectExpr(
-        "event_id", "user_id", "event_type",
-        "CAST(ts AS TIMESTAMP) AS ts", "value",
-    )
-    for cycle, (lo, hi) in enumerate(((60, 80), (80, 100))):
-        batch = full.filter(
-            (F.col("event_id") >= lo) & (F.col("event_id") < hi)
-        )
-        append_batch_to_rollup(spark, batch, fp)
-        served = (
-            spark.table(f"evt_rollup_{fp}")
-            .groupBy("day", "event_type")
-            .agg(
-                F.sum("n_part").alias("n"),
-                F.sum("cents_part").alias("c"),
-            )
-        )
-        want = (
-            full.filter(F.col("event_id") < hi)
-            .select(
-                F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                "event_type",
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            .groupBy("day", "event_type")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("cents").alias("c"))
-        )
-        got = sorted(map(tuple, served.collect()))
-        ref = sorted(map(tuple, want.collect()))
-        assert got == ref, f"cycle {cycle}: merged rollup != recompute"
-
-    served = rollup_store(spark, str(base_dir))
-    scans = I.read_columns(served)
-    assert scans == [{"day", "event_type", "n_part", "cents_part"}], scans
-
-
-def _plant_events(spark, d, rows):
-    spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, ts string, value double",
-    ).selectExpr(
-        "event_id", "user_id", "event_type",
-        "CAST(ts AS TIMESTAMP) AS ts", "value",
-    ).write.parquet(str(d / "events.parquet"))
-
-
-def test_ewma_exact_dyadic_smoothing(tmp_path, spark):
-    """evt_ewma_daily on a planted series (daily cents 100, 200, 400,
-    gap, 800): the dyadic decay-1/2 weights and the truncated geometric
-    mass 2 - 2^-m give hand-computable EXACT doubles — including the
-    calendar gap contributing zero mass while still aging the weights."""
-    from tests.parity import compare
-
-    d = tmp_path / "ewma"
-    rows = [
-        (0, 1, "click", "2024-01-01 10:00:00", 1.00),
-        (1, 1, "click", "2024-01-02 10:00:00", 2.00),
-        (2, 1, "click", "2024-01-03 10:00:00", 4.00),
-        (3, 1, "click", "2024-01-05 10:00:00", 8.00),
-    ]
-    _plant_events(spark, d, rows)
-    got = {
-        r["day"]: r for r in SPECS["evt_ewma_daily"].fn(spark, str(d)).collect()
-    }
-    assert got["2024-01-01"]["ewma_cents"] == 100.0  # mass 1
-    assert got["2024-01-02"]["ewma_cents"] == (200 + 50) / 1.5
-    assert got["2024-01-03"]["ewma_cents"] == (400 + 100 + 25) / 1.75
-    # day 4 absent (no synthesized calendar rows); day 5's window spans
-    # the gap: (800 + 400/4 + 200/8 + 100/16) / (2 - 1/16)
-    assert "2024-01-04" not in got
-    assert got["2024-01-05"]["ewma_cents"] == 931.25 / 1.9375
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"'{d}/events.parquet/*.parquet'"
-    )
-    ok, msg = compare(
-        SPECS["evt_ewma_daily"].fn(spark, str(d)),
-        con,
-        SPECS["evt_ewma_daily"].oracle,
-    )
-    assert ok, msg
-
-
-def test_ewma_exactness_bound_at_gate_sfs():
-    """The dyadic-exactness argument needs every weighted 20-day total
-    to stay under 2^34 cents (partial sums < 2^53 ulps of 2^-19).  The
-    docstring claims it; this asserts it against the LARGEST local
-    data, with margin, so data growth can't silently void bit-exact
-    parity."""
-    import duckdb
-
-    from bigbugdata_spark.operators.events import EWMA_WINDOW
-
-    for sf in ("sf0.1", "sf0.01", "sf0.001"):
-        worst = duckdb.sql(
-            f"""
-            WITH daily AS (
-                SELECT event_type, CAST(ts AS DATE) AS day,
-                       SUM(CAST(ROUND(value*100) AS BIGINT)) AS n_cents
-                FROM '/root/testdata/{sf}/events.parquet'
-                GROUP BY 1, 2
-            )
-            SELECT MAX(w) FROM (
-                SELECT SUM(n_cents) OVER (
-                    PARTITION BY event_type ORDER BY day
-                    ROWS BETWEEN {EWMA_WINDOW - 1} PRECEDING AND CURRENT ROW
-                ) AS w FROM daily
-            )
-            """
-        ).fetchone()[0]
-        assert worst * 100 < 2**34, (sf, worst)
-
-
-def test_purchase_attribution_planted_stream(tmp_path, spark):
-    """evt_purchase_attribution on a planted stream exercising every
-    rule: ordinary last-touch, the organic (no preceding event) case,
-    the same-timestamp tiebreak (event_id order decides whether the
-    touch precedes the purchase), and a touch carried across an
-    intervening purchase; oracle parity on the same planted dir pins
-    the IGNORE-NULLS window twin."""
-    from tests.parity import compare
-
-    d = tmp_path / "attrib"
-    rows = [
-        # user 1: click -> purchase 100, then purchase 50 (touch CARRIES
-        # across the first purchase — still the click)
-        (1, "2024-01-01 10:00:00", 1, "click", 1.00),
-        (2, "2024-01-01 11:00:00", 1, "purchase", 100.00),
-        (3, "2024-01-02 09:00:00", 1, "purchase", 50.00),
-        # user 2: organic purchase (nothing precedes)
-        (4, "2024-01-01 08:00:00", 2, "purchase", 10.00),
-        # user 2: view AT THE SAME ts as the next purchase but with a
-        # smaller event_id -> the view IS the touch
-        (5, "2024-01-03 12:00:00", 2, "view", 0.50),
-        (6, "2024-01-03 12:00:00", 2, "purchase", 20.00),
-        # user 3: signup then error then purchase -> last touch = error
-        (7, "2024-01-01 09:00:00", 3, "signup", 1.00),
-        (8, "2024-01-01 09:30:00", 3, "error", 0.10),
-        (9, "2024-01-01 10:00:00", 3, "purchase", 30.00),
-    ]
-    spark.createDataFrame(
-        [(i, ts, u, t, v) for i, ts, u, t, v in rows],
-        "event_id long, ts string, user_id long, event_type string, value double",
-    ).selectExpr(
-        "event_id", "CAST(ts AS TIMESTAMP) AS ts", "user_id",
-        "event_type", "value", "'{}' AS props",
-    ).write.parquet(str(d / "events.parquet"))
-    got = {
-        r["touch_type"]: (r["n_purchases"], r["attributed_cents"])
-        for r in SPECS["evt_purchase_attribution"].fn(spark, str(d)).collect()
-    }
-    assert got == {
-        "click": (2, 15000),
-        "organic": (1, 1000),
-        "view": (1, 2000),
-        "error": (1, 3000),
-    }
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW events AS SELECT * FROM "
-        f"'{d}/events.parquet/*.parquet'"
-    )
-    ok, msg = compare(
-        SPECS["evt_purchase_attribution"].fn(spark, str(d)),
-        con,
-        SPECS["evt_purchase_attribution"].oracle,
-    )
-    assert ok, msg
-
-
-def test_forecast_backtest_matches_python_reference(spark, sf_small):
-    """The seasonal-naive backtest equals a python reference over the
-    same exact-cents panel at sf0.001 (incl. truncating division on
-    negative bias)."""
-    import datetime as dt
-    from collections import defaultdict
-
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.catalog import table as _table
-    from bigbugdata_spark.functions.fragments import cents_col
-    from bigbugdata_spark.operators.events import LAG_DAYS
-
-    panel_rows = (
-        _table(spark, sf_small, "events")
-        .groupBy("event_type", F.date_format("ts", "yyyy-MM-dd").alias("day"))
-        .agg(F.sum(cents_col()).alias("cents"))
-        .collect()
-    )
-    panel = {(r["event_type"], r["day"]): r["cents"] for r in panel_rows}
-    agg = defaultdict(lambda: [0, 0, 0])  # n, sum_abs, sum_signed
-    for (et, day), actual in panel.items():
-        prev = (
-            dt.date.fromisoformat(day) - dt.timedelta(days=LAG_DAYS)
-        ).isoformat()
-        if (et, prev) in panel:
-            pred = panel[(et, prev)]
-            a = agg[et]
-            a[0] += 1
-            a[1] += abs(actual - pred)
-            a[2] += actual - pred
-    def _trunc_div(a, b):
-        q = abs(a) // b
-        return q if a >= 0 else -q
-
-    expected = {
-        et: (n, _trunc_div(sa, n), _trunc_div(ss, n))
-        for et, (n, sa, ss) in agg.items()
-    }
-    got = {
-        r["event_type"]: (r["n_days_scored"], r["mae_cents"], r["bias_cents"])
-        for r in SPECS["evt_forecast_seasonal_naive"].fn(spark, sf_small).collect()
-    }
-    assert got == expected and got
-
-
-def test_stream_quantiles_match_batch(spark, sf_oracle):
-    """Histogram-ranked streaming quantiles == the batch rank-over-raw
-    derivation, row for row (the MAD-family equivalence argument)."""
-    streamed = {
-        tuple(r)
-        for r in SPECS["evt_stream_value_quantiles"].fn(spark, sf_oracle).collect()
-    }
-    batch = {
-        tuple(r) for r in SPECS["evt_value_quantiles"].fn(spark, sf_oracle).collect()
-    }
-    assert streamed == batch and streamed
 
 
 # --- r12-new query semantics (oracle parity proves engine agreement;

@@ -1179,96 +1179,3 @@ def test_gram_index_incremental_append_equals_rebuild(tmp_path, spark):
     assert got_idx == want_idx
     assert got_sz == want_sz
     assert got_df == want_df
-
-
-def test_cross_source_conserves_pairs(spark, sf):
-    """Every verified near-dup pair lands in exactly one source-pair
-    cell (key-normalized, so direction never splits a pair)."""
-    from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
-
-    n_pairs = dedup_minhash_lsh(spark, sf).count()
-    rows = SPECS["dedup_cross_source"].fn(spark, sf).collect()
-    assert sum(r["n_pairs"] for r in rows) == n_pairs
-    for r in rows:
-        assert r["src_a"] <= r["src_b"]
-        assert r["n_pairs"] > 0
-
-
-def test_source_dup_rate_covers_all_sources(spark, sf):
-    rows = SPECS["dedup_source_dup_rate"].fn(spark, sf).collect()
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    assert len(rows) == docs.select("source").distinct().count()
-    assert sum(r["n_docs"] for r in rows) == docs.count()
-    for r in rows:
-        assert 0 <= r["n_duped"] <= r["n_docs"]
-
-
-def test_zorder_accounting_buckets_partition_events(spark, sf_oracle):
-    sf = sf_oracle
-    """Bucket rows partition the event table exactly; z-buckets stay
-    inside the fixed 6-bit bucket id space; both column spans are
-    consistent per bucket."""
-    rows = SPECS["evt_zorder_lake_accounting"].fn(spark, sf).collect()
-    n_events = spark.read.parquet(f"{sf}/events.parquet").count()
-    assert sum(r["n_rows"] for r in rows) == n_events
-    assert len(rows) > 1, "fixture must spread over several z ranges"
-    for r in rows:
-        assert 0 <= r["z_bucket"] < 64
-        assert r["min_user"] <= r["max_user"]
-        assert r["min_cents"] <= r["max_cents"]
-
-
-def test_asset_accounting_covers_both_modalities(spark, sf_oracle):
-    sf = sf_oracle
-    """The parity-classified extensions land both modalities; counts
-    match the slice; asset ids are root-relative (lang prefix, no
-    URI scheme)."""
-    rows = {
-        r["modality"]: r
-        for r in SPECS["mm_asset_lake_accounting"].fn(spark, sf).collect()
-    }
-    assert set(rows) == {"image", "blob"}
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    n_slice = docs.filter(F.col("doc_id") % 10 == 7).count()
-    assert sum(r["n_assets"] for r in rows.values()) == n_slice
-    for r in rows.values():
-        assert "/d" in r["first_asset"]
-        assert not r["first_asset"].startswith("file:")
-        assert len(r["min_digest"]) == 32
-
-
-def test_ivf_recall_floor_at_two_scales_with_scaled_codebook(spark):
-    """r8 verdict item 6 'done' criterion: with K = max(16, floor
-    sqrt(n)) and the scaled probe width, the IVF recall contract holds
-    at two corpus scales — and the codebook size actually scales
-    (n=500 -> K=22, n=2000 -> K=44), so the test fails if the sizing
-    silently reverts to a constant."""
-    from bigbugdata_spark.functions.fragments import IVF_K, scaled_ivf_k
-    from bigbugdata_spark.operators.similarity import _corpus, ivf_cents
-
-    seen_k = []
-    for sf in ("/root/testdata/sf0.001", "/root/testdata/sf0.1"):
-        corpus = _corpus(spark, sf)
-        k = ivf_cents(corpus).count()
-        assert k == scaled_ivf_k(corpus.count())
-        seen_k.append(k)
-        rows = SPECS["audit_ivf_recall"].fn(spark, sf).collect()
-        recall = sum(r["n_overlap"] for r in rows) / sum(
-            r["n_exact"] for r in rows
-        )
-        assert recall >= 0.85, f"{sf}: recall collapsed to {recall:.3f}"
-    assert len(set(seen_k)) > 1 and max(seen_k) > IVF_K
-
-
-def test_threshold_curve_conserves_pairs(spark, sf_oracle):
-    """Band pair-counts partition the verified pair set; every band
-    sits at or above the operating threshold (0.5 -> band >= 5)."""
-    from bigbugdata_spark.operators.dedup import dedup_minhash_lsh
-
-    rows = SPECS["dedup_threshold_curve"].fn(spark, sf_oracle).collect()
-    n_pairs = dedup_minhash_lsh(spark, sf_oracle).count()
-    assert sum(r["n_pairs"] for r in rows) == n_pairs and n_pairs > 0
-    for r in rows:
-        assert r["band"] >= 5
-        assert abs(r["j_lo"] - r["band"] / 10) < 1e-12
-        assert 0 < r["n_sides"] <= 2 * r["n_pairs"]

@@ -181,21 +181,6 @@ def test_cluster_by_yields_skippable_row_groups(tmp_path, spark, sf_oracle):
     )
 
 
-def test_compaction_plan_executed_on_plan(spark, sf_oracle):
-    """Row totals preserved, every day's executed file count equals its
-    plan, and at least one day actually needed more than one file."""
-    from bigbugdata_spark.catalog import table
-
-    rows = SPECS["store_compaction_plan"].fn(spark, sf_oracle).collect()
-    assert rows
-    assert all(r["rows_match"] == 1 for r in rows)
-    assert all(r["files_after"] == r["target_files"] for r in rows)
-    assert sum(r["n_rows"] for r in rows) == table(
-        spark, sf_oracle, "events"
-    ).count()
-    assert any(r["target_files"] > 1 for r in rows)
-
-
 def test_partition_advisor_picks_finest_clearing_granularity(spark, sf_oracle):
     """total_rows is identical for all granularities (same events),
     partition counts are monotone day >= week >= month, and exactly one

@@ -629,125 +629,6 @@ def test_r10_profile_cards_scan_raw_tables_once(spark, sf):
         release_pinned()
 
 
-def test_transition_matrix_plan(spark, sf):
-    """One events scan reading only the four needed columns; the lag
-    window, pair agg and roll-up window are the only exchanges; no
-    joins anywhere."""
-    df = SPECS["evt_transition_matrix"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"user_id", "ts", "event_id", "event_type"}
-    assert I.join_kinds(df) == []
-    assert I.shuffle_count(df) <= 3
-
-
-def test_distribution_drift_plan(spark, sf):
-    df = SPECS["dq_distribution_drift"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"event_type", "ts"}
-    assert I.join_kinds(df) == []
-    # conditional agg + the |event_type|-row totals window
-    assert I.shuffle_count(df) <= 2
-
-
-def test_shard_assignment_plan(spark, sf):
-    df = SPECS["corpus_shard_assignment"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"doc_id", "text"}
-    assert I.join_kinds(df) == []
-    assert I.shuffle_count(df) <= 2
-
-
-def test_cross_source_rollup_no_cartesian(spark, sf):
-    """The doc->source joins carry NO broadcast hint (the projection is
-    one row per document — corpus-sized at the 100 TB posture; r8
-    advisory).  The only invariant worth pinning is that every join is
-    keyed: no cartesian or nested-loop join anywhere in the pipeline."""
-    df = SPECS["dedup_cross_source"].fn(spark, sf)
-    plan = I.plan_string(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_bpe_plan_single_scan_text_only(spark, sf):
-    df = SPECS["text_bpe_pair_stats"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"text"}
-    assert I.join_kinds(df) == []
-    # vocab agg + pair agg + the bounded global rank window
-    assert I.shuffle_count(df) <= 3
-
-
-def test_state_dwell_plan(spark, sf):
-    df = SPECS["evt_state_dwell"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"user_id", "ts", "event_id", "event_type"}
-    assert I.join_kinds(df) == []
-    # island windows (user / user+type) + run agg + lead window + state agg
-    assert I.shuffle_count(df) <= 4
-
-
-def test_rfm_plan_single_orders_scan(spark, sf):
-    df = SPECS["orders_rfm_segments"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 2  # orders + customer, each once
-    cols = I.read_columns(df)
-    assert {"o_custkey", "o_totalprice", "o_orderdate"} in cols
-    assert {"c_custkey"} in cols
-    plan = I.plan_string(df)
-    assert "CartesianProduct" not in plan
-
-
-def test_bigram_lm_plan_single_scan(spark, sf):
-    df = SPECS["text_bigram_lm"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.read_columns(df)[0] == {"text"}
-    assert I.join_kinds(df) == []
-    # pair agg + w1 departure window + bounded global rank window
-    assert I.shuffle_count(df) <= 3
-
-
-def test_user_features_plan_one_scan_one_shuffle(spark, sf):
-    df = SPECS["evt_user_features"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 1
-    assert I.join_kinds(df) == []
-    # count-distinct expands the aggregate but stays one user_id
-    # exchange family; no join, no extra scan
-    assert I.shuffle_count(df) <= 2
-
-
-def test_emb_coverage_single_scan_per_table(spark, sf):
-    """The one-pass claim: exactly two scans total (documents id-only,
-    embeddings once with the vector column) — coverage and defect
-    counters share the embeddings read."""
-    df = SPECS["dq_emb_coverage"].fn(spark, sf)
-    scans = I.scan_info(df)
-    assert len(scans) == 2
-    cols = I.read_columns(df)
-    assert {"doc_id"} in cols
-    assert {"vec_id", "embedding"} in cols
-
-
-def test_centroid_stats_plan(spark, sf):
-    """Reads only (label, embedding); no cartesian / nested-loop join;
-    the label-key join of two dataset-card frames may broadcast."""
-    df = SPECS["emb_label_centroid_stats"].fn(spark, sf)
-    # pruning: no scan may read beyond (label, embedding) — vec_id stays
-    # out. (The pinned quantized frame can make the visible scan narrower
-    # than both columns, so subset, not equality.)
-    for cols in I.read_columns(df):
-        assert cols <= {"label", "embedding"}
-    plan = I.plan_string(df)
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_mta_single_scan_plan(spark, sf_oracle):
     """The r12 plan-audit fix stays fixed: linear attribution reads
     events ONCE (window-only derivation — the first cut's branch

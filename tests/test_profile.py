@@ -1,202 +1,12 @@
-"""Behaviour tests for the profiling cards in operators/profile.py and the
-generic diagnostics in functions/diagnostics.py: correlation, key skew,
-join cardinality, encodings, NDV quality and histograms.
-"""
+"""Behaviour tests for the profiling cards in operators/profile.py:
+numeric histograms."""
 
 from __future__ import annotations
 
-import duckdb
-from pyspark.sql import functions as F
-
 from bigbugdata_spark.registry import load_all
-
-from tests.test_events import _plant_events
 
 
 SPECS = load_all()
-
-
-# --- prof_corr_chars_tokens ------------------------------------------------
-
-
-def test_corr_matches_numpy_witness(spark, sf):
-    """The moment-identity correlation must agree with numpy's corrcoef
-    over the same integer pairs (third witness, independent of both
-    engines)."""
-    import numpy as np
-
-    from bigbugdata_spark.functions import hashing as H
-
-    pairs = (
-        spark.read.parquet(f"{sf}/documents.parquet")
-        .select(
-            F.length("text").cast("long").alias("x"),
-            F.size(H.tokens(F.col("text"))).cast("long").alias("y"),
-        )
-        .collect()
-    )
-    x = np.array([p["x"] for p in pairs], dtype=np.float64)
-    y = np.array([p["y"] for p in pairs], dtype=np.float64)
-    row = SPECS["prof_corr_chars_tokens"].fn(spark, sf).collect()[0]
-    assert row["n"] == len(pairs)
-    assert row["sum_x"] == int(x.sum()) and row["sum_y"] == int(y.sum())
-    assert abs(row["corr"] - np.corrcoef(x, y)[0, 1]) < 1e-12
-    assert -1.0 <= row["corr"] <= 1.0
-
-
-def test_key_skew_card(tmp_path, spark):
-    """prof_key_skew on planted counts 5/3/1/1: exact shares, integer
-    cumulative counts, and the (cnt DESC, key ASC) tie-break."""
-    d = tmp_path / "skew"
-    rows = []
-    eid = 0
-    for user, n in ((1, 5), (2, 3), (3, 1), (4, 1)):
-        for _ in range(n):
-            rows.append((eid, user, "click", "2024-01-05 10:00:00", 1.0))
-            eid += 1
-    _plant_events(spark, d, rows)
-    got = [
-        tuple(r)
-        for r in SPECS["prof_key_skew"].fn(spark, str(d)).orderBy("rnk").collect()
-    ]
-    assert got == [
-        (1, 1, 5, 0.5, 0.5, 4, 10),
-        (2, 2, 3, 0.3, 0.8, 4, 10),
-        (3, 3, 1, 0.1, 0.9, 4, 10),
-        (4, 4, 1, 0.1, 1.0, 4, 10),
-    ]
-
-
-def test_join_cardinality_card(tmp_path, spark):
-    """prof_join_cardinality on planted per-key counts (events 3/2/1 on
-    keys 1/2/5, orders 2/1/4 on keys 1/2/9): join size 3*2 + 2*1 = 8
-    predicted without running the join; worst key 1 contributes 6."""
-    d = tmp_path / "jc"
-    rows = []
-    eid = 0
-    for user, n in ((1, 3), (2, 2), (5, 1)):
-        for _ in range(n):
-            rows.append((eid, user, "click", "2024-01-05 10:00:00", 1.0))
-            eid += 1
-    _plant_events(spark, d, rows)
-    orows = []
-    ok_ = 0
-    for cust, n in ((1, 2), (2, 1), (9, 4)):
-        for _ in range(n):
-            orows.append((ok_, cust, "O"))
-            ok_ += 1
-    spark.createDataFrame(
-        orows, "o_orderkey long, o_custkey long, o_orderstatus string"
-    ).write.parquet(str(d / "orders.parquet"))
-    row = SPECS["prof_join_cardinality"].fn(spark, str(d)).collect()[0]
-    assert tuple(row) == (6, 3, 7, 3, 2, 8, 1, 6)
-
-
-def test_diagnostics_generics_on_other_tables(spark, sf_small):
-    """The generic cores behind the round-10 cards work on ANY
-    table/key, not just the oracle-pinned demo bindings: skew over
-    lineitem.l_orderkey, join prediction for the real lineitem-orders
-    join (verified against actually running it), and a null profile of
-    orders."""
-    from bigbugdata_spark.functions.diagnostics import (
-        join_cardinality,
-        key_skew,
-        null_profile,
-    )
-
-    li = spark.read.parquet(f"{sf_small}/lineitem.parquet")
-    od = spark.read.parquet(f"{sf_small}/orders.parquet")
-
-    sk = key_skew(li, "l_orderkey", top=10).collect()
-    assert len(sk) == 10 and sk[0]["rnk"] == 1
-    assert abs(sum(r["share"] for r in sk) - sk[-1]["cum_share"]) < 1e-12
-
-    card = join_cardinality(li, "l_orderkey", od, "o_orderkey").collect()[0]
-    true_rows = li.join(od, li.l_orderkey == od.o_orderkey).count()
-    assert card["join_rows"] == true_rows
-    assert card["n_left"] == li.count() and card["n_right"] == od.count()
-
-    prof = {r["col_name"]: r for r in null_profile(od).collect()}
-    assert set(prof) == set(od.columns)
-    assert prof["o_orderkey"]["n_distinct"] == od.count()
-    assert all(r["n_null"] == 0 for r in prof.values())
-
-
-def test_join_cardinality_survives_disjoint_keys(tmp_path, spark):
-    """With NO common keys the card must still return its single totals
-    row (join_rows = 0, NULL worst key) — the empty LIMIT-1 worst frame
-    must not annihilate the result.  Oracle parity on the same planted
-    dir pins the LEFT JOIN twin."""
-    from tests.parity import compare
-
-    d = tmp_path / "disjoint"
-    _plant_events(spark, d, [(0, 1, "click", "2024-01-05 10:00:00", 1.0)])
-    spark.createDataFrame(
-        [(0, 99, "O")], "o_orderkey long, o_custkey long, o_orderstatus string"
-    ).write.parquet(str(d / "orders.parquet"))
-    row = SPECS["prof_join_cardinality"].fn(spark, str(d)).collect()[0]
-    assert (row["n_left"], row["n_right"]) == (1, 1)
-    assert (row["n_common_keys"], row["join_rows"]) == (0, 0)
-    assert row["max_key"] is None and row["max_key_rows"] is None
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW events AS SELECT * FROM '{d}/events.parquet/*.parquet'")
-    con.sql(f"CREATE VIEW orders AS SELECT * FROM '{d}/orders.parquet/*.parquet'")
-    ok, msg = compare(
-        SPECS["prof_join_cardinality"].fn(spark, str(d)),
-        con,
-        SPECS["prof_join_cardinality"].oracle,
-    )
-    assert ok, msg
-
-
-def test_encoding_profile_planted_extremes(spark):
-    """encoding_profile on planted columns: heavy repetition -> 'dict'
-    with exact byte accounting, all-unique single-char values ->
-    'plain' (dict adds code bytes on top of the same payload), and an
-    all-null column -> an all-zeros 'plain' row."""
-    from bigbugdata_spark.functions.diagnostics import encoding_profile
-
-    df = spark.createDataFrame(
-        [("xxxxxxxxxx", str(i), None) for i in range(4)],
-        "rep string, uniq string, empty string",
-    )
-    got = {
-        r["col_name"]: r
-        for r in encoding_profile(df, ["rep", "uniq", "empty"]).collect()
-    }
-    rep = got["rep"]
-    #  plain = 4*10; dict = 10 (one entry) + 4*1 (codes)
-    assert (rep["plain_bytes"], rep["dict_bytes"]) == (40, 14)
-    assert rep["encoding"] == "dict" and rep["n_distinct"] == 1
-    uniq = got["uniq"]
-    #  plain = 4*1; dict = 4 + 4*1 — codes cost strictly more
-    assert (uniq["plain_bytes"], uniq["dict_bytes"]) == (4, 8)
-    assert uniq["encoding"] == "plain" and uniq["n_distinct"] == 4
-    empty = got["empty"]
-    assert (
-        empty["n_values"],
-        empty["n_distinct"],
-        empty["plain_bytes"],
-        empty["dict_bytes"],
-        empty["encoding"],
-    ) == (0, 0, 0, 0, "plain")
-
-
-def test_ndv_quality_flags_and_exacts(spark, sf_oracle):
-    """Exact NDVs match countDistinct recomputation; all flags green on
-    the fixture (worst measured error 8.3% vs the 15% 3-sigma bound)."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.catalog import table as _table
-    from bigbugdata_spark.operators.profile import _COLS
-
-    rows = {r["col_name"]: r for r in SPECS["prof_ndv_quality"].fn(spark, sf_oracle).collect()}
-    assert set(rows) == set(_COLS)
-    ev = _table(spark, sf_oracle, "events")
-    for c in _COLS:
-        exact = ev.select(c).distinct().count()
-        assert rows[c]["ndv_exact"] == exact
-        assert rows[c]["in_bounds"] == 1
 
 
 def test_numeric_histogram_conserves_and_bounds(spark, sf_oracle):

@@ -1,7 +1,6 @@
-"""Behaviour tests for operators/similarity.py: centroid stats, MMR,
-incremental and batch IVF assignment, and the persisted IVF generation
-(adoption, partial writes, concurrent builders, session restarts).
-"""
+"""Behaviour tests for operators/similarity.py: incremental and batch
+IVF assignment, and the persisted IVF generation (adoption, partial
+writes, concurrent builders, session restarts)."""
 
 from __future__ import annotations
 
@@ -17,73 +16,6 @@ import pytest
 from bigbugdata_spark.registry import load_all
 
 SPECS = load_all()
-
-
-# --- emb_label_centroid_stats ----------------------------------------------
-
-
-def test_centroid_stats_matches_naive_scatter(spark, sf):
-    """The integer scatter identity must equal the naive per-row
-    squared-distance-to-centroid mean, computed independently in
-    numpy over the same quantized vectors."""
-    import numpy as np
-
-    from bigbugdata_spark.functions.quantization import quantized_vec
-
-    q = (
-        spark.read.parquet(f"{sf}/embeddings.parquet")
-        .select("label", quantized_vec(F.col("embedding")).alias("qv"))
-        .collect()
-    )
-    by_label: dict = {}
-    for r in q:
-        by_label.setdefault(r["label"], []).append(r["qv"])
-    rows = SPECS["emb_label_centroid_stats"].fn(spark, sf).collect()
-    assert {r["label"] for r in rows} == set(by_label)
-    for r in rows:
-        vecs = np.array(by_label[r["label"]], dtype=np.float64)
-        naive = ((vecs - vecs.mean(axis=0)) ** 2).sum(axis=1).mean()
-        assert r["n_vecs"] == len(vecs)
-        assert r["msd"] >= 0
-        assert abs(r["msd"] - naive) < 1e-6 * max(naive, 1.0)
-        assert abs(r["rmsd"] - naive**0.5) < 1e-6
-
-
-def test_mmr_picks_are_distinct_and_start_at_max_relevance(spark, sf_oracle):
-    """MMR_K distinct non-query picks; step 1 equals the pure-relevance
-    argmax; steps are contiguous 1..K."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.functions import hashing as H
-    from bigbugdata_spark.functions.fragments import N_QUERIES
-    from bigbugdata_spark.operators.similarity import _corpus, MMR_K
-
-    rows = sorted(
-        SPECS["sim_mmr_topk"].fn(spark, sf_oracle).collect(),
-        key=lambda r: r["step"],
-    )
-    assert [r["step"] for r in rows] == list(range(1, MMR_K + 1))
-    ids = [r["vec_id"] for r in rows]
-    assert len(set(ids)) == MMR_K and all(v >= N_QUERIES for v in ids)
-
-    corpus = _corpus(spark, sf_oracle)
-    q = corpus.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("q_emb"), F.col("nrm").alias("q_nrm")
-    )
-    top_rel = (
-        corpus.filter(F.col("vec_id") >= N_QUERIES)
-        .crossJoin(F.broadcast(q))
-        .select(
-            "vec_id",
-            (
-                H.dot(F.col("embedding"), F.col("q_emb"))
-                / (F.col("nrm") * F.col("q_nrm"))
-            ).alias("rel"),
-        )
-        .orderBy(F.desc("rel"), F.asc("vec_id"))
-        .first()
-    )
-    assert rows[0]["vec_id"] == top_rel["vec_id"]
 
 
 def test_batch_assign_consistent_with_incremental_delta(spark, sf_oracle):

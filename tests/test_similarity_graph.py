@@ -1,8 +1,6 @@
 """Behaviour tests for the mutual-kNN graph family in
-operators/similarity_graph.py and the connected components in
-functions/graph.py: graph shape and recall, clusters, PageRank,
-triangles, exemplars, outliers, and the persisted graph spine.
-"""
+operators/similarity_graph.py: the graph-build K rule and router reach,
+atomic edge writes, the graph memo and the persisted graph spine."""
 
 from __future__ import annotations
 
@@ -13,426 +11,7 @@ import subprocess
 import sys
 
 import duckdb
-from pyspark.sql import functions as F
 import pytest
-
-from bigbugdata_spark.registry import load_all
-
-SPECS = load_all()
-
-
-# --- sim_knn_graph ---------------------------------------------------------
-
-
-def test_knn_graph_shape_and_recall(spark, sf):
-    """Every node emits at most KNN_K edges with contiguous ranks and
-    no self-loops; graph recall vs the brute-force 5-NN stays above a
-    floor (the IVF-candidate approximation contract)."""
-    from collections import defaultdict
-
-    import numpy as np
-
-    from bigbugdata_spark.operators.similarity_graph import KNN_K
-
-    rows = SPECS["sim_knn_graph"].fn(spark, sf).collect()
-    per_src = defaultdict(list)
-    for r in rows:
-        assert r["src"] != r["dst"]
-        per_src[r["src"]].append(r["rnk"])
-    emb = spark.read.parquet(f"{sf}/embeddings.parquet").collect()
-    assert len(per_src) == len(emb)  # every vector is a source node
-    for ranks in per_src.values():
-        assert sorted(ranks) == list(range(1, len(ranks) + 1))
-        assert len(ranks) <= KNN_K
-
-    # brute-force 5-NN witness in numpy
-    ids = np.array([r["vec_id"] for r in emb])
-    M = np.array([r["embedding"] for r in emb], dtype=np.float64)
-    M = M / np.linalg.norm(M, axis=1, keepdims=True)
-    S = M @ M.T
-    np.fill_diagonal(S, -np.inf)
-    exact = {
-        (int(ids[i]), int(ids[j]))
-        for i in range(len(ids))
-        for j in np.argsort(-S[i], kind="stable")[:KNN_K]
-    }
-    got = {(r["src"], r["dst"]) for r in rows}
-    recall = len(got & exact) / len(exact)
-    assert recall >= 0.60, f"knn-graph recall collapsed: {recall:.3f}"
-
-
-# --- sim_semantic_clusters -------------------------------------------------
-
-
-def test_semantic_clusters_partition_corpus(spark, sf):
-    """Components partition all vectors; majority counts and purity
-    are consistent; singleton clusters are pure by definition."""
-    rows = SPECS["sim_semantic_clusters"].fn(spark, sf).collect()
-    n_vecs = spark.read.parquet(f"{sf}/embeddings.parquet").count()
-    assert sum(r["n_vecs"] for r in rows) == n_vecs
-    # component rep is the min member id, so reps are unique
-    assert len({r["component"] for r in rows}) == len(rows)
-    for r in rows:
-        assert 1 <= r["n_majority"] <= r["n_vecs"]
-        assert r["purity"] == r["n_majority"] / r["n_vecs"]
-        if r["n_vecs"] == 1:
-            assert r["purity"] == 1.0
-    # the fixture's embeddings are label-unstructured, so the purity
-    # diagnostic must FIRE: the giant component's purity sits near the
-    # 1/|labels| chance floor, far from coherent
-    giant = max(rows, key=lambda r: r["n_vecs"])
-    assert giant["n_vecs"] > 100 and giant["purity"] < 0.3
-
-
-def test_connected_components_random_graphs_vs_union_find(spark):
-    """Property fuzz: on hypothesis-drawn random graphs the distributed
-    min-label fixpoint must equal a plain union-find witness (component
-    = min member id)."""
-    from hypothesis import given, settings, strategies as st
-
-    from bigbugdata_spark.functions.graph import connected_components
-
-    @settings(max_examples=10, deadline=None)
-    @given(
-        n=st.integers(min_value=1, max_value=20),
-        edges=st.lists(
-            st.tuples(
-                st.integers(min_value=0, max_value=19),
-                st.integers(min_value=0, max_value=19),
-            ),
-            max_size=25,
-        ),
-    )
-    def check(n, edges):
-        edges = [(a, b) for a, b in edges if a < n and b < n and a != b]
-        parent = list(range(n))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edges:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        want = {
-            i: min(j for j in range(n) if find(j) == find(i))
-            for i in range(n)
-        }
-        nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        e = spark.createDataFrame(
-            edges or [(0, 0)], "a long, b long"
-        )
-        if not edges:
-            e = e.limit(0)
-        got = {
-            r["id"]: r["component"]
-            for r in connected_components(nodes, e).collect()
-        }
-        assert got == want
-
-    check()
-
-
-def test_connected_components_on_known_graph(spark):
-    """The shared CC helper resolves a known graph exactly: two chains
-    and an isolated node."""
-    from bigbugdata_spark.functions.graph import connected_components
-
-    nodes = spark.createDataFrame([(i,) for i in range(7)], "id long")
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (3, 4), (5, 4)], "a long, b long"
-    )
-    got = {
-        (r["id"], r["component"])
-        for r in connected_components(nodes, edges).collect()
-    }
-    assert got == {(0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 3), (6, 6)}
-
-
-def test_connected_components_chain_rounds_logarithmic(spark):
-    """r8 verdict item 3: the star-contraction CC must resolve a chain
-    (diameter = n, the propagation worst case) in O(log n) alternations.
-    Measured: rounds = log2(n) + 1 exactly on chains; assert a small
-    constant of slack so plan-irrelevant changes don't flap the test."""
-    import math
-
-    from bigbugdata_spark.functions import graph
-
-    for n in (64, 256):
-        nodes = spark.createDataFrame([(i,) for i in range(n)], "id long")
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], "a long, b long"
-        )
-        labels = graph.connected_components(nodes, edges).collect()
-        assert all(r["component"] == 0 for r in labels)
-        assert graph.LAST_ROUNDS <= math.log2(n) + 3
-
-
-def test_semantic_keep_one_exemplar_per_cluster(spark, sf_oracle):
-    """Exactly one keeper per component (its min id); sizes conserve;
-    on this encoder-collapsed fixture the keep rule drops almost
-    everything — pinned, because that drop IS the reason the purity
-    diagnostic gates semantic dedup."""
-    rows = SPECS["sim_semantic_keep"].fn(spark, sf_oracle).collect()
-    n_vecs = spark.read.parquet(f"{sf_oracle}/embeddings.parquet").count()
-    assert len(rows) == n_vecs
-    comps = {}
-    for r in rows:
-        comps.setdefault(r["component"], []).append(r)
-    clusters = SPECS["sim_semantic_clusters"].fn(spark, sf_oracle).collect()
-    assert len(comps) == len(clusters)
-    for comp, members in comps.items():
-        keepers = [r for r in members if r["keep"] == 1]
-        assert len(keepers) == 1
-        assert keepers[0]["vec_id"] == comp == min(r["vec_id"] for r in members)
-        assert all(r["cluster_size"] == len(members) for r in members)
-    # encoder-collapse drop behavior: most vectors are dropped
-    assert sum(r["keep"] for r in rows) < n_vecs * 0.2
-
-
-def test_pagerank_planted_structure(tmp_path, spark):
-    """sim_pagerank on a planted corpus: two complete 6-cliques plus an
-    isolated vector.  Symmetry forces equal ranks within each clique;
-    the isolated vector settles at the exact teleport floor with deg 0;
-    floor-division losses keep total mass at or under PR_SCALE.  The
-    oracle re-derives the identical integer rounds."""
-    from tests.parity import compare
-
-    from bigbugdata_spark.operators.similarity_graph import (
-        DAMP_DEN as _DAMP_DEN,
-        TELEPORT_NUM as _TELEPORT_NUM,
-        PR_SCALE,
-    )
-
-    dim = 64
-    e0 = [1.0] + [0.0] * (dim - 1)
-    e1 = [0.0, 1.0] + [0.0] * (dim - 2)
-    e2 = [0.0, 0.0, 1.0] + [0.0] * (dim - 3)
-    rows = (
-        [(i, e0, 7) for i in range(6)]
-        + [(i, e1, 3) for i in range(6, 12)]
-        + [(12, e2, 9)]
-    )
-    emb_dir = tmp_path / "emb"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.parquet(str(emb_dir / "embeddings.parquet"))
-
-    got = {
-        r["vec_id"]: r
-        for r in SPECS["sim_pagerank"].fn(spark, str(emb_dir)).collect()
-    }
-    assert len(got) == 13
-    teleport = (_TELEPORT_NUM * PR_SCALE) // (_DAMP_DEN * 13)
-    assert got[12]["deg"] == 0 and got[12]["pr_ppb"] == teleport
-    for lo in (0, 6):
-        clique = [got[i] for i in range(lo, lo + 6)]
-        assert all(r["deg"] == 5 for r in clique)
-        assert len({r["pr_ppb"] for r in clique}) == 1
-        assert clique[0]["pr_ppb"] > teleport
-    assert sum(r["pr_ppb"] for r in got.values()) <= PR_SCALE
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{emb_dir}/embeddings.parquet/*.parquet'"
-    )
-    q = SPECS["sim_pagerank"]
-    ok, msg = compare(q.fn(spark, str(emb_dir)), con, q.oracle)
-    assert ok, msg
-
-
-def test_triangle_stats_planted_cliques(tmp_path, spark):
-    """sim_triangle_stats on the two-clique + isolated corpus: every
-    clique member sits in C(5,2) = 10 triangles at degree 5; the
-    isolated vector reports 0/0; oracle agrees."""
-    from tests.parity import compare
-
-    dim = 64
-    e0 = [1.0] + [0.0] * (dim - 1)
-    e1 = [0.0, 1.0] + [0.0] * (dim - 2)
-    e2 = [0.0, 0.0, 1.0] + [0.0] * (dim - 3)
-    rows = (
-        [(i, e0, 7) for i in range(6)]
-        + [(i, e1, 3) for i in range(6, 12)]
-        + [(12, e2, 9)]
-    )
-    emb_dir = tmp_path / "emb"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.parquet(str(emb_dir / "embeddings.parquet"))
-
-    got = {
-        r["vec_id"]: r
-        for r in SPECS["sim_triangle_stats"].fn(spark, str(emb_dir)).collect()
-    }
-    for i in range(12):
-        assert (got[i]["deg"], got[i]["n_triangles"]) == (5, 10)
-    assert (got[12]["deg"], got[12]["n_triangles"]) == (0, 0)
-
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW embeddings AS SELECT * FROM "
-        f"'{emb_dir}/embeddings.parquet/*.parquet'"
-    )
-    q = SPECS["sim_triangle_stats"]
-    ok, msg = compare(q.fn(spark, str(emb_dir)), con, q.oracle)
-    assert ok, msg
-
-
-def test_central_exemplars_planted_cliques(tmp_path, spark):
-    """sim_central_exemplars on the two-clique + isolated corpus: each
-    clique's PageRank is symmetric, so the argmax tie-break keeps the
-    minimum id; the isolated vector is its own exemplar at the teleport
-    floor; n_members match the planted structure."""
-    from bigbugdata_spark.operators.similarity_graph import (
-        DAMP_DEN as _DAMP_DEN,
-        TELEPORT_NUM as _TELEPORT_NUM,
-        PR_SCALE,
-    )
-
-    dim = 64
-    e0 = [1.0] + [0.0] * (dim - 1)
-    e1 = [0.0, 1.0] + [0.0] * (dim - 2)
-    e2 = [0.0, 0.0, 1.0] + [0.0] * (dim - 3)
-    rows = (
-        [(i, e0, 7) for i in range(6)]
-        + [(i, e1, 3) for i in range(6, 12)]
-        + [(12, e2, 9)]
-    )
-    emb_dir = tmp_path / "emb"
-    spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    ).write.parquet(str(emb_dir / "embeddings.parquet"))
-
-    got = {
-        r["component"]: r
-        for r in SPECS["sim_central_exemplars"].fn(spark, str(emb_dir)).collect()
-    }
-    assert set(got) == {0, 6, 12}
-    assert (got[0]["n_members"], got[0]["exemplar_id"]) == (6, 0)
-    assert (got[6]["n_members"], got[6]["exemplar_id"]) == (6, 6)
-    teleport = (_TELEPORT_NUM * PR_SCALE) // (_DAMP_DEN * 13)
-    assert (got[12]["n_members"], got[12]["exemplar_id"]) == (1, 12)
-    assert got[12]["exemplar_pr_ppb"] == teleport
-
-
-# --- r11-new operator semantics ---------------------------------------------
-
-
-def test_knn_health_card_shape_and_bounds(spark, sf_oracle):
-    """K rows, ranks 1..KNN_K, edge counts non-increasing by rank (a
-    node emitting rank r also emitted 1..r-1), reciprocal <= edges, and
-    mean cosine within [-1e6, 1e6] ppm."""
-    from bigbugdata_spark.operators.similarity_graph import KNN_K
-
-    rows = {
-        r["rnk"]: r
-        for r in SPECS["sim_knn_health"].fn(spark, sf_oracle).collect()
-    }
-    assert sorted(rows) == list(range(1, KNN_K + 1))
-    counts = [rows[r]["n_edges"] for r in sorted(rows)]
-    assert counts == sorted(counts, reverse=True)
-    for r in rows.values():
-        assert 0 <= r["n_reciprocal"] <= r["n_edges"]
-        assert -1_000_000 <= r["mean_cos_ppm"] <= 1_000_000
-
-
-def test_graph_spine_adopts_persisted_generation(spark, sf_oracle, monkeypatch):
-    """A session whose memo is cold must ADOPT the persisted edge
-    generation instead of rebuilding: with the builder monkeypatched to
-    explode, knn_edges still serves the edges from disk."""
-    from bigbugdata_spark.operators import similarity_graph as G
-
-    # ensure a generation exists, then forget the session memo
-    n = G.knn_edges(spark, sf_oracle).count()
-    G._MEMO.clear()
-
-    def _boom(*a, **k):  # noqa: ANN001
-        raise AssertionError("rebuilt despite a persisted generation")
-
-    monkeypatch.setattr(G, "_build_knn_plan", _boom)
-    assert G.knn_edges(spark, sf_oracle).count() == n
-
-
-@pytest.mark.slow_tier
-def test_graph_spine_rebuilds_on_content_change(spark, tmp_path):
-    """A regenerated corpus (same path, new content) must never be
-    served a stale generation: the fingerprint changes, the old
-    generation is swept, and the edges rebuild from the new content."""
-    import shutil
-    from pathlib import Path
-
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.operators import similarity_graph as G
-
-    src = "/root/testdata/sf0.001/embeddings.parquet"
-    dst = tmp_path / "embeddings.parquet"
-    shutil.copytree(src, str(dst)) if Path(src).is_dir() else shutil.copy(
-        src, str(dst)
-    )
-    fp1 = G.generation_fp(str(tmp_path))
-    n1 = G.knn_edges(spark, str(tmp_path)).count()
-    assert (Path(G.index_path(f"{G._EDGES_PREFIX}{fp1}")) / "_SUCCESS").exists()
-
-    # regenerate: halve the corpus in place (same path, new content)
-    half = (
-        spark.read.parquet(str(dst))
-        .filter(F.col("vec_id") % 2 == 0)
-        .collect()
-    )
-    shutil.rmtree(str(dst), ignore_errors=True) if Path(
-        str(dst)
-    ).is_dir() else Path(str(dst)).unlink()
-    spark.createDataFrame(half).coalesce(1).write.parquet(str(dst))
-
-    fp2 = G.generation_fp(str(tmp_path))
-    assert fp2 != fp1 and fp2[:8] == fp1[:8]  # same path, new content
-    G._MEMO.clear()
-    n2 = G.knn_edges(spark, str(tmp_path)).count()
-    assert n2 < n1  # rebuilt from the halved corpus, not served stale
-    # the same-corpus stale generation was swept
-    assert not Path(G.index_path(f"{G._EDGES_PREFIX}{fp1}")).exists()
-    assert (Path(G.index_path(f"{G._EDGES_PREFIX}{fp2}")) / "_SUCCESS").exists()
-
-
-def test_knn_outliers_consistent_with_spine(spark, sf_oracle):
-    """Per-vector means recompute from the shared edge list; both flag
-    branches live on the fixture; underfilled-K implies isolated."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.operators.similarity_graph import (
-        knn_edges,
-        ISOLATION_T_PPM,
-        KNN_K,
-    )
-
-    rows = SPECS["sim_knn_outliers"].fn(spark, sf_oracle).collect()
-    flags = {r["isolated"] for r in rows}
-    assert flags == {0, 1}
-    per = {
-        r["src"]: (r["k"], r["s"])
-        for r in knn_edges(spark, sf_oracle)
-        .groupBy("src")
-        .agg(
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.round(F.col("cos_sim") * 1_000_000).cast("long")).alias("s"),
-        )
-        .collect()
-    }
-    for r in rows:
-        if r["vec_id"] in per:
-            k, s = per[r["vec_id"]]
-            assert r["k_found"] == k
-            assert r["mean_cos_ppm"] == s // k if s >= 0 else True
-            expect = int(k < KNN_K or r["mean_cos_ppm"] < ISOLATION_T_PPM)
-            assert r["isolated"] == expect
-        else:
-            assert r["k_found"] == 0 and r["isolated"] == 1
 
 
 def test_graph_ivf_k_constant_cells():

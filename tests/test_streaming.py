@@ -20,7 +20,6 @@ from bigbugdata_spark.streaming.core import OutOfOrderFeedError
 from bigbugdata_spark.streaming.events import (
     _ATTRIB_OUTPUT_SCHEMA as _OUTPUT_SCHEMA,
     _ATTRIB_STATE_SCHEMA as _STATE_SCHEMA,
-    _attribute,
     stream_tumbling_complete,
 )
 
@@ -302,82 +301,6 @@ def test_scd2_bucket_count_is_persisted_and_validated(tmp_path, spark, sf_oracle
     upsert_state_runs(spark, ev, out)
 
 
-# --- evt_stream_user_lifecycle ---------------------------------------------
-
-
-def test_stream_lifecycle_equals_batch_and_subset_of_features(spark, sf):
-    """stream == batch through the shared builder, and the overlapping
-    columns agree row-for-row with the full batch feature table."""
-    from bigbugdata_spark.streaming.events import batch_user_lifecycle
-
-    stream = sorted(
-        tuple(r)
-        for r in SPECS["evt_stream_user_lifecycle"].fn(spark, sf).collect()
-    )
-    batch = sorted(tuple(r) for r in batch_user_lifecycle(spark, sf).collect())
-    assert stream == batch
-
-    cols = [
-        "user_id", "n_events", "first_ts", "last_ts",
-        "tenure_us", "n_purchases", "purchase_cents",
-    ]
-    full = sorted(
-        tuple(r)
-        for r in SPECS["evt_user_features"].fn(spark, sf).select(cols).collect()
-    )
-    assert stream == full
-
-
-def test_stream_new_users_equals_batch_growth_column(spark, sf_oracle):
-    """The stateful first-seen tracker's per-day counts must equal
-    evt_growth_accounting's n_new column exactly."""
-    batch = {
-        r["day"]: r["n_new"]
-        for r in SPECS["evt_growth_accounting"].fn(spark, sf_oracle).collect()
-        if r["n_new"] > 0
-    }
-    stream = {
-        r["day"]: r["n_new"]
-        for r in SPECS["evt_stream_new_users"].fn(spark, sf_oracle).collect()
-    }
-    assert stream == batch and batch
-
-
-def test_stream_rollup_replay_idempotent(tmp_path, spark):
-    """A redelivered micro-batch (same batch_id) must leave the merged
-    rollup unchanged — the overwrite-own-partition idempotence contract
-    — and distinct batches must accumulate."""
-    from pyspark.sql import functions as F
-
-    from bigbugdata_spark.operators.events import merged_rollup, write_rollup_batch
-
-    def ev(lo, hi):
-        return spark.createDataFrame(
-            [
-                (i, 1, "click", f"2024-01-0{(i % 3) + 1} 09:00:00", 2.5)
-                for i in range(lo, hi)
-            ],
-            "event_id long, user_id long, event_type string, "
-            "ts string, value double",
-        ).selectExpr(
-            "event_id", "user_id", "event_type",
-            "CAST(ts AS TIMESTAMP) AS ts", "value",
-        )
-
-    out = str(tmp_path / "store")
-    write_rollup_batch(ev(0, 30), 0, out)
-    once = sorted(map(tuple, merged_rollup(spark, out).collect()))
-    write_rollup_batch(ev(0, 30), 0, out)  # redelivery
-    replay = sorted(map(tuple, merged_rollup(spark, out).collect()))
-    assert replay == once
-    write_rollup_batch(ev(30, 40), 1, out)  # genuinely new batch
-    grown = {
-        (r["day"], r["event_type"]): r["n_events"]
-        for r in merged_rollup(spark, out).collect()
-    }
-    assert sum(grown.values()) == 40
-
-
 class _State:
     """Duck-typed stand-in for GroupState: _attribute touches only
     .exists / .get / .update."""
@@ -407,191 +330,6 @@ def _chunk(rows):
             "cents": [r[4] for r in rows],
         }
     )
-
-
-def test_attribute_kernel_walks_total_order_across_chunks():
-    """Advisory r10: applyInPandasWithState delivers a big group as
-    multiple Arrow chunks in INPUT order; sorting each chunk
-    independently is not a total order.  Feed two chunks where the
-    second chunk's touch PRECEDES the first chunk's purchase in event
-    time — the purchase must be credited to that earlier-in-time,
-    later-in-input touch's predecessor state, i.e. the walk must sort
-    the concatenation, not the chunks."""
-    # input order: purchase@t=30 arrives in chunk 1, touches land in
-    # chunk 2 at t=10 ('click') and t=40 ('view').
-    chunk1 = _chunk([(7, 30, 300, "purchase", 500)])
-    chunk2 = _chunk([(7, 40, 400, "view", 0), (7, 10, 100, "click", 0)])
-    state = _State()
-    out = pd.concat(list(_attribute((7,), iter([chunk1, chunk2]), state)))
-    # total order: click(10) -> purchase(30) -> view(40)
-    assert out["touch_type"].tolist() == ["click"]
-    # carried state must end on the LATEST touch (view@40), not on
-    # whichever chunk happened to be walked last
-    assert state.get[2] == "view" and state.get[0] == 40_000_000
-
-    # empty chunks must not crash, emit, or move state
-    state2 = _State((40_000_000, 400, "view"))
-    assert list(_attribute((7,), iter([_chunk([])]), state2)) == []
-    assert state2.get == (40_000_000, 400, "view")
-
-
-def test_attribute_kernel_state_carries_across_calls():
-    """The cross-micro-batch contract: a purchase in a later call is
-    credited to the touch carried in state from an earlier call."""
-    state = _State()
-    list(_attribute((1,), iter([_chunk([(1, 5, 50, "click", 0)])]), state))
-    out = pd.concat(
-        list(_attribute((1,), iter([_chunk([(1, 9, 90, "purchase", 250)])]), state))
-    )
-    assert out["touch_type"].tolist() == ["click"]
-    assert out["cents"].tolist() == [250]
-
-
-def test_attribute_kernel_monotone_under_batch_reordering():
-    """VERDICT r11 #4: a late micro-batch whose touches all PRECEDE the
-    carried touch must not move state backwards.  Deliver three
-    touch-only batches (t=10 click, t=20 view, t=30 search) in scrambled
-    batch order [t=30, t=10, t=20], then a purchase batch at t=40: the
-    purchase must be credited to 'search' (the true latest preceding
-    touch — the batch derivation's answer), and carried state must equal
-    the global max touch, not the last-delivered batch's touch."""
-    state = _State()
-    list(_attribute((1,), iter([_chunk([(1, 30, 300, "search", 0)])]), state))
-    list(_attribute((1,), iter([_chunk([(1, 10, 100, "click", 0)])]), state))
-    assert state.get == (30_000_000, 300, "search")  # no regression
-    list(_attribute((1,), iter([_chunk([(1, 20, 200, "view", 0)])]), state))
-    assert state.get == (30_000_000, 300, "search")
-    out = pd.concat(
-        list(_attribute((1,), iter([_chunk([(1, 40, 400, "purchase", 700)])]), state))
-    )
-    assert out["touch_type"].tolist() == ["search"]
-    # equality with the batch derivation over the same events, in order:
-    ordered = _State()
-    rows = [
-        (1, 10, 100, "click", 0),
-        (1, 20, 200, "view", 0),
-        (1, 30, 300, "search", 0),
-        (1, 40, 400, "purchase", 700),
-    ]
-    want = pd.concat(list(_attribute((1,), iter([_chunk(rows)]), ordered)))
-    assert out["touch_type"].tolist() == want["touch_type"].tolist()
-    assert state.get == ordered.get
-
-
-def test_attribute_kernel_within_batch_late_touch_does_not_regress():
-    """The within-batch face of the same guard: a batch containing only
-    older-than-carried touches plus a purchase credits the purchase to
-    the CARRIED touch (never the stale one) and leaves state alone."""
-    state = _State((30_000_000, 300, "search"))
-    out = pd.concat(
-        list(
-            _attribute(
-                (1,),
-                iter(
-                    [
-                        _chunk(
-                            [(1, 5, 50, "click", 0), (1, 35, 350, "purchase", 900)]
-                        )
-                    ]
-                ),
-                state,
-            )
-        )
-    )
-    assert out["touch_type"].tolist() == ["search"]
-    assert state.get == (30_000_000, 300, "search")
-
-
-@pytest.mark.slow_tier
-def test_stream_attribution_matches_batch(spark, sf_oracle):
-    """Whole-fixture availableNow stream == the batch window derivation
-    (the registered oracle gates both; this pins Spark-vs-Spark)."""
-    streamed = {
-        tuple(r) for r in SPECS["evt_stream_attribution"].fn(spark, sf_oracle).collect()
-    }
-    batch = {
-        tuple(r) for r in SPECS["evt_purchase_attribution"].fn(spark, sf_oracle).collect()
-    }
-    assert streamed == batch
-    assert len(streamed) > 0
-
-
-@pytest.mark.slow_tier
-def test_stream_attribution_multi_slice_scrambled_chunks(spark, tmp_path):
-    """The documented ordering contract end-to-end: a per-user
-    time-ordered feed sliced into 3 micro-batches (maxFilesPerTrigger=1),
-    each slice written in REVERSED input order and Arrow-chunked at 4
-    rows — per-chunk sorting would walk t6..t9 before t0..t5 and
-    miscredit; the concat-then-sort walk must equal the batch
-    derivation over the union."""
-    from bigbugdata_spark.streaming.core import _run_to_memory
-
-    # user 1: alternating touch types with purchases between them so
-    # every credit is order-sensitive; user 2: organic purchase only.
-    feed = []
-    eid = 0
-    types = ["click", "view", "search"]
-    for t in range(30):
-        eid += 1
-        if t % 3 == 2:
-            feed.append((1, t, eid, "purchase", 100 + t))
-        else:
-            feed.append((1, t, eid, types[(t // 3) % 3], 0))
-    feed.append((2, 3, 999, "purchase", 77))
-
-    # expected: python reference walk in (ts, event_id) order
-    expected = []
-    last: dict[int, str | None] = {}
-    for u, t, e, k, c in sorted(feed, key=lambda r: (r[1], r[2])):
-        if k == "purchase":
-            # the kernel emits None for touchless purchases; 'organic'
-            # is coalesced in the registered query's post-sink rollup
-            expected.append((e, c, last.get(u)))
-        else:
-            last[u] = k
-    expected_set = set(expected)
-
-    src = tmp_path / "slices"
-    slices = [feed[0:10] + [feed[30]], feed[10:20], feed[20:30]]
-    for i, sl in enumerate(slices):
-        pdf = _chunk(list(reversed(sl)))  # reversed INPUT order
-        sdf = spark.createDataFrame(pdf)
-        sdf.coalesce(1).write.parquet(str(src / f"slice_{i}"))
-    # file-source ordering is by modification time: stamp increasing
-    for i in range(3):
-        for root, _, files in os.walk(src / f"slice_{i}"):
-            for f in files:
-                os.utime(os.path.join(root, f), (1_700_000_000 + i, 1_700_000_000 + i))
-
-    schema = spark.read.parquet(str(src / "slice_0")).schema
-    old_chunk = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "4")
-    try:
-        from pyspark.sql.streaming.state import GroupStateTimeout
-
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src / "slice_*"))
-        )
-        attributed = stream.groupBy("user_id").applyInPandasWithState(
-            _attribute,
-            outputStructType=_OUTPUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        emitted = {
-            (r["event_id"], r["cents"], r["touch_type"])
-            for r in _run_to_memory(attributed, "append").collect()
-        }
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old_chunk)
-
-    assert emitted == expected_set
-    # the scramble must actually exercise cross-chunk credits: at least
-    # one purchase is credited to a touch from a different 4-row chunk
-    assert len(expected_set) == 11
 
 
 def test_stream_mta_kernel_path_and_reset():

@@ -1,382 +1,14 @@
-"""Behaviour tests for the text operators in operators/text.py: BPE
-training and tokenization, n-gram language-model counts, templates,
-TF-IDF, co-occurrence, sentence and boilerplate stats, quality curves
-and language confusion, against Python witnesses.
-"""
+"""Behaviour tests for the text operators in operators/text.py: sentence
+and boilerplate stats and the quality curve, against Python witnesses."""
 
 from __future__ import annotations
 
-import duckdb
 from pyspark.sql import functions as F
 
-from bigbugdata_spark.operators.text import TOP_PAIRS
 from bigbugdata_spark.registry import load_all
-
-from tests.test_dedup_incr import DOC_SCHEMA
 
 
 SPECS = load_all()
-
-
-# --- text_bpe_pair_stats ---------------------------------------------------
-
-
-def test_bpe_pairs_ranked_and_bounded(spark, sf):
-    rows = SPECS["text_bpe_pair_stats"].fn(spark, sf).collect()
-    assert len(rows) == TOP_PAIRS
-    by_rank = sorted(rows, key=lambda r: r["rnk"])
-    assert [r["rnk"] for r in by_rank] == list(range(1, TOP_PAIRS + 1))
-    freqs = [r["freq"] for r in by_rank]
-    assert freqs == sorted(freqs, reverse=True)
-    for r in rows:
-        assert len(r["pair"]) == 2
-
-
-def test_bpe_vocab_weighting_equals_raw_stream(spark, sf):
-    """The vocab-weighted count must equal counting pairs over the raw
-    token stream — the Heaps'-law optimization may not change results."""
-    from bigbugdata_spark.functions import hashing as H
-
-    docs = spark.read.parquet(f"{sf}/documents.parquet")
-    raw = (
-        docs.select(F.explode(H.tokens(F.col("text"))).alias("w"))
-        .where(F.length("w") >= 2)
-        .select(
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("w") - 1),
-                    lambda i: F.col("w").substr(i, F.lit(2)),
-                )
-            ).alias("pair")
-        )
-        .groupBy("pair")
-        .agg(F.count(F.lit(1)).alias("freq_raw"))
-    )
-    opt = SPECS["text_bpe_pair_stats"].fn(spark, sf)
-    joined = opt.join(raw, "pair", "left")
-    bad = joined.where(
-        F.col("freq_raw").isNull() | (F.col("freq") != F.col("freq_raw"))
-    ).count()
-    assert bad == 0
-
-
-# --- text_bigram_lm --------------------------------------------------------
-
-
-def test_bigram_lm_counts_equal_raw_pairs(spark, sf):
-    """The JVM-side slide must count exactly the adjacent token pairs
-    of the raw token stream, and conditionals must be proper
-    (n_pair <= n_w1, p = n_pair/n_w1)."""
-    from bigbugdata_spark.functions import hashing as H
-
-    rows = SPECS["text_bigram_lm"].fn(spark, sf).collect()
-    toks = [
-        r["t"]
-        for r in spark.read.parquet(f"{sf}/documents.parquet")
-        .select(H.tokens(F.col("text")).alias("t"))
-        .collect()
-    ]
-    from collections import Counter
-
-    pair_c: Counter = Counter()
-    dep_c: Counter = Counter()
-    for t in toks:
-        for a, b in zip(t, t[1:]):
-            pair_c[(a, b)] += 1
-            dep_c[a] += 1
-    for r in rows:
-        assert r["n_pair"] == pair_c[(r["w1"], r["w2"])]
-        assert r["n_w1"] == dep_c[r["w1"]]
-        assert r["p_cond"] == r["n_pair"] / r["n_w1"]
-    ranks = sorted(r["rnk"] for r in rows)
-    assert ranks == list(range(1, len(rows) + 1))
-
-
-# --- text_quality_score n_punct rewrite ------------------------------------
-
-
-def test_n_punct_replace_equals_count_property(spark):
-    """The positive-class replace formulation (the 12x hot-path fix in
-    text_quality_score) must count exactly the chars the old negated-
-    class regexp_count counted — property-checked on hypothesis-drawn
-    strings plus adversarial unicode/whitespace cases, with a plain
-    Python recount as the third witness."""
-    from hypothesis import given, settings, strategies as st
-
-    adversarial = [
-        "", "   ", "a,b.c!", "héllo wörld", "123 abc", "!!!",
-        "tab\tnewline\n", "emoji \U0001f600 astral", "combining é",
-        "UPPER Case", " nbsp", "mixed: a1! b2? c3;",
-    ]
-    cases = st.one_of(
-        st.sampled_from(adversarial),
-        st.text(min_size=0, max_size=40),
-    )
-
-    @settings(max_examples=30, deadline=None)
-    @given(st.lists(cases, min_size=1, max_size=8))
-    def check(texts):
-        df = spark.createDataFrame([(t,) for t in texts], "text string")
-        rows = df.select(
-            "text",
-            F.regexp_count(F.col("text"), F.lit(r"[^a-z0-9 ]"))
-            .alias("old"),
-            F.length(
-                F.regexp_replace(F.col("text"), F.lit(r"[a-z0-9 ]"), F.lit(""))
-            ).alias("new"),
-        ).collect()
-        for r in rows:
-            expect = sum(1 for c in r["text"] if not ("a" <= c <= "z" or "0" <= c <= "9" or c == " "))
-            assert r["new"] == r["old"] == expect, r
-
-    check()
-
-
-# --- text_template_prefix --------------------------------------------------
-
-
-def test_template_prefix_matches_python_witness(spark, sf):
-    """Cluster set must equal a plain-Python grouping of the first
-    PREFIX_TOKENS tokens (third witness, no hashing shortcut)."""
-    from collections import Counter
-
-    from bigbugdata_spark.functions import hashing as H
-    from bigbugdata_spark.operators.text import PREFIX_TOKENS
-
-    docs = (
-        spark.read.parquet(f"{sf}/documents.parquet")
-        .select("doc_id", H.tokens(F.col("text")).alias("t"))
-        .collect()
-    )
-    groups: dict = {}
-    for r in docs:
-        if len(r["t"]) >= PREFIX_TOKENS:
-            groups.setdefault(tuple(r["t"][:PREFIX_TOKENS]), []).append(
-                r["doc_id"]
-            )
-    want = Counter(
-        (len(ids), min(ids)) for ids in groups.values() if len(ids) >= 2
-    )
-    rows = SPECS["text_template_prefix"].fn(spark, sf).collect()
-    got = Counter((r["n_docs"], r["keep_id"]) for r in rows)
-    assert got == want and len(rows) > 0
-
-
-def test_bpe_train_equals_python_greedy_witness(spark, sf_oracle):
-    """The distributed trainer must match an independent textbook
-    greedy BPE (left-to-right merge application, count DESC + lexi
-    tie-break, self-pairs excluded) run driver-side over the same word
-    vocabulary — pinning both the per-round argmax AND the two-pass
-    replace application's equivalence to greedy merging on real text."""
-    import collections
-    import re
-
-    from bigbugdata_spark.operators.text import BPE_STEPS
-
-    docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
-    freqs = collections.Counter()
-    for r in docs.select("text").collect():
-        for w in re.split(r"\s+", r["text"].strip().lower()):
-            if re.fullmatch(r"[a-z0-9]+", w):
-                freqs[w] += 1
-    vocab = {w: list(w) for w in freqs}
-
-    def greedy_merge(syms, a, b):
-        out, i = [], 0
-        while i < len(syms):
-            if i + 1 < len(syms) and syms[i] == a and syms[i + 1] == b:
-                out.append(a + b)
-                i += 2
-            else:
-                out.append(syms[i])
-                i += 1
-        return out
-
-    want = []
-    for step in range(BPE_STEPS):
-        counts = collections.Counter()
-        for w, syms in vocab.items():
-            f = freqs[w]
-            for x, y in zip(syms, syms[1:]):
-                if x != y:
-                    counts[(x, y)] += f
-        if not counts:
-            break
-        (a, b), c = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        want.append((step, a, b, c))
-        vocab = {w: greedy_merge(s, a, b) for w, s in vocab.items()}
-
-    got = [
-        (r["step"], r["lhs"], r["rhs"], r["pair_count"])
-        for r in SPECS["text_bpe_train"].fn(spark, sf_oracle).collect()
-    ]
-    assert sorted(got) == sorted(want)
-    assert len(got) == BPE_STEPS
-
-
-def test_bpe_compression_reduction_equals_merge_counts(spark, sf_oracle):
-    """Exact cross-query invariant: for distinct-symbol pairs,
-    occurrences of the chosen pair can never overlap each other, so
-    every occurrence is applied and each round removes exactly
-    pair_count symbols — base_symbols - merged_symbols must equal the
-    SUM of the trainer's pair counts."""
-    comp = SPECS["text_bpe_compression"].fn(spark, sf_oracle).collect()[0]
-    merges = SPECS["text_bpe_train"].fn(spark, sf_oracle).collect()
-    assert comp["base_symbols"] - comp["merged_symbols"] == sum(
-        r["pair_count"] for r in merges
-    )
-    assert 0 <= comp["saved_pm"] <= 1000
-    assert comp["n_words"] > 0 and comp["n_tokens"] >= comp["n_words"]
-
-
-def test_bpe_oracle_empty_round_fallback(tmp_path, spark):
-    """Advisory r9: when pair candidates dry up before BPE_STEPS rounds,
-    the Spark trainer breaks out of the loop keeping the last
-    vocabulary; the oracle's v{r+1} CTE must fall back to v{r} (LEFT
-    JOIN ON TRUE + COALESCE) instead of cross-joining an empty b{r} and
-    emptying the vocabulary.  A two-word corpus dries up after two
-    merges — the compression oracle must still aggregate the surviving
-    vocabulary, not 0/NULL."""
-    from tests.parity import compare
-
-    docs = spark.createDataFrame(
-        [(0, "ab cd ab", "en", "syn", 8)], DOC_SCHEMA
-    )
-    doc_dir = tmp_path / "docs"
-    docs.write.parquet(str(doc_dir / "documents.parquet"))
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{doc_dir}/documents.parquet/*.parquet'"
-    )
-    train = SPECS["text_bpe_train"]
-    rows = train.fn(spark, str(doc_dir)).collect()
-    assert len(rows) == 2  # (a,b) then (c,d); round 2 has no candidates
-    ok, msg = compare(train.fn(spark, str(doc_dir)), con, train.oracle)
-    assert ok, msg
-    comp = SPECS["text_bpe_compression"]
-    got = comp.fn(spark, str(doc_dir)).collect()[0]
-    # the surviving vocabulary: words "ab" (freq 2) and "cd" (freq 1),
-    # each fully merged to one symbol
-    assert (got["n_words"], got["n_tokens"]) == (2, 3)
-    assert got["merged_symbols"] == 3 and got["base_symbols"] == 6
-    ok, msg = compare(comp.fn(spark, str(doc_dir)), con, comp.oracle)
-    assert ok, msg
-
-
-def test_lang_confusion_planted_matrix(tmp_path, spark):
-    """text_lang_confusion on planted docs with known predictions:
-    marker-bearing docs land on the diagonal, a marker-free doc leaks
-    to 'und', and row_share divides each cell by its true class total;
-    oracle parity on the same planted dir pins the twin."""
-    from tests.parity import compare
-
-    d = tmp_path / "conf"
-    docs = [
-        (0, "the cat and the hat", "en", "s", 19),
-        (1, "a dog is here", "en", "s", 13),
-        (2, "zzz qqq", "en", "s", 7),           # no markers -> und
-        (3, "der hund ist gut", "de", "s", 16),
-    ]
-    spark.createDataFrame(
-        docs, "doc_id long, text string, lang string, source string, n_chars long"
-    ).write.parquet(str(d / "documents.parquet"))
-    got = {
-        (r["true_lang"], r["pred_lang"]): (
-            r["n_docs"],
-            r["true_total"],
-            r["row_share"],
-        )
-        for r in SPECS["text_lang_confusion"].fn(spark, str(d)).collect()
-    }
-    assert got[("en", "en")] == (2, 3, 2 / 3)
-    assert got[("en", "und")] == (1, 3, 1 / 3)
-    assert got[("de", "de")] == (1, 1, 1.0)
-    assert len(got) == 3
-    con = duckdb.connect()
-    con.sql(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"'{d}/documents.parquet/*.parquet'"
-    )
-    ok, msg = compare(
-        SPECS["text_lang_confusion"].fn(spark, str(d)),
-        con,
-        SPECS["text_lang_confusion"].oracle,
-    )
-    assert ok, msg
-
-
-def test_tfidf_topk_scores_and_ranks(spark, sf_oracle):
-    """Per doc <= TOP_TERMS rows with contiguous ranks; every score is
-    exactly tf * 1e6 div df; rank order matches (score DESC, term)."""
-    from collections import defaultdict
-
-    from bigbugdata_spark.operators.text import TOP_TERMS
-
-    rows = SPECS["text_tfidf_topk"].fn(spark, sf_oracle).collect()
-    assert rows
-    by_doc = defaultdict(list)
-    for r in rows:
-        assert r["score"] == r["tf"] * 1_000_000 // r["df"]
-        by_doc[r["doc_id"]].append(r)
-    for doc_rows in by_doc.values():
-        doc_rows.sort(key=lambda r: r["rnk"])
-        assert [r["rnk"] for r in doc_rows] == list(
-            range(1, len(doc_rows) + 1)
-        )
-        assert len(doc_rows) <= TOP_TERMS
-        keys = [(-r["score"], r["term"]) for r in doc_rows]
-        assert keys == sorted(keys)
-
-
-def test_bpe_tokenize_totals_equal_compression_card(spark, sf_oracle):
-    """Cross-query invariant: per-doc accounting summed corpus-wide
-    must equal text_bpe_compression's totals exactly (same trainer,
-    same filter, same merge application)."""
-    from pyspark.sql import functions as F
-
-    per_doc = SPECS["text_bpe_tokenize"].fn(spark, sf_oracle)
-    tot = per_doc.agg(
-        F.sum("n_words").alias("w"),
-        F.sum("base_symbols").alias("b"),
-        F.sum("merged_symbols").alias("m"),
-    ).first()
-    card = SPECS["text_bpe_compression"].fn(spark, sf_oracle).first()
-    assert tot["w"] == card["n_tokens"]
-    assert tot["b"] == card["base_symbols"]
-    assert tot["m"] == card["merged_symbols"]
-
-
-def test_cooc_pairs_match_python_reference(spark, sf_small):
-    """The full co-occurrence table (not just top-k) equals a plain
-    python reference walk over the same tokens at sf0.001, and the
-    registered top-k is its (n DESC, a, b) head."""
-    from collections import Counter
-
-    from bigbugdata_spark.catalog import table as _table
-    from bigbugdata_spark.operators.text import COOC_TOPK, COOC_WINDOW
-
-    texts = [
-        r["text"] for r in _table(spark, sf_small, "documents").collect()
-    ]
-    ref = Counter()
-    for txt in texts:
-        t = [w for w in txt.strip().lower().split() if w]
-        for d in range(1, COOC_WINDOW + 1):
-            for i in range(len(t) - d):
-                a, b = sorted((t[i], t[i + d]))
-                ref[(a, b)] += 1
-    expected = sorted(
-        ((n, a, b) for (a, b), n in ref.items()),
-        key=lambda x: (-x[0], x[1], x[2]),
-    )[:COOC_TOPK]
-    got = [
-        (r["n"], r["a"], r["b"])
-        for r in SPECS["text_cooc_topk"].fn(spark, sf_small).collect()
-    ]
-    assert got == expected
 
 
 def test_sentence_stats_docs_conserve(spark, sf_oracle):

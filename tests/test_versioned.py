@@ -363,50 +363,6 @@ def test_backfill_through_versioned_table_lifecycle(tmp_path, spark, sf_oracle):
     assert rows_of(read_versioned(spark, vpath, v_comp)) == batch
 
 
-def test_gc_plan_classification_and_pins(tmp_path, spark):
-    """gc_plan (the VACUUM dry run) classifies exactly: after append /
-    replace / append, retaining the last two versions marks the first
-    append's files reclaimable; a pin on the expired version empties
-    the reclaimable set; executing the plan deletes exactly the planned
-    files and the retained versions still read."""
-    from bigbugdata_spark.sources.versioned import (
-        expire_versions,
-        gc_plan,
-        pin_version,
-        read_versioned,
-        unpin_version,
-        write_versioned,
-        replace_versioned,
-    )
-
-    path = str(tmp_path / "tbl")
-    df = spark.range(10).selectExpr("id", "id * 2 AS v")
-    write_versioned(df, path)                                 # v0
-    replace_versioned(df.filter("id >= 5"), path)             # v1
-    write_versioned(df.filter("id < 2"), path)                # v2
-    plan = gc_plan(path, retain_last=2, min_age_s=0.0)
-    assert plan["retained"] == [1, 2] and plan["expired"] == [0]
-    assert plan["reclaimable_files"] and plan["reclaimable_bytes"] > 0
-    assert not set(f["path"] for f in plan["reclaimable_files"]) & set(
-        plan["live_files"]
-    )
-    # a pin on v0 keeps its files live -> nothing reclaimable
-    pin_version(path, 0, "run-x")
-    pinned_plan = gc_plan(path, retain_last=2, min_age_s=0.0)
-    assert pinned_plan["expired"] == [] and not pinned_plan["reclaimable_files"]
-    unpin_version(path, "run-x")
-    acct = expire_versions(path, retain_last=2, min_age_s=0.0)
-    assert acct["deleted_files"] == len(plan["reclaimable_files"])
-    assert acct["freed_bytes"] == plan["reclaimable_bytes"]
-    assert read_versioned(spark, path).count() == 7  # v2 = 5 + 2 rows
-    assert read_versioned(spark, path, 1).count() == 5
-    # the expired version is gone, loudly
-    import pytest
-
-    with pytest.raises(FileNotFoundError):
-        read_versioned(spark, path, 0)
-
-
 # --- versioned-table vacuum: the in-flight gate (r15 race find) -------------
 
 
